@@ -101,9 +101,20 @@ def byte4_to_int(b: np.ndarray) -> np.ndarray:
     return out
 
 
+# every value a 1-byte norm can decode to, ascending (byte4_to_int is
+# strictly increasing over the 256 codes)
+_BYTE4_VALUES = byte4_to_int(np.arange(256))
+
+
 def quantize_dl(dl: np.ndarray) -> np.ndarray:
-    """Round-trip dl through the 1-byte norm encoding (index-time loss)."""
-    return byte4_to_int(int_to_byte4(dl))
+    """Round-trip dl through the 1-byte norm encoding (index-time loss).
+
+    intToByte4 truncates, so the round trip maps dl to the largest
+    decodable value <= dl: one table lookup, identical to
+    ``byte4_to_int(int_to_byte4(dl))`` for every non-negative int32."""
+    return _BYTE4_VALUES[
+        np.searchsorted(_BYTE4_VALUES, np.asarray(dl, dtype=np.int64), "right") - 1
+    ]
 
 
 # ---- scoring ----------------------------------------------------------

@@ -14,11 +14,15 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
   3. ``groupBy(part_id).applyInPandas(scorer)`` — each index partition
      (ES shard) scores its docs independently (doc-routing guarantees a
      doc's postings for ALL terms share one part_id) and emits a LOCAL
-     top-k. The scorer is numpy-vectorized, decodes delta+VByte blocks,
-     and prunes with a term-at-a-time MaxScore/block-max strategy
-     (reference: WAND activated by the 10k total-hits cap,
+     top-k. The scorer is numpy-vectorized and prunes with a
+     term-at-a-time MaxScore/block-max strategy (reference: WAND
+     activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
-     search/internal/SearchContext.java:60-62).
+     search/internal/SearchContext.java:60-62). Each group first
+     builds a per-term view of its blocks (skip metadata as arrays,
+     block upper bounds) in which a delta+VByte block is decoded and
+     quantized at most once, on first use; a ``match_topk_batch``
+     partition shares that view across all of its queries.
   4. global merge: ``orderBy(score desc, doc_id asc).limit(k)`` —
      Catalyst's TakeOrderedAndProject == Lucene TopDocs.merge
      (SearchPhaseController.java:205-208), same tie-break.
@@ -133,6 +137,74 @@ def _dump_prune_stats(nstat: dict) -> None:
         pass
 
 
+class _TermBlocks:
+    """One term's posting blocks within one partition, shared by every
+    scorer that runs over that partition (all Q queries of a batch).
+
+    Holds the block skip metadata as arrays, the block upper-bound
+    tf-norm (max_tf at min_dl) for the view's ``(avgdl, params)``, and
+    a lazily filled per-block cache of the decoded doc ids and their
+    tf-norm (tf as float64 against the effective dl, quantized once).
+    The cache always holds a block's FULL decode; restricted scans mask
+    a copy of it."""
+
+    __slots__ = ("n", "first_doc", "last_doc", "max_tf", "min_dl",
+                 "_doc_ids", "_tfs", "_dls", "_avgdl", "_params", "_ub",
+                 "_decoded")
+
+    def __init__(self, cols: dict, rows: np.ndarray, avgdl: float,
+                 params: BM25Params):
+        self.n = rows.size
+        self.first_doc = cols["first_doc"][rows]
+        self.last_doc = cols["last_doc"][rows]
+        self.max_tf = cols["max_tf"][rows]
+        self.min_dl = cols["min_dl"][rows]
+        self._doc_ids = cols["doc_ids"][rows]
+        self._tfs = cols["tfs"][rows]
+        self._dls = cols["dls"][rows]
+        self._avgdl, self._params = avgdl, params
+        self._ub = None
+        self._decoded: list = [None] * self.n
+
+    def ub_tfn(self) -> np.ndarray:
+        """Per-block upper bound of the tf-norm."""
+        if self._ub is None:
+            self._ub = bm25.tf_norm_sim(
+                self.max_tf.astype(np.float64), self.min_dl.astype(np.int64),
+                self._avgdl, self._params,
+            )
+        return self._ub
+
+    def block(self, j: int) -> tuple[np.ndarray, np.ndarray]:
+        """(doc ids, tf-norm) of block ``j``, decoded on first use and
+        read-only: every later query of the partition reads the same
+        arrays."""
+        hit = self._decoded[j]
+        if hit is None:
+            ids = codec.delta_decode(codec.vbyte_decode(self._doc_ids[j]))
+            tf = codec.vbyte_decode(self._tfs[j]).astype(np.float64)
+            dl = codec.vbyte_decode(self._dls[j])
+            dl_eff = (
+                bm25.quantize_dl(dl) if self._params.quantize_norms else dl
+            ).astype(np.float64)
+            tfn = bm25.tfn_eff(tf, dl_eff, self._avgdl, self._params)
+            ids.flags.writeable = tfn.flags.writeable = False
+            hit = self._decoded[j] = (ids, tfn)
+        return hit
+
+
+def _term_view(pdf: pd.DataFrame, avgdl: float,
+               params: BM25Params) -> dict[str, _TermBlocks]:
+    """Split one partition's posting blocks by term, once. Block order
+    within a term is the partition's row order."""
+    cols = {c: pdf[c].to_numpy() for c in (
+        "first_doc", "last_doc", "max_tf", "min_dl", "doc_ids", "tfs", "dls")}
+    return {
+        t: _TermBlocks(cols, rows, avgdl, params)
+        for t, rows in pdf.groupby("term", sort=False).indices.items()
+    }
+
+
 def _make_scorer(
     term_stats: list[TermStats],
     avgdl: float,
@@ -158,14 +230,13 @@ def _make_scorer(
     # k=None -> emit every matching doc (no local top-k, no pruning);
     # used when a post-filter runs before the global top-k cut.
     use_theta = prune and k is not None and operator == "or" and msm == 1
-    k1, b, quant = params.k1, params.b, params.quantize_norms
     # captured HERE (driver side) so the serialized scorer carries the
     # flag's value at construction time — workers re-import the module
     # and would otherwise always see the default
     impact_ordering = IMPACT_ORDERING
 
     def _score_group_impl(
-        pdf: pd.DataFrame,
+        pdf: pd.DataFrame | dict,
         allowed: np.ndarray | None,
         allowed_range: tuple[int, int] | None = None,
     ) -> pd.DataFrame:
@@ -176,13 +247,11 @@ def _make_scorer(
         score (the reference intersects the filter bitset inside the
         collector the same way: TopDocsCollectorContext.java:202-206).
 
-        ``pdf`` may also be a prebuilt {term: sub-frame} dict — the
-        batched multi-query scorer splits the partition's blocks by
-        term ONCE and shares the split across every query."""
-        by_term = (
-            pdf if isinstance(pdf, dict)
-            else dict(tuple(pdf.groupby("term", sort=False)))
-        )
+        ``pdf`` may also be a prebuilt ``_term_view`` of the partition
+        (built with this scorer's avgdl and params) — the batched
+        multi-query scorer builds it ONCE and shares its decoded blocks
+        across every query."""
+        view = pdf if isinstance(pdf, dict) else _term_view(pdf, avgdl, params)
         nstat = {"blocks": 0, "decoded": 0, "skip_theta_range": 0,
                  "skip_member": 0, "skip_filter": 0, "skip_sort": 0,
                  "skip_restrict_empty": 0}
@@ -191,7 +260,7 @@ def _make_scorer(
         acc_counts = np.empty(0, dtype=np.int64)
 
         for i, ts in enumerate(stats):
-            g = by_term.get(ts.term)
+            tb = view.get(ts.term)
             remaining_ub = float(ubs[i:].sum())
             rem_after = remaining_ub - float(ubs[i])
             theta = None
@@ -213,7 +282,7 @@ def _make_scorer(
             restrict = (
                 theta is not None and remaining_ub < theta
             ) or (operator == "and" and i > 0)
-            if g is None:
+            if tb is None:
                 if operator == "and":
                     _dump_prune_stats(nstat)
                     return pd.DataFrame(
@@ -232,14 +301,9 @@ def _make_scorer(
             # the range test and membership are searchsorted, not isin.
             block_ubs = None
             if (use_theta or theta is not None) and not restrict:
-                tfn_blk = bm25.tf_norm_sim(
-                    g["max_tf"].to_numpy().astype(np.float64),
-                    g["min_dl"].to_numpy().astype(np.int64),
-                    avgdl, params,
-                )
-                block_ubs = ts.weight * ts.idf * tfn_blk
+                block_ubs = ts.weight * ts.idf * tb.ub_tfn()
 
-            rows = list(g.itertuples(index=False))
+            n_blocks = tb.n
             # IMPACT-ORDERED scan (Lucene's impact-sorted posting slices
             # behind WANDScorer): highest block impact first.  A doc
             # occurs in exactly ONE block per term, so the k-th
@@ -255,13 +319,14 @@ def _make_scorer(
             # cost more than the ordering saves (BENCH/BASELINE.md).
             impact_zone = (
                 impact_ordering
-                and use_theta and block_ubs is not None and len(rows) > 1
+                and use_theta and block_ubs is not None and n_blocks > 1
                 and (len(stats) == 1 or i == len(stats) - 1)
             )
             if impact_zone:
                 scan = np.argsort(-block_ubs, kind="stable")
             else:
-                scan = np.arange(len(rows))
+                scan = range(n_blocks)
+            first_doc, last_doc = tb.first_doc, tb.last_doc
 
             widf = ts.weight * ts.idf
             wgt = ts.weight
@@ -272,13 +337,7 @@ def _make_scorer(
                 nonlocal merged_this_term
                 merged_this_term = True
                 ids = np.concatenate([p[0] for p in parts])
-                tfs = np.concatenate([p[1] for p in parts]).astype(np.float64)
-                dls = np.concatenate([p[2] for p in parts])
-                dl_eff = (
-                    bm25.quantize_dl(dls).astype(np.float64)
-                    if quant else dls.astype(np.float64)
-                )
-                scores = widf * bm25.tfn_eff(tfs, dl_eff, avgdl, params)
+                scores = widf * np.concatenate([p[1] for p in parts])
                 all_ids = np.concatenate([acc_ids, ids])
                 all_scores = np.concatenate([acc_scores, scores])
                 all_counts = np.concatenate(
@@ -310,10 +369,9 @@ def _make_scorer(
             chunk_target = max(4 * k, 1024) if impact_zone else None
             pending: list[tuple] = []
             pending_n = 0
-            nstat["blocks"] += len(rows)
+            nstat["blocks"] += n_blocks
             n_seen = 0
             for oi in scan:
-                row = rows[oi]
                 n_seen += 1
                 restricted = restrict or (
                     theta is not None and block_ubs is not None
@@ -321,13 +379,13 @@ def _make_scorer(
                 )
                 if restricted and acc_ids.size == 0 and not pending:
                     if restrict:
-                        nstat["skip_restrict_empty"] += len(rows) - n_seen + 1
+                        nstat["skip_restrict_empty"] += n_blocks - n_seen + 1
                         break
                     nstat["skip_restrict_empty"] += 1
                     continue
                 if restricted:
-                    lo = np.searchsorted(acc_ids, row.first_doc, "left")
-                    hi = np.searchsorted(acc_ids, row.last_doc, "right")
+                    lo = np.searchsorted(acc_ids, first_doc[oi], "left")
+                    hi = np.searchsorted(acc_ids, last_doc[oi], "right")
                     if lo == hi:
                         nstat["skip_theta_range"] += 1
                         continue  # range-skip: nothing to update, no decode
@@ -335,8 +393,8 @@ def _make_scorer(
                     # filter-aware skip: a block whose [first_doc,
                     # last_doc] range holds no allowed doc decodes
                     # nothing (the allowlist is sorted)
-                    lo = np.searchsorted(allowed, row.first_doc, "left")
-                    hi = np.searchsorted(allowed, row.last_doc, "right")
+                    lo = np.searchsorted(allowed, first_doc[oi], "left")
+                    hi = np.searchsorted(allowed, last_doc[oi], "right")
                     if lo == hi:
                         nstat["skip_filter"] += 1
                         continue
@@ -344,11 +402,13 @@ def _make_scorer(
                     # index-sort range skip: doc ids ARE sort ranks, so
                     # a block outside [lo, hi] never decodes (Lucene
                     # sorted-index early termination)
-                    if (row.last_doc < allowed_range[0]
-                            or row.first_doc > allowed_range[1]):
+                    if (last_doc[oi] < allowed_range[0]
+                            or first_doc[oi] > allowed_range[1]):
                         nstat["skip_sort"] += 1
                         continue
-                d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
+                # counts blocks this query needed decoded, whether or
+                # not an earlier query already filled the cache
+                d, tfn = tb.block(oi)
                 nstat["decoded"] += 1
                 if restricted:
                     pos = np.searchsorted(acc_ids, d)
@@ -357,25 +417,20 @@ def _make_scorer(
                     if not mask.any():
                         nstat["skip_member"] += 1
                         continue  # block-skip: no accumulator members
-                    tfv = codec.vbyte_decode(row.tfs)[mask]
-                    dlv = codec.vbyte_decode(row.dls)[mask]
-                    d = d[mask]
-                else:
-                    tfv = codec.vbyte_decode(row.tfs)
-                    dlv = codec.vbyte_decode(row.dls)
-                    if allowed is not None:
-                        pos = np.searchsorted(allowed, d)
-                        pos[pos >= allowed.size] = allowed.size - 1
-                        mask = allowed[pos] == d
-                        if not mask.any():
-                            continue
-                        d, tfv, dlv = d[mask], tfv[mask], dlv[mask]
-                    elif allowed_range is not None:
-                        mask = (d >= allowed_range[0]) & (d <= allowed_range[1])
-                        if not mask.any():
-                            continue
-                        d, tfv, dlv = d[mask], tfv[mask], dlv[mask]
-                pending.append((d, tfv, dlv))
+                    d, tfn = d[mask], tfn[mask]
+                elif allowed is not None:
+                    pos = np.searchsorted(allowed, d)
+                    pos[pos >= allowed.size] = allowed.size - 1
+                    mask = allowed[pos] == d
+                    if not mask.any():
+                        continue
+                    d, tfn = d[mask], tfn[mask]
+                elif allowed_range is not None:
+                    mask = (d >= allowed_range[0]) & (d <= allowed_range[1])
+                    if not mask.any():
+                        continue
+                    d, tfn = d[mask], tfn[mask]
+                pending.append((d, tfn))
                 pending_n += int(d.size)
                 if chunk_target is not None and pending_n >= chunk_target:
                     merge_pending(pending)
@@ -620,9 +675,12 @@ def match_topk_batch(
     that is per-JOB in the one-at-a-time path: ONE term-dict stats
     lookup for the union of query terms, ONE postings scan with a
     pushed ``In(term, ...)`` filter, ONE applyInPandas pass in which
-    each partition splits its blocks by term once and scores every
-    query against the shared split, then ONE per-query window top-k
-    over the (n_shards x Q x k)-row local results.
+    each partition builds one term view of its blocks and scores every
+    query against it, then ONE per-query window top-k over the
+    (n_shards x Q x k)-row local results. A block is decoded at most
+    once per partition and shared by every query of the batch that
+    visits it; each query's pruning decisions are its own, and a query
+    that restricts a block masks a copy of the shared decode.
 
     This is the throughput shape for a query STREAM at cluster scale —
     the reference's `_msearch` endpoint batches searches into one
@@ -670,10 +728,12 @@ def match_topk_batch(
     blocks = blocks.repartition(index.num_partitions(), "part_id")
 
     def score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = dict(tuple(pdf.groupby("term", sort=False)))
+        # every query shares one term view: a block is decoded at most
+        # once per partition, however many queries visit it
+        view = _term_view(pdf, avgdl, params)
         outs = []
         for qid, sc in scorers:
-            res = sc.with_allowed(by_term, None)
+            res = sc.with_allowed(view, None)
             if not res.empty:
                 res.insert(0, "query_id", np.int32(qid))
                 outs.append(res)
@@ -807,7 +867,7 @@ def phrase_topk(
             cand_docs &= set(per_term[t])
         if not cand_docs:
             return empty
-        out_ids, out_scores = [], []
+        out_ids, out_tfs = [], []
         for doc in cand_docs:
             if slop:
                 tf = _sloppy_phrase_freq(
@@ -824,15 +884,16 @@ def phrase_topk(
                 if cand.size == 0:
                     continue
                 tf = float(cand.size)
-            dl = dl_map[doc]
-            dl_eff = float(bm25.quantize_dl(np.array([dl]))[0]) if quant else float(dl)
-            tfn = tf / (tf + k1 * (1.0 - b + b * dl_eff / avgdl))
             out_ids.append(doc)
-            out_scores.append((k1 + 1.0) * idf_sum * tfn)
+            out_tfs.append(tf)
         if not out_ids:
             return empty
         ids = np.array(out_ids, dtype=np.int64)
-        scores = np.array(out_scores, dtype=np.float64)
+        tf = np.array(out_tfs, dtype=np.float64)
+        dl = np.array([dl_map[doc] for doc in out_ids], dtype=np.int64)
+        dl_eff = (bm25.quantize_dl(dl) if quant else dl).astype(np.float64)
+        tfn = tf / (tf + k1 * (1.0 - b + b * dl_eff / avgdl))
+        scores = (k1 + 1.0) * idf_sum * tfn
         order = np.lexsort((ids, -scores))
         if k is not None and ids.size > k:
             order = order[:k]
@@ -1125,6 +1186,10 @@ def phrase_prefix_topk(
             cand_docs = set()
             for e in present_exp:
                 cand_docs |= set(per_term[e])
+        cand_docs = list(cand_docs)
+        dl = np.array([dl_map[doc] for doc in cand_docs], dtype=np.int64)
+        dl_eff_of = dict(zip(cand_docs, (
+            bm25.quantize_dl(dl) if quant else dl).astype(np.float64).tolist()))
         out_ids, out_scores = [], []
         for doc in cand_docs:
             if prefix_terms:
@@ -1153,10 +1218,7 @@ def phrase_prefix_topk(
                     )
                 if tf == 0.0:
                     continue
-                dl = dl_map[doc]
-                dl_eff = (
-                    float(bm25.quantize_dl(np.array([dl]))[0]) if quant else float(dl)
-                )
+                dl_eff = dl_eff_of[doc]
                 tfn = tf / (tf + k1 * (1.0 - b + b * dl_eff / avgdl))
                 score = (k1 + 1.0) * (idf_prefix + idf_by[e]) * tfn
                 if best is None or score > best:

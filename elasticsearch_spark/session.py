@@ -45,11 +45,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    # only when given: an empty value would overwrite the
+    # spark.driver.extraJavaOptions of spark-defaults.conf
+    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
+    if java_opts:
+        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

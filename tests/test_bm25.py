@@ -24,6 +24,19 @@ def test_smallfloat_lossy_monotonic():
     assert np.array_equal(rt, codes)
 
 
+def test_quantize_table_matches_reference_round_trip():
+    """The 256-entry lookup equals the intToByte4/byte4ToInt round trip
+    over 0..2^21 and over random int32 values."""
+    ref = lambda v: bm25.byte4_to_int(bm25.int_to_byte4(v))  # noqa: E731
+    dense = np.arange(0, 2**21 + 1, dtype=np.int64)
+    assert np.array_equal(bm25.quantize_dl(dense), ref(dense))
+    rng = np.random.default_rng(7)
+    sparse = rng.integers(0, 2**31 - 1, size=1_000_000, endpoint=True,
+                          dtype=np.int64)
+    sparse[:2] = (0, 2**31 - 1)
+    assert np.array_equal(bm25.quantize_dl(sparse), ref(sparse))
+
+
 @given(st.integers(min_value=0, max_value=2**30))
 @settings(max_examples=300, deadline=None)
 def test_smallfloat_quantize_fixpoint(x):

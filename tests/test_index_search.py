@@ -101,30 +101,70 @@ def test_prune_equals_exhaustive(index):
         ]
 
 
-def test_batch_matches_single_query_path(index):
-    """match_topk_batch == per-query match_topk for every slot (one
-    scan + one applyInPandas for the whole batch vs Q separate jobs)."""
+@pytest.fixture(scope="module")
+def index_one_part(corpus, tmp_path_factory):
+    """The same corpus in ONE partition: high-DF terms then span several
+    posting blocks, so block-max pruning and impact ordering engage."""
+    return build_index(
+        corpus,
+        str(tmp_path_factory.mktemp("index_one_part")),
+        fields={"content": "code"},
+        num_partitions=1,
+        id_cols=["repo", "path", "commit"],
+        input_snapshot="test-corpus-v1",
+    )
+
+
+BATCH_QUERIES = [
+    # On the one-partition index ``indexwriter75`` has two blocks with
+    # upper bounds 2.288 and 2.097. Here it is the impact-ordered last
+    # term: theta after ``makedoc65`` is 2.205, so its second block is
+    # restricted to accumulator members (a masked view of the block).
+    "makedoc65 indexwriter75",
+    # ... and here it is the unrestricted first term, reading the same
+    # shared blocks after the query above has visited them.
+    "indexwriter75 lit11",
+    "import import return",  # repeated term: one clause of weight 2
+    "import return def",
+    "public class void static",
+    "read_buf_cfg",
+    "zzznonexistent",
+    "import",
+]
+
+
+def test_batch_matches_single_query_path(index, index_one_part):
+    """match_topk_batch == per-query match_topk == the exhaustive
+    (prune=False) scorer for every slot. The batch scores all queries
+    of a partition against one shared term view, so a block decoded
+    (or masked) for one query must score identically for the next."""
     from elasticsearch_spark.analysis import analyze
     from elasticsearch_spark.search.executor import match_topk_batch
 
-    queries = [
-        "import return def",
-        "public class void static",
-        "read_buf_cfg",
-        "zzznonexistent",
-        "import",
+    term_lists = [[t for t, _ in analyze(q, "code")] for q in BATCH_QUERIES]
+
+    def ranked(rows):
+        return [(r["doc_id"], round(r["score"], 9), r["matched"]) for r in rows]
+
+    variants = [
+        {},
+        {"operator": "and"},
+        {"minimum_should_match": 2},
+        {"params": BM25Params(quantize_norms=False)},
     ]
-    term_lists = [[t for t, _ in analyze(q, "code")] for q in queries]
-    batch = match_topk_batch(index, "content", term_lists, k=10).collect()
-    by_slot: dict[int, list] = {}
-    for r in batch:
-        by_slot.setdefault(r["query_id"], []).append(r)
-    for qid, terms in enumerate(term_lists):
-        single = match_topk(index, "content", terms, k=10).collect()
-        got = by_slot.get(qid, [])
-        assert [(r["doc_id"], round(r["score"], 9), r["matched"]) for r in got] == [
-            (r["doc_id"], round(r["score"], 9), r["matched"]) for r in single
-        ], f"slot {qid} diverged"
+    for idx, kws in ((index, variants[:1]), (index_one_part, variants)):
+        for kw in kws:
+            batch = match_topk_batch(idx, "content", term_lists, k=10, **kw).collect()
+            by_slot: dict[int, list] = {}
+            for r in batch:
+                by_slot.setdefault(r["query_id"], []).append(r)
+            for qid, terms in enumerate(term_lists):
+                got = ranked(by_slot.get(qid, []))
+                single = ranked(match_topk(idx, "content", terms, k=10, **kw).collect())
+                exhaustive = ranked(match_topk(
+                    idx, "content", terms, k=10, prune=False, **kw).collect())
+                assert got == single == exhaustive, (
+                    f"slot {qid} ({BATCH_QUERIES[qid]!r}, {kw}) diverged")
 
 
 def test_doc_stats_and_collection_stats(index, corpus_docs):

@@ -16,7 +16,49 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from qps_bench import CHILD  # noqa: E402  (same measured child)
+# one fresh-JVM sample: 60 BM25 top-10 queries as concurrent jobs
+# (queue depth 8) over a prebuilt index; prints {"cores", "qps"}
+CHILD = r"""
+import json, os, sys, time
+from concurrent.futures import ThreadPoolExecutor
+sys.path.insert(0, {repo!r})
+from elasticsearch_spark.session import get_spark
+from elasticsearch_spark.index.builder import load_index
+from elasticsearch_spark.search.executor import match_topk
+from elasticsearch_spark.analysis import analyze
+
+cores, idx_dir = int(sys.argv[1]), sys.argv[2]
+# SHUFFLE_PARTS is the A/B knob (the scorer exchange carries k
+# rows/shard, so narrower is mostly a scheduling-overhead lever)
+parts = int(os.environ.get("SHUFFLE_PARTS", "128"))
+spark = get_spark(f"qps{{cores}}", cores=cores, shuffle_partitions=parts)
+idx = load_index(spark, idx_dir).cache()
+queries = ["import return static", "parseIndex scanBuffer", "def lambda yield",
+           "public class void", "read_buf_cfg token"]
+terms = [[t for t, _ in analyze(q, "code")] for q in queries]
+# two warmup rounds: the first JIT-compiles the scorer codegen, the
+# second settles it — a single round leaves the measured stream paying
+# compilation on some hot paths (observed as 2-3x sample spread at
+# higher core counts)
+for _ in range(2):
+    for ts in terms:
+        match_topk(idx, "content", ts, k=10).collect()
+N = 60
+# fixed queue depth of 8 in-flight queries at BOTH levels: each job is
+# internally data-parallel (62 scan tasks), so one in-flight job can
+# already saturate either level and the worker count only sets queue
+# depth. A per-core depth (4*cores = 32 at local[8]) was A/B-tested and
+# LOST (best 1.818 vs 2.27 QPS): 32 concurrent py4j submitters + their
+# job stages thrash the single local-mode scheduler thread.
+t0 = time.time()
+with ThreadPoolExecutor(max_workers=8) as ex:
+    futs = [ex.submit(lambda ts=terms[i % len(terms)]:
+                      match_topk(idx, "content", ts, k=10).collect())
+            for i in range(N)]
+    for f in futs:
+        f.result()
+print(json.dumps({{"cores": cores, "qps": N / (time.time() - t0)}}))
+"""
 
 
 def one(cores: int, idx_dir: str, parts: int) -> float:
