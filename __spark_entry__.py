@@ -41,111 +41,6 @@ _SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 _EXACT = BM25Params(quantize_norms=False)
 _INDEX_PARTS = 8
 
-# The driver's CORRECTNESS gate covers the FIRST 50 registered queries()
-# entries.  Round 3's driver file certified exactly these 50 names, so
-# round 4 rotates them to the BACK of the registration order: the driver
-# then certifies 50 entries it has never checked before, while the
-# replica harness (tools/check_oracle.py) still covers everything.
-_R03_DRIVER_CHECKED = (
-    "match_or", "match_and", "match_msm2", "match_high_df",
-    "match_zero_hits", "match_k50", "match_classic", "match_boolean",
-    "match_phrase", "match_phrase_prefix", "match_stemmed",
-    "match_synonym_index", "match_stemmed_es", "match_common_grams",
-    "track_total_hits", "terminate_after", "highlight",
-    "match_bool_prefix", "match_fuzzy", "match_synonym",
-    "significant_terms", "significant_terms_bg", "bool_match_filter",
-    "query_string", "multi_match_best", "multi_match_cross", "dis_max",
-    "more_like_this", "term_suggest", "phrase_suggest", "collapse",
-    "collapse_inner_hits", "search_after", "rescore", "significant_text",
-    "function_score_fvf", "function_score_decay", "boosting",
-    "term_filter", "terms_filter", "range_filter", "prefix_filter",
-    "wildcard_filter", "regexp_filter", "ids_filter", "fuzzy_filter",
-    "exists_filter", "agg_terms_metrics", "agg_terms_topn",
-    "agg_histogram",
-)
-
-
-# Round 4's driver file certified these 48 (agg_date_range / agg_ip_range
-# were hash-red on an oracle typing bug, now fixed — they are re-queued at
-# the FRONT via _R05_PRIORITY so round 5's gate re-certifies them).
-_R04_DRIVER_CHECKED = (
-    "match_cjk", "match_stemmed_ar", "match_stemmed_hi", "match_stemmed_bn",
-    "match_thai", "pinned", "agg_date_histogram", "agg_range_buckets",
-    "agg_filters", "agg_composite_page", "agg_stats_global", "agg_top_hits",
-    "agg_pipeline_cum_deriv", "agg_cumulative_cardinality", "agg_normalize",
-    "agg_bucket_pipeline", "agg_percentile_ranks", "agg_rare_terms",
-    "agg_missing", "combined_fields", "eql_sequence", "rollup_hourly",
-    "transform_pivot", "eql_sequence_until", "slice_scan", "from_size_page",
-    "agg_adjacency_matrix", "agg_terms_order_metric", "agg_boxplot",
-    "agg_string_stats", "agg_top_metrics", "agg_t_test", "agg_rate",
-    "agg_multi_terms", "agg_moving_percentiles",
-    "agg_variable_width_histogram", "agg_mad", "agg_matrix_stats",
-    "agg_auto_date_histogram", "agg_scripted_metric", "prefix_match_indexed",
-    "wildcard_match_indexed", "fuzzy_match_indexed", "intervals_ordered",
-    "span_near", "span_first", "span_not", "intervals_any_of",
-)
-
-# Re-certify first in round 5 (r4 driver-red on oracle typing, fixed),
-# followed by this round's new operators — all ahead of the remaining
-# never-driver-checked pool.
-_R05_PRIORITY = (
-    "agg_date_range", "agg_ip_range", "match_copy_to", "multi_match_phrase", "more_like_this_text", "post_filter", "dedup_simhash_md5", "dedup_minhash_md5_sig", "ann_lsh_buckets",
-    "ml_high_count", "ml_distinct_count", "bulk_api",
-    "ingest_network_direction", "agg_filters_other", "agg_terms_missing_param", "term_suggest_popular", "span_multi", "span_field_masking",
-    "script_query_filter", "agg_ext_stats_bucket", "agg_percentiles_bucket",
-    "dedup_url", "dsir_weights", "boilerplate_lines", "ml_metric_mean", "ml_time_of_day",
-    "agg_filter_scope",
-    "essql_match", "essql_match_multi", "essql_query",
-    "essql_match_or", "essql_not_match", "match_after_split",
-    "ml_forecast", "ann_int8_topk", "chunk_documents", "essql_histogram",
-    "essql_pivot", "rollup_search",
-    "eql_text_sequence", "eql_join", "eql_sample",
-    "update_by_query_painless", "percolate", "transform_latest",
-    "highlight_query", "highlight_matched_fields", "ml_multi_metric",
-    "ml_population_anomaly", "completion_geo", "ml_train_regression",
-    # round-5 late additions (verify-path percolator + sloppy phrase):
-    # queued directly behind the VERDICT-requested names so the 50-slot
-    # driver gate certifies those first; these stay replica-checked
-    "percolate_nested", "percolate_verify", "percolate_spans",
-    "match_phrase_slop", "ml_influencers", "ml_overall_buckets",
-    "essql_cursor", "ml_calendar", "ml_detector_rules",
-    "ml_rare", "ml_train_classification", "update_by_query_loop",
-    "retriever_rrf", "retriever_linear",
-    "highlight_plain_type", "highlight_fvh_phrase",
-    "range_field_relation", "doc_geo_shape_indexed",
-    "doc_geo_shape_indexed_disjoint", "indices_boost", "count_api",
-    "ingest_circle", "xy_shape_point", "doc_xy_shape_contains",
-    "secured_search_dls", "downsample_agg", "msearch_template",
-    "script_score_expression", "dataset_mix", "quality_lm_nll",
-    "analyze_uax_url_email", "dedup_substring_spans", "substring_dup_stats",
-    "agg_terms_shard_error", "dedup_semantic", "agg_date_histogram_tz",
-    "agg_date_histogram_offset", "agg_histogram_empty", "range_date_math",
-    "ml_eval_classification", "ml_eval_regression", "ml_eval_auc",
-    "update_by_query_fn", "runtime_field_string", "agg_terms_script", "knn_text_embedding",
-)
-
-# Documented rows-only entries (seeded hashing — not SQL-twinnable).  The
-# driver can only record a weak rows-only check for these, so they queue
-# BEHIND the oracle-backed never-checked pool: every slot in the 50-entry
-# gate goes to a name the driver can fully hash-certify.
-_ROWS_ONLY = ("dedup_minhash_lsh", "dedup_simhash", "ann_lsh_self_join")
-
-
-def _rotate_checked(d: dict) -> dict:
-    """Order registration so the driver's 50-entry gate certifies names it
-    has never checked: priority re-runs first, then the never-checked
-    oracle-backed pool (stable registration order), then rows-only
-    entries, then round-4-certified, then round-3."""
-    pri = [k for k in _R05_PRIORITY if k in d]
-    done = (set(_R04_DRIVER_CHECKED) | set(_R03_DRIVER_CHECKED)
-            | set(pri) | set(_ROWS_ONLY))
-    head = {k: d[k] for k in pri}
-    mid = {k: v for k, v in d.items() if k not in done}
-    rows_only = {k: d[k] for k in _ROWS_ONLY if k in d}
-    tail4 = {k: d[k] for k in _R04_DRIVER_CHECKED if k in d}
-    tail3 = {k: d[k] for k in _R03_DRIVER_CHECKED if k in d}
-    return {**head, **mid, **rows_only, **tail4, **tail3}
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -4944,8 +4839,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # dedup_minhash_lsh 35.9M-pair frame, byte-identical rows
     # (elasticsearch_spark/arrow_collect.py; parity pinned by
     # tests/test_arrow_collect.py + tools/check_collect_parity.py).
-    return {name: _with_arrow_collect(fn)
-            for name, fn in _rotate_checked(q).items()}
+    return {name: _with_arrow_collect(fn) for name, fn in q.items()}
 
 
 def _with_arrow_collect(fn):
@@ -8997,4 +8891,4 @@ SELECT doc_id, n::BIGINT AS n_sides,
 FROM probe ORDER BY doc_id LIMIT 300
 """
 
-    return _rotate_checked(o)
+    return o

@@ -11,10 +11,16 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      predicate pushdown + term-sorted row-group skipping; only blocks
      of the query terms are read (per-term scan, like a term-dictionary
      seek).
-  3. ``groupBy(part_id).applyInPandas(scorer)`` — each index partition
-     (ES shard) scores its docs independently (doc-routing guarantees a
-     doc's postings for ALL terms share one part_id) and emits a LOCAL
-     top-k. The scorer is numpy-vectorized and prunes with a
+  3. one skeleton shared by every posting scorer (``_posting_groups``,
+     ``_scored_scan``): the pushed scan, ONE
+     ``repartition(num_partitions, part_id)`` exchange pinned to the
+     shard count, then ``groupBy(part_id).applyInPandas(kernel)`` —
+     each index partition (ES shard) scores its docs independently
+     (doc-routing guarantees a doc's postings for ALL terms share one
+     part_id) and emits a LOCAL top-k (``_local_topk``). Only the numpy
+     kernels differ per scorer; the positional ones (phrase, phrase
+     prefix, intervals, spans) read ``_position_lists``. The BM25
+     kernel prunes with a
      term-at-a-time MaxScore/block-max strategy (reference: WAND
      activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
@@ -23,7 +29,8 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      block upper bounds) in which a delta+VByte block is decoded and
      quantized at most once, on first use; a ``match_topk_batch``
      partition shares that view across all of its queries.
-  4. global merge: ``orderBy(score desc, doc_id asc).limit(k)`` —
+  4. global merge (``_topk_merge``): ``orderBy(score desc, doc_id
+     asc).limit(k)`` —
      Catalyst's TakeOrderedAndProject == Lucene TopDocs.merge
      (SearchPhaseController.java:205-208), same tie-break.
 
@@ -43,7 +50,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, GroupedData, functions as F
 
 from elasticsearch_spark.index import codec
 from elasticsearch_spark.index.builder import InvertedIndex
@@ -51,11 +58,6 @@ from elasticsearch_spark.search import bm25
 from elasticsearch_spark.search.bm25 import BM25Params
 
 TOPK_SCHEMA = "doc_id long, score double, matched int"
-
-# Impact-ordered block scan toggle (read at scorer construction, so
-# benchmarks can interleave on/off within one session; pruning safety
-# does not depend on scan order).
-IMPACT_ORDERING = True
 
 
 @dataclass
@@ -107,13 +109,121 @@ def _lookup_terms(
     index: InvertedIndex, field: str, terms: list[str], params: BM25Params
 ) -> tuple[list[TermStats], float, float]:
     """DFS phase: global term + collection statistics (driver-side)."""
-    coll = index.collection_stats().get(field)
-    if coll is None or not coll["n_docs"]:
-        return [], 0.0, 1.0  # unknown/empty field -> no matches
-    n_docs, avgdl = coll["n_docs"], coll["avgdl"]
+    coll = _collection_stats(index, field)
+    if coll is None:
+        return [], 0.0, 1.0
+    n_docs, avgdl = coll
     rows = index.term_stats(field, terms)
     by_term = {r["term"]: r for r in rows}
     return _stats_from_rows(terms, by_term, n_docs, avgdl, params), n_docs, avgdl
+
+
+def _collection_stats(
+    index: InvertedIndex, field: str
+) -> tuple[float, float] | None:
+    """DFS CollectionStatistics of ``field`` as ``(n_docs, avgdl)``;
+    None for an unknown or empty field, which no doc can match."""
+    coll = index.collection_stats().get(field)
+    if coll is None or not coll["n_docs"]:
+        return None
+    return coll["n_docs"], coll["avgdl"]
+
+
+# ---------------------------------------------------------------------
+# the posting-scan skeleton every scorer shares: scan -> one part_id
+# exchange -> per-partition kernel -> local top-k -> global merge
+# ---------------------------------------------------------------------
+
+def _posting_groups(
+    index: InvertedIndex, cond: Column, cols: tuple[str, ...]
+) -> GroupedData:
+    """The posting blocks matching ``cond`` (field/term predicates are
+    pushed to the Parquet scan), projected to ``cols`` and grouped by
+    index partition behind exactly ONE exchange.
+
+    The exchange pins the scorer stage's parallelism to the SHARD
+    count. The scoring applyInPandas is CPU-bound, not byte-bound:
+    AQE's byte-targeted partition coalescing (64 MB advisory) would
+    fuse these small-but-expensive groups into a few fat tasks and
+    leave most cores idle (measured: 4.8/8 busy cores coalesced vs
+    7.4/8 pinned, a 1.4x round-time win at local[8] / 500k docs —
+    BENCH/BASELINE.md). An explicit repartition is exempt from AQE
+    coalescing and satisfies the groupBy's required distribution, so
+    the plan still carries exactly ONE exchange."""
+    blocks = index.postings.filter(cond).select(*cols)
+    return blocks.repartition(index.num_partitions(), "part_id").groupBy(
+        "part_id")
+
+
+def _topk_merge(local: DataFrame, k: int | None) -> DataFrame:
+    """Global merge of the partitions' local top-k; ``k=None`` keeps
+    every row (a post-filter or an outer combination cuts later)."""
+    if k is None:
+        return local
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _scored_scan(
+    index: InvertedIndex,
+    cond: Column,
+    cols: tuple[str, ...],
+    kernel,
+    k: int | None,
+) -> DataFrame:
+    """Run ``kernel`` (one partition's blocks -> its local top-k in
+    TOPK_SCHEMA) over the shared posting scan, then merge globally."""
+    local = _posting_groups(index, cond, cols).applyInPandas(
+        kernel, schema=TOPK_SCHEMA)
+    return _topk_merge(local, k)
+
+
+def _position_lists(
+    pdf: pd.DataFrame, key: str | list[str] = "term"
+) -> tuple[dict, dict[int, int]]:
+    """Decode one partition's blocks (projected with ``n``, ``doc_ids``
+    and ``positions``) into ``{key: {doc: positions}}``, grouped by the
+    ``key`` column(s). When the projection also carries ``dls`` the
+    second result maps every decoded doc to its field length; it is
+    empty otherwise."""
+    with_dl = "dls" in pdf.columns
+    per_term: dict = {}
+    dl_map: dict[int, int] = {}
+    for term, g in pdf.groupby(key, sort=False):
+        docs: dict[int, np.ndarray] = {}
+        for row in g.itertuples(index=False):
+            d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
+            plists = codec.decode_positions(bytes(row.positions), int(row.n))
+            for doc, pos in zip(d, plists):
+                docs[int(doc)] = pos
+            if with_dl:
+                for doc, dl in zip(d, codec.vbyte_decode(row.dls)):
+                    dl_map[int(doc)] = int(dl)
+        per_term[term] = docs
+    return per_term, dl_map
+
+
+def _empty_topk() -> pd.DataFrame:
+    """A kernel's no-hit result, typed as TOPK_SCHEMA."""
+    return pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
+        {"doc_id": "int64", "score": "float64", "matched": "int32"}
+    )
+
+
+def _local_topk(
+    ids: np.ndarray, scores: np.ndarray, matched: np.ndarray, k: int | None
+) -> pd.DataFrame:
+    """A partition's local top-k with the global tie-break (score desc,
+    doc_id asc); ``k=None`` keeps every row."""
+    order = np.lexsort((ids, -scores))
+    if k is not None and ids.size > k:
+        order = order[:k]
+    return pd.DataFrame(
+        {
+            "doc_id": ids[order],
+            "score": scores[order],
+            "matched": matched[order].astype(np.int32),
+        }
+    )
 
 
 def _dump_prune_stats(nstat: dict) -> None:
@@ -214,7 +324,8 @@ def _make_scorer(
     minimum_should_match: int,
     prune: bool,
 ):
-    """applyInPandas fn for one part_id group of posting blocks."""
+    """The BM25 kernel for one part_id group of posting blocks:
+    ``score(pdf, allowed, allowed_range=None)`` -> local top-k."""
     # highest impact first; for AND, rarest (highest idf) first anyway
     stats = sorted(term_stats, key=lambda s: -s.ub)
     ubs = np.array([s.ub for s in stats], dtype=np.float64)
@@ -230,12 +341,8 @@ def _make_scorer(
     # k=None -> emit every matching doc (no local top-k, no pruning);
     # used when a post-filter runs before the global top-k cut.
     use_theta = prune and k is not None and operator == "or" and msm == 1
-    # captured HERE (driver side) so the serialized scorer carries the
-    # flag's value at construction time — workers re-import the module
-    # and would otherwise always see the default
-    impact_ordering = IMPACT_ORDERING
 
-    def _score_group_impl(
+    def score(
         pdf: pd.DataFrame | dict,
         allowed: np.ndarray | None,
         allowed_range: tuple[int, int] | None = None,
@@ -285,9 +392,7 @@ def _make_scorer(
             if tb is None:
                 if operator == "and":
                     _dump_prune_stats(nstat)
-                    return pd.DataFrame(
-                        {"doc_id": [], "score": [], "matched": []}
-                    ).astype({"doc_id": "int64", "score": "float64", "matched": "int32"})
+                    return _empty_topk()
                 continue
 
             # block-max WAND: a block whose own upper bound (max_tf at
@@ -318,8 +423,7 @@ def _make_scorer(
             # full upper bounds, and the extra merges were measured to
             # cost more than the ordering saves (BENCH/BASELINE.md).
             impact_zone = (
-                impact_ordering
-                and use_theta and block_ubs is not None and n_blocks > 1
+                use_theta and block_ubs is not None and n_blocks > 1
                 and (len(stats) == 1 or i == len(stats) - 1)
             )
             if impact_zone:
@@ -447,32 +551,11 @@ def _make_scorer(
 
         _dump_prune_stats(nstat)
         if acc_ids.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
-                {"doc_id": "int64", "score": "float64", "matched": "int32"}
-            )
+            return _empty_topk()
         keep = acc_counts >= msm
-        acc_ids, acc_scores, acc_counts = (
-            acc_ids[keep], acc_scores[keep], acc_counts[keep],
-        )
-        # local top-k with the global tie-break (score desc, doc_id asc)
-        order = np.lexsort((acc_ids, -acc_scores))
-        if k is not None and acc_ids.size > k:
-            order = order[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": acc_ids[order],
-                "score": acc_scores[order],
-                "matched": acc_counts[order].astype(np.int32),
-            }
-        )
+        return _local_topk(acc_ids[keep], acc_scores[keep], acc_counts[keep], k)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # single-parameter wrapper: applyInPandas dispatches on arity
-        # (a 2-arg fn would receive (key, pdf))
-        return _score_group_impl(pdf, None)
-
-    score_group.with_allowed = _score_group_impl
-    return score_group
+    return score
 
 
 def match_topk(
@@ -485,8 +568,6 @@ def match_topk(
     params: BM25Params | None = None,
     prune: bool = True,
     allowed: DataFrame | None = None,
-    allowed_strategy: str = "cogroup",
-    broadcast_allowed_max: int = 2_000_000,
     allowed_range: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Top-k BM25 for analyzed query ``terms``.
@@ -506,25 +587,17 @@ def match_topk(
     scoring to docs passing a filter clause WITHOUT giving up top-k
     pruning — the Spark shape of the reference's "filter bitset
     intersected inside the collector while WAND prunes"
-    (search/query/TopDocsCollectorContext.java:202-206). Strategies:
+    (search/query/TopDocsCollectorContext.java:202-206). The ids are
+    routed to their index partition with the builder's hash (one
+    in-plan shuffle of bare longs) and cogrouped with the posting
+    blocks — ONE job, no driver round-trip, executor memory bounded at
+    any filter size.
 
-      - ``cogroup`` (default): ids are routed to their index partition
-        with the builder's hash (one in-plan shuffle of bare longs) and
-        cogrouped with the posting blocks — ONE job, no driver
-        round-trip, executor memory bounded at any filter size. The
-        cluster-scale shape.
-      - ``broadcast``: the sorted id array is collected (capped by
-        ``broadcast_allowed_max``; raises beyond it) and broadcast to
-        the scorer closure — the scoring plan is then identical to an
-        unfiltered match, at the price of one extra driver job.
-      - ``auto``: one ``limit(max+1)`` probe job picks broadcast when
-        the ids fit, else cogroup.
-
-    Measured at 1M docs / local[16] (BENCH/BASELINE.md): all
-    strategies are within host noise of the old score-all + semi-join
-    plan, because scoring is not the bottleneck at 8k-doc shards and
-    hash-routed doc ids leave no empty block ranges to skip. The
-    structural difference — each shard emits only k rows and theta
+    Measured at 1M docs / local[16] (BENCH/BASELINE.md): the cogroup,
+    a broadcast id array and the score-all + semi-join plan are all
+    within host noise, because scoring is not the bottleneck at 8k-doc
+    shards and hash-routed doc ids leave no empty block ranges to skip.
+    The structural difference — each shard emits only k rows and theta
     pruning stays VALID under the filter — is what matters at
     1000-executor scale, where the k=None plan's per-shard full
     emission and disabled pruning dominate.
@@ -535,99 +608,43 @@ def match_topk(
     if not term_stats or (operator == "and" and len(term_stats) < len(set(terms))):
         return spark.createDataFrame([], TOPK_SCHEMA)
     qterms = [s.term for s in term_stats]
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(qterms)
-    ).select("part_id", "term", "doc_ids", "tfs", "dls",
-             "max_tf", "min_dl", "first_doc", "last_doc")
-    # Pin the scorer stage's parallelism to the SHARD count. The
-    # scoring applyInPandas is CPU-bound, not byte-bound: AQE's
-    # byte-targeted partition coalescing (64 MB advisory) would fuse
-    # these small-but-expensive groups into a few fat tasks and leave
-    # most cores idle (measured: 4.8/8 busy cores coalesced vs 7.4/8
-    # pinned, a 1.4x round-time win at local[8] / 500k docs —
-    # BENCH/BASELINE.md). An explicit repartition is exempt from AQE
-    # coalescing and satisfies the groupBy's required distribution, so
-    # the plan still carries exactly ONE exchange.
+    cond = (F.col("field") == field) & F.col("term").isin(qterms)
+    cols = ("part_id", "term", "doc_ids", "tfs", "dls",
+            "max_tf", "min_dl", "first_doc", "last_doc")
+    rng = None
     if allowed_range is not None:
-        lo_id, hi_id = int(allowed_range[0]), int(allowed_range[1])
-        if lo_id > hi_id:
+        rng = (int(allowed_range[0]), int(allowed_range[1]))
+        if rng[0] > rng[1]:
             return spark.createDataFrame([], TOPK_SCHEMA)
         # scan-level block pruning: parquet row-group min/max stats on
         # the pushed first_doc/last_doc predicates
-        blocks = blocks.filter(
-            (F.col("last_doc") >= lo_id) & (F.col("first_doc") <= hi_id))
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
+        cond = cond & (
+            (F.col("last_doc") >= rng[0]) & (F.col("first_doc") <= rng[1]))
     scorer = _make_scorer(
         term_stats, avgdl, params, k, operator, minimum_should_match, prune
     )
-    if allowed_range is not None and allowed is None:
-        rng = (lo_id, hi_id)
-
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            return scorer.with_allowed(pdf, None, allowed_range=rng)
-
-        local = blocks.groupBy("part_id").applyInPandas(
-            score_range, schema=TOPK_SCHEMA)
-        if k is None:
-            return local
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     if allowed is not None:
-        strategy = allowed_strategy
-        ids = None
-        if strategy == "auto":
-            head = allowed.select("doc_id").limit(
-                broadcast_allowed_max + 1).toPandas()
-            if head.empty:
-                return spark.createDataFrame([], TOPK_SCHEMA)
-            if len(head) <= broadcast_allowed_max:
-                ids = head["doc_id"].to_numpy(dtype=np.int64)
-                strategy = "broadcast"
-            else:
-                strategy = "cogroup"
-        if strategy == "broadcast":
-            if ids is None:
-                head = allowed.select("doc_id").limit(
-                    broadcast_allowed_max + 1).toPandas()
-                if len(head) > broadcast_allowed_max:
-                    raise ValueError(
-                        "allowed set exceeds broadcast_allowed_max; use "
-                        "allowed_strategy='cogroup'"
-                    )
-                ids = head["doc_id"].to_numpy(dtype=np.int64)
-            ids = np.sort(ids)
-            bc = spark.sparkContext.broadcast(ids)
+        allow_parts = index.route_ids(allowed)
 
-            def score_bc(pdf: pd.DataFrame) -> pd.DataFrame:
-                return scorer.with_allowed(pdf, bc.value)
+        def score_cogroup(
+            left: pd.DataFrame, right: pd.DataFrame
+        ) -> pd.DataFrame:
+            ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
+            if ids.size == 0 or left.empty:
+                return _empty_topk()
+            return scorer(left, ids)
 
-            local = blocks.groupBy("part_id").applyInPandas(
-                score_bc, schema=TOPK_SCHEMA)
-        elif strategy == "cogroup":
-            allow_parts = index.route_ids(allowed)
+        local = (
+            _posting_groups(index, cond, cols)
+            .cogroup(allow_parts.groupBy("part_id"))
+            .applyInPandas(score_cogroup, schema=TOPK_SCHEMA)
+        )
+        return _topk_merge(local, k)
 
-            def score_cogroup(
-                left: pd.DataFrame, right: pd.DataFrame
-            ) -> pd.DataFrame:
-                ids2 = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
-                if ids2.size == 0 or left.empty:
-                    return pd.DataFrame(
-                        {"doc_id": [], "score": [], "matched": []}
-                    ).astype({"doc_id": "int64", "score": "float64",
-                              "matched": "int32"})
-                return scorer.with_allowed(left, ids2)
+    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        return scorer(pdf, None, allowed_range=rng)
 
-            local = (
-                blocks.groupBy("part_id")
-                .cogroup(allow_parts.groupBy("part_id"))
-                .applyInPandas(score_cogroup, schema=TOPK_SCHEMA)
-            )
-        else:
-            raise ValueError(f"unknown allowed_strategy {allowed_strategy!r}")
-    else:
-        local = blocks.groupBy("part_id").applyInPandas(scorer, schema=TOPK_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _scored_scan(index, cond, cols, score_group, k)
 
 
 def doc_id_range_for(
@@ -698,10 +715,10 @@ def match_topk_batch(
     """
     params = params or BM25Params()
     spark = index.spark
-    coll = index.collection_stats().get(field)
-    if coll is None or not coll["n_docs"]:
+    coll = _collection_stats(index, field)
+    if coll is None:
         return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    n_docs, avgdl = coll["n_docs"], coll["avgdl"]
+    n_docs, avgdl = coll
     union_terms = sorted({t for q in queries for t in q})
     rows = index.term_stats(field, union_terms)
     by_row = {r["term"]: r for r in rows}
@@ -719,34 +736,26 @@ def match_topk_batch(
         known_terms.update(s.term for s in stats)
     if not scorers:
         return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(sorted(known_terms))
-    ).select("part_id", "term", "doc_ids", "tfs", "dls",
-             "max_tf", "min_dl", "first_doc", "last_doc")
-    # shard-count parallelism for the CPU-bound scorer stage (see
-    # match_topk: AQE byte-coalescing would serialize it)
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
-
     def score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         # every query shares one term view: a block is decoded at most
         # once per partition, however many queries visit it
         view = _term_view(pdf, avgdl, params)
         outs = []
         for qid, sc in scorers:
-            res = sc.with_allowed(view, None)
+            res = sc(view, None)
             if not res.empty:
                 res.insert(0, "query_id", np.int32(qid))
                 outs.append(res)
         if not outs:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int32"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-                "matched": pd.Series([], dtype="int32"),
-            })
+            empty = _empty_topk()
+            empty.insert(0, "query_id", np.int32(0))
+            return empty
         return pd.concat(outs, ignore_index=True)
 
-    local = blocks.groupBy("part_id").applyInPandas(
+    cond = (F.col("field") == field) & F.col("term").isin(sorted(known_terms))
+    cols = ("part_id", "term", "doc_ids", "tfs", "dls",
+            "max_tf", "min_dl", "first_doc", "last_doc")
+    local = _posting_groups(index, cond, cols).applyInPandas(
         score_batch, schema=BATCH_TOPK_SCHEMA)
     from pyspark.sql import Window
 
@@ -812,8 +821,8 @@ def phrase_topk(
     sloppy weights (slop>0, SloppyPhraseMatcher), idf = SUM of the
     terms' idfs, same tf/dl normalization as a term query.
 
-    Physical plan: same as match_topk (blocks of the phrase's terms,
-    one groupBy(part_id)), plus per-candidate position-list
+    Physical plan: the shared posting-scan skeleton (blocks of the
+    phrase's terms, one part_id exchange), plus per-candidate position-list
     intersection: cand = pos(t0); cand = (cand+1) ∩ pos(t1); ...
     |cand| = phrase frequency. Candidates are docs containing ALL terms
     (conjunction prunes before any position decode). The sloppy path
@@ -838,35 +847,16 @@ def phrase_topk(
     k1, b, quant = params.k1, params.b, params.quantize_norms
     ordered_terms = list(terms)  # keep phrase order (duplicates allowed)
 
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(list(set(terms)))
-    ).select("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
-            {"doc_id": "int64", "score": "float64", "matched": "int32"}
-        )
-        # decode per term: doc_id -> (positions, dl)
-        per_term: dict[str, dict[int, np.ndarray]] = {}
-        dl_map: dict[int, int] = {}
-        for term, g in pdf.groupby("term", sort=False):
-            docs: dict[int, np.ndarray] = {}
-            for row in g.itertuples(index=False):
-                d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-                dls = codec.vbyte_decode(row.dls)
-                plists = codec.decode_positions(bytes(row.positions), int(row.n))
-                for doc, dl, pos in zip(d, dls, plists):
-                    docs[int(doc)] = pos
-                    dl_map[int(doc)] = int(dl)
-            per_term[term] = docs
+        per_term, dl_map = _position_lists(pdf)
         if any(t not in per_term for t in ordered_terms):
-            return empty
+            return _empty_topk()
         # conjunction of doc sets
         cand_docs = set(per_term[ordered_terms[0]])
         for t in ordered_terms[1:]:
             cand_docs &= set(per_term[t])
         if not cand_docs:
-            return empty
+            return _empty_topk()
         out_ids, out_tfs = [], []
         for doc in cand_docs:
             if slop:
@@ -887,33 +877,19 @@ def phrase_topk(
             out_ids.append(doc)
             out_tfs.append(tf)
         if not out_ids:
-            return empty
+            return _empty_topk()
         ids = np.array(out_ids, dtype=np.int64)
         tf = np.array(out_tfs, dtype=np.float64)
         dl = np.array([dl_map[doc] for doc in out_ids], dtype=np.int64)
         dl_eff = (bm25.quantize_dl(dl) if quant else dl).astype(np.float64)
         tfn = tf / (tf + k1 * (1.0 - b + b * dl_eff / avgdl))
         scores = (k1 + 1.0) * idf_sum * tfn
-        order = np.lexsort((ids, -scores))
-        if k is not None and ids.size > k:
-            order = order[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": ids[order],
-                "score": scores[order],
-                "matched": np.full(order.size, len(ordered_terms), dtype=np.int32),
-            }
-        )
+        return _local_topk(
+            ids, scores, np.full(ids.size, len(ordered_terms)), k)
 
-    # pin scorer parallelism to the shard count (same rationale as
-    # match_topk): the applyInPandas stage is CPU-bound and AQE's
-    # byte-targeted coalescing would fuse these small-but-expensive
-    # groups into a few fat tasks
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
-    local = blocks.groupBy("part_id").applyInPandas(score_group, schema=TOPK_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    cond = (F.col("field") == field) & F.col("term").isin(list(set(terms)))
+    cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
+    return _scored_scan(index, cond, cols, score_group, k)
 
 
 def synonym_match_topk(
@@ -932,14 +908,15 @@ def synonym_match_topk(
     tf = SUM of the members' tfs in the doc, one BM25 contribution per
     group; groups sum like bool-OR clauses.
 
-    Same physical plan as match_topk: one pushed-down block scan of all
-    member terms, one part_id exchange, local top-k + global merge."""
+    Same physical plan as match_topk (the shared posting-scan skeleton):
+    one pushed-down block scan of all member terms, one part_id
+    exchange, local top-k + global merge."""
     params = params or BM25Params()
     spark = index.spark
-    coll = index.collection_stats().get(field)
-    if coll is None or not coll["n_docs"]:
+    coll = _collection_stats(index, field)
+    if coll is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    n_docs, avgdl = coll["n_docs"], coll["avgdl"]
+    n_docs, avgdl = coll
     all_terms = list(dict.fromkeys(t for g in groups for t in g))
     rows = index.term_stats(field, all_terms)
     by_term = {r["term"]: r for r in rows}
@@ -958,14 +935,7 @@ def synonym_match_topk(
     k1, b, quant = params.k1, params.b, params.quantize_norms
     qterms = list(term_to_group)
 
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(qterms)
-    ).select("part_id", "term", "doc_ids", "tfs", "dls")
-
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
-            {"doc_id": "int64", "score": "float64", "matched": "int32"}
-        )
         acc_ids = np.empty(0, dtype=np.int64)
         acc_scores = np.empty(0, dtype=np.float64)
         acc_counts = np.empty(0, dtype=np.int64)
@@ -1010,29 +980,13 @@ def synonym_match_topk(
             np.add.at(nc, inv2, all_counts)
             acc_ids, acc_scores, acc_counts = u2, ns, nc
         if acc_ids.size == 0:
-            return empty
+            return _empty_topk()
         keep = acc_counts >= msm
-        acc_ids, acc_scores, acc_counts = (
-            acc_ids[keep], acc_scores[keep], acc_counts[keep],
-        )
-        order = np.lexsort((acc_ids, -acc_scores))
-        if k is not None and acc_ids.size > k:
-            order = order[:k]
-        return pd.DataFrame({
-            "doc_id": acc_ids[order],
-            "score": acc_scores[order],
-            "matched": acc_counts[order].astype(np.int32),
-        })
+        return _local_topk(acc_ids[keep], acc_scores[keep], acc_counts[keep], k)
 
-    # pin scorer parallelism to the shard count (same rationale as
-    # match_topk): the applyInPandas stage is CPU-bound and AQE's
-    # byte-targeted coalescing would fuse these small-but-expensive
-    # groups into a few fat tasks
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
-    local = blocks.groupBy("part_id").applyInPandas(score_group, schema=TOPK_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    cond = (F.col("field") == field) & F.col("term").isin(qterms)
+    cols = ("part_id", "term", "doc_ids", "tfs", "dls")
+    return _scored_scan(index, cond, cols, score_group, k)
 
 
 def decoded_postings(
@@ -1152,31 +1106,13 @@ def phrase_prefix_topk(
     k1, b, quant = params.k1, params.b, params.quantize_norms
     m = len(terms)
 
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(all_terms)
-    ).select("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
-            {"doc_id": "int64", "score": "float64", "matched": "int32"}
-        )
-        per_term: dict[str, dict[int, np.ndarray]] = {}
-        dl_map: dict[int, int] = {}
-        for term, g in pdf.groupby("term", sort=False):
-            docs: dict[int, np.ndarray] = {}
-            for row in g.itertuples(index=False):
-                d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-                dls = codec.vbyte_decode(row.dls)
-                plists = codec.decode_positions(bytes(row.positions), int(row.n))
-                for doc, dl, pos in zip(d, dls, plists):
-                    docs[int(doc)] = pos
-                    dl_map[int(doc)] = int(dl)
-            per_term[term] = docs
+        per_term, dl_map = _position_lists(pdf)
         if any(t not in per_term for t in prefix_terms):
-            return empty
+            return _empty_topk()
         present_exp = [e for e in exp_set if e in per_term]
         if not present_exp:
-            return empty
+            return _empty_topk()
         # candidate docs: contain ALL prefix terms and >=1 expansion
         if prefix_terms:
             cand_docs = set(per_term[prefix_terms[0]])
@@ -1227,27 +1163,14 @@ def phrase_prefix_topk(
                 out_ids.append(doc)
                 out_scores.append(best)
         if not out_ids:
-            return empty
+            return _empty_topk()
         ids = np.array(out_ids, dtype=np.int64)
         scores = np.array(out_scores, dtype=np.float64)
-        order = np.lexsort((ids, -scores))
-        if k is not None and ids.size > k:
-            order = order[:k]
-        return pd.DataFrame({
-            "doc_id": ids[order],
-            "score": scores[order],
-            "matched": np.full(order.size, m, dtype=np.int32),
-        })
+        return _local_topk(ids, scores, np.full(ids.size, m), k)
 
-    # pin scorer parallelism to the shard count (same rationale as
-    # match_topk): the applyInPandas stage is CPU-bound and AQE's
-    # byte-targeted coalescing would fuse these small-but-expensive
-    # groups into a few fat tasks
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
-    local = blocks.groupBy("part_id").applyInPandas(score_group, schema=TOPK_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    cond = (F.col("field") == field) & F.col("term").isin(all_terms)
+    cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
+    return _scored_scan(index, cond, cols, score_group, k)
 
 
 def intervals_match(
@@ -1262,34 +1185,21 @@ def intervals_match(
     """intervals query (IntervalQueryBuilder.java:155) in filter
     context: docs where the terms occur as an interval — ordered (or
     any order) with at most ``max_gaps`` non-matching positions inside
-    the span. Constant-score (boost), tie-break doc_id asc.
+    the span. Constant-score (boost), so the shared (score desc, doc_id
+    asc) merge orders by doc_id asc.
 
     Greedy per-doc check over decoded position lists (numpy), same
-    partition-local plan as phrase_topk."""
+    posting-scan skeleton as phrase_topk."""
     spark = index.spark
     if not terms:
         return spark.createDataFrame([], TOPK_SCHEMA)
     uniq = list(dict.fromkeys(terms))
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(uniq)
-    ).select("part_id", "term", "n", "doc_ids", "positions")
     m = len(terms)
 
     def check_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
-            {"doc_id": "int64", "score": "float64", "matched": "int32"}
-        )
-        per_term: dict[str, dict[int, np.ndarray]] = {}
-        for term, g in pdf.groupby("term", sort=False):
-            docs: dict[int, np.ndarray] = {}
-            for row in g.itertuples(index=False):
-                d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-                plists = codec.decode_positions(bytes(row.positions), int(row.n))
-                for doc, pos in zip(d, plists):
-                    docs[int(doc)] = pos
-            per_term[term] = docs
+        per_term, _ = _position_lists(pdf)
         if any(t not in per_term for t in terms):
-            return empty
+            return _empty_topk()
         cand = set(per_term[terms[0]])
         for t in terms[1:]:
             cand &= set(per_term[t])
@@ -1326,21 +1236,14 @@ def intervals_match(
                 if lo_span is not None and lo_span - (m - 1) <= max_gaps:
                     hits.append(doc)
         if not hits:
-            return empty
-        ids = np.sort(np.array(hits, dtype=np.int64))
-        if k is not None and ids.size > k:
-            ids = ids[:k]
-        return pd.DataFrame({
-            "doc_id": ids,
-            "score": np.full(ids.size, float(boost)),
-            "matched": np.full(ids.size, m, dtype=np.int32),
-        })
+            return _empty_topk()
+        ids = np.array(hits, dtype=np.int64)
+        return _local_topk(ids, np.full(ids.size, float(boost)),
+                           np.full(ids.size, m), k)
 
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
-    local = blocks.groupBy("part_id").applyInPandas(check_group, schema=TOPK_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.asc("doc_id")).limit(k)
+    cond = (F.col("field") == field) & F.col("term").isin(uniq)
+    cols = ("part_id", "term", "n", "doc_ids", "positions")
+    return _scored_scan(index, cond, cols, check_group, k)
 
 
 def expand_terms(
@@ -1472,9 +1375,7 @@ def match_bool_prefix_topk(
                 F.sum("matched").cast("int").alias("matched"),
             )
         )
-    if k is None:
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk_merge(out, k)
 
 
 def fuzzy_match_topk(

@@ -20,10 +20,12 @@ Intervals sources reuse the same evaluator: ``match`` == span_near with
 max_gaps, ``any_of`` == span_or, ``all_of`` == span_near(ordered?).
 
 Docs match when >=1 span survives; like the engine's intervals query
-this executes in FILTER context (constant score = boost, tie-break
-doc_id asc). Physical plan: same one-scan one-exchange shape as
-phrase_topk — blocks of the tree's terms, groupBy(part_id),
-applyInPandas position evaluation.
+this executes in FILTER context (constant score = boost, so the
+(score desc, doc_id asc) merge orders by doc_id asc). Physical plan:
+the posting-scan skeleton every scorer shares (executor._scored_scan)
+— blocks of the tree's terms, one part_id exchange pinned to the shard
+count, an applyInPandas position evaluation over the shared
+``_position_lists`` decode, local top-k and global merge.
 """
 
 from __future__ import annotations
@@ -32,10 +34,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from elasticsearch_spark.index import codec
 from elasticsearch_spark.index.builder import InvertedIndex
-
-TOPK_SCHEMA = "doc_id long, score double, matched int"
+from elasticsearch_spark.search.executor import (
+    TOPK_SCHEMA, _empty_topk, _local_topk, _position_lists, _scored_scan,
+)
 
 
 def span_pairs(tree: dict) -> list[tuple[str, str]]:
@@ -253,7 +255,8 @@ def span_match(
     boost: float = 1.0,
 ) -> DataFrame:
     """Docs with >=1 surviving span (constant score = boost, doc_id asc).
-    One pushed-down block scan of the tree's terms, one part_id exchange."""
+    One pushed-down block scan of the tree's terms, one part_id exchange
+    (the shared posting-scan skeleton)."""
     spark = index.spark
     if _has_span_multi(tree):
         tree = rewrite_span_multi(index, field, tree)
@@ -268,24 +271,10 @@ def span_match(
     for f, ts in by_field.items():
         c = (F.col("field") == f) & F.col("term").isin(ts)
         cond = c if cond is None else (cond | c)
-    blocks = index.postings.filter(cond).select(
-        "part_id", "field", "term", "n", "doc_ids", "positions")
 
     def check_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
-            {"doc_id": "int64", "score": "float64", "matched": "int32"}
-        )
-        per_term: dict[tuple[str, str], dict[int, np.ndarray]] = {}
-        all_docs: set[int] = set()
-        for (fld, term), g in pdf.groupby(["field", "term"], sort=False):
-            docs: dict[int, np.ndarray] = {}
-            for row in g.itertuples(index=False):
-                d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-                plists = codec.decode_positions(bytes(row.positions), int(row.n))
-                for doc, pos in zip(d, plists):
-                    docs[int(doc)] = pos
-            per_term[(fld, term)] = docs
-            all_docs.update(docs)
+        per_term, _ = _position_lists(pdf, ["field", "term"])
+        all_docs: set[int] = set().union(*per_term.values())
         hits = []
         for doc in all_docs:
             pos_by_term = {
@@ -296,25 +285,13 @@ def span_match(
             if spans:
                 hits.append((doc, len(spans)))
         if not hits:
-            return empty
-        hits.sort()
+            return _empty_topk()
         ids = np.array([h[0] for h in hits], dtype=np.int64)
         nm = np.array([h[1] for h in hits], dtype=np.int32)
-        if k is not None and ids.size > k:
-            ids, nm = ids[:k], nm[:k]
-        return pd.DataFrame({
-            "doc_id": ids,
-            "score": np.full(ids.size, float(boost)),
-            "matched": nm,
-        })
+        return _local_topk(ids, np.full(ids.size, float(boost)), nm, k)
 
-    # pin scorer parallelism to the shard count (match_topk rationale:
-    # AQE byte-coalescing would fuse the CPU-bound span-verify groups)
-    blocks = blocks.repartition(index.num_partitions(), "part_id")
-    local = blocks.groupBy("part_id").applyInPandas(check_group, schema=TOPK_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.asc("doc_id")).limit(k)
+    cols = ("part_id", "field", "term", "n", "doc_ids", "positions")
+    return _scored_scan(index, cond, cols, check_group, k)
 
 
 # ---------------------------------------------------------------------

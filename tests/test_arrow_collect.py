@@ -131,7 +131,7 @@ def test_quiesce_path_parity(spark, monkeypatch):
     assert sorted(map(tuple, a)) == sorted(map(tuple, c))
 
 
-def test_quiesce_survives_broken_jvm_handle(spark, monkeypatch):
+def test_quiesce_survives_broken_jvm_handle():
     from elasticsearch_spark import arrow_collect as ac
 
     class _Boom:

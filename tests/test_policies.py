@@ -137,7 +137,7 @@ def test_filtered_search_keeps_pruning_plan(spark, index):
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the scored side must NOT be semi-joined against the filter
     assert "LeftSemi" not in plan, plan[:3000]
-    # beyond the broadcast threshold the allowlist cogroups instead
+    # match_topk itself routes the allowlist into a cogroup
     allowed = docs.filter(docs.lang == "en").select("doc_id")
     big = match_topk(index, "text", ["query", "data"], k=10,
                      params=BM25Params(quantize_norms=False),
@@ -192,28 +192,62 @@ def test_filtered_search_parity_with_fallback(spark, index):
         assert got == want, q
 
 
-def test_filtered_match_cogroup_strategy_parity(spark, index):
-    """broadcast and cogroup allowlist strategies return identical
-    rows."""
-    from pyspark.sql import functions as F
+def _pin_cases():
+    from elasticsearch_spark.search import executor as ex
+    from elasticsearch_spark.search.spans import span_match
 
-    from elasticsearch_spark.search.bm25 import BM25Params
-    from elasticsearch_spark.search.executor import match_topk
+    near = {"span_near": {"clauses": [{"span_term": {"text": "key"}},
+                                      {"span_term": {"text": "order"}}],
+                          "slop": 2, "in_order": True}}
+    return {
+        "match_topk": lambda idx: ex.match_topk(
+            idx, "text", ["query", "data"]),
+        "match_topk_batch": lambda idx: ex.match_topk_batch(
+            idx, "text", [["query", "data"], ["table", "scan"]]),
+        "phrase_topk": lambda idx: ex.phrase_topk(
+            idx, "text", ["key", "order"], slop=1),
+        "synonym_match_topk": lambda idx: ex.synonym_match_topk(
+            idx, "text", [["query", "data"], ["table"]]),
+        "phrase_prefix_topk": lambda idx: ex.phrase_prefix_topk(
+            idx, "text", ["key", "or"]),
+        "intervals_match": lambda idx: ex.intervals_match(
+            idx, "text", ["key", "order"], max_gaps=2),
+        "span_match": lambda idx: span_match(idx, "text", near),
+    }
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    allowed = docs.filter(F.col("n_chars") >= 300).select("doc_id")
-    params = BM25Params(quantize_norms=False)
 
-    def rows(**kw):
-        return [
-            (r["doc_id"], r["s"])
-            for r in match_topk(index, "text", ["table", "scan", "merge"],
-                                k=10, params=params, allowed=allowed, **kw)
-            .select("doc_id", F.round("score", 6).alias("s")).collect()
-        ]
-
-    assert rows(allowed_strategy="broadcast") == rows()
-    assert rows(allowed_strategy="auto") == rows()
+@pytest.mark.parametrize("scorer", sorted(_pin_cases()))
+def test_scorer_exchange_pinned_to_shard_count(spark, index, scorer):
+    """Every posting scorer feeds its pandas kernel through exactly one
+    ``repartition(num_partitions, part_id)`` exchange, which AQE may not
+    coalesce: the scorer stage is CPU-bound, so a byte-coalesced read
+    would fuse the shard groups into a few fat tasks. Checked on the
+    AQE final plan after execution, with coalescing switched on."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = _pin_cases()[scorer](index)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, before)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final[:3000]
+    assert final.count("Exchange hashpartitioning(part_id") == 1, final
+    pins = re.findall(
+        r"Exchange hashpartitioning\(part_id#\d+, (\d+)\), REPARTITION_BY_NUM",
+        final)
+    assert pins == [str(index.num_partitions())], final
+    lines = final.splitlines()
+    kernel = next(i for i, ln in enumerate(lines)
+                  if "FlatMapGroupsInPandas" in ln)
+    exchange = next(i for i, ln in enumerate(lines)
+                    if "Exchange hashpartitioning(part_id" in ln)
+    assert kernel < exchange, final
+    # only the group sort and projections sit between the two
+    assert not any("AQEShuffleRead" in ln or "Exchange" in ln
+                   for ln in lines[kernel + 1:exchange]), final
 
 
 def test_term_stats_fallback_pushdown(spark, tmp_path):

@@ -16,6 +16,7 @@ import os
 import sys
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -36,6 +37,21 @@ OFFSET = {
 }
 COPY = ["region", "nation"]
 
+# fail before writing anything: a table neither offset nor copied would
+# be silently missing from DST, and a key at or above STRIDE would make
+# replica key ranges overlap (duplicate keys, inconsistent joins)
+src_tables = {f[:-len(".parquet")] for f in os.listdir(SRC)
+              if f.endswith(".parquet")}
+uncovered = sorted(src_tables - set(OFFSET) - set(COPY))
+if uncovered:
+    sys.exit(f"{SRC}: tables in neither OFFSET nor COPY: {uncovered}")
+for name, keys in OFFSET.items():
+    t = pq.read_table(os.path.join(SRC, f"{name}.parquet"), columns=keys)
+    for key in keys:
+        top = pc.max(t[key]).as_py()
+        if top is not None and top >= STRIDE:
+            sys.exit(f"{name}.{key}: max key {top} >= STRIDE {STRIDE}")
+
 os.makedirs(DST, exist_ok=True)
 for name in COPY:
     t = pq.read_table(os.path.join(SRC, f"{name}.parquet"))
@@ -52,7 +68,6 @@ for name, keys in OFFSET.items():
         cols = []
         for field, col in zip(t.schema, t.columns):
             if field.name in keys:
-                import pyarrow.compute as pc
                 col = pc.add(col, pa.scalar(r * STRIDE, type=field.type))
             cols.append(col)
         reps.append(pa.table(cols, schema=t.schema))
