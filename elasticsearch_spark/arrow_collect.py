@@ -37,7 +37,7 @@ contract queries at sf0.01).
 from __future__ import annotations
 
 import gc
-import os
+import sys
 from functools import partial
 
 from pyspark.sql.classic.dataframe import DataFrame
@@ -112,13 +112,28 @@ _SLAB_ROWS = 4 << 20
 # the build drains that work up front (~0.08 s) and keeps every repeat
 # at the fresh-process floor: 8.7-11.6 s flat vs 9.5/46/86 s without.
 # Only worth it when the build is long enough to overlap GC, hence the
-# row threshold; SPARK_GRAFT_COLLECT_QUIESCE=0 disables (A/B knob).
+# row threshold. System.gc() is advisory: under -XX:+DisableExplicitGC
+# it does nothing, so the first quiesce in a process reports which case
+# applies.
 _QUIESCE_MIN_ROWS = 1 << 20
+_quiesce_reported = False
 
 
 def _quiesce_jvm(spark) -> None:
+    global _quiesce_reported
     try:
-        spark._jvm.System.gc()
+        jvm = spark._jvm
+        if not _quiesce_reported:
+            _quiesce_reported = True
+            args = (jvm.java.lang.management.ManagementFactory
+                    .getRuntimeMXBean().getInputArguments())
+            state = ("a NO-OP: the driver JVM runs with "
+                     "-XX:+DisableExplicitGC"
+                     if any(str(a) == "-XX:+DisableExplicitGC" for a in args)
+                     else "active")
+            print(f"arrow_collect: JVM quiesce (System.gc() before building "
+                  f">= {_QUIESCE_MIN_ROWS} rows) is {state}", file=sys.stderr)
+        jvm.System.gc()
     except Exception:
         pass  # best-effort: a failed quiesce only costs speed
 
@@ -178,12 +193,10 @@ class ArrowCollectDataFrame(DataFrame):
         except Exception as ex:
             # unsupported type / arrow failure: classic path still
             # works — but is ~10x slower on big frames, so say so
-            import sys
             print(f"arrow_collect: falling back to classic collect "
                   f"({type(ex).__name__}: {ex})", file=sys.stderr)
             return super().collect()
-        if (tbl.num_rows >= _QUIESCE_MIN_ROWS
-                and os.environ.get("SPARK_GRAFT_COLLECT_QUIESCE") != "0"):
+        if tbl.num_rows >= _QUIESCE_MIN_ROWS:
             _quiesce_jvm(self.sparkSession)
         return rows_from_arrow(tbl, schema)
 

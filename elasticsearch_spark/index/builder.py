@@ -10,22 +10,31 @@ cluster/routing/OperationRouting.java:240-246):
     partition holds ALL terms for its slice of documents, so query-time
     scoring needs NO shuffle — each partition scores its docs and emits
     a local top-k, merged by one global TakeOrderedAndProject.
-  - One tokenize pass (mapInPandas, Arrow-batched pandas — never
-    per-row Python at the Spark level) emits posting rows
-    (term, doc_id, tf, positions, dl) plus one per-(doc,field) stats
-    marker row.
-  - One shuffle (groupBy part_id,field -> applyInPandas) plays the role
-    of ES's segment merge (index/EsTieredMergePolicy.java:24-27): each
-    partition's postings are term-sorted and encoded into Lucene-style
-    blocks of 128 docs (delta+VByte doc ids, VByte tfs/dls/positions)
-    with per-block skip metadata (first/last doc, max_tf, min_dl) for
-    block-max-WAND pruning.
+  - One tokenize pass (``tokenize_docs``: mapInPandas, Arrow-batched
+    pandas — never per-row Python at the Spark level) emits one row per
+    (doc, field): its terms plus VByte tf / position blobs.
+  - ``write_segment`` is the ONE step that turns postings into stored
+    blocks, for every writer: ``build_index``, streaming ingest and
+    compaction (streaming/refresh.py) and split (ops/resize.py). One
+    shuffle (a pinned repartition on part_id, field -> applyInPandas
+    ``_encode_blocks``) plays the role of ES's segment merge
+    (index/EsTieredMergePolicy.java:24-27): each partition's postings
+    are term-sorted and encoded into Lucene-style blocks of 128 docs
+    (delta+VByte doc ids, VByte tfs/dls/positions) with per-block skip
+    metadata (first/last doc, max_tf, min_dl) for block-max-WAND
+    pruning, plus one per-(part, field) doc-roster marker row. The
+    encoder takes tokenized doc rows (build, ingest) or postings
+    decoded from existing blocks (compaction, split) and shares one
+    vectorized back half between them.
+  - ``index_meta.json`` is the commit point of every writer and is
+    only ever replaced atomically (``write_index_meta``).
   - term_dict / coll_stats are aggregated from block METADATA (not raw
     postings) — a cheap second agg, equivalent to the DFS phase's
     global TermStatistics/CollectionStatistics
     (search/dfs/DfsPhase.java:39-55).
-  - Per-partition checkpoint manifests (JSON: docs/terms/postings counts
-    + lineage) make the build resumable — the analogue of the translog +
+  - Per-partition checkpoint manifests (``_write_manifests``, JSON:
+    docs/terms/postings counts + lineage; build and split) make the
+    build resumable — the analogue of the translog +
     LocalCheckpointTracker (index/translog/Translog.java:78-89,
     index/seqno/LocalCheckpointTracker.java:98,132). Re-running
     ``build_index(..., resume=True)`` skips completed partitions via a
@@ -83,9 +92,9 @@ def _posting_stream(plist) -> list[int]:
 def _vb_small(vals: list[int]) -> bytes:
     """Pure-python VByte for tiny int lists (positions of one posting).
 
-    For 1-5 values this beats numpy-call overhead by ~10x, and VByte is
-    value-independent, so per-posting encodings concatenate into exactly
-    the stream codec.encode_positions/decode_positions use."""
+    Used by the per-doc reference tokenizer (``vectorized=False``) only;
+    VByte is value-independent, so per-posting encodings concatenate
+    into exactly the stream ``_position_stream`` writes."""
     for v in vals:
         if v >= 0x80:
             break
@@ -99,6 +108,33 @@ def _vb_small(vals: list[int]) -> bytes:
             v >>= 7
         out.append(v)
     return bytes(out)
+
+
+def _position_stream(pos: np.ndarray, lens: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Per-posting ``[tf, first, deltas...]`` position streams, VByte-
+    encoded in ONE pass. ``pos`` holds every posting's (ascending)
+    positions back to back, ``lens[i]`` of them for posting i. Returns
+    (buffer, bounds): posting i's bytes are buffer[bounds[i]:bounds[i+1]]
+    — the per-posting slices concatenate into exactly the block stream
+    codec.decode_positions reads."""
+    n = pos.size
+    n_groups = lens.size
+    g_starts = np.cumsum(lens) - lens
+    deltas = np.empty(n, dtype=np.int64)
+    deltas[1:] = pos[1:] - pos[:-1]
+    deltas[g_starts] = pos[g_starts]
+    stream = np.empty(n + n_groups, dtype=np.int64)
+    tf_slots = g_starts + np.arange(n_groups)
+    stream[tf_slots] = lens
+    stream[np.arange(n) + np.repeat(np.arange(n_groups), lens) + 1] = deltas
+    enc, offs = codec.vbyte_encode_with_offsets(stream)
+    return enc, offs[np.append(tf_slots, n + n_groups)]
+
+
+def _slices(buf: bytes, bounds: np.ndarray) -> list[bytes]:
+    b = bounds.tolist()
+    return [buf[lo:hi] for lo, hi in zip(b[:-1], b[1:])]
+
 
 BLOCKS_SCHEMA = (
     "part_id int, field string, term string, block_id int, n int, "
@@ -336,20 +372,8 @@ def _tokenize_field_flat(pdf: pd.DataFrame, field: str, analyzer_name: str) -> p
     n_groups = g_starts.size
     tf = np.diff(np.append(g_starts, n))
 
-    # per-posting [tf, first_pos, deltas...] interleaved into ONE stream,
-    # encoded with ONE VByte pass; per-posting blobs are byte slices
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[1:] = pos_s[1:] - pos_s[:-1]
-    deltas[g_starts] = pos_s[g_starts]
-    stream = np.empty(n + n_groups, dtype=np.int64)
-    tf_slots = g_starts + np.arange(n_groups)
-    grp_of_token = np.repeat(np.arange(n_groups), tf)
-    stream[tf_slots] = tf
-    stream[np.arange(n) + grp_of_token + 1] = deltas
-    enc, offs = codec.vbyte_encode_with_offsets(stream)
-    blob_start = offs[tf_slots]
-    blob_end = offs[np.append(tf_slots[1:], n + n_groups)]
-    blobs = [enc[a:b] for a, b in zip(blob_start.tolist(), blob_end.tolist())]
+    # per-posting position blobs are byte slices of ONE VByte pass
+    blobs = _slices(*_position_stream(pos_s, tf))
 
     enc_tf, offs_tf = codec.vbyte_encode_with_offsets(tf)
     g_terms = uniques[code_s[g_starts]]
@@ -435,79 +459,17 @@ def _make_tokenizer(fields: dict[str, str], vectorized: bool = True):
     return tokenize_vec if vectorized else tokenize
 
 
-def _emit_term_blocks(out, part_id, field, term, doc_ids, tfs, dls, plist):
-    """Append Lucene-style blocks for one term's (sorted) postings."""
-    for bi, (lo, hi) in enumerate(codec.split_blocks(len(doc_ids))):
-        d = doc_ids[lo:hi]
-        t = tfs[lo:hi]
-        l = dls[lo:hi]
-        out["part_id"].append(part_id)
-        out["field"].append(field)
-        out["term"].append(term)
-        out["block_id"].append(bi)
-        out["n"].append(hi - lo)
-        out["doc_ids"].append(codec.vbyte_encode(codec.delta_encode(d)))
-        out["tfs"].append(codec.vbyte_encode(t))
-        out["dls"].append(codec.vbyte_encode(l))
-        out["positions"].append(
-            b"".join(
-                bytes(p) if isinstance(p, (bytes, bytearray))
-                else bytes(_vb_small(_posting_stream(p)))
-                for p in plist[lo:hi]
-            )
-        )
-        out["max_tf"].append(int(t.max()))
-        out["min_dl"].append(int(l.min()))
-        out["sum_tf"].append(int(t.sum()))
-        out["first_doc"].append(int(d[0]))
-        out["last_doc"].append(int(d[-1]))
-
-
-def _blocks_out() -> dict[str, list]:
-    return {k: [] for k in (
-        "part_id", "field", "term", "block_id", "n", "doc_ids", "tfs",
-        "dls", "positions", "max_tf", "min_dl", "sum_tf", "first_doc",
-        "last_doc",
-    )}
-
-
-def _encode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas fn for one (part_id, field) group of DOC-level rows
-    (TOKENIZED_SCHEMA): numpy-explode to postings, term-sort, emit
-    Lucene-style blocks + ONE aggregate stats row (term=NULL, n=n_docs,
-    sum_tf=sum_ttf, first_doc=sum_dl). One shuffle + one write, no
-    posting-level rows across Arrow."""
-    part_id = int(pdf["part_id"].iloc[0])
-    field = pdf["field"].iloc[0]
-    out = _blocks_out()
-    # stats row: the group IS the doc roster (zero-token docs included).
-    # Two otherwise-unused marker fields carry the group's index-size
-    # metrics so NO post-build job ever re-scans the posting metadata to
-    # count them: max_tf = distinct terms, last_doc = posting count
-    # (both are filled in below once the group is term-sorted).
-    out["part_id"].append(part_id)
-    out["field"].append(field)
-    out["term"].append(None)
-    out["block_id"].append(-1)
-    out["n"].append(int(pdf["doc_id"].nunique()))
-    out["doc_ids"].append(b"")
-    out["tfs"].append(b"")
-    out["dls"].append(b"")
-    out["positions"].append(b"")
-    out["max_tf"].append(0)
-    out["min_dl"].append(0)
-    out["sum_tf"].append(int(pdf["ttf"].sum()))
-    out["first_doc"].append(int(pdf["dl"].sum()))
-    out["last_doc"].append(0)
-
+def _doc_row_postings(pdf: pd.DataFrame):
+    """Encoder front for tokenized DOC rows (TOKENIZED_SCHEMA; build and
+    ingest): the group IS the doc roster (zero-token docs included), and
+    the per-doc term lists and blobs numpy-explode to flat postings —
+    posting-level rows never cross the Arrow/shuffle boundary."""
+    roster = (int(pdf["doc_id"].nunique()), int(pdf["ttf"].sum()),
+              int(pdf["dl"].sum()))
     terms_lists = pdf["terms"].tolist()
-    if not terms_lists:
-        return pd.DataFrame(out)
     lens = np.fromiter((len(t) for t in terms_lists), dtype=np.int64,
                        count=len(terms_lists))
     total = int(lens.sum())
-    if total == 0:
-        return pd.DataFrame(out)
     doc_rep = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens)
     dl_rep = np.repeat(pdf["dl"].to_numpy(dtype=np.int64), lens)
     tf_flat = codec.vbyte_decode(b"".join(pdf["tfs"].tolist()))
@@ -519,6 +481,65 @@ def _encode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
         terms_flat[i : i + n] = tl
         pos_flat[i : i + n] = pl
         i += n
+    return roster, doc_rep, dl_rep, tf_flat, terms_flat, pos_flat
+
+
+def _decoded_row_postings(pdf: pd.DataFrame):
+    """Encoder front for postings decoded from existing blocks
+    (compaction, split; columns term, doc_id, tf, dl, positions): the
+    roster is the distinct docs that have postings, and every position
+    list is re-encoded in ONE ``_position_stream`` pass."""
+    doc = pdf["doc_id"].to_numpy(dtype=np.int64)
+    dl = pdf["dl"].to_numpy(dtype=np.int64)
+    tf = pdf["tf"].to_numpy(dtype=np.int64)
+    first = np.unique(doc, return_index=True)[1]
+    roster = (int(first.size), int(tf.sum()), int(dl[first].sum()))
+    plists = pdf["positions"].tolist()
+    lens = np.fromiter(map(len, plists), dtype=np.int64, count=len(plists))
+    pos_flat = np.empty(len(plists), dtype=object)
+    pos_flat[:] = _slices(*_position_stream(
+        np.concatenate(plists).astype(np.int64), lens))
+    return roster, doc, dl, tf, pdf["term"].to_numpy(dtype=object), pos_flat
+
+
+def _encode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas fn for one (part_id, field) group — the one block
+    encoder of every writer (see ``write_segment``). Takes either
+    tokenized doc rows or decoded posting rows, reduces them to flat
+    posting arrays, then term-sorts and emits Lucene-style blocks + ONE
+    aggregate stats row (term=NULL, n=n_docs, sum_tf=sum_ttf,
+    first_doc=sum_dl)."""
+    front = _doc_row_postings if "terms" in pdf.columns else _decoded_row_postings
+    roster, doc_rep, dl_rep, tf_flat, terms_flat, pos_flat = front(pdf)
+    n_docs, sum_ttf, sum_dl = roster
+    part_id = int(pdf["part_id"].iloc[0])
+    field = pdf["field"].iloc[0]
+    out: dict[str, list] = {k: [] for k in (
+        "part_id", "field", "term", "block_id", "n", "doc_ids", "tfs",
+        "dls", "positions", "max_tf", "min_dl", "sum_tf", "first_doc",
+        "last_doc",
+    )}
+    # stats row: the group's doc roster. Two otherwise-unused marker
+    # fields carry the group's index-size metrics so NO post-build job
+    # ever re-scans the posting metadata to count them: max_tf = distinct
+    # terms, last_doc = posting count (both are filled in below once the
+    # group is term-sorted).
+    out["part_id"].append(part_id)
+    out["field"].append(field)
+    out["term"].append(None)
+    out["block_id"].append(-1)
+    out["n"].append(n_docs)
+    out["doc_ids"].append(b"")
+    out["tfs"].append(b"")
+    out["dls"].append(b"")
+    out["positions"].append(b"")
+    out["max_tf"].append(0)
+    out["min_dl"].append(0)
+    out["sum_tf"].append(sum_ttf)
+    out["first_doc"].append(sum_dl)
+    out["last_doc"].append(0)
+    if doc_rep.size == 0:
+        return pd.DataFrame(out)
     # sorted unique terms + per-posting codes, then one global lexsort
     codes, uniques = pd.factorize(terms_flat, sort=True)
     out["max_tf"][0] = int(len(uniques))   # marker: num_terms
@@ -578,24 +599,14 @@ def _encode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _encode_blocks_rowwise(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Posting-level-row variant (columns: part_id, field, term, doc_id,
-    tf, dl, positions array) — used by segment compaction, which decodes
-    existing blocks back to rows. Emits NO stats row (compaction carries
-    the existing ones through)."""
-    part_id = int(pdf["part_id"].iloc[0])
-    field = pdf["field"].iloc[0]
-    out = _blocks_out()
-    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-    for term, g in pdf.groupby("term", sort=False):
-        _emit_term_blocks(
-            out, part_id, field, term,
-            g["doc_id"].to_numpy(dtype=np.int64),
-            g["tf"].to_numpy(dtype=np.int64),
-            g["dl"].to_numpy(dtype=np.int64),
-            g["positions"].tolist(),
-        )
-    return pd.DataFrame(out)
+def _marker_rows(idx: "InvertedIndex") -> list:
+    """Collect the per-(part, field) marker rows (a few per index)."""
+    return (
+        idx.stats_rows
+        .select("part_id", "field", "n", "sum_tf", "first_doc",
+                "max_tf", "last_doc")
+        .collect()
+    )
 
 
 def rebuild_global_stats(idx: "InvertedIndex") -> list:
@@ -640,12 +651,7 @@ def rebuild_global_stats(idx: "InvertedIndex") -> list:
         )
     finally:
         spark.conf.set(coalesce_key, prev)
-    markers = (
-        idx.stats_rows
-        .select("part_id", "field", "n", "sum_tf", "first_doc",
-                "max_tf", "last_doc")
-        .collect()
-    )
+    markers = _marker_rows(idx)
     per_field: dict[str, list[int]] = {}
     for r in markers:
         acc = per_field.setdefault(r["field"], [0, 0, 0])
@@ -810,13 +816,8 @@ def build_index(
                     " ", *[F.col(c).cast("string") for c in srcs]
                 ),
             )
-    docs = docs.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int"),
-    )
+    docs = docs.withColumn("part_id", _part_id(num_partitions))
 
-    ckpt_dir = os.path.join(out_dir, "checkpoints")
-    os.makedirs(ckpt_dir, exist_ok=True)
     done_parts: set[int] = set()
     if resume:
         idx = InvertedIndex(out_dir, spark)
@@ -832,60 +833,14 @@ def build_index(
         build_docs = docs
         if len(todo_parts) < num_partitions:
             build_docs = docs.filter(F.col("part_id").isin(todo_parts))
-
-        needed = ["part_id", "doc_id"] + list(fields)
-        # re-spread few-split inputs before the tokenizer (guide §2.5):
-        # a 1-row-group parquet source would run the whole analysis
-        # pass on one core; no-op when the input is already well-split
-        from elasticsearch_spark.spread import spread_input
-
-        tokenized = spread_input(build_docs.select(*needed)).mapInPandas(
-            _make_tokenizer(fields), schema=TOKENIZED_SCHEMA
-        )
-        # segment "merge": ONE wide shuffle keyed (part_id, field), one
-        # output pass. Doc-stat marker rows ride the same shuffle and
-        # come out as per-group aggregate stats rows (term IS NULL).
+        tokenized = tokenize_docs(build_docs, fields)
         if store_doc_lengths:
             from pyspark import StorageLevel
 
             tokenized = tokenized.persist(StorageLevel.MEMORY_AND_DISK)
-        # Pin the encode stage's parallelism to (shard x field) groups:
-        # like the query scorer, _encode_blocks is CPU-bound (numpy
-        # VByte + sorts), so AQE's byte-targeted coalescing of this
-        # exchange under-parallelizes it; an explicit repartition is
-        # exempt and still leaves ONE exchange in the plan.
-        # ES_SPARK_PIN_ENCODE=0 restores the coalescible groupBy for
-        # interleaved A/B (tools/encode_pin_ab.py).
-        src = tokenized
-        if os.environ.get("ES_SPARK_PIN_ENCODE", "1") != "0":
-            enc_parts = max(len(todo_parts), 1) * max(len(fields), 1)
-            src = tokenized.repartition(enc_parts, "part_id", "field")
-        blocks = src.groupBy("part_id", "field").applyInPandas(
-            _encode_blocks, schema=BLOCKS_SCHEMA
-        )
-        # dynamic partition overwrite: ONLY the part_id directories this
-        # run produces are replaced. That closes the resume crash window
-        # (a previous attempt that appended files but died before its
-        # manifest committed leaves partial output in exactly the todo
-        # partitions, which this write now replaces instead of doubling).
-        #
-        # NO second shuffle before the write: the encode stage's output
-        # is already exchanged on (part_id, field), and partitionBy
-        # routes rows to their part_id directory regardless of task
-        # placement — re-partitioning by part_id would move the entire
-        # encoded index through one more exchange just to reduce the
-        # files-per-directory count. Rows stay (field, term, block)-
-        # sorted per task, and the writer preserves that relative order
-        # inside each part_id file, so Parquet row-group min/max skipping
-        # on `term` is unaffected.
         tp = time.time()
-        (
-            blocks.sortWithinPartitions("part_id", "field", "term", "block_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_id")
-            .parquet(os.path.join(out_dir, "postings"))
-        )
+        write_segment(tokenized, os.path.join(out_dir, "postings"),
+                      len(todo_parts), len(fields))
         tp = _mark("tokenize_encode_write", tp)
         if store_doc_lengths:
             # (unlike blocks, tokenized is scan-partitioned — without the
@@ -907,55 +862,159 @@ def build_index(
     markers = rebuild_global_stats(idx)
     tg = _mark("global_stats", tg)
 
-    # per-partition checkpoint manifests (translog/LocalCheckpointTracker
-    # analogue) — written after the job commits, atomically per part.
+    # per-partition checkpoint manifests — written after the job commits,
+    # from the marker rows the global-stats pass already collected
     if todo_parts:
-        # Every per-partition metric comes from the marker rows the
-        # global-stats pass already collected — docs (the stats-marker
-        # rows sum to n_docs x n_fields per partition, since every doc
-        # carries every field), terms (per-field distinct counts the
-        # encoder stamped into max_tf, summed across fields), postings
-        # (last_doc) — so manifests cost ZERO additional Spark jobs.
-        n_fields = max(len(fields), 1)
-        metrics: dict[int, list[int]] = {}
-        for r in markers:
-            acc = metrics.setdefault(int(r["part_id"]), [0, 0, 0])
-            acc[0] += int(r["n"])         # docs x fields
-            acc[1] += int(r["max_tf"])    # num_terms (per-field sum)
-            acc[2] += int(r["last_doc"])  # num_postings
         _mark("manifest_agg", tg)
-        wall_ms = int((time.time() - t0) * 1000)
-        for p in todo_parts:
-            m = metrics.get(p)
-            manifest = {
-                "partition_id": p,
-                "status": "done",
-                "num_docs": (m[0] // n_fields) if m else 0,
-                "num_terms": m[1] if m else 0,
-                "num_postings": m[2] if m else 0,
-                "input_snapshot": input_snapshot,
-                "wall_ms": wall_ms,
-            }
-            tmp = os.path.join(ckpt_dir, f".part-{p}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, os.path.join(ckpt_dir, f"part-{p}.json"))
+        _write_manifests(out_dir, markers, todo_parts, input_snapshot,
+                         int((time.time() - t0) * 1000))
 
-    with open(os.path.join(out_dir, "index_meta.json"), "w") as f:
-        json.dump(
-            {
-                "num_partitions": num_partitions,
-                "fields": fields,
-                "copy_to": copy_to or {},
-                "input_snapshot": input_snapshot,
-                # build-phase wall-clock breakdown (lineage/metrics):
-                # the main tokenize->encode->write job, the global-stats
-                # rebuild job, and the manifest metadata aggregation
-                "phase_ms": phase_ms,
-            },
-            f,
-        )
+    write_index_meta(
+        out_dir,
+        {
+            "num_partitions": num_partitions,
+            "fields": fields,
+            "copy_to": copy_to or {},
+            "input_snapshot": input_snapshot,
+            # build-phase wall-clock breakdown (lineage/metrics):
+            # the main tokenize->encode->write job, the global-stats
+            # rebuild job, and the manifest metadata aggregation
+            "phase_ms": phase_ms,
+        },
+    )
     return idx
+
+
+def _part_id(num_partitions: int):
+    """The shard routing expression ``pmod(xxhash64(doc_id), P)``."""
+    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int")
+
+
+def tokenize_docs(docs: DataFrame, fields: dict[str, str]) -> DataFrame:
+    """The write path's front for raw docs (build and streaming ingest):
+    routed docs (``part_id``, ``doc_id`` + text columns) -> one
+    TOKENIZED_SCHEMA row per (doc, field)."""
+    # re-spread few-split inputs before the tokenizer (guide §2.5): a
+    # 1-row-group parquet source would run the whole analysis pass on
+    # one core; no-op when the input is already well-split
+    from elasticsearch_spark.spread import spread_input
+
+    return spread_input(docs.select("part_id", "doc_id", *fields)).mapInPandas(
+        _make_tokenizer(fields), schema=TOKENIZED_SCHEMA
+    )
+
+
+def decoded_rows(idx: "InvertedIndex", fields) -> DataFrame:
+    """The write path's front for existing blocks (compaction and split):
+    every field's postings decoded back to rows, positions included."""
+    from elasticsearch_spark.search.executor import decoded_postings
+
+    rows = None
+    for field in fields:
+        part = decoded_postings(idx, field, with_positions=True).withColumn(
+            "field", F.lit(field)
+        )
+        rows = part if rows is None else rows.unionByName(part)
+    return rows
+
+
+def write_segment(
+    rows: DataFrame,
+    path: str,
+    n_parts: int,
+    n_fields: int,
+    roster: DataFrame | None = None,
+) -> None:
+    """THE posting-block write step of every writer (build, streaming
+    ingest, compaction, split): encode ``rows`` — tokenized doc rows or
+    decoded posting rows, with ``part_id`` already routed — into
+    term-sorted blocks plus per-(part, field) marker rows under ``path``.
+
+    ``roster``: marker rows to write INSTEAD of the encoder's. Compaction
+    carries the existing ones, because docs with zero indexed tokens
+    have no postings to count but belong in ``n``.
+    """
+    # Segment "merge": ONE wide shuffle keyed (part_id, field), one
+    # output pass. The exchange is pinned to (shard x field) groups:
+    # _encode_blocks is CPU-bound (numpy VByte + sorts), so AQE's
+    # byte-targeted coalescing of a plain groupBy exchange would
+    # under-parallelize it; an explicit repartition is exempt and still
+    # leaves ONE exchange in the plan.
+    blocks = (
+        rows.repartition(max(n_parts, 1) * max(n_fields, 1), "part_id", "field")
+        .groupBy("part_id", "field")
+        .applyInPandas(_encode_blocks, schema=BLOCKS_SCHEMA)
+    )
+    if roster is not None:
+        blocks = blocks.filter(F.col("term").isNotNull()).unionByName(roster)
+    # dynamic partition overwrite: ONLY the part_id directories this
+    # run produces are replaced. That closes the build's resume crash
+    # window (a previous attempt that appended files but died before its
+    # manifest committed leaves partial output in exactly the todo
+    # partitions, which this write now replaces instead of doubling);
+    # the other writers target a fresh directory or re-write their own
+    # batch directory with the same rows on a replay.
+    #
+    # NO second shuffle before the write: the encode stage's output is
+    # already exchanged on (part_id, field), and partitionBy routes rows
+    # to their part_id directory regardless of task placement —
+    # re-partitioning by part_id would move the entire encoded index
+    # through one more exchange just to reduce the files-per-directory
+    # count. Rows stay (field, term, block)-sorted per task, and the
+    # writer preserves that relative order inside each part_id file, so
+    # Parquet row-group min/max skipping on `term` is unaffected.
+    (
+        blocks.sortWithinPartitions("part_id", "field", "term", "block_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(path)
+    )
+
+
+def _write_manifests(index_dir: str, markers: list, parts, input_snapshot,
+                     wall_ms: int) -> None:
+    """Per-partition checkpoint manifests (translog/LocalCheckpointTracker
+    analogue), each written atomically. Every metric comes from the
+    per-(part, field) marker rows, so manifests cost ZERO additional
+    Spark jobs: docs = the largest field roster (a split's rosters hold
+    only docs with tokens in that field), terms = the per-field distinct
+    counts the encoder stamped into max_tf, summed across fields,
+    postings = last_doc summed."""
+    metrics: dict[int, list[int]] = {}
+    for r in markers:
+        acc = metrics.setdefault(int(r["part_id"]), [0, 0, 0])
+        acc[0] = max(acc[0], int(r["n"]))
+        acc[1] += int(r["max_tf"])
+        acc[2] += int(r["last_doc"])
+    ckpt_dir = os.path.join(index_dir, "checkpoints")
+    for p in parts:
+        m = metrics.get(p, [0, 0, 0])
+        _write_json_atomic(os.path.join(ckpt_dir, f"part-{p}.json"), {
+            "partition_id": p,
+            "status": "done",
+            "num_docs": m[0],
+            "num_terms": m[1],
+            "num_postings": m[2],
+            "input_snapshot": input_snapshot,
+            "wall_ms": wall_ms,
+        })
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """tmp file + os.replace: readers see the old or the new file, never
+    a torn one."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def write_index_meta(index_dir: str, meta: dict) -> None:
+    """Commit ``index_meta.json`` — the commit point of every writer
+    (build, refresh, compaction, shrink, split) — atomically."""
+    _write_json_atomic(os.path.join(index_dir, "index_meta.json"), meta)
 
 
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:

@@ -34,6 +34,11 @@ from elasticsearch_spark.spread import spread_input
 # overflow; modular-mul tricks would need Python in the hot path).
 _MERSENNE = (1 << 31) - 1
 
+# Salt cap for embedding_cosine_pairs' block join: 32 is the factor its
+# sf1.0 measurement ran with (local[32]) and already gives n_blocks x 32
+# join tasks; uncapped, the b-side would be copied 2000x on 2000 cores.
+_MAX_BLOCK_SALT = 32
+
 
 def exact_duplicate_groups(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -561,8 +566,10 @@ def embedding_cosine_pairs(
         # exploded across all salts, so every (a, b) pair still meets
         # exactly once — identical pairs, n_salts x the parallelism.
         # (Measured at sf1.0, 20k vectors in 4 label blocks:
-        # 233 s -> ~9 s.)
-        n_salt = max(1, df.sparkSession.sparkContext.defaultParallelism)
+        # 233 s -> ~9 s.) Every salt adds one full copy of the b-side
+        # to the shuffle, so the factor is capped at _MAX_BLOCK_SALT.
+        n_salt = max(1, min(_MAX_BLOCK_SALT,
+                            df.sparkSession.sparkContext.defaultParallelism))
         a = a.withColumn(
             "_salt",
             F.pmod(F.xxhash64(F.col(f"{id_col}_a")), F.lit(n_salt)))

@@ -25,22 +25,32 @@ must be a MULTIPLE of the source count
 only among its own ``target/source`` target shards, because
 ``h % kP ≡ (h % P) (mod P)``. Splitting therefore never re-tokenizes
 — it decodes posting blocks back to rows, re-routes each posting by
-``pmod(xxhash64(doc_id), newP)``, and re-encodes per new shard (the
-analysis pass, the dominant build cost, is skipped entirely — exactly
-the reference's recover-then-delete-non-owned shape). Global term /
-collection statistics are partition-independent and copy verbatim, so
-BM25 scores are bit-identical before and after the split.
+``pmod(xxhash64(doc_id), newP)``, and re-encodes per new shard through
+the builder's one segment writer (index/builder.py ``write_segment``,
+the same encoder, pinned exchange and marker rows as ``build_index``;
+the analysis pass, the dominant build cost, is skipped entirely —
+exactly the reference's recover-then-delete-non-owned shape). Global
+term / collection statistics are partition-independent and copy
+verbatim, so BM25 scores are bit-identical before and after the split.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import SparkSession, functions as F
 
-from elasticsearch_spark.index.builder import index_meta, load_index
+from elasticsearch_spark.index.builder import (
+    _marker_rows,
+    _part_id,
+    _write_manifests,
+    decoded_rows,
+    index_meta,
+    load_index,
+    write_index_meta,
+    write_segment,
+)
 
 
 def shrink_index(
@@ -89,10 +99,7 @@ def shrink_index(
     meta["postings_dir"] = "postings"
     meta["folded_batches"] = []  # segments folded into the rewrite
     meta["shrunk_from"] = {"path": src_dir, "num_partitions": p}
-    tmp = os.path.join(dst_dir, ".index_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(dst_dir, "index_meta.json"))
+    write_index_meta(dst_dir, meta)
     return meta
 
 
@@ -106,11 +113,7 @@ def split_index(
     partitions (a MULTIPLE of the source count — the ES routing-factor
     rule). Decode -> re-route -> re-encode; no re-analysis. Returns
     the new index meta."""
-    from elasticsearch_spark.index.builder import (
-        BLOCKS_SCHEMA, _encode_blocks_rowwise, load_index,
-    )
     from elasticsearch_spark.ops.ccr import assert_writable
-    from elasticsearch_spark.search.executor import decoded_postings
 
     meta = dict(index_meta(src_dir))
     p = int(meta["num_partitions"])
@@ -124,120 +127,39 @@ def split_index(
     assert_writable(src_dir)
     os.makedirs(dst_dir, exist_ok=True)
 
-    idx = load_index(spark, src_dir)
-    rows = None
-    for field in meta["fields"]:
-        part = decoded_postings(idx, field, with_positions=True
-                                ).withColumn("field", F.lit(field))
-        rows = part if rows is None else rows.unionByName(part)
     # re-route: h % kP lands in {h % P, h % P + P, ...} so each source
-    # shard's postings scatter only among its own k target shards
-    rows = rows.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(t)).cast("int"),
-    ).persist()
-
-    new_blocks = (
-        rows.select("part_id", "doc_id", "field", "term", "tf",
-                    "positions", "dl")
-        .groupBy("part_id", "field")
-        .applyInPandas(_encode_blocks_rowwise, schema=BLOCKS_SCHEMA)
-    )
-    # recompute the per-(part, field) doc-roster marker rows for the new
-    # layout: docs moved shards, so the old markers are stale. Derived
-    # from the decoded rows (docs with zero indexed tokens are absent
-    # from postings and so from the recomputed rosters — they carry no
-    # postings either, so query results are unaffected).
-    roster = (
-        rows.select("part_id", "field", "doc_id", "dl").distinct()
-        .groupBy("part_id", "field")
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("first_doc"))
-    )
-    plevel = (
-        rows.groupBy("part_id", "field")
-        .agg(F.sum("tf").alias("sum_tf"),
-             F.countDistinct("term").alias("max_tf"),
-             F.count("*").alias("last_doc"))
-    )
-    markers = (
-        roster.join(plevel, ["part_id", "field"])
-        .select(
-            F.col("part_id").cast("int"),
-            "field",
-            F.lit(None).cast("string").alias("term"),
-            F.lit(-1).alias("block_id"),
-            F.col("n").cast("int"),
-            F.lit(b"").alias("doc_ids"),
-            F.lit(b"").alias("tfs"),
-            F.lit(b"").alias("dls"),
-            F.lit(b"").alias("positions"),
-            F.col("max_tf").cast("int"),
-            F.lit(0).alias("min_dl"),
-            F.col("sum_tf").cast("long"),
-            F.col("first_doc").cast("long"),
-            F.col("last_doc").cast("long"),
-        )
-    )
-    (
-        new_blocks.unionByName(markers)
-        .repartition("part_id")
-        .sortWithinPartitions("field", "term", "block_id")
-        .write.partitionBy("part_id")
-        .parquet(os.path.join(dst_dir, "postings"))
-    )
-    marker_rows = markers.collect()  # tiny: t x fields rows
+    # shard's postings scatter only among its own k target shards. The
+    # encoder recomputes the per-(part, field) marker rows for the new
+    # layout from the decoded postings (docs with zero indexed tokens
+    # are absent from postings and so from the new rosters — they carry
+    # no postings either, so query results are unaffected).
+    rows = decoded_rows(load_index(spark, src_dir), meta["fields"])
+    write_segment(rows.withColumn("part_id", _part_id(t)),
+                  os.path.join(dst_dir, "postings"), t, len(meta["fields"]))
     dl = os.path.join(src_dir, "doc_lengths")
     if os.path.isdir(dl):
         (
-            spark.read.parquet(dl).withColumn(
-                "part_id",
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(t)).cast("int"))
+            spark.read.parquet(dl).withColumn("part_id", _part_id(t))
             .write.partitionBy("part_id")
             .parquet(os.path.join(dst_dir, "doc_lengths"))
         )
-    rows.unpersist()
     # global stats are partition-independent: copy verbatim
     for d in ("term_dict", "coll_stats", "bigrams_text"):
         sd = os.path.join(src_dir, d)
         if os.path.isdir(sd):
             shutil.copytree(sd, os.path.join(dst_dir, d))
 
-    # fresh per-partition checkpoint manifests from the recomputed
-    # markers (the _stats lineage surface). num_docs per part = the max
-    # roster across fields (a doc missing from a field's postings has
-    # no indexed tokens there).
-    metrics: dict[int, list[int]] = {}
-    for r in marker_rows:
-        acc = metrics.setdefault(int(r["part_id"]), [0, 0, 0])
-        acc[0] = max(acc[0], int(r["n"]))
-        acc[1] += int(r["max_tf"])
-        acc[2] += int(r["last_doc"])
-    ckpt_dir = os.path.join(dst_dir, "checkpoints")
-    os.makedirs(ckpt_dir, exist_ok=True)
-    for pid, m in sorted(metrics.items()):
-        manifest = {
-            "partition_id": pid,
-            "status": "done",
-            "num_docs": m[0],
-            "num_terms": m[1],
-            "num_postings": m[2],
-            "input_snapshot": meta.get("input_snapshot"),
-            "wall_ms": 0,
-        }
-        tmpm = os.path.join(ckpt_dir, f".part-{pid}.json.tmp")
-        with open(tmpm, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmpm, os.path.join(ckpt_dir, f"part-{pid}.json"))
+    # fresh per-partition checkpoint manifests (the _stats lineage
+    # surface) from the new marker rows
+    _write_manifests(dst_dir, _marker_rows(load_index(spark, dst_dir)),
+                     range(t), meta.get("input_snapshot"), 0)
 
     meta["num_partitions"] = t
     meta["postings_dir"] = "postings"
     meta["postings_gen"] = 0
     meta["folded_batches"] = []  # segments folded into the rewrite
     meta["split_from"] = {"path": src_dir, "num_partitions": p}
-    tmp = os.path.join(dst_dir, ".index_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(dst_dir, "index_meta.json"))
+    write_index_meta(dst_dir, meta)
     return meta
 
 

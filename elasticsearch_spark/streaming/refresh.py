@@ -14,6 +14,13 @@ of a term, so multiple segments per (part, term) are transparently
 unioned at read time — exactly Lucene's multi-segment search. Global term/collection stats are re-aggregated
 from block metadata after each batch (cheap).
 
+Both writers here use the builder's one segment writer
+(index/builder.py ``write_segment``): ingest feeds it tokenized docs
+exactly as ``build_index`` does, compaction feeds it postings decoded
+from the live segments. So ingest + compaction writes byte-for-byte
+the blocks a batch build of the same docs writes, and every
+``index_meta.json`` update goes through the atomic ``write_index_meta``.
+
 ``refresh_stream`` wires readStream -> foreachBatch(ingest) with
 checkpointing, so exactly-once batch appends survive restarts (the
 translog analogue is Structured Streaming's WAL + our per-batch
@@ -23,17 +30,21 @@ partition's segments into one sorted segment set.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from elasticsearch_spark.index.builder import (
-    BLOCKS_SCHEMA,
-    _encode_blocks,
-    _make_tokenizer,
+    InvertedIndex,
+    _part_id,
+    _write_json_atomic,
+    decoded_rows,
     index_meta,
+    rebuild_global_stats,
+    tokenize_docs,
+    write_index_meta,
+    write_segment,
 )
 
 
@@ -47,7 +58,7 @@ def ingest_batch(
     """Ingest one micro-batch of docs as a new segment + refresh stats.
 
     Idempotent by construction: each batch writes its blocks to its OWN
-    directory ``segments/batch=<id>`` with mode=overwrite, so a
+    directory ``segments/batch=<id>`` in overwrite mode, so a
     foreachBatch REPLAY after a crash (anywhere between the write and
     the streaming checkpoint commit) rewrites that directory instead of
     appending a duplicate segment — df/tf/n_docs can never inflate.
@@ -55,40 +66,23 @@ def ingest_batch(
     from elasticsearch_spark.ops.ccr import assert_writable
 
     assert_writable(index_dir)
-    docs = batch_df.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int"),
-    )
-    needed = ["part_id", "doc_id"] + list(fields)
-    from elasticsearch_spark.index.builder import TOKENIZED_SCHEMA
-
-    tokenized = docs.select(*needed).mapInPandas(
-        _make_tokenizer(fields), schema=TOKENIZED_SCHEMA
-    )
-    (
-        tokenized.groupBy("part_id", "field")
-        .applyInPandas(_encode_blocks, schema=BLOCKS_SCHEMA)
-        .write.mode("overwrite")
-        .partitionBy("part_id")
-        .parquet(os.path.join(index_dir, "segments", f"batch={batch_id}"))
+    write_segment(
+        tokenize_docs(batch_df.withColumn("part_id", _part_id(num_partitions)),
+                      fields),
+        os.path.join(index_dir, "segments", f"batch={batch_id}"),
+        num_partitions, len(fields),
     )
     refresh_stats(batch_df.sparkSession, index_dir)
-    manifest = {
-        "batch_id": batch_id,
-        "status": "done",
-        "refreshed_at_unix": int(time.time()),
-    }
-    ckpt = os.path.join(index_dir, "checkpoints")
-    os.makedirs(ckpt, exist_ok=True)
-    with open(os.path.join(ckpt, f"batch-{batch_id}.json"), "w") as f:
-        json.dump(manifest, f)
+    _write_json_atomic(
+        os.path.join(index_dir, "checkpoints", f"batch-{batch_id}.json"),
+        {"batch_id": batch_id, "status": "done",
+         "refreshed_at_unix": int(time.time())},
+    )
 
 
 def refresh_stats(spark: SparkSession, index_dir: str) -> None:
     """Re-aggregate term_dict / coll_stats from block metadata (the
     DFS-phase globals) — the cheap part of a refresh."""
-    from elasticsearch_spark.index.builder import InvertedIndex, rebuild_global_stats
-
     rebuild_global_stats(InvertedIndex(index_dir, spark))
 
 
@@ -117,10 +111,7 @@ def refresh_stream(
         {"num_partitions": num_partitions, "fields": fields,
          "input_snapshot": "stream"}
     )
-    tmp_meta = os.path.join(index_dir, ".index_meta.json.tmp")
-    with open(tmp_meta, "w") as f:
-        json.dump(prev, f)
-    os.replace(tmp_meta, os.path.join(index_dir, "index_meta.json"))
+    write_index_meta(index_dir, prev)
     checkpoint_dir = checkpoint_dir or os.path.join(index_dir, "_stream_checkpoint")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -152,41 +143,20 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     therefore never double-count across a crash — the garbage-collect
     of the old generation and folded segment dirs below is pure
     cleanup, not a correctness step."""
-    from elasticsearch_spark.search.executor import decoded_postings
-    from elasticsearch_spark.index.builder import InvertedIndex
     from elasticsearch_spark.ops.ccr import assert_writable
 
     assert_writable(index_dir)
 
     idx = InvertedIndex(index_dir, spark)
     meta = index_meta(index_dir)
-    rows = None
-    for field in meta["fields"]:
-        part = decoded_postings(idx, field, with_positions=True).withColumn(
-            "field", F.lit(field)
-        )
-        rows = part if rows is None else rows.unionByName(part)
-
     gen = int(meta.get("postings_gen", 0)) + 1
     old_base = meta.get("postings_dir", "postings")
     new_base = f"postings_gen_{gen}"
-    tmp = os.path.join(index_dir, new_base)
-    from elasticsearch_spark.index.builder import _encode_blocks_rowwise
-
-    new_blocks = (
-        rows.select("part_id", "doc_id", "field", "term", "tf", "positions", "dl")
-        .groupBy("part_id", "field")
-        .applyInPandas(_encode_blocks_rowwise, schema=BLOCKS_SCHEMA)
-    )
     # carry the per-(part, field) doc-roster stats rows through the merge
-    stats_rows = idx.stats_rows.select(*new_blocks.columns)
-    (
-        new_blocks.unionByName(stats_rows)
-        .repartition("part_id")
-        .sortWithinPartitions("field", "term", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("part_id")
-        .parquet(tmp)
+    write_segment(
+        decoded_rows(idx, meta["fields"]), os.path.join(index_dir, new_base),
+        int(meta["num_partitions"]), len(meta["fields"]),
+        roster=idx.stats_rows,
     )
     import shutil
 
@@ -202,10 +172,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     new_meta["folded_batches"] = sorted(
         {str(b) for b in meta.get("folded_batches", [])} | set(folding)
     )
-    meta_tmp = os.path.join(index_dir, ".index_meta.json.tmp")
-    with open(meta_tmp, "w") as f:
-        json.dump(new_meta, f)
-    os.replace(meta_tmp, os.path.join(index_dir, "index_meta.json"))  # COMMIT
+    write_index_meta(index_dir, new_meta)  # COMMIT
 
     # garbage-collect the superseded generation and folded segment dirs
     old_dir = os.path.join(index_dir, old_base)
@@ -222,9 +189,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     }
     if still != set(new_meta["folded_batches"]):
         new_meta["folded_batches"] = sorted(still)
-        with open(meta_tmp, "w") as f:
-            json.dump(new_meta, f)
-        os.replace(meta_tmp, os.path.join(index_dir, "index_meta.json"))
+        write_index_meta(index_dir, new_meta)
     refresh_stats(spark, index_dir)
 
 

@@ -350,6 +350,26 @@ def test_salted_block_join_pairs_identical(spark):
         assert abs(got[k] - want[k]) < 1e-12
 
 
+def test_salted_block_join_salt_is_capped(spark, monkeypatch):
+    """The b-side explodes once per salt, so the salt factor must stay
+    bounded when the cluster's default parallelism is huge."""
+    import re
+
+    from pyspark import SparkContext
+
+    from elasticsearch_spark.ops.dedup import embedding_cosine_pairs
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)],
+        "vec_id long, embedding array<double>, label int")
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 2000))
+    plan = (embedding_cosine_pairs(df, threshold=-1.0, block_col="label")
+            ._jdf.queryExecution().analyzed().toString())
+    bounds = {int(m) for m in re.findall(r"sequence\(0, (\d+)", plan)}
+    assert bounds == {31}  # the 32-salt cap, not 2000 salts
+
+
 def test_materialize_fence_preserves_rows_and_schema(spark):
     from pyspark.sql import functions as F
 

@@ -131,6 +131,21 @@ def test_quiesce_path_parity(spark, monkeypatch):
     assert sorted(map(tuple, a)) == sorted(map(tuple, c))
 
 
+def test_quiesce_reports_once(spark, monkeypatch, capsys):
+    # the first quiesce in a process says whether System.gc() is live
+    # or a no-op (-XX:+DisableExplicitGC); later ones stay quiet
+    from elasticsearch_spark import arrow_collect as ac
+
+    monkeypatch.setattr(ac, "_QUIESCE_MIN_ROWS", 0)
+    monkeypatch.setattr(ac, "_quiesce_reported", False, raising=False)
+    df = spark.range(0, 100)
+    ac.arrow_collected(df).collect()
+    ac.arrow_collected(df).collect()
+    err = capsys.readouterr().err
+    assert err.count("JVM quiesce") == 1
+    assert "is active" in err or "is a NO-OP" in err
+
+
 def test_quiesce_survives_broken_jvm_handle():
     from elasticsearch_spark import arrow_collect as ac
 

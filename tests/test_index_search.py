@@ -271,6 +271,41 @@ def test_empty_corpus_build_and_query(spark, tmp_path):
     assert match_topk(idx, "unknown_field", ["x"], k=5).count() == 0
 
 
+def test_meta_commit_is_atomic(spark, monkeypatch, tmp_path):
+    """index_meta.json is the commit point: a rebuild over an existing
+    index whose meta write dies mid-dump must leave the previous meta
+    in place, whole."""
+    import json
+    import os
+
+    from elasticsearch_spark.index import builder
+
+    docs = spark.createDataFrame([(1, "alpha beta"), (2, "beta gamma")],
+                                 "doc_id long, text string")
+    out = str(tmp_path / "meta_idx")
+    kwargs = dict(fields={"text": "ascii_word"}, num_partitions=2)
+    build_index(docs, out, input_snapshot="v1", **kwargs)
+    meta_path = os.path.join(out, "index_meta.json")
+    with open(meta_path) as f:
+        before = f.read()
+
+    real_dump = json.dump
+
+    def torn_dump(obj, fp, *args, **kw):
+        if "num_partitions" in obj:  # the meta, not a manifest
+            fp.write(json.dumps(obj)[:10])
+            raise OSError("disk full")
+        return real_dump(obj, fp, *args, **kw)
+
+    monkeypatch.setattr(builder.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        build_index(docs, out, input_snapshot="v2", **kwargs)
+    monkeypatch.undo()
+    with open(meta_path) as f:
+        assert f.read() == before
+    assert json.loads(before)["input_snapshot"] == "v1"
+
+
 def test_sorted_index_range_pruning(spark, corpus, tmp_path_factory):
     """Index sorting (index.sort.field / IndexSortConfig): doc ids are
     sort ranks; a sort-field range == a doc-id range, and

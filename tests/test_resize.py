@@ -100,6 +100,22 @@ def test_split_rank_identity(spark, src_idx, tmp_path):
     st = index_stats(idx2)
     docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert st["totals"]["docs"] == docs
+    # same writer as the build: the split's blocks are exactly those of
+    # a fresh 16-partition build of the same docs
+    fresh = str(tmp_path / "fresh16")
+    build_index(spark.read.parquet(f"{SF}/documents.parquet")
+                .select("doc_id", "text"), fresh,
+                fields={"text": "ascii_word"}, num_partitions=16,
+                input_snapshot="shrinktest")
+
+    def block_rows(path):
+        return sorted(
+            tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                  for v in r)
+            for r in load_index(spark, path).postings
+            .filter(F.col("term").isNotNull()).collect())
+
+    assert block_rows(dst) == block_rows(fresh)
 
 
 def test_split_validation(spark, src_idx, tmp_path):

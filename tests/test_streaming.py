@@ -42,11 +42,35 @@ def _topk(idx, terms, k=10):
     ]
 
 
+def _block_rows(idx):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in idx.postings.filter(F.col("term").isNotNull()).collect()
+    )
+
+
+def _marker_sums(idx):
+    # max_tf (distinct terms) is left out: compaction carries each
+    # segment's roster row, so its sum counts a term once per segment
+    return sorted(map(tuple, idx.stats_rows.groupBy("part_id", "field").agg(
+        *[F.sum(c) for c in ("n", "sum_tf", "first_doc", "last_doc")]
+    ).collect()))
+
+
 def test_incremental_batches_equal_batch_build(spark, corpus, tmp_path):
+    # one doc with no indexed tokens: it has no postings, yet must stay
+    # in n_docs through ingest and compaction
+    empty = assign_doc_ids(spark.createDataFrame(
+        [(N, "empty/repo", "empty.py", "0", "python", "")],
+        "id long, repo string, path string, commit string, lang string, "
+        "content string"), ["repo", "path", "commit"])
+    docs = corpus.unionByName(empty, allowMissingColumns=True)
     batch_dir = str(tmp_path / "batch_idx")
-    build_index(corpus, batch_dir, fields={"content": "code"}, num_partitions=4,
+    build_index(docs, batch_dir, fields={"content": "code"}, num_partitions=4,
                 input_snapshot="v1")
-    want = _topk(load_index(spark, batch_dir), ["import", "return"])
+    batch = load_index(spark, batch_dir)
+    assert batch.collection_stats()["content"]["n_docs"] == N + 1
+    want = _topk(batch, ["import", "return"])
 
     inc_dir = str(tmp_path / "inc_idx")
     os.makedirs(inc_dir, exist_ok=True)
@@ -56,17 +80,23 @@ def test_incremental_batches_equal_batch_build(spark, corpus, tmp_path):
         json.dump({"num_partitions": 4, "fields": {"content": "code"},
                    "input_snapshot": "stream"}, f)
     # three "micro-batches" by id range
-    for lo, hi in [(0, 80), (80, 160), (160, N)]:
-        batch = corpus.filter((F.col("id") >= lo) & (F.col("id") < hi))
-        ingest_batch(batch, inc_dir, {"content": "code"}, 4, batch_id=lo)
+    for lo, hi in [(0, 80), (80, 160), (160, N + 1)]:
+        part = docs.filter((F.col("id") >= lo) & (F.col("id") < hi))
+        ingest_batch(part, inc_dir, {"content": "code"}, 4, batch_id=lo)
     inc = load_index(spark, inc_dir)
     got = _topk(inc, ["import", "return"])
     assert got == want
+    assert sorted(inc.coll_stats.collect()) == sorted(batch.coll_stats.collect())
 
     # segment merge (tiered-merge analogue) preserves results + phrase data
     compact_index(spark, inc_dir)
     compacted = load_index(spark, inc_dir)
     assert _topk(compacted, ["import", "return"]) == want
+    # ... and writes the batch build's blocks: same writer, same bytes
+    assert _block_rows(compacted) == _block_rows(batch)
+    assert _marker_sums(compacted) == _marker_sums(batch)
+    assert sorted(compacted.coll_stats.collect()) == \
+        sorted(batch.coll_stats.collect())
     # one segment per (part, term): block_ids contiguous from 0
     from elasticsearch_spark.search.executor import phrase_topk
 
