@@ -16,7 +16,8 @@ cluster/routing/OperationRouting.java:240-246):
   - ``write_segment`` is the ONE step that turns postings into stored
     blocks, for every writer: ``build_index``, streaming ingest and
     compaction (streaming/refresh.py) and split (ops/resize.py). One
-    shuffle (a pinned repartition on part_id, field -> applyInPandas
+    shuffle (``place_groups`` on the (part_id, field) slot, which puts
+    every group on its own task up to the core count -> applyInPandas
     ``_encode_blocks``) plays the role of ES's segment merge
     (index/EsTieredMergePolicy.java:24-27): each partition's postings
     are term-sorted and encoded into Lucene-style blocks of 128 docs
@@ -67,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_spark.analysis import ANALYZERS
 from elasticsearch_spark.index import codec
+from elasticsearch_spark.spread import place_groups
 
 # ONE ROW PER (doc, field): terms + aligned VByte-encoded tf / positions
 # blobs. Exploding to posting-level rows happens INSIDE the encoder in
@@ -840,14 +842,15 @@ def build_index(
             tokenized = tokenized.persist(StorageLevel.MEMORY_AND_DISK)
         tp = time.time()
         write_segment(tokenized, os.path.join(out_dir, "postings"),
-                      len(todo_parts), len(fields))
+                      len(todo_parts), list(fields))
         tp = _mark("tokenize_encode_write", tp)
         if store_doc_lengths:
             # (unlike blocks, tokenized is scan-partitioned — without the
-            # repartition every task would open a writer per part_id dir)
+            # exchange every task would open a writer per part_id dir)
             (
-                tokenized.select("part_id", "doc_id", "field", "dl", "ttf")
-                .repartition(max(len(todo_parts), 1), "part_id")
+                place_groups(
+                    tokenized.select("part_id", "doc_id", "field", "dl", "ttf"),
+                    "part_id", len(todo_parts))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("part_id")
@@ -922,7 +925,7 @@ def write_segment(
     rows: DataFrame,
     path: str,
     n_parts: int,
-    n_fields: int,
+    fields: list[str],
     roster: DataFrame | None = None,
 ) -> None:
     """THE posting-block write step of every writer (build, streaming
@@ -935,14 +938,20 @@ def write_segment(
     have no postings to count but belong in ``n``.
     """
     # Segment "merge": ONE wide shuffle keyed (part_id, field), one
-    # output pass. The exchange is pinned to (shard x field) groups:
-    # _encode_blocks is CPU-bound (numpy VByte + sorts), so AQE's
-    # byte-targeted coalescing of a plain groupBy exchange would
-    # under-parallelize it; an explicit repartition is exempt and still
-    # leaves ONE exchange in the plan.
+    # output pass. _encode_blocks is CPU-bound (numpy VByte + sorts), so
+    # AQE's byte-targeted coalescing of a plain groupBy exchange would
+    # under-parallelize it. The (part, field) groups are numbered
+    # ``slot = part_id * n_fields + field ordinal`` and placed by
+    # ``place_groups``: slot s on task s mod min(parts x fields, cores),
+    # one wave of encode tasks with no collisions. Grouping by (slot,
+    # part_id, field) is satisfied by that exchange, so the plan keeps
+    # ONE exchange.
+    ordinal = F.array_position(F.array(*map(F.lit, fields)), F.col("field")) - 1
+    slot = (F.col("part_id") * len(fields) + ordinal).cast("int")
     blocks = (
-        rows.repartition(max(n_parts, 1) * max(n_fields, 1), "part_id", "field")
-        .groupBy("part_id", "field")
+        place_groups(rows.withColumn("slot", slot), "slot",
+                     max(n_parts, 1) * len(fields))
+        .groupBy("slot", "part_id", "field")
         .applyInPandas(_encode_blocks, schema=BLOCKS_SCHEMA)
     )
     if roster is not None:

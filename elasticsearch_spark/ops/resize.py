@@ -135,7 +135,7 @@ def split_index(
     # no postings either, so query results are unaffected).
     rows = decoded_rows(load_index(spark, src_dir), meta["fields"])
     write_segment(rows.withColumn("part_id", _part_id(t)),
-                  os.path.join(dst_dir, "postings"), t, len(meta["fields"]))
+                  os.path.join(dst_dir, "postings"), t, list(meta["fields"]))
     dl = os.path.join(src_dir, "doc_lengths")
     if os.path.isdir(dl):
         (

@@ -770,11 +770,15 @@ def semantic_query(df: DataFrame, field: str, query: str, *,
 
     # fence: when the inference column is still an expression (mapped
     # in-plan), the zero-norm filter would be pushed beneath it and
-    # re-evaluate the embedding folds per row
-    emb = materialize_fence(df).filter(F.aggregate(
+    # re-evaluate the embedding folds per row. The caller's filter runs
+    # first and the fence carries only the two columns knn reads: a
+    # mapInArrow boundary blocks column pruning, so fencing the whole
+    # frame would ship every column through Arrow
+    if filter_cond is not None:
+        df = df.filter(filter_cond)
+    emb = materialize_fence(df.select(id_col, vec_col)).filter(F.aggregate(
         vec_col, F.lit(0.0), lambda a, x: a + x * x) > 0)
     return knn_search(
         emb, None, k=k, id_col=id_col, vec_col=vec_col,
-        filter_cond=filter_cond,
         query_vector_builder={"text_embedding": {
             "model_id": model_id, "model_text": query}})

@@ -12,10 +12,11 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      of the query terms are read (per-term scan, like a term-dictionary
      seek).
   3. one skeleton shared by every posting scorer (``_posting_groups``,
-     ``_scored_scan``): the pushed scan, ONE
-     ``repartition(num_partitions, part_id)`` exchange pinned to the
-     shard count, then ``groupBy(part_id).applyInPandas(kernel)`` —
-     each index partition (ES shard) scores its docs independently
+     ``_scored_scan``): the pushed scan, ONE ``part_id`` exchange
+     (``place_groups``: shard p on task p mod min(shards, cores), so
+     every task is busy and a request pays one wave of Python tasks),
+     then ``groupBy(part_id).applyInPandas(kernel)`` — each index
+     partition (ES shard) scores its docs independently
      (doc-routing guarantees a doc's postings for ALL terms share one
      part_id) and emits a LOCAL top-k (``_local_topk``). Only the numpy
      kernels differ per scorer; the positional ones (phrase, phrase
@@ -56,6 +57,7 @@ from elasticsearch_spark.index import codec
 from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search import bm25
 from elasticsearch_spark.search.bm25 import BM25Params
+from elasticsearch_spark.spread import place_groups
 
 TOPK_SCHEMA = "doc_id long, score double, matched int"
 
@@ -141,17 +143,25 @@ def _posting_groups(
     pushed to the Parquet scan), projected to ``cols`` and grouped by
     index partition behind exactly ONE exchange.
 
-    The exchange pins the scorer stage's parallelism to the SHARD
-    count. The scoring applyInPandas is CPU-bound, not byte-bound:
-    AQE's byte-targeted partition coalescing (64 MB advisory) would
-    fuse these small-but-expensive groups into a few fat tasks and
-    leave most cores idle (measured: 4.8/8 busy cores coalesced vs
-    7.4/8 pinned, a 1.4x round-time win at local[8] / 500k docs —
-    BENCH/BASELINE.md). An explicit repartition is exempt from AQE
-    coalescing and satisfies the groupBy's required distribution, so
-    the plan still carries exactly ONE exchange."""
+    The exchange (``place_groups``) puts shard ``p`` on task
+    ``p mod T``, ``T = min(shards, defaultParallelism)``: one wave of
+    Python tasks, each assigned at most ``ceil(shards / T)`` shards.
+    The scoring applyInPandas is CPU-bound, not byte-bound: AQE's
+    byte-targeted partition coalescing (64 MB advisory) would fuse
+    these small-but-expensive groups into a few fat tasks and leave
+    most cores idle (measured: 4.8/8 busy cores coalesced vs 7.4/8
+    pinned, a 1.4x round-time win at local[8] / 500k docs —
+    BENCH/BASELINE.md). A ``REPARTITION_BY_NUM`` exchange is exempt
+    from that coalescing and satisfies the groupBy's required
+    distribution, so the plan still carries exactly ONE exchange."""
     blocks = index.postings.filter(cond).select(*cols)
-    return blocks.repartition(index.num_partitions(), "part_id").groupBy(
+    return _by_shard(index, blocks)
+
+
+def _by_shard(index: InvertedIndex, df: DataFrame) -> GroupedData:
+    """``df`` grouped by ``part_id`` behind the scorer's shard placement;
+    both sides of a cogroup go through here so neither is re-shuffled."""
+    return place_groups(df, "part_id", index.num_partitions()).groupBy(
         "part_id")
 
 
@@ -636,7 +646,7 @@ def match_topk(
 
         local = (
             _posting_groups(index, cond, cols)
-            .cogroup(allow_parts.groupBy("part_id"))
+            .cogroup(_by_shard(index, allow_parts))
             .applyInPandas(score_cogroup, schema=TOPK_SCHEMA)
         )
         return _topk_merge(local, k)

@@ -1,4 +1,5 @@
-"""Input re-spread for compute-heavy operators over few-split sources.
+"""Input re-spread for compute-heavy operators over few-split sources,
+and collision-free placement of keyed groups (``place_groups``).
 
 Parquet scan parallelism is bounded by row-group count: the round-6
 measurement found every test table is written as 1-6 row groups, so a
@@ -28,6 +29,25 @@ def spread_input(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+def place_groups(df: DataFrame, key: str, groups: int) -> DataFrame:
+    """Exchange ``df`` so that group ``g`` of the int column ``key``
+    (``0 <= g < groups``) lands on task ``g mod T``, with
+    ``T = min(groups, defaultParallelism)``: each task is assigned
+    ``floor`` or ``ceil(groups / T)`` groups, so a CPU-bound per-group
+    pandas stage runs in one wave of tasks with no idle core.
+
+    ``repartition(n, key)`` places rows by ``pmod(murmur3(key), n)``,
+    which collides: 8 shard ids over 8 partitions fill only 5 tasks,
+    one of them with 3 shards (BENCH/BASELINE.md). ``repartitionById``
+    takes the id itself. Pass a plain column, not an expression: only
+    then does the exchange satisfy a following ``groupBy``/``cogroup``
+    on ``key`` and stay the plan's ONE exchange. Like every
+    ``REPARTITION_BY_NUM`` exchange it is exempt from AQE's
+    byte-targeted partition coalescing."""
+    sc = df.sparkSession.sparkContext
+    return df.repartitionById(max(1, min(groups, sc.defaultParallelism)), key)
 
 
 def materialize_fence(df: DataFrame) -> DataFrame:

@@ -70,7 +70,7 @@ def ingest_batch(
         tokenize_docs(batch_df.withColumn("part_id", _part_id(num_partitions)),
                       fields),
         os.path.join(index_dir, "segments", f"batch={batch_id}"),
-        num_partitions, len(fields),
+        num_partitions, list(fields),
     )
     refresh_stats(batch_df.sparkSession, index_dir)
     _write_json_atomic(
@@ -155,7 +155,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     # carry the per-(part, field) doc-roster stats rows through the merge
     write_segment(
         decoded_rows(idx, meta["fields"]), os.path.join(index_dir, new_base),
-        int(meta["num_partitions"]), len(meta["fields"]),
+        int(meta["num_partitions"]), list(meta["fields"]),
         roster=idx.stats_rows,
     )
     import shutil

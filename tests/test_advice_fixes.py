@@ -318,6 +318,55 @@ def test_semantic_query_validates_model_id(spark):
         semantic_query(mapped, "body", "alpha", model_id="m-b", k=1)
 
 
+def _map_in_arrow_outputs(df) -> list[list[str]]:
+    """Output column names of every MapInArrow node of the optimized plan."""
+    def walk(node):
+        if node.nodeName() == "MapInArrow":
+            out = node.output()
+            yield [out.apply(i).name() for i in range(out.size())]
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    return list(walk(df._jdf.queryExecution().optimizedPlan()))
+
+
+def test_semantic_query_fences_two_columns(spark):
+    """semantic_query applies the caller's filter BEFORE its
+    materialize_fence and fences only (id, vector): a mapInArrow
+    boundary blocks column pruning, so every fenced column is shipped
+    through Arrow. Rows equal the whole-frame fence's."""
+    from pyspark.sql import functions as F
+
+    from elasticsearch_spark.ops.similarity import (
+        knn_search, map_semantic_text, register_text_embedding_model,
+        semantic_query,
+    )
+    from elasticsearch_spark.spread import materialize_fence
+
+    register_text_embedding_model("m-fence", dims=8)
+    df = spark.createDataFrame(
+        [(i, f"posting list merge {i % 7} term dictionary {i % 3}",
+          "en" if i % 2 else "de", "x" * 200)
+         for i in range(60)],
+        "doc_id long, body string, lang string, pad string")
+    mapped = map_semantic_text(df, "body", model_id="m-fence")
+    cond = F.col("lang") == "en"
+    got = semantic_query(mapped, "body", "merge term list", k=5,
+                         model_id="m-fence", filter_cond=cond)
+    fences = _map_in_arrow_outputs(got)
+    assert fences == [["doc_id", "body__inference"]], fences
+    vec = "body__inference"
+    want = knn_search(
+        materialize_fence(mapped).filter(
+            F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x) > 0),
+        None, k=5, id_col="doc_id", vec_col=vec, filter_cond=cond,
+        query_vector_builder={"text_embedding": {
+            "model_id": "m-fence", "model_text": "merge term list"}})
+    assert [tuple(r) for r in got.collect()] == \
+        [tuple(r) for r in want.collect()]
+
+
 def test_salted_block_join_pairs_identical(spark):
     """The salted within-block pair join must produce exactly the
     brute-force pair set (same blocks, same cosines)."""

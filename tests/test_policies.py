@@ -16,6 +16,9 @@ import pytest
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "elasticsearch_spark")
+# the shard placement exchange (spread.place_groups on part_id)
+PART_EXCHANGE = ("Exchange shufflepartitionidpassthrough("
+                 "direct_shuffle_partition_id(part_id")
 
 
 def test_no_row_at_a_time_udfs():
@@ -72,7 +75,7 @@ def test_term_filter_pushdown(spark, tmp_path):
     assert "PushedFilters" in plan
     assert re.search(r"In\(term, \[.*scan.*table.*\]\)|In\(term, \[.*table.*scan.*\]\)", plan), plan[:2000]
     # exactly one exchange feeds the scorer (the part_id shuffle)
-    assert plan.count("Exchange hashpartitioning(part_id") == 1
+    assert plan.count(PART_EXCHANGE) == 1, plan[:2000]
     # column pruning: positions are not read by the match scorer
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "positions" not in m.group(1), m.group(1)
@@ -94,7 +97,7 @@ def test_phrase_prefix_single_pass(spark, tmp_path):
     df = phrase_prefix_topk(fresh, "text", ["key", "ord"], k=10,
                             params=BM25Params(quantize_norms=False))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning(part_id") == 1, plan[:2000]
+    assert plan.count(PART_EXCHANGE) == 1, plan[:2000]
     assert plan.count("Scan parquet") == 1
 
 
@@ -219,10 +222,11 @@ def _pin_cases():
 @pytest.mark.parametrize("scorer", sorted(_pin_cases()))
 def test_scorer_exchange_pinned_to_shard_count(spark, index, scorer):
     """Every posting scorer feeds its pandas kernel through exactly one
-    ``repartition(num_partitions, part_id)`` exchange, which AQE may not
-    coalesce: the scorer stage is CPU-bound, so a byte-coalesced read
-    would fuse the shard groups into a few fat tasks. Checked on the
-    AQE final plan after execution, with coalescing switched on."""
+    ``part_id`` placement exchange over ``min(shards, cores)`` tasks,
+    which AQE may not coalesce: the scorer stage is CPU-bound, so a
+    byte-coalesced read would fuse the shard groups into a few fat
+    tasks. Checked on the AQE final plan after execution, with
+    coalescing switched on."""
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "true")
@@ -234,16 +238,18 @@ def test_scorer_exchange_pinned_to_shard_count(spark, index, scorer):
         spark.conf.set(key, before)
     final = plan.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final, final[:3000]
-    assert final.count("Exchange hashpartitioning(part_id") == 1, final
+    assert final.count(PART_EXCHANGE) == 1, final
     pins = re.findall(
-        r"Exchange hashpartitioning\(part_id#\d+, (\d+)\), REPARTITION_BY_NUM",
+        r"Exchange shufflepartitionidpassthrough\("
+        r"direct_shuffle_partition_id\(part_id#\d+\), (\d+)\), "
+        r"REPARTITION_BY_NUM",
         final)
-    assert pins == [str(index.num_partitions())], final
+    want = min(index.num_partitions(), spark.sparkContext.defaultParallelism)
+    assert pins == [str(want)], final
     lines = final.splitlines()
     kernel = next(i for i, ln in enumerate(lines)
                   if "FlatMapGroupsInPandas" in ln)
-    exchange = next(i for i, ln in enumerate(lines)
-                    if "Exchange hashpartitioning(part_id" in ln)
+    exchange = next(i for i, ln in enumerate(lines) if PART_EXCHANGE in ln)
     assert kernel < exchange, final
     # only the group sort and projections sit between the two
     assert not any("AQEShuffleRead" in ln or "Exchange" in ln
@@ -365,3 +371,68 @@ def test_filtered_disjunction_keeps_pruning_plan(spark, index):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan, plan[:3000]
     assert plan.count("FlatMapCoGroupsInPandas") >= 2, plan[:3000]
+
+
+def _tasks(rows, key) -> dict[int, set]:
+    """{task: set of groups} from rows carrying a ``task`` column."""
+    out: dict[int, set] = {}
+    for r in rows:
+        out.setdefault(r["task"], set()).add(key(r))
+    return out
+
+
+@pytest.mark.parametrize("parts", [4, 8, 16])
+def test_scorer_shards_fill_one_wave(spark, tmp_path, parts):
+    """The scorer exchange places shard p on task p mod T, T = min(P,
+    cores): T non-empty tasks, none with more than ceil(P / T) shards.
+    (A hash repartition on part_id puts 8 shards on 5 tasks, 3 on one.)"""
+    from pyspark.sql import functions as F
+
+    from elasticsearch_spark.index.builder import build_index
+    from elasticsearch_spark.search.executor import _posting_groups
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    idx = build_index(
+        docs.select("doc_id", "text"), str(tmp_path / f"place{parts}"),
+        fields={"text": "ascii_word"}, num_partitions=parts,
+        input_snapshot="place",
+    )
+    rows = (
+        _posting_groups(idx, F.col("field") == "text", ("part_id",))
+        .applyInPandas(lambda pdf: pdf.head(1), schema="part_id int")
+        .select(F.spark_partition_id().alias("task"), "part_id")
+        .collect()
+    )
+    tasks = _tasks(rows, lambda r: r["part_id"])
+    t = min(parts, spark.sparkContext.defaultParallelism)
+    assert sorted(p for g in tasks.values() for p in g) == list(range(parts))
+    assert len(tasks) == t, tasks
+    assert max(len(g) for g in tasks.values()) <= -(-parts // t), tasks
+
+
+def test_encode_groups_fill_one_wave(spark, tmp_path):
+    """The writer's encode stage places each (part_id, field) group of a
+    2-field, 4-part build on its own task (8 groups on local[8]). The
+    write runs in the encode stage, so a block file's name carries the
+    encode task's partition index."""
+    from pyspark.sql import functions as F
+
+    from elasticsearch_spark.index.builder import build_index
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    idx = build_index(
+        docs.select("doc_id", "text", "lang"), str(tmp_path / "encplace"),
+        fields={"text": "ascii_word", "lang": "keyword"}, num_partitions=4,
+        input_snapshot="encplace",
+    )
+    task = F.regexp_extract(F.input_file_name(), r"/part-(\d+)-", 1)
+    rows = (
+        idx.postings.select(task.cast("int").alias("task"), "part_id", "field")
+        .distinct().collect()
+    )
+    tasks = _tasks(rows, lambda r: (r["part_id"], r["field"]))
+    assert sorted(g for gs in tasks.values() for g in gs) == sorted(
+        (p, f) for p in range(4) for f in ("lang", "text"))
+    t = min(8, spark.sparkContext.defaultParallelism)
+    assert len(tasks) == t, tasks
+    assert max(len(g) for g in tasks.values()) <= -(-8 // t), tasks
