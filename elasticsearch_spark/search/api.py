@@ -9,8 +9,9 @@ Composes the two executors:
     FunctionScoreQueryBuilder arithmetic;
     ConstantScoreQueryBuilder boost).
   - filter context -> dsl.compile_filter native predicates applied to
-    the docs table and semi-joined against candidates BEFORE the top-k
-    cut (ES filter clauses run before collection).
+    the docs table; the surviving doc ids are pushed into every leaf
+    scorer as an allowlist BEFORE the top-k cut (ES filter clauses run
+    before collection).
 
 The global cut is orderBy(score desc, doc_id asc).limit(k) — Catalyst
 TakeOrderedAndProject == the coordinator's TopDocs.merge
@@ -27,13 +28,16 @@ from elasticsearch_spark.analysis import analyze
 from elasticsearch_spark.index.builder import InvertedIndex, index_meta
 from elasticsearch_spark.search import dsl
 from elasticsearch_spark.search.bm25 import BM25Params
-from elasticsearch_spark.search.executor import match_topk, phrase_topk
+from elasticsearch_spark.search.executor import (
+    match_topk, phrase_prefix_topk, phrase_topk)
 
 SCORED_KINDS = {
     "match", "match_phrase", "multi_match", "bool", "dis_max",
     "constant_score", "function_score", "match_all", "term_scored",
     "boosting",
 }
+# the scored leaves _leaf evaluates: one posting scorer each
+LEAF_KINDS = ("match", "term_scored", "match_phrase")
 
 def _is_pure_filter(query: dict[str, Any]) -> bool:
     """True when the query carries NO index-scored clause anywhere, i.e.
@@ -162,27 +166,47 @@ def _match_terms(index: InvertedIndex, field: str, spec: Any) -> tuple[list[str]
     return terms, operator, msm
 
 
-def _single_match_clause(scored_query: dict[str, Any]) -> dict[str, Any] | None:
-    """If the scoring part of a filtered bool reduces to ONE match
-    clause, return it (the filter can then be pushed into the scorer
-    without changing any score); else None."""
-    kind = next(iter(scored_query))
-    if kind == "match":
-        return scored_query
-    if kind == "bool":
-        b = scored_query["bool"]
-        must = list(b.get("must") or [])
-        should = list(b.get("should") or [])
-        if len(must) == 1 and not should and next(iter(must[0])) == "match":
-            return must[0]
-    return None
+def _leaf(
+    index: InvertedIndex,
+    q: dict[str, Any],
+    k: int | None,
+    params: BM25Params,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """ONE scored leaf (``LEAF_KINDS``) -> DataFrame(doc_id, score): its
+    top-k, or every match when ``k`` is None, with the leaf's boost
+    applied and the filter's ``allowed`` id set pushed into its scorer,
+    where pruning stays active. The boost scales after the cut — a
+    positive constant keeps the leaf's order."""
+    kind, body = next(iter(q.items()))
+    field, spec = next(iter(body.items()))
+    if kind == "term_scored":
+        # term query on an indexed text field: single un-analyzed term
+        value = spec["value"] if isinstance(spec, dict) else spec
+        df = match_topk(index, field, [value], k=k, params=params,
+                        allowed=allowed)
+    else:
+        terms, operator, msm = _match_terms(index, field, spec)
+        if kind == "match":
+            df = match_topk(
+                index, field, terms, k=k, operator=operator,
+                minimum_should_match=msm, params=params, allowed=allowed,
+            )
+        else:
+            slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
+            df = phrase_topk(index, field, terms, k=k, params=params,
+                             slop=slop, allowed=allowed)
+    df = df.select("doc_id", "score")
+    b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
+    if b != 1.0:
+        df = df.withColumn("score", F.col("score") * F.lit(b))
+    return df
 
 
 def _scored_df(
     index: InvertedIndex,
     query: dict[str, Any],
     params: BM25Params,
-    boost: float = 1.0,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Evaluate a scoring-context clause -> DataFrame(doc_id, score),
@@ -194,42 +218,9 @@ def _scored_df(
     restriction commutes with max/sum/count combination, so scores are
     unchanged."""
     kind, body = next(iter(query.items()))
-    spark = index.spark
 
-    if kind == "match":
-        field, spec = next(iter(body.items()))
-        terms, operator, msm = _match_terms(index, field, spec)
-        b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-        df = match_topk(
-            index, field, terms, k=None, operator=operator,
-            minimum_should_match=msm, params=params, allowed=allowed,
-        ).select("doc_id", "score")
-        return df.withColumn("score", F.col("score") * F.lit(boost * b))
-
-    if kind == "match_phrase":
-        field, spec = next(iter(body.items()))
-        text = spec["query"] if isinstance(spec, dict) else spec
-        analyzer = (spec.get("analyzer") if isinstance(spec, dict) else None) or \
-            index_meta(index.path)["fields"].get(field, "standard")
-        terms = [t for t, _ in analyze(text, analyzer)]
-        slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
-        b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-        df = phrase_topk(index, field, terms, k=None, params=params,
-                         slop=slop)
-        df = df.select("doc_id", "score")
-        if allowed is not None:
-            df = df.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        return df.withColumn("score", F.col("score") * F.lit(boost * b))
-
-    if kind == "term_scored":
-        # term query on an indexed text field: single un-analyzed term
-        field, spec = next(iter(body.items()))
-        value = spec["value"] if isinstance(spec, dict) else spec
-        df = match_topk(index, field, [value], k=None, params=params,
-                        allowed=allowed)
-        return df.select("doc_id", "score").withColumn(
-            "score", F.col("score") * F.lit(boost)
-        )
+    if kind in LEAF_KINDS:
+        return _leaf(index, query, None, params, allowed)
 
     if kind == "multi_match":
         text = body["query"]
@@ -239,46 +230,30 @@ def _scored_df(
         if mtype == "cross_fields":
             from elasticsearch_spark.search.combined import cross_fields_topk
 
-            analyzer = index_meta(index.path)["fields"].get(fields[0], "standard")
-            terms = [t for t, _ in analyze(text, analyzer)]
+            terms, _, _ = _match_terms(index, fields[0], text)
             df = cross_fields_topk(
                 index, fields, terms, k=None, tie_breaker=tie, params=params
-            )
-            df = df.select("doc_id", "score")
+            ).select("doc_id", "score")
             if allowed is not None:
+                # not a posting-skeleton scorer: no allowlist push-down
                 df = df.join(allowed.select("doc_id"), "doc_id", "left_semi")
-            return df.select(
-                "doc_id", (F.col("score") * F.lit(boost)).alias("score")
-            )
+            return df
         # phrase/phrase_prefix types run the per-field phrase query
         # instead of term-bag match (MultiMatchQueryBuilder.Type.PHRASE
         # / PHRASE_PREFIX), then combine exactly like best_fields
-        leaf = "match_phrase" if mtype in ("phrase", "phrase_prefix") \
-            else "match"
-        if mtype == "phrase_prefix":
-            per_field = []
-            from elasticsearch_spark.search.executor import (
-                phrase_prefix_topk)
-
-            for i, f in enumerate(fields):
-                analyzer = index_meta(index.path)["fields"].get(
-                    f, "standard")
-                terms = [t for t, _ in analyze(text, analyzer)]
+        leaf = "match_phrase" if mtype == "phrase" else "match"
+        spec = {"query": text, **{
+            kk: v for kk, v in body.items()
+            if kk in ("operator", "minimum_should_match") and leaf == "match"}}
+        per_field = []
+        for f in fields:
+            if mtype == "phrase_prefix":
+                terms, _, _ = _match_terms(index, f, text)
                 d = phrase_prefix_topk(index, f, terms, k=None,
-                                       params=params)
-                if allowed is not None:
-                    d = d.join(allowed.select("doc_id"), "doc_id",
-                               "left_semi")
-                per_field.append(
-                    d.select("doc_id", F.col("score").alias("s"))
-                    .withColumn("fidx", F.lit(i)))
-        else:
-            per_field = [
-                _scored_df(index, {leaf: {f: {"query": text, **{k: v for k, v in body.items() if k in ("operator", "minimum_should_match") and leaf == "match"}}}}, params, allowed=allowed)
-                .withColumnRenamed("score", "s")
-                .withColumn("fidx", F.lit(i))
-                for i, f in enumerate(fields)
-            ]
+                                       params=params, allowed=allowed)
+            else:
+                d = _leaf(index, {leaf: {f: spec}}, None, params, allowed)
+            per_field.append(d.select("doc_id", F.col("score").alias("s")))
         u = per_field[0]
         for d in per_field[1:]:
             u = u.unionByName(d)
@@ -289,7 +264,7 @@ def _scored_df(
             score = F.col("total")
         else:  # best_fields with tie_breaker
             score = F.col("best") + F.lit(tie) * (F.col("total") - F.col("best"))
-        return agg.select("doc_id", (score * F.lit(boost)).alias("score"))
+        return agg.select("doc_id", score.alias("score"))
 
     if kind == "dis_max":
         tie = float(body.get("tie_breaker", 0.0))
@@ -305,7 +280,7 @@ def _scored_df(
             F.max("s").alias("best"), F.sum("s").alias("total")
         )
         score = F.col("best") + F.lit(tie) * (F.col("total") - F.col("best"))
-        return agg.select("doc_id", (score * F.lit(boost)).alias("score"))
+        return agg.select("doc_id", score.alias("score"))
 
     if kind == "bool":
         if body.get("must_not") or body.get("filter") or any(
@@ -344,9 +319,7 @@ def _scored_df(
         cond = F.col("n_must") == F.lit(len(must))
         if should and msm > 0:
             cond = cond & (F.col("n_should") >= F.lit(msm))
-        return agg.filter(cond).select(
-            "doc_id", (F.col("score") * F.lit(boost)).alias("score")
-        )
+        return agg.filter(cond).select("doc_id", "score")
 
     if kind == "constant_score":
         b = float(body.get("boost", 1.0))
@@ -354,7 +327,7 @@ def _scored_df(
         ik = next(iter(inner))
         if ik in SCORED_KINDS:
             df = _scored_df(index, inner, params, allowed=allowed)
-            return df.select("doc_id", F.lit(b * boost).alias("score"))
+            return df.select("doc_id", F.lit(b).alias("score"))
         raise ValueError(
             "constant_score over a pure filter needs the docs table; use search()"
         )
@@ -363,7 +336,7 @@ def _scored_df(
         base = _scored_df(index, body["query"], params, allowed=allowed)
         weight = float(body.get("weight", 1.0))
         return base.select(
-            "doc_id", (F.col("score") * F.lit(weight * boost)).alias("score")
+            "doc_id", (F.col("score") * F.lit(weight)).alias("score")
         )
 
     raise ValueError(f"unsupported scoring query: {kind}")
@@ -379,12 +352,12 @@ def _unwrap_single_must(q: dict[str, Any]) -> dict[str, Any]:
 
 
 def _max_disjunction_leaves(
-    scored_query: dict[str, Any], allow_phrase: bool
+    scored_query: dict[str, Any]
 ) -> list[dict[str, Any]] | None:
-    """If the scoring query is a pure MAX-combine disjunction —
-    dis_max with tie_breaker=0, or multi_match best_fields with
-    tie_breaker=0 (its default) — over independently top-k-able leaf
-    clauses, return the leaf list; else None.
+    """If the scoring query is one scored leaf (``LEAF_KINDS``), or a
+    pure MAX-combine disjunction — dis_max with tie_breaker=0, or
+    multi_match best_fields with tie_breaker=0 (its default) — over
+    such leaves, return the leaf list; else None.
 
     Why per-leaf top-k is exact for max-combine: if doc d is in the
     global top-k by best-leaf score, then within d's best leaf fewer
@@ -395,12 +368,11 @@ def _max_disjunction_leaves(
     leaf scores equals its true best. This is the reference's
     DisjunctionMaxQuery-under-WAND shape
     (lucene/.../DisjunctionMaxQuery.java block-max score bounds): each
-    leaf keeps block-max pruning instead of scoring every matching doc.
-
-    ``allow_phrase``: phrase leaves cannot take a pushed filter id set,
-    so they only decompose when no filter is present."""
+    leaf keeps block-max pruning instead of scoring every matching doc."""
     q = _unwrap_single_must(scored_query)
     kind = next(iter(q))
+    if kind in LEAF_KINDS:
+        return [q]
     if kind == "dis_max":
         if float(q["dis_max"].get("tie_breaker", 0.0)) != 0.0:
             return None
@@ -416,51 +388,9 @@ def _max_disjunction_leaves(
         leaves = [{"match": {f: dict(spec)}} for f in b["fields"]]
     else:
         return None
-    ok = {"match", "term_scored"} | ({"match_phrase"} if allow_phrase else set())
-    if leaves and all(next(iter(le)) in ok for le in leaves):
+    if leaves and all(next(iter(le)) in LEAF_KINDS for le in leaves):
         return leaves
     return None
-
-
-def _leaf_topk(
-    index: InvertedIndex,
-    q: dict[str, Any],
-    k: int,
-    params: BM25Params,
-    allowed: DataFrame | None,
-) -> DataFrame:
-    """Top-k of ONE disjunction leaf with pruning active (and the
-    filter id set pushed in). Per-leaf boost is applied after the
-    top-k — a positive constant scale keeps the leaf order."""
-    kind, body = next(iter(q.items()))
-    if kind in ("match", "term_scored"):
-        field, spec = next(iter(body.items()))
-        if kind == "match":
-            terms, operator, msm = _match_terms(index, field, spec)
-        else:
-            terms = [spec["value"] if isinstance(spec, dict) else spec]
-            operator, msm = "or", 1
-        b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-        df = match_topk(
-            index, field, terms, k=k, operator=operator,
-            minimum_should_match=msm, params=params, allowed=allowed,
-        ).select("doc_id", "score")
-    elif kind == "match_phrase":
-        assert allowed is None  # guarded by _max_disjunction_leaves
-        field, spec = next(iter(body.items()))
-        text = spec["query"] if isinstance(spec, dict) else spec
-        analyzer = (spec.get("analyzer") if isinstance(spec, dict) else None) or \
-            index_meta(index.path)["fields"].get(field, "standard")
-        terms = [t for t, _ in analyze(text, analyzer)]
-        slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
-        b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-        df = phrase_topk(index, field, terms, k=k, params=params,
-                         slop=slop).select("doc_id", "score")
-    else:  # pragma: no cover - guarded by _max_disjunction_leaves
-        raise ValueError(f"non-decomposable leaf: {kind}")
-    if b != 1.0:
-        df = df.withColumn("score", F.col("score") * F.lit(b))
-    return df
 
 
 def search(
@@ -616,33 +546,17 @@ def search(
     allowed = None
     if filter_pred is not None:
         allowed = docs.filter(filter_pred).select(F.col(id_col).alias("doc_id"))
-    pushed = _single_match_clause(scored_query)
-    leaves = None if pushed else _max_disjunction_leaves(
-        scored_query, allow_phrase=filter_pred is None)
-    if pushed is not None:
-        # single scored match (filtered or not): run the scorer with
-        # k, so block-max/theta pruning is active and each shard emits
-        # only a local top-k; under a filter the id set is pushed INTO
-        # the scorer (partition-local allowlist via cogroup) instead of
-        # scoring every matching doc with k=None and semi-joining after.
-        field, spec = next(iter(pushed["match"].items()))
-        terms, operator, msm = _match_terms(index, field, spec)
-        b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-        scores = match_topk(
-            index, field, terms, k=k, operator=operator,
-            minimum_should_match=msm, params=params, allowed=allowed,
-        ).select("doc_id", "score")
-        if b != 1.0:
-            scores = scores.withColumn("score", F.col("score") * F.lit(b))
-    elif leaves is not None:
-        # max-combine disjunction (dis_max / multi_match best_fields at
-        # tie_breaker=0): per-leaf PRUNED top-k (filter pushed into each
-        # leaf), union, max per doc — exact, see _max_disjunction_leaves
-        parts = [_leaf_topk(index, q, k, params, allowed) for q in leaves]
-        u = parts[0]
-        for d in parts[1:]:
-            u = u.unionByName(d)
-        scores = u.groupBy("doc_id").agg(F.max("score").alias("score"))
+    leaves = _max_disjunction_leaves(scored_query)
+    if leaves is not None:
+        # one leaf, or a max-combine disjunction (dis_max / multi_match
+        # best_fields at tie_breaker=0): per-leaf PRUNED top-k with the
+        # filter pushed into each scorer, then max per doc — exact, see
+        # _max_disjunction_leaves
+        scores = _leaf(index, leaves[0], k, params, allowed)
+        if len(leaves) > 1:
+            for q in leaves[1:]:
+                scores = scores.unionByName(_leaf(index, q, k, params, allowed))
+            scores = scores.groupBy("doc_id").agg(F.max("score").alias("score"))
     else:
         scores = _scored_df(index, scored_query, params, allowed=allowed)
     if const_boost:

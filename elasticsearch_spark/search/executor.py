@@ -18,18 +18,23 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      then ``groupBy(part_id).applyInPandas(kernel)`` — each index
      partition (ES shard) scores its docs independently
      (doc-routing guarantees a doc's postings for ALL terms share one
-     part_id) and emits a LOCAL top-k (``_local_topk``). Only the numpy
-     kernels differ per scorer; the positional ones (phrase, phrase
-     prefix, intervals, spans) read ``_position_lists``. The BM25
-     kernel prunes with a
-     term-at-a-time MaxScore/block-max strategy (reference: WAND
-     activated by the 10k total-hits cap,
+     part_id) and emits a LOCAL top-k (``_local_topk``). A filter's
+     doc-id allowlist enters here too, once for every scorer: it is
+     routed to its shard and cogrouped with the blocks, and the
+     kernel scores only allowed docs. Only the numpy kernels differ
+     per scorer; the positional ones (phrase, phrase prefix,
+     intervals, spans) read ``_position_lists``. The BM25 kernel
+     prunes with a term-at-a-time MaxScore/block-max strategy
+     (reference: WAND activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
-     search/internal/SearchContext.java:60-62). Each group first
-     builds a per-term view of its blocks (skip metadata as arrays,
-     block upper bounds) in which a delta+VByte block is decoded and
-     quantized at most once, on first use; a ``match_topk_batch``
-     partition shares that view across all of its queries.
+     search/internal/SearchContext.java:60-62): each term's blocks are
+     scanned in row order against the theta taken at the term
+     boundary, and merged into the accumulator once, at the term's
+     end. Each group first builds a per-term view of its blocks (skip
+     metadata as arrays, block upper bounds) in which a delta+VByte
+     block is decoded and quantized at most once, on first use; a
+     ``match_topk_batch`` partition shares that view across all of its
+     queries.
   4. global merge (``_topk_merge``): ``orderBy(score desc, doc_id
      asc).limit(k)`` —
      Catalyst's TakeOrderedAndProject == Lucene TopDocs.merge
@@ -46,7 +51,6 @@ exhaustive scorer.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -179,21 +183,64 @@ def _scored_scan(
     cols: tuple[str, ...],
     kernel,
     k: int | None,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """Run ``kernel`` (one partition's blocks -> its local top-k in
-    TOPK_SCHEMA) over the shared posting scan, then merge globally."""
-    local = _posting_groups(index, cond, cols).applyInPandas(
-        kernel, schema=TOPK_SCHEMA)
+    """Run ``kernel(pdf, ids)`` (one partition's blocks -> its local
+    top-k in TOPK_SCHEMA) over the shared posting scan, then merge
+    globally. ``ids`` is None unless ``allowed`` is given.
+
+    ``allowed`` (a DataFrame with a ``doc_id`` column) restricts
+    scoring to docs passing a filter clause WITHOUT giving up top-k
+    pruning — the Spark shape of the reference's "filter bitset
+    intersected inside the collector while WAND prunes"
+    (search/query/TopDocsCollectorContext.java:202-206). The ids are
+    routed to their index partition with the builder's hash (one
+    in-plan shuffle of bare longs) and cogrouped with the posting
+    blocks; the kernel receives its partition's allowlist as sorted
+    int64 ``ids``. ONE job, no driver round-trip, executor memory
+    bounded at any filter size.
+
+    Measured at 1M docs / local[16] (BENCH/BASELINE.md): the cogroup,
+    a broadcast id array and the score-all + semi-join plan are all
+    within host noise, because scoring is not the bottleneck at 8k-doc
+    shards and hash-routed doc ids leave no empty block ranges to skip.
+    The structural difference — each shard emits only k rows and theta
+    pruning stays VALID under the filter — is what matters at
+    1000-executor scale, where the k=None plan's per-shard full
+    emission and disabled pruning dominate."""
+    groups = _posting_groups(index, cond, cols)
+    if allowed is None:
+        local = groups.applyInPandas(
+            lambda pdf: kernel(pdf, None), schema=TOPK_SCHEMA)
+        return _topk_merge(local, k)
+
+    def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
+        if ids.size == 0 or left.empty:
+            return _empty_topk()
+        return kernel(left, ids)
+
+    local = groups.cogroup(_by_shard(index, index.route_ids(allowed))) \
+        .applyInPandas(score_cogroup, schema=TOPK_SCHEMA)
     return _topk_merge(local, k)
 
 
+def _member_mask(sorted_ids: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Which of ``d`` occur in the non-empty sorted ``sorted_ids``."""
+    pos = np.searchsorted(sorted_ids, d)
+    pos[pos >= sorted_ids.size] = sorted_ids.size - 1
+    return sorted_ids[pos] == d
+
+
 def _position_lists(
-    pdf: pd.DataFrame, key: str | list[str] = "term"
+    pdf: pd.DataFrame, key: str | list[str] = "term",
+    allowed: np.ndarray | None = None,
 ) -> tuple[dict, dict[int, int]]:
     """Decode one partition's blocks (projected with ``n``, ``doc_ids``
     and ``positions``) into ``{key: {doc: positions}}``, grouped by the
-    ``key`` column(s). When the projection also carries ``dls`` the
-    second result maps every decoded doc to its field length; it is
+    ``key`` column(s), keeping only the docs in ``allowed`` (sorted
+    int64) when it is given. When the projection also carries ``dls``
+    the second result maps every kept doc to its field length; it is
     empty otherwise."""
     with_dl = "dls" in pdf.columns
     per_term: dict = {}
@@ -202,12 +249,17 @@ def _position_lists(
         docs: dict[int, np.ndarray] = {}
         for row in g.itertuples(index=False):
             d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
+            rows = (range(d.size) if allowed is None
+                    else np.flatnonzero(_member_mask(allowed, d)))
+            if len(rows) == 0:
+                continue
             plists = codec.decode_positions(bytes(row.positions), int(row.n))
-            for doc, pos in zip(d, plists):
-                docs[int(doc)] = pos
+            for j in rows:
+                docs[int(d[j])] = plists[j]
             if with_dl:
-                for doc, dl in zip(d, codec.vbyte_decode(row.dls)):
-                    dl_map[int(doc)] = int(dl)
+                dls = codec.vbyte_decode(row.dls)
+                for j in rows:
+                    dl_map[int(d[j])] = int(dls[j])
         per_term[term] = docs
     return per_term, dl_map
 
@@ -414,92 +466,26 @@ def _make_scorer(
             # falls in the block's [first_doc, last_doc] range.
             # acc_ids is sorted by construction (np.unique), so both
             # the range test and membership are searchsorted, not isin.
+            # Blocks are scanned in row order against this term-boundary
+            # theta; the term's hits merge into the accumulator once,
+            # after its last block.
             block_ubs = None
-            if (use_theta or theta is not None) and not restrict:
+            if theta is not None and not restrict:
                 block_ubs = ts.weight * ts.idf * tb.ub_tfn()
-
-            n_blocks = tb.n
-            # IMPACT-ORDERED scan (Lucene's impact-sorted posting slices
-            # behind WANDScorer): highest block impact first.  A doc
-            # occurs in exactly ONE block per term, so the k-th
-            # accumulated score remains a valid lower bound MID-term —
-            # chunked merges refresh theta while the term is still
-            # scanning and the low-impact ordered tail flips to
-            # restricted (range-skipped, usually undecoded).
-            # ONLY where it can pay: for a single-term query, and for
-            # the LAST term of a multi-term OR (rem_after == 0, so a
-            # rising theta immediately restricts the tail).  For
-            # earlier terms theta can rarely beat the remaining terms'
-            # full upper bounds, and the extra merges were measured to
-            # cost more than the ordering saves (BENCH/BASELINE.md).
-            impact_zone = (
-                use_theta and block_ubs is not None and n_blocks > 1
-                and (len(stats) == 1 or i == len(stats) - 1)
-            )
-            if impact_zone:
-                scan = np.argsort(-block_ubs, kind="stable")
-            else:
-                scan = range(n_blocks)
+            nstat["blocks"] += tb.n
+            if restrict and acc_ids.size == 0:
+                # no accumulator doc to update, and no new doc may enter
+                nstat["skip_restrict_empty"] += tb.n
+                continue
             first_doc, last_doc = tb.first_doc, tb.last_doc
-
-            widf = ts.weight * ts.idf
-            wgt = ts.weight
-            merged_this_term = False
-
-            def merge_pending(parts):
-                nonlocal acc_ids, acc_scores, acc_counts, theta
-                nonlocal merged_this_term
-                merged_this_term = True
-                ids = np.concatenate([p[0] for p in parts])
-                scores = widf * np.concatenate([p[1] for p in parts])
-                all_ids = np.concatenate([acc_ids, ids])
-                all_scores = np.concatenate([acc_scores, scores])
-                all_counts = np.concatenate(
-                    [acc_counts, np.full(ids.size, wgt, dtype=np.int64)]
-                )
-                uniq, inv = np.unique(all_ids, return_inverse=True)
-                new_scores = np.zeros(uniq.size, dtype=np.float64)
-                new_counts = np.zeros(uniq.size, dtype=np.int64)
-                np.add.at(new_scores, inv, all_scores)
-                np.add.at(new_counts, inv, all_counts)
-                acc_ids, acc_scores, acc_counts = uniq, new_scores, new_counts
-                if use_theta and acc_ids.size >= k:
-                    theta = float(np.partition(
-                        acc_scores, acc_scores.size - k)[acc_scores.size - k])
-                    # mid-term accumulator pruning: remaining_ub still
-                    # includes THIS term (a pruned doc's own block may
-                    # be unscanned), so the bound is safe
-                    if acc_ids.size > k:
-                        keepm = acc_scores + remaining_ub >= theta
-                        if not keepm.all():
-                            acc_ids = acc_ids[keepm]
-                            acc_scores = acc_scores[keepm]
-                            acc_counts = acc_counts[keepm]
-
-            # merge cadence: the first merge is small so theta activates
-            # early in the term; the target then DOUBLES per merge, so
-            # total merge work stays within ~2x of a single end-of-term
-            # merge while theta refreshes O(log n_blocks) times
-            chunk_target = max(4 * k, 1024) if impact_zone else None
-            pending: list[tuple] = []
-            pending_n = 0
-            nstat["blocks"] += n_blocks
-            n_seen = 0
-            for oi in scan:
-                n_seen += 1
+            hits: list[tuple] = []
+            for j in range(tb.n):
                 restricted = restrict or (
-                    theta is not None and block_ubs is not None
-                    and block_ubs[oi] + rem_after < theta
+                    block_ubs is not None and block_ubs[j] + rem_after < theta
                 )
-                if restricted and acc_ids.size == 0 and not pending:
-                    if restrict:
-                        nstat["skip_restrict_empty"] += n_blocks - n_seen + 1
-                        break
-                    nstat["skip_restrict_empty"] += 1
-                    continue
                 if restricted:
-                    lo = np.searchsorted(acc_ids, first_doc[oi], "left")
-                    hi = np.searchsorted(acc_ids, last_doc[oi], "right")
+                    lo = np.searchsorted(acc_ids, first_doc[j], "left")
+                    hi = np.searchsorted(acc_ids, last_doc[j], "right")
                     if lo == hi:
                         nstat["skip_theta_range"] += 1
                         continue  # range-skip: nothing to update, no decode
@@ -507,8 +493,8 @@ def _make_scorer(
                     # filter-aware skip: a block whose [first_doc,
                     # last_doc] range holds no allowed doc decodes
                     # nothing (the allowlist is sorted)
-                    lo = np.searchsorted(allowed, first_doc[oi], "left")
-                    hi = np.searchsorted(allowed, last_doc[oi], "right")
+                    lo = np.searchsorted(allowed, first_doc[j], "left")
+                    hi = np.searchsorted(allowed, last_doc[j], "right")
                     if lo == hi:
                         nstat["skip_filter"] += 1
                         continue
@@ -516,43 +502,41 @@ def _make_scorer(
                     # index-sort range skip: doc ids ARE sort ranks, so
                     # a block outside [lo, hi] never decodes (Lucene
                     # sorted-index early termination)
-                    if (last_doc[oi] < allowed_range[0]
-                            or first_doc[oi] > allowed_range[1]):
+                    if (last_doc[j] < allowed_range[0]
+                            or first_doc[j] > allowed_range[1]):
                         nstat["skip_sort"] += 1
                         continue
                 # counts blocks this query needed decoded, whether or
                 # not an earlier query already filled the cache
-                d, tfn = tb.block(oi)
+                d, tfn = tb.block(j)
                 nstat["decoded"] += 1
                 if restricted:
-                    pos = np.searchsorted(acc_ids, d)
-                    pos[pos >= acc_ids.size] = acc_ids.size - 1
-                    mask = acc_ids[pos] == d
+                    mask = _member_mask(acc_ids, d)
                     if not mask.any():
                         nstat["skip_member"] += 1
                         continue  # block-skip: no accumulator members
-                    d, tfn = d[mask], tfn[mask]
                 elif allowed is not None:
-                    pos = np.searchsorted(allowed, d)
-                    pos[pos >= allowed.size] = allowed.size - 1
-                    mask = allowed[pos] == d
-                    if not mask.any():
-                        continue
-                    d, tfn = d[mask], tfn[mask]
+                    mask = _member_mask(allowed, d)
                 elif allowed_range is not None:
                     mask = (d >= allowed_range[0]) & (d <= allowed_range[1])
-                    if not mask.any():
-                        continue
+                else:
+                    mask = None
+                if mask is not None:
                     d, tfn = d[mask], tfn[mask]
-                pending.append((d, tfn))
-                pending_n += int(d.size)
-                if chunk_target is not None and pending_n >= chunk_target:
-                    merge_pending(pending)
-                    pending, pending_n = [], 0
-                    chunk_target *= 2
-            if pending:
-                merge_pending(pending)
-            if operator == "and" and merged_this_term:
+                hits.append((d, tfn))
+            if not hits:
+                continue
+            ids = np.concatenate([acc_ids] + [d for d, _ in hits])
+            scores = np.concatenate(
+                [acc_scores] + [ts.weight * ts.idf * t for _, t in hits])
+            counts = np.concatenate(
+                [acc_counts, np.full(ids.size - acc_ids.size, ts.weight)])
+            acc_ids, inv = np.unique(ids, return_inverse=True)
+            acc_scores = np.zeros(acc_ids.size, dtype=np.float64)
+            acc_counts = np.zeros(acc_ids.size, dtype=np.int64)
+            np.add.at(acc_scores, inv, scores)
+            np.add.at(acc_counts, inv, counts)
+            if operator == "and":
                 # docs must have matched every clause (weight) so far
                 keep = acc_counts == cumw[i]
                 acc_ids, acc_scores, acc_counts = (
@@ -594,23 +578,8 @@ def match_topk(
     ordered by (score desc, doc_id asc), limited to k.
 
     ``allowed`` (a DataFrame with a ``doc_id`` column) restricts
-    scoring to docs passing a filter clause WITHOUT giving up top-k
-    pruning — the Spark shape of the reference's "filter bitset
-    intersected inside the collector while WAND prunes"
-    (search/query/TopDocsCollectorContext.java:202-206). The ids are
-    routed to their index partition with the builder's hash (one
-    in-plan shuffle of bare longs) and cogrouped with the posting
-    blocks — ONE job, no driver round-trip, executor memory bounded at
-    any filter size.
-
-    Measured at 1M docs / local[16] (BENCH/BASELINE.md): the cogroup,
-    a broadcast id array and the score-all + semi-join plan are all
-    within host noise, because scoring is not the bottleneck at 8k-doc
-    shards and hash-routed doc ids leave no empty block ranges to skip.
-    The structural difference — each shard emits only k rows and theta
-    pruning stays VALID under the filter — is what matters at
-    1000-executor scale, where the k=None plan's per-shard full
-    emission and disabled pruning dominate.
+    scoring to docs passing a filter clause, pushed into the scorer by
+    the shared skeleton (``_scored_scan``).
     """
     params = params or BM25Params()
     spark = index.spark
@@ -633,28 +602,8 @@ def match_topk(
     scorer = _make_scorer(
         term_stats, avgdl, params, k, operator, minimum_should_match, prune
     )
-    if allowed is not None:
-        allow_parts = index.route_ids(allowed)
-
-        def score_cogroup(
-            left: pd.DataFrame, right: pd.DataFrame
-        ) -> pd.DataFrame:
-            ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
-            if ids.size == 0 or left.empty:
-                return _empty_topk()
-            return scorer(left, ids)
-
-        local = (
-            _posting_groups(index, cond, cols)
-            .cogroup(_by_shard(index, allow_parts))
-            .applyInPandas(score_cogroup, schema=TOPK_SCHEMA)
-        )
-        return _topk_merge(local, k)
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return scorer(pdf, None, allowed_range=rng)
-
-    return _scored_scan(index, cond, cols, score_group, k)
+    return _scored_scan(index, cond, cols,
+                        lambda pdf, ids: scorer(pdf, ids, rng), k, allowed)
 
 
 def doc_id_range_for(
@@ -821,9 +770,11 @@ def phrase_topk(
     k: int | None = 10,
     params: BM25Params | None = None,
     slop: int = 0,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
     """match_phrase: phrase top-k (exact adjacency, or sloppy when
-    ``slop`` > 0).
+    ``slop`` > 0), restricted to the ``allowed`` doc ids when given
+    (pushed into the kernel like ``match_topk``'s).
 
     Reference: MatchQueryParser.java:243 createPhraseQuery -> Lucene
     PhraseQuery. Scoring follows Lucene's PhraseWeight: tf = number of
@@ -857,8 +808,8 @@ def phrase_topk(
     k1, b, quant = params.k1, params.b, params.quantize_norms
     ordered_terms = list(terms)  # keep phrase order (duplicates allowed)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term, dl_map = _position_lists(pdf)
+    def score_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        per_term, dl_map = _position_lists(pdf, allowed=ids)
         if any(t not in per_term for t in ordered_terms):
             return _empty_topk()
         # conjunction of doc sets
@@ -899,7 +850,7 @@ def phrase_topk(
 
     cond = (F.col("field") == field) & F.col("term").isin(list(set(terms)))
     cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-    return _scored_scan(index, cond, cols, score_group, k)
+    return _scored_scan(index, cond, cols, score_group, k, allowed)
 
 
 def synonym_match_topk(
@@ -945,7 +896,7 @@ def synonym_match_topk(
     k1, b, quant = params.k1, params.b, params.quantize_norms
     qterms = list(term_to_group)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_group(pdf: pd.DataFrame, _ids) -> pd.DataFrame:
         acc_ids = np.empty(0, dtype=np.int64)
         acc_scores = np.empty(0, dtype=np.float64)
         acc_counts = np.empty(0, dtype=np.int64)
@@ -1082,12 +1033,14 @@ def phrase_prefix_topk(
     k: int | None = 10,
     max_expansions: int = 50,
     params: BM25Params | None = None,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
     """match_phrase_prefix (MatchQueryParser.java:251): the LAST term is
     a prefix, expanded against the term dictionary (like the reference's
     MultiPhrasePrefixQuery, capped at max_expansions); a doc matches if
     the phrase completes with ANY expansion, scored as the best-scoring
-    completed phrase.
+    completed phrase. ``allowed`` restricts it to those doc ids, as in
+    ``match_topk``.
 
     SINGLE-PASS plan: the posting blocks of the prefix terms AND every
     expansion are loaded once, and the position intersection runs
@@ -1116,8 +1069,8 @@ def phrase_prefix_topk(
     k1, b, quant = params.k1, params.b, params.quantize_norms
     m = len(terms)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term, dl_map = _position_lists(pdf)
+    def score_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        per_term, dl_map = _position_lists(pdf, allowed=ids)
         if any(t not in per_term for t in prefix_terms):
             return _empty_topk()
         present_exp = [e for e in exp_set if e in per_term]
@@ -1180,7 +1133,7 @@ def phrase_prefix_topk(
 
     cond = (F.col("field") == field) & F.col("term").isin(all_terms)
     cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-    return _scored_scan(index, cond, cols, score_group, k)
+    return _scored_scan(index, cond, cols, score_group, k, allowed)
 
 
 def intervals_match(
@@ -1206,8 +1159,8 @@ def intervals_match(
     uniq = list(dict.fromkeys(terms))
     m = len(terms)
 
-    def check_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term, _ = _position_lists(pdf)
+    def check_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        per_term, _ = _position_lists(pdf, allowed=ids)
         if any(t not in per_term for t in terms):
             return _empty_topk()
         cand = set(per_term[terms[0]])

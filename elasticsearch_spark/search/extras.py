@@ -568,9 +568,12 @@ def explain_scores(
     doc_ids: list[int],
     params: BM25Params | None = None,
 ) -> DataFrame:
-    """Per-(doc, term) BM25 component breakdown: tf, dl, df, idf,
+    """Per-(doc, term) score component breakdown: tf, dl, df, idf,
     tf_norm, contribution — the ExplainPhase analogue, invaluable for
-    score-parity debugging."""
+    score-parity debugging. ``idf`` and ``tf_norm`` are the kernel's
+    own factors under ``params.similarity`` (``bm25.idf_sim``,
+    ``bm25.tf_norm_sim``), so a doc's contributions sum to its
+    ``match_topk`` score."""
     import numpy as np
 
     from elasticsearch_spark.search import bm25
@@ -585,6 +588,7 @@ def explain_scores(
             (F.col("field") == field) & F.col("term").isin(terms)
         ).collect()
     }
+    idfs = {t: bm25.idf_sim(df, n_docs, params) for t, df in dfs.items()}
     rows = decoded_postings(index, field, terms).filter(
         F.col("doc_id").isin(doc_ids)
     )
@@ -594,13 +598,8 @@ def explain_scores(
             tfs = pdf["tf"].to_numpy(dtype=np.float64)
             dls = pdf["dl"].to_numpy(dtype=np.int64)
             df_arr = np.array([dfs[t] for t in pdf["term"]], dtype=np.float64)
-            idf = np.log(1.0 + (n_docs - df_arr + 0.5) / (df_arr + 0.5))
-            dl_eff = (
-                bm25.quantize_dl(dls).astype(np.float64)
-                if params.quantize_norms
-                else dls.astype(np.float64)
-            )
-            tfn = tfs / (tfs + params.k1 * (1 - params.b + params.b * dl_eff / avgdl))
+            idf = np.array([idfs[t] for t in pdf["term"]], dtype=np.float64)
+            tfn = bm25.tf_norm_sim(tfs, dls, avgdl, params)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -610,7 +609,7 @@ def explain_scores(
                     "df": df_arr,
                     "idf": idf,
                     "tf_norm": tfn,
-                    "contribution": (params.k1 + 1.0) * idf * tfn,
+                    "contribution": idf * tfn,
                 }
             )
 

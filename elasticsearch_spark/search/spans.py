@@ -272,8 +272,8 @@ def span_match(
         c = (F.col("field") == f) & F.col("term").isin(ts)
         cond = c if cond is None else (cond | c)
 
-    def check_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term, _ = _position_lists(pdf, ["field", "term"])
+    def check_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        per_term, _ = _position_lists(pdf, ["field", "term"], ids)
         all_docs: set[int] = set().union(*per_term.values())
         hits = []
         for doc in all_docs:

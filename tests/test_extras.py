@@ -85,15 +85,23 @@ def test_highlight(index, docs):
 
 
 def test_explain_matches_scores(index):
-    topk = match_topk(index, "text", ["table", "scan"], k=3, params=EXACT).collect()
-    ids = [r["doc_id"] for r in topk]
-    ex = extras.explain_scores(index, "text", ["table", "scan"], ids, params=EXACT)
-    by_doc = {}
-    for r in ex.collect():
-        by_doc.setdefault(r["doc_id"], 0.0)
-        by_doc[r["doc_id"]] += r["contribution"]
-    for r in topk:
-        assert math.isclose(by_doc[r["doc_id"]], r["score"], rel_tol=1e-9)
+    """A hit's explained contributions sum to its score under every
+    similarity the kernel supports."""
+    for params in (EXACT,
+                   BM25Params(quantize_norms=False, similarity="classic"),
+                   BM25Params(quantize_norms=False, similarity="boolean")):
+        topk = match_topk(index, "text", ["table", "scan"], k=3,
+                          params=params).collect()
+        ids = [r["doc_id"] for r in topk]
+        ex = extras.explain_scores(index, "text", ["table", "scan"], ids,
+                                   params=params)
+        by_doc = {}
+        for r in ex.collect():
+            by_doc.setdefault(r["doc_id"], 0.0)
+            by_doc[r["doc_id"]] += r["contribution"]
+        for r in topk:
+            assert math.isclose(by_doc[r["doc_id"]], r["score"],
+                                rel_tol=1e-9), (params.similarity, r)
 
 
 def test_significant_text(docs):

@@ -104,7 +104,7 @@ def test_prune_equals_exhaustive(index):
 @pytest.fixture(scope="module")
 def index_one_part(corpus, tmp_path_factory):
     """The same corpus in ONE partition: high-DF terms then span several
-    posting blocks, so block-max pruning and impact ordering engage."""
+    posting blocks, so block-max pruning engages."""
     return build_index(
         corpus,
         str(tmp_path_factory.mktemp("index_one_part")),
@@ -117,9 +117,10 @@ def index_one_part(corpus, tmp_path_factory):
 
 BATCH_QUERIES = [
     # On the one-partition index ``indexwriter75`` has two blocks with
-    # upper bounds 2.288 and 2.097. Here it is the impact-ordered last
-    # term: theta after ``makedoc65`` is 2.205, so its second block is
-    # restricted to accumulator members (a masked view of the block).
+    # upper bounds 2.288 and 2.097. Here it is the last term, scanned
+    # against the theta taken after ``makedoc65`` (2.205), so its 2.097
+    # block is restricted to accumulator members (a masked view of the
+    # block).
     "makedoc65 indexwriter75",
     # ... and here it is the unrestricted first term, reading the same
     # shared blocks after the query above has visited them.

@@ -151,7 +151,8 @@ def test_filtered_search_keeps_pruning_plan(spark, index):
 
 def test_filtered_search_parity_with_fallback(spark, index):
     """Pushed-allowlist scoring must be row-identical to the unpruned
-    score-everything + semi-join fallback, across operators and msm."""
+    score-everything + semi-join fallback, across operators, msm,
+    exact and sloppy phrase leaves and a match/phrase dis_max."""
     from pyspark.sql import functions as F
 
     from elasticsearch_spark.search import dsl
@@ -160,6 +161,8 @@ def test_filtered_search_parity_with_fallback(spark, index):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     params = BM25Params(quantize_norms=False)
+    zero_hit = {"bool": {"must": [{"match": {"text": "table"}}],
+                         "filter": [{"term": {"lang": "zz_nope"}}]}}
     cases = [
         {"bool": {"must": [{"match": {"text": "table scan merge"}}],
                   "filter": [{"range": {"n_chars": {"gte": 300}}}]}},
@@ -170,9 +173,17 @@ def test_filtered_search_parity_with_fallback(spark, index):
                       "query": "table scan merge",
                       "minimum_should_match": 2}}}],
                   "filter": [{"term": {"lang": "en"}}]}},
-        # zero-hit filter
-        {"bool": {"must": [{"match": {"text": "table"}}],
-                  "filter": [{"term": {"lang": "zz_nope"}}]}},
+        zero_hit,
+        # phrase leaves take the pushed allowlist too
+        {"bool": {"must": [{"match_phrase": {"text": "order fast"}}],
+                  "filter": [{"term": {"lang": "en"}}]}},
+        {"bool": {"must": [{"match_phrase": {"text": {
+                      "query": "key order", "slop": 1}}}],
+                  "filter": [{"term": {"lang": "en"}}]}},
+        {"bool": {"must": [{"dis_max": {"queries": [
+                      {"match": {"text": "window filter"}},
+                      {"match_phrase": {"text": "scan merge"}}]}}],
+                  "filter": [{"range": {"n_chars": {"gte": 300}}}]}},
     ]
     for q in cases:
         got = [
@@ -193,6 +204,26 @@ def test_filtered_search_parity_with_fallback(spark, index):
             .select("doc_id", F.round("score", 6).alias("s")).collect()
         ]
         assert got == want, q
+        # only the zero-hit filter may return nothing: parity over an
+        # empty result would prove nothing
+        assert bool(got) != (q is zero_hit), q
+
+
+def test_filtered_phrase_pushes_allowlist(spark, index):
+    """A filtered phrase leaf cogroups the allowlist into its kernel
+    (one FlatMapCoGroupsInPandas) instead of scoring every phrase match
+    and semi-joining the filter above the scorer."""
+    from elasticsearch_spark.search.api import search
+    from elasticsearch_spark.search.bm25 import BM25Params
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    q = {"bool": {"must": [{"match_phrase": {"text": "order fast"}}],
+                  "filter": [{"term": {"lang": "en"}}]}}
+    out = search(index, docs, q, k=10,
+                 params=BM25Params(quantize_norms=False))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan[:3000]
+    assert "LeftSemi" not in plan, plan[:3000]
 
 
 def _pin_cases():
@@ -350,10 +381,10 @@ def test_disjunction_decomposition_parity(spark, index):
     # a nonzero tie_breaker must NOT decompose (scores need every leaf)
     assert _max_disjunction_leaves(
         {"dis_max": {"tie_breaker": 0.3, "queries":
-                     [{"match": {"text": "a"}}]}}, True) is None
+                     [{"match": {"text": "a"}}]}}) is None
     assert _max_disjunction_leaves(
         {"multi_match": {"query": "a", "fields": ["text"],
-                         "type": "most_fields"}}, True) is None
+                         "type": "most_fields"}}) is None
 
 
 def test_filtered_disjunction_keeps_pruning_plan(spark, index):
