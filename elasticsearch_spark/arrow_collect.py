@@ -25,7 +25,8 @@ upstream-maintained classic-parity conversion), plus two fast paths:
 
 Schemas outside the verified-parity type set (binary — classic returns
 ``bytearray`` —, UDTs, variant/geo) fall back to the classic pickle
-path, as does any Arrow conversion error.  Everything is computed from
+path, reported once per process on stderr, as does any Arrow
+conversion error.  Everything is computed from
 the source tables on every call — this changes only how finished rows
 cross the JVM->Python boundary, never what is computed.
 
@@ -138,6 +139,20 @@ def _quiesce_jvm(spark) -> None:
         pass  # best-effort: a failed quiesce only costs speed
 
 
+_schema_fallback_reported = False
+
+
+def _report_schema_fallback(types: list[DataType]) -> None:
+    """Say once per process that a schema took the classic path."""
+    global _schema_fallback_reported
+    if not _schema_fallback_reported:
+        _schema_fallback_reported = True
+        names = ", ".join(sorted({t.simpleString() for t in types}))
+        print(f"arrow_collect: falling back to classic collect (no "
+              f"verified Arrow parity for {names}; reported once)",
+              file=sys.stderr)
+
+
 def rows_from_arrow(tbl, schema: StructType) -> list[Row]:
     fields = schema.fieldNames()
     # Row subclass with __fields__ on the CLASS: Row.__getattr__ /
@@ -184,9 +199,12 @@ class ArrowCollectDataFrame(DataFrame):
 
     def collect(self) -> list[Row]:
         schema = self.schema
-        if not schema.fields or not all(
-            _arrow_safe(f.dataType) for f in schema.fields
-        ):
+        if not schema.fields:
+            return super().collect()
+        unsafe = [f.dataType for f in schema.fields
+                  if not _arrow_safe(f.dataType)]
+        if unsafe:
+            _report_schema_fallback(unsafe)
             return super().collect()
         try:
             tbl = super().toArrow()

@@ -10,6 +10,13 @@ On a cluster, --partitions is the shard count: size it so one
 partition's postings fit an executor task (the ES shard-sizing rule).
 The job is idempotent per partition — rerunning with --resume skips
 completed partitions via the checkpoint manifests.
+
+The session is the one spark-submit configures
+(``SparkSession.builder.getOrCreate()``), not ``get_spark``: that one
+forks Python workers from ``elasticsearch_spark.worker_daemon``, and a
+daemon module must be importable when the daemon launches, which
+``--py-files`` does not guarantee (an executor fetches the zip per
+task). So the job's workers run the stock ``pyspark.daemon``.
 """
 
 from __future__ import annotations

@@ -13,6 +13,13 @@ dirs make replay a no-op). Every ``--compact-every`` batches the job
 runs the tiered compaction (compact_index) so posting blocks stay
 merge-deep rather than batch-deep. ``--max-batches`` stops after N
 non-empty batches (smoke runs); default runs until killed.
+
+The session is the one spark-submit configures
+(``SparkSession.builder.getOrCreate()``), not ``get_spark``: that one
+forks Python workers from ``elasticsearch_spark.worker_daemon``, and a
+daemon module must be importable when the daemon launches, which
+``--py-files`` does not guarantee (an executor fetches the zip per
+task). So the job's workers run the stock ``pyspark.daemon``.
 """
 
 from __future__ import annotations
@@ -37,13 +44,14 @@ def main() -> None:
                     "infer from existing files in --input)")
     args = ap.parse_args()
 
-    from elasticsearch_spark.session import get_spark
+    from pyspark.sql import SparkSession
+
     from elasticsearch_spark.streaming.refresh import (
         compact_index, ingest_batch, refresh_stream,
     )
 
     fields = dict(kv.split("=", 1) for kv in args.fields.split(","))
-    spark = get_spark("refresh_job")
+    spark = SparkSession.builder.appName("es_spark_refresh").getOrCreate()
     schema = args.schema or spark.read.parquet(args.input).schema
     stream = spark.readStream.schema(schema).parquet(args.input)
 

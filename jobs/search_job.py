@@ -3,6 +3,13 @@
   spark-submit --py-files dist/elasticsearch_spark.zip jobs/search_job.py \
     --index /data/index --field content --query "parseBuffer import" \
     [--operator or] [--k 10] [--quantize] [--query-string "a AND b"]
+
+The session is the one spark-submit configures
+(``SparkSession.builder.getOrCreate()``), not ``get_spark``: that one
+forks Python workers from ``elasticsearch_spark.worker_daemon``, and a
+daemon module must be importable when the daemon launches, which
+``--py-files`` does not guarantee (an executor fetches the zip per
+task). So the job's workers run the stock ``pyspark.daemon``.
 """
 
 from __future__ import annotations

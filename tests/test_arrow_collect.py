@@ -78,6 +78,23 @@ def test_binary_falls_back_to_classic(spark):
     assert type(rows[0].bin) is type(classic[0].bin)
 
 
+def test_schema_fallback_reports_once(spark, monkeypatch, capfd):
+    from elasticsearch_spark import arrow_collect as ac
+
+    monkeypatch.setattr(ac, "_schema_fallback_reported", False)
+    df = spark.range(3).select(
+        F.col("id"), F.encode(F.col("id").cast("string"), "utf-8").alias("bin"))
+    capfd.readouterr()
+    first = arrow_collected(df).collect()
+    second = arrow_collected(df).collect()
+    lines = capfd.readouterr().err.splitlines()
+    assert [ln for ln in lines if ln.startswith("arrow_collect:")] == [
+        "arrow_collect: falling back to classic collect (no verified "
+        "Arrow parity for binary; reported once)"]
+    classic = [tuple(r) for r in ClassicDF.collect(df)]
+    assert [tuple(r) for r in first] == [tuple(r) for r in second] == classic
+
+
 def test_empty_result(spark):
     df = spark.range(5).filter(F.col("id") < 0)
     assert arrow_collected(df).collect() == []

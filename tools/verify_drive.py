@@ -14,6 +14,8 @@ from elasticsearch_spark.search.executor import match_topk, fetch
 
 def main() -> int:
     spark = get_spark("drive", cores=8)
+    daemon = spark.sparkContext.getConf().get("spark.python.daemon.module")
+    assert daemon == "elasticsearch_spark.worker_daemon", daemon
     corpus = generate_corpus(spark, 300, seed=7).cache()
     idx = build_index(
         corpus, tempfile.mkdtemp(prefix="esidx_"),
