@@ -29,7 +29,7 @@ from elasticsearch_spark.index.builder import InvertedIndex, index_meta
 from elasticsearch_spark.search import dsl
 from elasticsearch_spark.search.bm25 import BM25Params
 from elasticsearch_spark.search.executor import (
-    match_topk, phrase_prefix_topk, phrase_topk)
+    fetch, match_topk, phrase_prefix_topk, phrase_topk)
 
 SCORED_KINDS = {
     "match", "match_phrase", "multi_match", "bool", "dis_max",
@@ -483,9 +483,7 @@ def search(
             F.col("score") * F.when(F.col("_neg") == 1, F.lit(nb)).otherwise(F.lit(1.0)),
         ).drop("_neg")
         topk = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-        return docs.join(F.broadcast(topk), on=id_col, how="inner").orderBy(
-            F.desc("score"), F.asc(id_col)
-        )
+        return fetch(topk, docs, id_col)
 
     if kind == "constant_score" and _is_pure_filter(query):
         # canonical usage {"constant_score": {"filter": <filter query>}}:
@@ -564,9 +562,7 @@ def search(
     if min_score is not None:
         scores = scores.filter(F.col("score") >= F.lit(min_score))
     topk = scores.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    return docs.join(F.broadcast(topk), on=id_col, how="inner").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
+    return fetch(topk, docs, id_col)
 
 
 def sort_hits(

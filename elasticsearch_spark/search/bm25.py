@@ -123,28 +123,6 @@ def idf(df: np.ndarray | float, n_docs: float) -> np.ndarray | float:
     return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def tf_norm(
-    tf: np.ndarray,
-    dl: np.ndarray,
-    avgdl: float,
-    params: BM25Params,
-) -> np.ndarray:
-    dl_eff = quantize_dl(dl).astype(np.float64) if params.quantize_norms else np.asarray(dl, dtype=np.float64)
-    return tf / (tf + params.k1 * (1.0 - params.b + params.b * dl_eff / avgdl))
-
-
-def score(
-    tf: np.ndarray,
-    dl: np.ndarray,
-    df: float,
-    n_docs: float,
-    avgdl: float,
-    params: BM25Params,
-) -> np.ndarray:
-    tf = np.asarray(tf, dtype=np.float64)
-    return (params.k1 + 1.0) * idf(df, n_docs) * tf_norm(tf, dl, avgdl, params)
-
-
 # ---- similarity dispatch (SimilarityService registrations) ----------
 
 def idf_sim(df: float, n_docs: float, params: BM25Params) -> float:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search.bm25 import BM25Params
-from elasticsearch_spark.search.executor import decoded_postings
+from elasticsearch_spark.search.executor import _no_hits, decoded_postings
 
 
 def combined_fields_topk(
@@ -118,7 +118,7 @@ def cross_fields_topk(
         for r in index.term_stats(f, terms):
             df_blend[r["term"]] = max(df_blend.get(r["term"], 0), int(r["df"]))
     if not df_blend:
-        return index.spark.createDataFrame([], "doc_id long, score double, matched int")
+        return _no_hits(index.spark)
     import math
 
     idf_map = {

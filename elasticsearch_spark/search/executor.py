@@ -5,12 +5,15 @@ DFS-global stats — action/search/TransportSearchAction.java:91,
 search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
 
   1. driver: analyze the query text (tiny), look up TermStatistics in
-     ``term_dict`` (filter + collect: a handful of rows) and
-     CollectionStatistics in ``coll_stats`` — the DFS phase, always-on.
-  2. ``postings.filter(field == f & term isin qterms)`` — Parquet
-     predicate pushdown + term-sorted row-group skipping; only blocks
-     of the query terms are read (per-term scan, like a term-dictionary
-     seek).
+     ``term_dict`` and CollectionStatistics in ``coll_stats``
+     (``_term_rows``, one lookup per request) — the DFS phase,
+     always-on.
+  2. ``postings.filter(field == f & term isin sorted(qterms))`` —
+     Parquet predicate pushdown + term-sorted row-group skipping; only
+     blocks of the query terms are read (per-term scan, like a
+     term-dictionary seek). ``match_topk`` and ``match_topk_batch``
+     are one BM25 scan (``_bm25_local``): a single request is a batch
+     of one query.
   3. one skeleton shared by every posting scorer (``_posting_groups``,
      ``_scored_scan``): the pushed scan, ONE ``part_id`` exchange
      (``place_groups``: shard p on task p mod min(shards, cores), so
@@ -22,8 +25,10 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      doc-id allowlist enters here too, once for every scorer: it is
      routed to its shard and cogrouped with the blocks, and the
      kernel scores only allowed docs. Only the numpy kernels differ
-     per scorer; the positional ones (phrase, phrase prefix,
-     intervals, spans) read ``_position_lists``. The BM25 kernel
+     per scorer; the positional ones (phrase and phrase prefix — one
+     kernel, ``_phrase_scan`` —, intervals, spans) read
+     ``_position_lists``, and every BM25 weight comes from
+     ``bm25.idf_sim`` and ``bm25.tf_norm_sim``. The BM25 kernel
      prunes with a term-at-a-time MaxScore/block-max strategy
      (reference: WAND activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
@@ -32,9 +37,8 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      boundary, and merged into the accumulator once, at the term's
      end. Each group first builds a per-term view of its blocks (skip
      metadata as arrays, block upper bounds) in which a delta+VByte
-     block is decoded and quantized at most once, on first use; a
-     ``match_topk_batch`` partition shares that view across all of its
-     queries.
+     block is decoded and quantized at most once, on first use; every
+     query of the partition shares that view.
   4. global merge (``_topk_merge``): ``orderBy(score desc, doc_id
      asc).limit(k)`` —
      Catalyst's TakeOrderedAndProject == Lucene TopDocs.merge
@@ -64,6 +68,7 @@ from elasticsearch_spark.search.bm25 import BM25Params
 from elasticsearch_spark.spread import place_groups
 
 TOPK_SCHEMA = "doc_id long, score double, matched int"
+BATCH_TOPK_SCHEMA = "query_id int, doc_id long, score double, matched int"
 
 
 @dataclass
@@ -111,28 +116,35 @@ def _stats_from_rows(
     return out
 
 
-def _lookup_terms(
-    index: InvertedIndex, field: str, terms: list[str], params: BM25Params
-) -> tuple[list[TermStats], float, float]:
-    """DFS phase: global term + collection statistics (driver-side)."""
-    coll = _collection_stats(index, field)
-    if coll is None:
-        return [], 0.0, 1.0
-    n_docs, avgdl = coll
-    rows = index.term_stats(field, terms)
-    by_term = {r["term"]: r for r in rows}
-    return _stats_from_rows(terms, by_term, n_docs, avgdl, params), n_docs, avgdl
-
-
-def _collection_stats(
-    index: InvertedIndex, field: str
-) -> tuple[float, float] | None:
-    """DFS CollectionStatistics of ``field`` as ``(n_docs, avgdl)``;
-    None for an unknown or empty field, which no doc can match."""
+def _term_rows(
+    index: InvertedIndex, field: str, terms: list[str]
+) -> tuple[dict, float, float] | None:
+    """DFS phase (driver-side): ``({term: term_dict row}, n_docs,
+    avgdl)`` for the indexed ``terms`` of ``field``; None for an
+    unknown or empty field, which no doc can match."""
     coll = index.collection_stats().get(field)
     if coll is None or not coll["n_docs"]:
         return None
-    return coll["n_docs"], coll["avgdl"]
+    rows = index.term_stats(field, terms)
+    return {r["term"]: r for r in rows}, coll["n_docs"], coll["avgdl"]
+
+
+def _bm25_only(params: BM25Params, scorer: str) -> None:
+    """Phrase and synonym weights are BM25's. Lucene's classic phrase
+    weight squares the idf SUM, which per-term ``bm25.idf_sim`` cannot
+    express, so another similarity fails loudly instead of scoring a
+    hybrid (e.g. classic idf² times a BM25 tf-norm)."""
+    if params.similarity != "bm25":
+        raise ValueError(
+            f"{scorer}: similarity {params.similarity!r} is not supported "
+            "(only 'bm25')")
+
+
+def _no_hits(spark, schema: str = TOPK_SCHEMA) -> DataFrame:
+    """An empty result over ZERO partitions: collecting it runs no task
+    (``createDataFrame([], schema)`` would plan a Python scan over
+    defaultParallelism partitions)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 # ---------------------------------------------------------------------
@@ -184,10 +196,12 @@ def _scored_scan(
     kernel,
     k: int | None,
     allowed: DataFrame | None = None,
+    schema: str = TOPK_SCHEMA,
 ) -> DataFrame:
     """Run ``kernel(pdf, ids)`` (one partition's blocks -> its local
-    top-k in TOPK_SCHEMA) over the shared posting scan, then merge
-    globally. ``ids`` is None unless ``allowed`` is given.
+    top-k in ``schema``) over the shared posting scan, then merge
+    globally (``k=None``: no merge). ``ids`` is None unless
+    ``allowed`` is given.
 
     ``allowed`` (a DataFrame with a ``doc_id`` column) restricts
     scoring to docs passing a filter clause WITHOUT giving up top-k
@@ -211,17 +225,17 @@ def _scored_scan(
     groups = _posting_groups(index, cond, cols)
     if allowed is None:
         local = groups.applyInPandas(
-            lambda pdf: kernel(pdf, None), schema=TOPK_SCHEMA)
+            lambda pdf: kernel(pdf, None), schema=schema)
         return _topk_merge(local, k)
 
     def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
         if ids.size == 0 or left.empty:
-            return _empty_topk()
+            return _empty_topk(schema)
         return kernel(left, ids)
 
     local = groups.cogroup(_by_shard(index, index.route_ids(allowed))) \
-        .applyInPandas(score_cogroup, schema=TOPK_SCHEMA)
+        .applyInPandas(score_cogroup, schema=schema)
     return _topk_merge(local, k)
 
 
@@ -264,11 +278,15 @@ def _position_lists(
     return per_term, dl_map
 
 
-def _empty_topk() -> pd.DataFrame:
-    """A kernel's no-hit result, typed as TOPK_SCHEMA."""
-    return pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
+def _empty_topk(schema: str = TOPK_SCHEMA) -> pd.DataFrame:
+    """A kernel's no-hit result, typed as ``schema`` (TOPK_SCHEMA or
+    BATCH_TOPK_SCHEMA)."""
+    empty = pd.DataFrame({"doc_id": [], "score": [], "matched": []}).astype(
         {"doc_id": "int64", "score": "float64", "matched": "int32"}
     )
+    if schema == BATCH_TOPK_SCHEMA:
+        empty.insert(0, "query_id", np.int32(0))
+    return empty
 
 
 def _local_topk(
@@ -386,8 +404,9 @@ def _make_scorer(
     minimum_should_match: int,
     prune: bool,
 ):
-    """The BM25 kernel for one part_id group of posting blocks:
-    ``score(pdf, allowed, allowed_range=None)`` -> local top-k."""
+    """The BM25 kernel of one query over one partition's
+    ``_term_view`` (built with this scorer's avgdl and params):
+    ``score(view, allowed, allowed_range=None)`` -> local top-k."""
     # highest impact first; for AND, rarest (highest idf) first anyway
     stats = sorted(term_stats, key=lambda s: -s.ub)
     ubs = np.array([s.ub for s in stats], dtype=np.float64)
@@ -405,7 +424,7 @@ def _make_scorer(
     use_theta = prune and k is not None and operator == "or" and msm == 1
 
     def score(
-        pdf: pd.DataFrame | dict,
+        view: dict[str, _TermBlocks],
         allowed: np.ndarray | None,
         allowed_range: tuple[int, int] | None = None,
     ) -> pd.DataFrame:
@@ -414,13 +433,7 @@ def _make_scorer(
         pruning stays SAFE because every accumulated doc is then a true
         candidate, so theta remains a lower bound of the final k-th
         score (the reference intersects the filter bitset inside the
-        collector the same way: TopDocsCollectorContext.java:202-206).
-
-        ``pdf`` may also be a prebuilt ``_term_view`` of the partition
-        (built with this scorer's avgdl and params) — the batched
-        multi-query scorer builds it ONCE and shares its decoded blocks
-        across every query."""
-        view = pdf if isinstance(pdf, dict) else _term_view(pdf, avgdl, params)
+        collector the same way: TopDocsCollectorContext.java:202-206)."""
         nstat = {"blocks": 0, "decoded": 0, "skip_theta_range": 0,
                  "skip_member": 0, "skip_filter": 0, "skip_sort": 0,
                  "skip_restrict_empty": 0}
@@ -552,6 +565,80 @@ def _make_scorer(
     return score
 
 
+def _bm25_local(
+    index: InvertedIndex,
+    field: str,
+    queries: list[list[str]],
+    k: int | None,
+    operator: str,
+    minimum_should_match: int,
+    params: BM25Params,
+    prune: bool,
+    allowed: DataFrame | None = None,
+    rng: tuple[int, int] | None = None,
+) -> DataFrame | None:
+    """The one BM25 scan behind ``match_topk`` (a batch of one) and
+    ``match_topk_batch``: ONE term-dict lookup for the sorted union of
+    the queries' terms, ONE postings scan with a pushed
+    ``In(term, ...)`` filter, and ONE applyInPandas pass in which each
+    partition builds one ``_term_view`` of its blocks and scores every
+    query against it. A block is decoded at most once per partition and
+    shared by every query that visits it; each query's pruning
+    decisions are its own, and a query that restricts a block masks a
+    copy of the shared decode.
+
+    Returns every partition's local top-k of each query in
+    BATCH_TOPK_SCHEMA (``query_id`` = the query's position in
+    ``queries``; queries with no indexed terms emit no rows), or None
+    when no query can match. ``allowed`` and ``rng`` restrict scoring
+    as in ``match_topk``."""
+    if rng is not None:
+        rng = (int(rng[0]), int(rng[1]))
+        if rng[0] > rng[1]:
+            return None
+    looked = _term_rows(index, field, sorted({t for q in queries for t in q}))
+    if looked is None:
+        return None
+    by_term, n_docs, avgdl = looked
+    scorers: list[tuple[int, object]] = []
+    live_terms: set[str] = set()
+    for qid, qterms in enumerate(queries):
+        stats = _stats_from_rows(qterms, by_term, n_docs, avgdl, params)
+        if not stats or (
+            operator == "and" and len(stats) < len(set(qterms))
+        ):
+            continue
+        scorers.append((qid, _make_scorer(
+            stats, avgdl, params, k, operator, minimum_should_match, prune
+        )))
+        live_terms.update(s.term for s in stats)
+    if not scorers:
+        return None
+
+    def score_queries(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        view = _term_view(pdf, avgdl, params)
+        outs = []
+        for qid, score in scorers:
+            res = score(view, ids, rng)
+            if not res.empty:
+                res.insert(0, "query_id", np.int32(qid))
+                outs.append(res)
+        if not outs:
+            return _empty_topk(BATCH_TOPK_SCHEMA)
+        return pd.concat(outs, ignore_index=True)
+
+    cond = (F.col("field") == field) & F.col("term").isin(sorted(live_terms))
+    if rng is not None:
+        # scan-level block pruning: parquet row-group min/max stats on
+        # the pushed first_doc/last_doc predicates
+        cond = cond & (
+            (F.col("last_doc") >= rng[0]) & (F.col("first_doc") <= rng[1]))
+    cols = ("part_id", "term", "doc_ids", "tfs", "dls",
+            "max_tf", "min_dl", "first_doc", "last_doc")
+    return _scored_scan(index, cond, cols, score_queries, None, allowed,
+                        BATCH_TOPK_SCHEMA)
+
+
 def match_topk(
     index: InvertedIndex,
     field: str,
@@ -581,29 +668,12 @@ def match_topk(
     scoring to docs passing a filter clause, pushed into the scorer by
     the shared skeleton (``_scored_scan``).
     """
-    params = params or BM25Params()
-    spark = index.spark
-    term_stats, n_docs, avgdl = _lookup_terms(index, field, terms, params)
-    if not term_stats or (operator == "and" and len(term_stats) < len(set(terms))):
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    qterms = [s.term for s in term_stats]
-    cond = (F.col("field") == field) & F.col("term").isin(qterms)
-    cols = ("part_id", "term", "doc_ids", "tfs", "dls",
-            "max_tf", "min_dl", "first_doc", "last_doc")
-    rng = None
-    if allowed_range is not None:
-        rng = (int(allowed_range[0]), int(allowed_range[1]))
-        if rng[0] > rng[1]:
-            return spark.createDataFrame([], TOPK_SCHEMA)
-        # scan-level block pruning: parquet row-group min/max stats on
-        # the pushed first_doc/last_doc predicates
-        cond = cond & (
-            (F.col("last_doc") >= rng[0]) & (F.col("first_doc") <= rng[1]))
-    scorer = _make_scorer(
-        term_stats, avgdl, params, k, operator, minimum_should_match, prune
-    )
-    return _scored_scan(index, cond, cols,
-                        lambda pdf, ids: scorer(pdf, ids, rng), k, allowed)
+    local = _bm25_local(
+        index, field, [terms], k, operator, minimum_should_match,
+        params or BM25Params(), prune, allowed, allowed_range)
+    if local is None:
+        return _no_hits(index.spark)
+    return _topk_merge(local.drop("query_id"), k)
 
 
 def doc_id_range_for(
@@ -631,9 +701,6 @@ def doc_id_range_for(
     return int(row["lo"]), int(row["hi"]) - 1
 
 
-BATCH_TOPK_SCHEMA = "query_id int, doc_id long, score double, matched int"
-
-
 def match_topk_batch(
     index: InvertedIndex,
     field: str,
@@ -646,17 +713,12 @@ def match_topk_batch(
 ) -> DataFrame:
     """Top-k BM25 for MANY analyzed queries in ONE Spark job.
 
-    Per-query results are identical to ``match_topk`` (same scorer
-    code, parity-tested) but the physical plan amortizes everything
-    that is per-JOB in the one-at-a-time path: ONE term-dict stats
-    lookup for the union of query terms, ONE postings scan with a
-    pushed ``In(term, ...)`` filter, ONE applyInPandas pass in which
-    each partition builds one term view of its blocks and scores every
-    query against it, then ONE per-query window top-k over the
-    (n_shards x Q x k)-row local results. A block is decoded at most
-    once per partition and shared by every query of the batch that
-    visits it; each query's pruning decisions are its own, and a query
-    that restricts a block masks a copy of the shared decode.
+    Per-query results are identical to ``match_topk``: both run the
+    same scan (``_bm25_local``), which amortizes everything that is
+    per-JOB in the one-at-a-time path — one stats lookup, one postings
+    scan, one applyInPandas pass sharing each partition's decoded
+    blocks across every query — followed here by ONE per-query window
+    top-k over the (n_shards x Q x k)-row local results.
 
     This is the throughput shape for a query STREAM at cluster scale —
     the reference's `_msearch` endpoint batches searches into one
@@ -672,52 +734,13 @@ def match_topk_batch(
     ``queries``), ordered within each query by (score desc, doc_id
     asc). Queries with no indexed terms simply emit no rows.
     """
-    params = params or BM25Params()
-    spark = index.spark
-    coll = _collection_stats(index, field)
-    if coll is None:
-        return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    n_docs, avgdl = coll
-    union_terms = sorted({t for q in queries for t in q})
-    rows = index.term_stats(field, union_terms)
-    by_row = {r["term"]: r for r in rows}
-    scorers: list[tuple[int, object]] = []
-    known_terms: set[str] = set()
-    for qid, qterms in enumerate(queries):
-        stats = _stats_from_rows(qterms, by_row, n_docs, avgdl, params)
-        if not stats or (
-            operator == "and" and len(stats) < len(set(qterms))
-        ):
-            continue
-        scorers.append((qid, _make_scorer(
-            stats, avgdl, params, k, operator, minimum_should_match, prune
-        )))
-        known_terms.update(s.term for s in stats)
-    if not scorers:
-        return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    def score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        # every query shares one term view: a block is decoded at most
-        # once per partition, however many queries visit it
-        view = _term_view(pdf, avgdl, params)
-        outs = []
-        for qid, sc in scorers:
-            res = sc(view, None)
-            if not res.empty:
-                res.insert(0, "query_id", np.int32(qid))
-                outs.append(res)
-        if not outs:
-            empty = _empty_topk()
-            empty.insert(0, "query_id", np.int32(0))
-            return empty
-        return pd.concat(outs, ignore_index=True)
-
-    cond = (F.col("field") == field) & F.col("term").isin(sorted(known_terms))
-    cols = ("part_id", "term", "doc_ids", "tfs", "dls",
-            "max_tf", "min_dl", "first_doc", "last_doc")
-    local = _posting_groups(index, cond, cols).applyInPandas(
-        score_batch, schema=BATCH_TOPK_SCHEMA)
     from pyspark.sql import Window
 
+    local = _bm25_local(
+        index, field, queries, k, operator, minimum_should_match,
+        params or BM25Params(), prune)
+    if local is None:
+        return _no_hits(index.spark, BATCH_TOPK_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id"))
     return (
@@ -763,6 +786,103 @@ def _sloppy_phrase_freq(plists: list, slop: int) -> float:
             cur_max = nxt
 
 
+def _phrase_scan(
+    index: InvertedIndex,
+    field: str,
+    head: list[str],
+    lasts: list[str],
+    k: int | None,
+    params: BM25Params,
+    slop: int,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """The one positional phrase kernel: docs where the ``head`` terms
+    occur as a phrase followed by ANY term of ``lasts`` — exactly
+    adjacent, or within ``slop`` (:func:`_sloppy_phrase_freq`) —
+    restricted to the ``allowed`` doc ids when given.
+
+    Lucene's MultiPhraseQuery shape (the reference's
+    MultiPhrasePrefixQuery, MatchQueryParser.java:251, is a phrase
+    whose last position accepts a set of terms); a PhraseQuery is the
+    case ``len(lasts) == 1``. Scoring follows PhraseWeight: each (doc,
+    completion) scores ``idf_sum * tf_norm(phrase freq, dl)`` with the
+    idf summed over every phrase position (a repeated term once per
+    position) and tf the number of occurrences (slop=0) or the sum of
+    ``1/(1+matchLength)`` sloppy weights; a doc keeps its best
+    completion.
+
+    Plan: the shared posting-scan skeleton over the blocks of every
+    phrase term (one scan, one part_id exchange), then per candidate
+    doc a position-list intersection: end = pos(h0); end = (end+1) ∩
+    pos(h1); ...; freq = |(end+1) ∩ pos(last)|. Candidates are docs
+    holding every head term (the conjunction prunes before any
+    position decode)."""
+    spark = index.spark
+    qterms = sorted(set(head) | set(lasts))
+    looked = _term_rows(index, field, qterms)
+    if looked is None:
+        return _no_hits(spark)
+    by_term, n_docs, avgdl = looked
+    lasts = [t for t in lasts if t in by_term]
+    if not lasts or any(t not in by_term for t in head):
+        return _no_hits(spark)
+    idf = {t: bm25.idf_sim(int(r["df"]), n_docs, params)
+           for t, r in by_term.items()}
+    idf_head = float(sum(idf[t] for t in head))
+    m = len(head) + 1
+
+    def score_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        per_term, dl_map = _position_lists(pdf, allowed=ids)
+        present = [t for t in lasts if t in per_term]
+        if not present or any(t not in per_term for t in head):
+            return _empty_topk()
+        if head:
+            cand_docs = set(per_term[head[0]]).intersection(
+                *(per_term[t] for t in head[1:]))
+        else:
+            cand_docs = set().union(*(per_term[t] for t in present))
+        out_ids, out_tfs, out_idfs = [], [], []
+        for doc in cand_docs:
+            plists = [per_term[t][doc] for t in head]
+            if head and not slop:
+                end = plists[0]
+                for pl in plists[1:]:
+                    end = np.intersect1d(end + 1, pl, assume_unique=True)
+                if end.size == 0:
+                    continue
+            for t in present:
+                pos = per_term[t].get(doc)
+                if pos is None:
+                    continue
+                if slop:
+                    tf = _sloppy_phrase_freq(plists + [pos], slop)
+                elif head:
+                    tf = float(np.intersect1d(
+                        end + 1, pos, assume_unique=True).size)
+                else:
+                    tf = float(pos.size)
+                if tf:
+                    out_ids.append(doc)
+                    out_tfs.append(tf)
+                    out_idfs.append(idf_head + idf[t])
+        if not out_ids:
+            return _empty_topk()
+        ids = np.array(out_ids, dtype=np.int64)
+        dl = np.array([dl_map[doc] for doc in out_ids], dtype=np.int64)
+        scores = np.array(out_idfs) * bm25.tf_norm_sim(
+            np.array(out_tfs), dl, avgdl, params)
+        # a doc keeps its best-scoring completion
+        order = np.lexsort((-scores, ids))
+        ids, scores = ids[order], scores[order]
+        best = np.r_[True, ids[1:] != ids[:-1]]
+        return _local_topk(ids[best], scores[best],
+                           np.full(int(best.sum()), m), k)
+
+    cond = (F.col("field") == field) & F.col("term").isin(qterms)
+    cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
+    return _scored_scan(index, cond, cols, score_group, k, allowed)
+
+
 def phrase_topk(
     index: InvertedIndex,
     field: str,
@@ -777,80 +897,18 @@ def phrase_topk(
     (pushed into the kernel like ``match_topk``'s).
 
     Reference: MatchQueryParser.java:243 createPhraseQuery -> Lucene
-    PhraseQuery. Scoring follows Lucene's PhraseWeight: tf = number of
-    phrase occurrences (slop=0) or the sum of ``1/(1+matchLength)``
-    sloppy weights (slop>0, SloppyPhraseMatcher), idf = SUM of the
-    terms' idfs, same tf/dl normalization as a term query.
-
-    Physical plan: the shared posting-scan skeleton (blocks of the
-    phrase's terms, one part_id exchange), plus per-candidate position-list
-    intersection: cand = pos(t0); cand = (cand+1) ∩ pos(t1); ...
-    |cand| = phrase frequency. Candidates are docs containing ALL terms
-    (conjunction prunes before any position decode). The sloppy path
-    swaps the intersection for the min-heap window sweep
-    (:func:`_sloppy_phrase_freq`) on the same decoded lists.
-    """
+    PhraseQuery, scored by ``_phrase_scan`` with a one-term last
+    position. BM25 similarity only: another one raises ValueError."""
     params = params or BM25Params()
+    _bm25_only(params, "phrase_topk")
     if slop and len(set(terms)) != len(terms):
         raise ValueError(
             "phrase_topk: slop>0 with repeated phrase terms is not "
             "supported (Lucene repeat-group handling not implemented)")
-    spark = index.spark
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    term_stats, n_docs, avgdl = _lookup_terms(index, field, terms, params)
-    idf_by_term = {s.term: s.idf for s in term_stats}
-    if any(t not in idf_by_term for t in terms):
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    # Lucene PhraseWeight sums idf over ALL phrase positions, counting
-    # a repeated term once per position
-    idf_sum = float(sum(idf_by_term[t] for t in terms))
-    k1, b, quant = params.k1, params.b, params.quantize_norms
-    ordered_terms = list(terms)  # keep phrase order (duplicates allowed)
-
-    def score_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
-        per_term, dl_map = _position_lists(pdf, allowed=ids)
-        if any(t not in per_term for t in ordered_terms):
-            return _empty_topk()
-        # conjunction of doc sets
-        cand_docs = set(per_term[ordered_terms[0]])
-        for t in ordered_terms[1:]:
-            cand_docs &= set(per_term[t])
-        if not cand_docs:
-            return _empty_topk()
-        out_ids, out_tfs = [], []
-        for doc in cand_docs:
-            if slop:
-                tf = _sloppy_phrase_freq(
-                    [per_term[t][doc] for t in ordered_terms], slop)
-                if tf == 0.0:
-                    continue
-            else:
-                cand = per_term[ordered_terms[0]][doc]
-                for i, t in enumerate(ordered_terms[1:], start=1):
-                    cand = np.intersect1d(
-                        cand + 1, per_term[t][doc], assume_unique=True)
-                    if cand.size == 0:
-                        break
-                if cand.size == 0:
-                    continue
-                tf = float(cand.size)
-            out_ids.append(doc)
-            out_tfs.append(tf)
-        if not out_ids:
-            return _empty_topk()
-        ids = np.array(out_ids, dtype=np.int64)
-        tf = np.array(out_tfs, dtype=np.float64)
-        dl = np.array([dl_map[doc] for doc in out_ids], dtype=np.int64)
-        dl_eff = (bm25.quantize_dl(dl) if quant else dl).astype(np.float64)
-        tfn = tf / (tf + k1 * (1.0 - b + b * dl_eff / avgdl))
-        scores = (k1 + 1.0) * idf_sum * tfn
-        return _local_topk(
-            ids, scores, np.full(ids.size, len(ordered_terms)), k)
-
-    cond = (F.col("field") == field) & F.col("term").isin(list(set(terms)))
-    cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-    return _scored_scan(index, cond, cols, score_group, k, allowed)
+        return _no_hits(index.spark)
+    return _phrase_scan(index, field, list(terms[:-1]), [terms[-1]], k,
+                        params, slop, allowed)
 
 
 def synonym_match_topk(
@@ -871,16 +929,13 @@ def synonym_match_topk(
 
     Same physical plan as match_topk (the shared posting-scan skeleton):
     one pushed-down block scan of all member terms, one part_id
-    exchange, local top-k + global merge."""
+    exchange, local top-k + global merge. BM25 similarity only."""
     params = params or BM25Params()
-    spark = index.spark
-    coll = _collection_stats(index, field)
-    if coll is None:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    n_docs, avgdl = coll
-    all_terms = list(dict.fromkeys(t for g in groups for t in g))
-    rows = index.term_stats(field, all_terms)
-    by_term = {r["term"]: r for r in rows}
+    _bm25_only(params, "synonym_match_topk")
+    looked = _term_rows(index, field, sorted({t for g in groups for t in g}))
+    if looked is None:
+        return _no_hits(index.spark)
+    by_term, n_docs, avgdl = looked
     group_idf: list[float] = []
     live_groups: list[list[str]] = []
     for g in groups:
@@ -888,13 +943,10 @@ def synonym_match_topk(
         if not dfs:
             continue
         live_groups.append([t for t in g if t in by_term])
-        group_idf.append(float(bm25.idf(max(dfs), n_docs)))
+        group_idf.append(bm25.idf_sim(max(dfs), n_docs, params))
     if not live_groups:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    term_to_group = {t: i for i, g in enumerate(live_groups) for t in g}
+        return _no_hits(index.spark)
     msm = max(minimum_should_match, 1)
-    k1, b, quant = params.k1, params.b, params.quantize_norms
-    qterms = list(term_to_group)
 
     def score_group(pdf: pd.DataFrame, _ids) -> pd.DataFrame:
         acc_ids = np.empty(0, dtype=np.int64)
@@ -922,13 +974,8 @@ def synonym_match_topk(
             np.add.at(tf_sum, inv, tfs)
             dl_first = np.zeros(uniq.size, dtype=np.int64)
             dl_first[inv[::-1]] = dls[::-1]  # any member's dl (same doc-field)
-            dl_eff = (
-                bm25.quantize_dl(dl_first).astype(np.float64)
-                if quant else dl_first.astype(np.float64)
-            )
-            scores = (k1 + 1.0) * group_idf[gi] * tf_sum / (
-                tf_sum + k1 * (1.0 - b + b * dl_eff / avgdl)
-            )
+            scores = group_idf[gi] * bm25.tf_norm_sim(
+                tf_sum, dl_first, avgdl, params)
             all_ids = np.concatenate([acc_ids, uniq])
             all_scores = np.concatenate([acc_scores, scores])
             all_counts = np.concatenate(
@@ -945,7 +992,8 @@ def synonym_match_topk(
         keep = acc_counts >= msm
         return _local_topk(acc_ids[keep], acc_scores[keep], acc_counts[keep], k)
 
-    cond = (F.col("field") == field) & F.col("term").isin(qterms)
+    cond = (F.col("field") == field) & F.col("term").isin(
+        sorted({t for g in live_groups for t in g}))
     cols = ("part_id", "term", "doc_ids", "tfs", "dls")
     return _scored_scan(index, cond, cols, score_group, k)
 
@@ -1042,98 +1090,20 @@ def phrase_prefix_topk(
     completed phrase. ``allowed`` restricts it to those doc ids, as in
     ``match_topk``.
 
-    SINGLE-PASS plan: the posting blocks of the prefix terms AND every
-    expansion are loaded once, and the position intersection runs
-    against the expansion SET inside one applyInPandas — one scan, one
-    part_id exchange (round 1 unioned up to max_expansions separate
-    phrase plans: 50x scan + 50x shuffle of the same prefix blocks)."""
+    SINGLE-PASS plan (``_phrase_scan`` with the expansions as the last
+    position): the posting blocks of the prefix terms AND every
+    expansion are loaded once — one scan, one part_id exchange (round 1
+    unioned up to max_expansions separate phrase plans: 50x scan + 50x
+    shuffle of the same prefix blocks). BM25 similarity only."""
     params = params or BM25Params()
-    spark = index.spark
+    _bm25_only(params, "phrase_prefix_topk")
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return _no_hits(index.spark)
     expansions = expand_terms(
         index, field, "prefix", terms[-1], max_expansions=max_expansions
     )
-    if not expansions:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    prefix_terms = list(terms[:-1])
-    all_terms = list(dict.fromkeys(prefix_terms + expansions))
-    term_stats, n_docs, avgdl = _lookup_terms(index, field, all_terms, params)
-    idf_by = {s.term: s.idf for s in term_stats}
-    if any(t not in idf_by for t in prefix_terms):
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    idf_prefix = float(sum(idf_by[t] for t in prefix_terms))
-    exp_set = [e for e in expansions if e in idf_by]
-    if not exp_set:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    k1, b, quant = params.k1, params.b, params.quantize_norms
-    m = len(terms)
-
-    def score_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
-        per_term, dl_map = _position_lists(pdf, allowed=ids)
-        if any(t not in per_term for t in prefix_terms):
-            return _empty_topk()
-        present_exp = [e for e in exp_set if e in per_term]
-        if not present_exp:
-            return _empty_topk()
-        # candidate docs: contain ALL prefix terms and >=1 expansion
-        if prefix_terms:
-            cand_docs = set(per_term[prefix_terms[0]])
-            for t in prefix_terms[1:]:
-                cand_docs &= set(per_term[t])
-        else:
-            cand_docs = set()
-            for e in present_exp:
-                cand_docs |= set(per_term[e])
-        cand_docs = list(cand_docs)
-        dl = np.array([dl_map[doc] for doc in cand_docs], dtype=np.int64)
-        dl_eff_of = dict(zip(cand_docs, (
-            bm25.quantize_dl(dl) if quant else dl).astype(np.float64).tolist()))
-        out_ids, out_scores = [], []
-        for doc in cand_docs:
-            if prefix_terms:
-                cand = per_term[prefix_terms[0]][doc]
-                for t in prefix_terms[1:]:
-                    cand = np.intersect1d(
-                        cand + 1, per_term[t][doc], assume_unique=True
-                    )
-                    if cand.size == 0:
-                        break
-                if cand.size == 0:
-                    continue
-                end_next = cand + 1
-            else:
-                end_next = None
-            best = None
-            for e in present_exp:
-                pos_e = per_term[e].get(doc)
-                if pos_e is None:
-                    continue
-                if end_next is None:
-                    tf = float(pos_e.size)
-                else:
-                    tf = float(
-                        np.intersect1d(end_next, pos_e, assume_unique=True).size
-                    )
-                if tf == 0.0:
-                    continue
-                dl_eff = dl_eff_of[doc]
-                tfn = tf / (tf + k1 * (1.0 - b + b * dl_eff / avgdl))
-                score = (k1 + 1.0) * (idf_prefix + idf_by[e]) * tfn
-                if best is None or score > best:
-                    best = score
-            if best is not None:
-                out_ids.append(doc)
-                out_scores.append(best)
-        if not out_ids:
-            return _empty_topk()
-        ids = np.array(out_ids, dtype=np.int64)
-        scores = np.array(out_scores, dtype=np.float64)
-        return _local_topk(ids, scores, np.full(ids.size, m), k)
-
-    cond = (F.col("field") == field) & F.col("term").isin(all_terms)
-    cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-    return _scored_scan(index, cond, cols, score_group, k, allowed)
+    return _phrase_scan(index, field, list(terms[:-1]), expansions, k,
+                        params, 0, allowed)
 
 
 def intervals_match(
@@ -1153,10 +1123,8 @@ def intervals_match(
 
     Greedy per-doc check over decoded position lists (numpy), same
     posting-scan skeleton as phrase_topk."""
-    spark = index.spark
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    uniq = list(dict.fromkeys(terms))
+        return _no_hits(index.spark)
     m = len(terms)
 
     def check_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
@@ -1204,7 +1172,7 @@ def intervals_match(
         return _local_topk(ids, np.full(ids.size, float(boost)),
                            np.full(ids.size, m), k)
 
-    cond = (F.col("field") == field) & F.col("term").isin(uniq)
+    cond = (F.col("field") == field) & F.col("term").isin(sorted(set(terms)))
     cols = ("part_id", "term", "n", "doc_ids", "positions")
     return _scored_scan(index, cond, cols, check_group, k)
 
@@ -1273,34 +1241,23 @@ def multi_term_topk(
     """prefix/wildcard/regexp/fuzzy query over the INDEXED field with
     the reference's default CONSTANT_SCORE rewrite: every doc containing
     any expanded term scores ``boost`` (MultiTermQuery rewrite method;
-    tie-break doc_id asc)."""
-    spark = index.spark
+    tie-break doc_id asc). A constant-score kernel on the shared
+    posting-scan skeleton: each partition emits its unique doc ids —
+    a doc lives in exactly one shard, so they are globally distinct."""
     terms = expand_terms(index, field, kind, pattern, fuzziness,
                          max_expansions=max_expansions)
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    blocks = index.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(terms)
-    ).select("part_id", "term", "n", "doc_ids", "tfs", "dls")
+        return _no_hits(index.spark)
 
-    def collect_docs(batches):
-        for pdf in batches:
-            ids = [
-                codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-                for row in pdf.itertuples(index=False)
-            ]
-            if ids:
-                yield pd.DataFrame({"doc_id": np.unique(np.concatenate(ids))})
+    def docs_group(pdf: pd.DataFrame, _ids) -> pd.DataFrame:
+        ids = np.unique(np.concatenate([
+            codec.delta_decode(codec.vbyte_decode(b)) for b in pdf["doc_ids"]
+        ]))
+        return _local_topk(ids, np.full(ids.size, float(boost)),
+                           np.ones(ids.size, dtype=np.int32), k)
 
-    docs = blocks.mapInPandas(collect_docs, schema="doc_id long").distinct()
-    out = docs.select(
-        "doc_id",
-        F.lit(float(boost)).alias("score"),
-        F.lit(1).alias("matched"),
-    )
-    if k is None:
-        return out
-    return out.orderBy(F.asc("doc_id")).limit(k)
+    cond = (F.col("field") == field) & F.col("term").isin(sorted(terms))
+    return _scored_scan(index, cond, ("part_id", "doc_ids"), docs_group, k)
 
 
 def match_bool_prefix_topk(
@@ -1317,9 +1274,8 @@ def match_bool_prefix_topk(
     PrefixQuery with the constant-score rewrite (contributes 1.0) —
     clauses sum, minimum_should_match=1."""
     params = params or BM25Params()
-    spark = index.spark
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return _no_hits(index.spark)
     head, last = terms[:-1], terms[-1]
     pref = multi_term_topk(
         index, field, "prefix", last, k=None, max_expansions=max_expansions
@@ -1359,8 +1315,6 @@ def fuzzy_match_topk(
     blended group (df = max member df, tf = sum member tfs — the
     SynonymQuery-style blending Lucene's top_terms_blended_freqs rewrite
     approximates); groups sum like bool-OR clauses."""
-    from elasticsearch_spark.search.executor import expand_terms  # self
-
     groups = []
     for t in terms:
         exp = expand_terms(
@@ -1370,7 +1324,7 @@ def fuzzy_match_topk(
         if exp:
             groups.append(exp)
     if not groups:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
+        return _no_hits(index.spark)
     return synonym_match_topk(
         index, field, groups, k=k,
         minimum_should_match=minimum_should_match, params=params,

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from elasticsearch_spark.analysis import ANALYZERS
 from elasticsearch_spark.index.builder import InvertedIndex, index_meta
 from elasticsearch_spark.search.bm25 import BM25Params
-from elasticsearch_spark.search.executor import match_topk
+from elasticsearch_spark.search.executor import _no_hits, match_topk
 
 
 def more_like_this(
@@ -72,8 +72,7 @@ def more_like_this(
         row = docs.filter(
             F.col(id_col) == like_id).select(text_col).collect()
         if not row:
-            return index.spark.createDataFrame(
-                [], "doc_id long, score double, matched int")
+            return _no_hits(index.spark)
         source_text = row[0][0] or ""
     terms_list, _ = ANALYZERS[analyzer](source_text)
     tf: dict[str, int] = {}
@@ -81,7 +80,7 @@ def more_like_this(
         tf[t] = tf.get(t, 0) + 1
     tf = {t: c for t, c in tf.items() if c >= min_term_freq}
     if not tf:
-        return index.spark.createDataFrame([], "doc_id long, score double, matched int")
+        return _no_hits(index.spark)
     stats = index.collection_stats()[field]
     n_docs = stats["n_docs"]
     rows = (

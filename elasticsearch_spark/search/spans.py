@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search.executor import (
-    TOPK_SCHEMA, _empty_topk, _local_topk, _position_lists, _scored_scan,
+    _empty_topk, _local_topk, _no_hits, _position_lists, _scored_scan,
 )
 
 
@@ -257,19 +257,18 @@ def span_match(
     """Docs with >=1 surviving span (constant score = boost, doc_id asc).
     One pushed-down block scan of the tree's terms, one part_id exchange
     (the shared posting-scan skeleton)."""
-    spark = index.spark
     if _has_span_multi(tree):
         tree = rewrite_span_multi(index, field, tree)
     tree = _bind_field(tree, field)
     pairs = list(dict.fromkeys(span_pairs(tree)))
     if not pairs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return _no_hits(index.spark)
     by_field: dict[str, list[str]] = {}
     for f, t in pairs:
         by_field.setdefault(f, []).append(t)
     cond = None
     for f, ts in by_field.items():
-        c = (F.col("field") == f) & F.col("term").isin(ts)
+        c = (F.col("field") == f) & F.col("term").isin(sorted(ts))
         cond = c if cond is None else (cond | c)
 
     def check_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:

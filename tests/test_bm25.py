@@ -53,9 +53,8 @@ def test_idf_formula():
 
 def test_score_known_value():
     p = bm25.BM25Params(quantize_norms=False)
-    s = bm25.score(
-        tf=np.array([2.0]), dl=np.array([10]), df=1, n_docs=3, avgdl=8.0, params=p
-    )
+    s = bm25.idf_sim(1, 3, p) * bm25.tf_norm_sim(
+        np.array([2.0]), np.array([10]), 8.0, p)
     idf = math.log(1 + (3 - 1 + 0.5) / 1.5)
     tfn = 2.0 / (2.0 + 1.2 * (1 - 0.75 + 0.75 * 10 / 8.0))
     assert math.isclose(float(s[0]), 2.2 * idf * tfn, rel_tol=1e-12)

@@ -168,6 +168,53 @@ def test_batch_matches_single_query_path(index, index_one_part):
                     f"slot {qid} ({BATCH_QUERIES[qid]!r}, {kw}) diverged")
 
 
+def test_zero_hits_plan_no_partitions(index):
+    """A request no doc can match returns an empty frame over zero
+    partitions: collecting it runs no task."""
+    from elasticsearch_spark.search.executor import match_topk_batch
+
+    for df in (
+        match_topk(index, "content", ["zzznonexistent"], k=10),
+        match_topk_batch(index, "content", [["zzznonexistent"], []], k=10),
+    ):
+        assert df.collect() == []
+        assert df.rdd.getNumPartitions() == 0
+
+
+@pytest.mark.parametrize("similarity", ["classic", "boolean"])
+def test_phrase_and_synonym_refuse_other_similarities(index, similarity):
+    """Phrase, phrase-prefix and synonym weights are BM25's; another
+    similarity raises instead of scoring a hybrid (e.g. classic idf²
+    times a BM25 tf-norm)."""
+    from elasticsearch_spark.search.executor import (
+        phrase_prefix_topk, phrase_topk, synonym_match_topk)
+
+    p = BM25Params(quantize_norms=False, similarity=similarity)
+    for run in (
+        lambda: phrase_topk(index, "content", ["public", "static"], params=p),
+        lambda: phrase_prefix_topk(index, "content", ["public", "st"], params=p),
+        lambda: synonym_match_topk(
+            index, "content", [["import", "return"]], params=p),
+    ):
+        with pytest.raises(ValueError, match=similarity):
+            run()
+
+
+def test_phrase_prefix_one_expansion_is_a_phrase(index):
+    """A phrase prefix whose last term expands to exactly one term is
+    the phrase completed with that term: same rows, same scores."""
+    from elasticsearch_spark.search.executor import (
+        expand_terms, phrase_prefix_topk, phrase_topk)
+
+    last = expand_terms(index, "content", "prefix", "st", max_expansions=1)
+    assert len(last) == 1
+    got = phrase_prefix_topk(
+        index, "content", ["public", "st"], k=20, max_expansions=1).collect()
+    want = phrase_topk(index, "content", ["public"] + last, k=20).collect()
+    assert got
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
 def test_doc_stats_and_collection_stats(index, corpus_docs):
     from elasticsearch_spark.analysis import ANALYZERS
 

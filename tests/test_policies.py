@@ -43,7 +43,8 @@ def test_no_collect_in_hot_paths():
         src = f.read()
     # the scorer path must not collect posting/doc frames
     for fn_src in re.split(r"\ndef ", src):
-        if fn_src.startswith(("match_topk", "phrase_topk", "multi_term_topk")):
+        if fn_src.startswith(("match_topk", "phrase_topk", "multi_term_topk",
+                              "_bm25_local", "_phrase_scan", "_scored_scan")):
             assert ".collect()" not in fn_src, "collect() in a scorer path"
 
 
@@ -246,6 +247,8 @@ def _pin_cases():
             idx, "text", ["key", "or"]),
         "intervals_match": lambda idx: ex.intervals_match(
             idx, "text", ["key", "order"], max_gaps=2),
+        "multi_term_topk": lambda idx: ex.multi_term_topk(
+            idx, "text", "prefix", "qu"),
         "span_match": lambda idx: span_match(idx, "text", near),
     }
 
@@ -285,6 +288,21 @@ def test_scorer_exchange_pinned_to_shard_count(spark, index, scorer):
     # only the group sort and projections sit between the two
     assert not any("AQEShuffleRead" in ln or "Exchange" in ln
                    for ln in lines[kernel + 1:exchange]), final
+
+
+def test_phrase_pushes_sorted_terms(spark, index):
+    """Scorers push their terms as a sorted ``In`` list, so a request's
+    physical plan does not depend on the process's string-hash seed
+    (a ``set`` iterates in that seed's order)."""
+    from elasticsearch_spark.search.executor import phrase_topk
+
+    terms = ["table", "scan", "query", "data", "merge"]
+    plan = phrase_topk(index, "text", terms)._jdf.queryExecution() \
+        .executedPlan().toString()
+    lists = re.findall(r"Filter .*\bterm#\d+ IN \(([^)]*)\)", plan)
+    assert lists, plan[:3000]
+    for found in lists:
+        assert found.split(",") == sorted(terms), plan[:3000]
 
 
 def test_term_stats_fallback_pushdown(spark, tmp_path):

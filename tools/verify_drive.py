@@ -9,7 +9,8 @@ from elasticsearch_spark.corpus import generate_corpus
 from elasticsearch_spark.index import build_index
 from elasticsearch_spark.index.builder import assign_doc_ids
 from elasticsearch_spark.analysis import analyze
-from elasticsearch_spark.search.executor import match_topk, fetch
+from elasticsearch_spark.search.executor import (
+    fetch, match_topk, multi_term_topk, phrase_topk)
 
 
 def main() -> int:
@@ -35,6 +36,16 @@ def main() -> int:
     plan = buf.getvalue()
     assert "In(term" in plan, "term filter not pushed down"
     assert "TakeOrderedAndProject" in plan, "top-k not a TakeOrdered"
+    # every posting scorer runs on the one scan -> part_id exchange ->
+    # kernel skeleton
+    for name, df in (
+        ("phrase_topk", phrase_topk(idx, "content", ["public", "static"], k=5)),
+        ("multi_term_topk", multi_term_topk(idx, "content", "prefix", "pars")),
+    ):
+        df.collect()
+        n = df._jdf.queryExecution().executedPlan().toString() \
+            .split("== Initial Plan ==")[0].count("shufflepartitionidpassthrough")
+        assert n == 1, f"{name}: {n} shard exchanges"
     import __spark_entry__ as e
 
     qs, os_ = e.queries(), e.oracle_sql()
