@@ -1,12 +1,13 @@
 """Top-level search API: ES-style query dict -> top-k hits DataFrame.
 
 Composes the two executors:
-  - scoring context -> inverted-index BM25 (executor.match_topk), one
-    (doc_id, score) DataFrame per scored clause, combined per the
-    reference's semantics (BoolQueryBuilder: score = sum of matching
-    scored clauses; DisMaxQueryBuilder: max + tie_breaker * rest;
-    MultiMatchQueryBuilder best_fields/most_fields;
-    FunctionScoreQueryBuilder arithmetic;
+  - scoring context -> inverted-index scorers, one (doc_id, score)
+    DataFrame per scored leaf (``LEAF_KINDS``: match, term, match_phrase
+    and multi_match, each ONE posting scorer — a multi_match combines
+    its fields per shard inside its kernel, executor.multi_match_topk),
+    combined per the reference's semantics (BoolQueryBuilder: score =
+    sum of matching scored clauses; DisMaxQueryBuilder: max +
+    tie_breaker * rest; FunctionScoreQueryBuilder arithmetic;
     ConstantScoreQueryBuilder boost).
   - filter context -> dsl.compile_filter native predicates applied to
     the docs table; the surviving doc ids are pushed into every leaf
@@ -29,7 +30,7 @@ from elasticsearch_spark.index.builder import InvertedIndex, index_meta
 from elasticsearch_spark.search import dsl
 from elasticsearch_spark.search.bm25 import BM25Params
 from elasticsearch_spark.search.executor import (
-    fetch, match_topk, phrase_prefix_topk, phrase_topk)
+    fetch, match_topk, multi_match_topk, phrase_topk)
 
 SCORED_KINDS = {
     "match", "match_phrase", "multi_match", "bool", "dis_max",
@@ -37,7 +38,7 @@ SCORED_KINDS = {
     "boosting",
 }
 # the scored leaves _leaf evaluates: one posting scorer each
-LEAF_KINDS = ("match", "term_scored", "match_phrase")
+LEAF_KINDS = ("match", "term_scored", "match_phrase", "multi_match")
 
 def _is_pure_filter(query: dict[str, Any]) -> bool:
     """True when the query carries NO index-scored clause anywhere, i.e.
@@ -179,8 +180,22 @@ def _leaf(
     where pruning stays active. The boost scales after the cut — a
     positive constant keeps the leaf's order."""
     kind, body = next(iter(q.items()))
-    field, spec = next(iter(body.items()))
-    if kind == "term_scored":
+    field, spec = ((None, body) if kind == "multi_match"
+                   else next(iter(body.items())))
+    if kind == "multi_match":
+        # each field analyzes with its own analyzer; cross_fields blends
+        # one analysis (the first field's) over every field
+        fields, mtype = body["fields"], body.get("type", "best_fields")
+        analyzed_as = {f: fields[0] if mtype == "cross_fields" else f
+                       for f in fields}
+        df = multi_match_topk(
+            index, {f: _match_terms(index, a, body["query"])[0]
+                    for f, a in analyzed_as.items()},
+            mtype, k=k, tie_breaker=float(body.get("tie_breaker", 0.0)),
+            operator=body.get("operator", "or"),
+            minimum_should_match=int(body.get("minimum_should_match", 1)),
+            slop=int(body.get("slop", 0)), params=params, allowed=allowed)
+    elif kind == "term_scored":
         # term query on an indexed text field: single un-analyzed term
         value = spec["value"] if isinstance(spec, dict) else spec
         df = match_topk(index, field, [value], k=k, params=params,
@@ -221,50 +236,6 @@ def _scored_df(
 
     if kind in LEAF_KINDS:
         return _leaf(index, query, None, params, allowed)
-
-    if kind == "multi_match":
-        text = body["query"]
-        fields = list(body["fields"])
-        mtype = body.get("type", "best_fields")
-        tie = float(body.get("tie_breaker", 0.0))
-        if mtype == "cross_fields":
-            from elasticsearch_spark.search.combined import cross_fields_topk
-
-            terms, _, _ = _match_terms(index, fields[0], text)
-            df = cross_fields_topk(
-                index, fields, terms, k=None, tie_breaker=tie, params=params
-            ).select("doc_id", "score")
-            if allowed is not None:
-                # not a posting-skeleton scorer: no allowlist push-down
-                df = df.join(allowed.select("doc_id"), "doc_id", "left_semi")
-            return df
-        # phrase/phrase_prefix types run the per-field phrase query
-        # instead of term-bag match (MultiMatchQueryBuilder.Type.PHRASE
-        # / PHRASE_PREFIX), then combine exactly like best_fields
-        leaf = "match_phrase" if mtype == "phrase" else "match"
-        spec = {"query": text, **{
-            kk: v for kk, v in body.items()
-            if kk in ("operator", "minimum_should_match") and leaf == "match"}}
-        per_field = []
-        for f in fields:
-            if mtype == "phrase_prefix":
-                terms, _, _ = _match_terms(index, f, text)
-                d = phrase_prefix_topk(index, f, terms, k=None,
-                                       params=params, allowed=allowed)
-            else:
-                d = _leaf(index, {leaf: {f: spec}}, None, params, allowed)
-            per_field.append(d.select("doc_id", F.col("score").alias("s")))
-        u = per_field[0]
-        for d in per_field[1:]:
-            u = u.unionByName(d)
-        agg = u.groupBy("doc_id").agg(
-            F.max("s").alias("best"), F.sum("s").alias("total")
-        )
-        if mtype == "most_fields":
-            score = F.col("total")
-        else:  # best_fields with tie_breaker
-            score = F.col("best") + F.lit(tie) * (F.col("total") - F.col("best"))
-        return agg.select("doc_id", score.alias("score"))
 
     if kind == "dis_max":
         tie = float(body.get("tie_breaker", 0.0))
@@ -355,8 +326,7 @@ def _max_disjunction_leaves(
     scored_query: dict[str, Any]
 ) -> list[dict[str, Any]] | None:
     """If the scoring query is one scored leaf (``LEAF_KINDS``), or a
-    pure MAX-combine disjunction — dis_max with tie_breaker=0, or
-    multi_match best_fields with tie_breaker=0 (its default) — over
+    pure MAX-combine disjunction — dis_max with tie_breaker=0 — over
     such leaves, return the leaf list; else None.
 
     Why per-leaf top-k is exact for max-combine: if doc d is in the
@@ -368,26 +338,17 @@ def _max_disjunction_leaves(
     leaf scores equals its true best. This is the reference's
     DisjunctionMaxQuery-under-WAND shape
     (lucene/.../DisjunctionMaxQuery.java block-max score bounds): each
-    leaf keeps block-max pruning instead of scoring every matching doc."""
+    leaf keeps block-max pruning instead of scoring every matching doc.
+    multi_match best_fields at tie_breaker=0 makes the same argument
+    per shard, inside its one kernel (``multi_match_topk``)."""
     q = _unwrap_single_must(scored_query)
     kind = next(iter(q))
     if kind in LEAF_KINDS:
         return [q]
-    if kind == "dis_max":
-        if float(q["dis_max"].get("tie_breaker", 0.0)) != 0.0:
-            return None
-        leaves = list(q["dis_max"]["queries"])
-    elif kind == "multi_match":
-        b = q["multi_match"]
-        if b.get("type", "best_fields") != "best_fields" or \
-                float(b.get("tie_breaker", 0.0)) != 0.0:
-            return None
-        spec = {"query": b["query"],
-                **{kk: v for kk, v in b.items()
-                   if kk in ("operator", "minimum_should_match")}}
-        leaves = [{"match": {f: dict(spec)}} for f in b["fields"]]
-    else:
+    if kind != "dis_max" or \
+            float(q["dis_max"].get("tie_breaker", 0.0)) != 0.0:
         return None
+    leaves = list(q["dis_max"]["queries"])
     if leaves and all(next(iter(le)) in LEAF_KINDS for le in leaves):
         return leaves
     return None
@@ -546,9 +507,9 @@ def search(
         allowed = docs.filter(filter_pred).select(F.col(id_col).alias("doc_id"))
     leaves = _max_disjunction_leaves(scored_query)
     if leaves is not None:
-        # one leaf, or a max-combine disjunction (dis_max / multi_match
-        # best_fields at tie_breaker=0): per-leaf PRUNED top-k with the
-        # filter pushed into each scorer, then max per doc — exact, see
+        # one leaf, or a max-combine disjunction (dis_max at
+        # tie_breaker=0): per-leaf PRUNED top-k with the filter pushed
+        # into each scorer, then max per doc — exact, see
         # _max_disjunction_leaves
         scores = _leaf(index, leaves[0], k, params, allowed)
         if len(leaves) > 1:

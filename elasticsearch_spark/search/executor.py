@@ -26,9 +26,12 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      routed to its shard and cogrouped with the blocks, and the
      kernel scores only allowed docs. Only the numpy kernels differ
      per scorer; the positional ones (phrase and phrase prefix — one
-     kernel, ``_phrase_scan`` —, intervals, spans) read
+     kernel, ``_phrase_kernel`` —, intervals, spans) read
      ``_position_lists``, and every BM25 weight comes from
-     ``bm25.idf_sim`` and ``bm25.tf_norm_sim``. The BM25 kernel
+     ``bm25.idf_sim`` and ``bm25.tf_norm_sim``. A multi-field query
+     (``multi_match_topk``, every type) is one such scan too: its
+     kernel runs the BM25 or phrase kernel per field of the shard and
+     combines the fields per doc before the local top-k. The BM25 kernel
      prunes with a term-at-a-time MaxScore/block-max strategy
      (reference: WAND activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
@@ -306,6 +309,21 @@ def _local_topk(
     )
 
 
+def _fold(ids: np.ndarray, scores: np.ndarray, matched: np.ndarray,
+          tie: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per distinct doc of ``ids``: max + tie·(sum − max) of its
+    ``scores`` (the plain sum at tie 1) and the sum of its ``matched``."""
+    u, inv = np.unique(ids, return_inverse=True)
+    total, n = np.zeros(u.size), np.zeros(u.size, dtype=np.int64)
+    np.add.at(total, inv, scores)
+    np.add.at(n, inv, matched)
+    if tie != 1.0:
+        best = np.full(u.size, -np.inf)
+        np.maximum.at(best, inv, scores)
+        total = best + tie * (total - best)
+    return u, total, n
+
+
 def _dump_prune_stats(nstat: dict) -> None:
     """Opt-in per-partition skip diagnostics: when
     ``ES_SPARK_PRUNE_STATS_DIR`` is set, each scorer invocation drops
@@ -540,15 +558,13 @@ def _make_scorer(
             if not hits:
                 continue
             ids = np.concatenate([acc_ids] + [d for d, _ in hits])
-            scores = np.concatenate(
-                [acc_scores] + [ts.weight * ts.idf * t for _, t in hits])
-            counts = np.concatenate(
-                [acc_counts, np.full(ids.size - acc_ids.size, ts.weight)])
-            acc_ids, inv = np.unique(ids, return_inverse=True)
-            acc_scores = np.zeros(acc_ids.size, dtype=np.float64)
-            acc_counts = np.zeros(acc_ids.size, dtype=np.int64)
-            np.add.at(acc_scores, inv, scores)
-            np.add.at(acc_counts, inv, counts)
+            acc_ids, acc_scores, acc_counts = _fold(
+                ids,
+                np.concatenate(
+                    [acc_scores] + [ts.weight * ts.idf * t for _, t in hits]),
+                np.concatenate(
+                    [acc_counts, np.full(ids.size - acc_ids.size, ts.weight)]),
+                1.0)
             if operator == "and":
                 # docs must have matched every clause (weight) so far
                 keep = acc_counts == cumw[i]
@@ -563,6 +579,25 @@ def _make_scorer(
         return _local_topk(acc_ids[keep], acc_scores[keep], acc_counts[keep], k)
 
     return score
+
+
+def _query_scorer(terms: list[str], by_term: dict, n_docs: float,
+                  avgdl: float, params: BM25Params, k: int | None,
+                  operator: str, minimum_should_match: int, prune: bool):
+    """One query's BM25 kernel over one field's ``by_term`` rows and the
+    terms it reads; None when no doc can match (no indexed term, or an
+    AND query missing one)."""
+    stats = _stats_from_rows(terms, by_term, n_docs, avgdl, params)
+    if not stats or (operator == "and" and len(stats) < len(set(terms))):
+        return None
+    return (_make_scorer(stats, avgdl, params, k, operator,
+                         minimum_should_match, prune),
+            [s.term for s in stats])
+
+
+# the block columns the BM25 kernel (``_term_view``) reads
+_BM25_COLS = ("part_id", "term", "doc_ids", "tfs", "dls",
+              "max_tf", "min_dl", "first_doc", "last_doc")
 
 
 def _bm25_local(
@@ -603,15 +638,11 @@ def _bm25_local(
     scorers: list[tuple[int, object]] = []
     live_terms: set[str] = set()
     for qid, qterms in enumerate(queries):
-        stats = _stats_from_rows(qterms, by_term, n_docs, avgdl, params)
-        if not stats or (
-            operator == "and" and len(stats) < len(set(qterms))
-        ):
-            continue
-        scorers.append((qid, _make_scorer(
-            stats, avgdl, params, k, operator, minimum_should_match, prune
-        )))
-        live_terms.update(s.term for s in stats)
+        q = _query_scorer(qterms, by_term, n_docs, avgdl, params, k,
+                          operator, minimum_should_match, prune)
+        if q is not None:
+            scorers.append((qid, q[0]))
+            live_terms.update(q[1])
     if not scorers:
         return None
 
@@ -633,10 +664,8 @@ def _bm25_local(
         # the pushed first_doc/last_doc predicates
         cond = cond & (
             (F.col("last_doc") >= rng[0]) & (F.col("first_doc") <= rng[1]))
-    cols = ("part_id", "term", "doc_ids", "tfs", "dls",
-            "max_tf", "min_dl", "first_doc", "last_doc")
-    return _scored_scan(index, cond, cols, score_queries, None, allowed,
-                        BATCH_TOPK_SCHEMA)
+    return _scored_scan(index, cond, _BM25_COLS, score_queries, None,
+                        allowed, BATCH_TOPK_SCHEMA)
 
 
 def match_topk(
@@ -786,7 +815,7 @@ def _sloppy_phrase_freq(plists: list, slop: int) -> float:
             cur_max = nxt
 
 
-def _phrase_scan(
+def _phrase_kernel(
     index: InvertedIndex,
     field: str,
     head: list[str],
@@ -794,8 +823,7 @@ def _phrase_scan(
     k: int | None,
     params: BM25Params,
     slop: int,
-    allowed: DataFrame | None,
-) -> DataFrame:
+):
     """The one positional phrase kernel: docs where the ``head`` terms
     occur as a phrase followed by ANY term of ``lasts`` — exactly
     adjacent, or within ``slop`` (:func:`_sloppy_phrase_freq`) —
@@ -816,16 +844,22 @@ def _phrase_scan(
     doc a position-list intersection: end = pos(h0); end = (end+1) ∩
     pos(h1); ...; freq = |(end+1) ∩ pos(last)|. Candidates are docs
     holding every head term (the conjunction prunes before any
-    position decode)."""
-    spark = index.spark
+    position decode).
+
+    Returns ``(sorted scan terms, kernel(pdf, ids))`` for blocks
+    projected to ``_PHRASE_COLS``, or None when no doc can match."""
+    if slop and len(set(head) | set(lasts)) < len(head) + len(lasts):
+        raise ValueError(
+            "slop>0 with repeated phrase terms is not supported (Lucene "
+            "repeat-group handling not implemented)")
     qterms = sorted(set(head) | set(lasts))
     looked = _term_rows(index, field, qterms)
     if looked is None:
-        return _no_hits(spark)
+        return None
     by_term, n_docs, avgdl = looked
     lasts = [t for t in lasts if t in by_term]
     if not lasts or any(t not in by_term for t in head):
-        return _no_hits(spark)
+        return None
     idf = {t: bm25.idf_sim(int(r["df"]), n_docs, params)
            for t, r in by_term.items()}
     idf_head = float(sum(idf[t] for t in head))
@@ -878,9 +912,30 @@ def _phrase_scan(
         return _local_topk(ids[best], scores[best],
                            np.full(int(best.sum()), m), k)
 
+    return qterms, score_group
+
+
+# the block columns the phrase kernel (``_position_lists``) reads
+_PHRASE_COLS = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
+
+
+def _phrase_scan(
+    index: InvertedIndex,
+    field: str,
+    head: list[str],
+    lasts: list[str],
+    k: int | None,
+    params: BM25Params,
+    slop: int,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """``_phrase_kernel`` over the shared posting-scan skeleton."""
+    kern = _phrase_kernel(index, field, head, lasts, k, params, slop)
+    if kern is None:
+        return _no_hits(index.spark)
+    qterms, score_group = kern
     cond = (F.col("field") == field) & F.col("term").isin(qterms)
-    cols = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
-    return _scored_scan(index, cond, cols, score_group, k, allowed)
+    return _scored_scan(index, cond, _PHRASE_COLS, score_group, k, allowed)
 
 
 def phrase_topk(
@@ -901,10 +956,6 @@ def phrase_topk(
     position. BM25 similarity only: another one raises ValueError."""
     params = params or BM25Params()
     _bm25_only(params, "phrase_topk")
-    if slop and len(set(terms)) != len(terms):
-        raise ValueError(
-            "phrase_topk: slop>0 with repeated phrase terms is not "
-            "supported (Lucene repeat-group handling not implemented)")
     if not terms:
         return _no_hits(index.spark)
     return _phrase_scan(index, field, list(terms[:-1]), [terms[-1]], k,
@@ -949,9 +1000,7 @@ def synonym_match_topk(
     msm = max(minimum_should_match, 1)
 
     def score_group(pdf: pd.DataFrame, _ids) -> pd.DataFrame:
-        acc_ids = np.empty(0, dtype=np.int64)
-        acc_scores = np.empty(0, dtype=np.float64)
-        acc_counts = np.empty(0, dtype=np.int64)
+        hits = []
         by = dict(tuple(pdf.groupby("term", sort=False)))
         for gi, g in enumerate(live_groups):
             ids_p, tf_p, dl_p = [], [], []
@@ -974,23 +1023,16 @@ def synonym_match_topk(
             np.add.at(tf_sum, inv, tfs)
             dl_first = np.zeros(uniq.size, dtype=np.int64)
             dl_first[inv[::-1]] = dls[::-1]  # any member's dl (same doc-field)
-            scores = group_idf[gi] * bm25.tf_norm_sim(
-                tf_sum, dl_first, avgdl, params)
-            all_ids = np.concatenate([acc_ids, uniq])
-            all_scores = np.concatenate([acc_scores, scores])
-            all_counts = np.concatenate(
-                [acc_counts, np.ones(uniq.size, dtype=np.int64)]
-            )
-            u2, inv2 = np.unique(all_ids, return_inverse=True)
-            ns = np.zeros(u2.size, dtype=np.float64)
-            nc = np.zeros(u2.size, dtype=np.int64)
-            np.add.at(ns, inv2, all_scores)
-            np.add.at(nc, inv2, all_counts)
-            acc_ids, acc_scores, acc_counts = u2, ns, nc
-        if acc_ids.size == 0:
+            hits.append((uniq, group_idf[gi] * bm25.tf_norm_sim(
+                tf_sum, dl_first, avgdl, params)))
+        if not hits:
             return _empty_topk()
-        keep = acc_counts >= msm
-        return _local_topk(acc_ids[keep], acc_scores[keep], acc_counts[keep], k)
+        # groups sum like bool-OR clauses, one matched clause each
+        ids, scores, counts = _fold(
+            *(np.concatenate(a) for a in zip(*hits)),
+            np.ones(sum(u.size for u, _ in hits), dtype=np.int64), 1.0)
+        keep = counts >= msm
+        return _local_topk(ids[keep], scores[keep], counts[keep], k)
 
     cond = (F.col("field") == field) & F.col("term").isin(
         sorted({t for g in live_groups for t in g}))
@@ -1104,6 +1146,111 @@ def phrase_prefix_topk(
     )
     return _phrase_scan(index, field, list(terms[:-1]), expansions, k,
                         params, 0, allowed)
+
+
+def multi_match_topk(
+    index: InvertedIndex,
+    field_terms: dict[str, list[str]],
+    mtype: str = "best_fields",
+    k: int | None = 10,
+    tie_breaker: float = 0.0,
+    operator: str = "or",
+    minimum_should_match: int = 1,
+    slop: int = 0,
+    params: BM25Params | None = None,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """multi_match (MultiMatchQueryBuilder.Type) over ``{field: analyzed
+    terms}`` as ONE scored leaf: one scan pushing sorted ``field`` and
+    ``term`` IN lists, one part_id exchange and one kernel that runs
+    each field's BM25 (``_make_scorer``) or phrase (``_phrase_kernel``)
+    kernel on its shard and combines the fields per doc — exact
+    locally, as a doc's postings for every field share its shard.
+    best_fields and most_fields score each field's BM25 match
+    (``operator``, ``minimum_should_match``); best_fields and the
+    phrase types (``slop`` for phrase) take max + tie·(sum − max),
+    most_fields the sum. cross_fields scores each (field, term) with
+    the term's df blended to its max over the fields
+    (BlendedTermQuery), takes max + tie·(sum − max) per term and sums
+    the terms. best_fields at tie 0 keeps pruning: each field
+    keeps its shard top-k, which holds every doc of the max's shard
+    top-k (the argument of ``api._max_disjunction_leaves``); the other
+    types score exhaustively and cut after combining. ``allowed``
+    restricts scoring as in ``match_topk``."""
+    params = params or BM25Params()
+    if mtype not in ("best_fields", "most_fields", "cross_fields",
+                     "phrase", "phrase_prefix"):
+        raise ValueError(f"multi_match: unsupported type {mtype!r}")
+    phrase = mtype.startswith("phrase")
+    if phrase:
+        _bm25_only(params, f"multi_match type={mtype}")
+    tie = 1.0 if mtype == "most_fields" else float(tie_breaker)
+    # {field: (scan terms, avgdl, [(group, kernel)])}; the kernels of one
+    # group (a term for cross_fields, else every field) combine first
+    units: dict = {}
+    if phrase:
+        for f, terms in field_terms.items():
+            if not terms:
+                continue
+            lasts = terms[-1:] if mtype == "phrase" else expand_terms(
+                index, f, "prefix", terms[-1])
+            kern = _phrase_kernel(index, f, list(terms[:-1]), lasts, None,
+                                  params, slop if mtype == "phrase" else 0)
+            if kern is not None:
+                units[f] = (kern[0], None, [(0, kern[1])])
+    looked = {} if phrase else {
+        f: r for f, terms in field_terms.items()
+        if (r := _term_rows(index, f, sorted(set(terms)))) is not None}
+    if mtype == "cross_fields" and looked:
+        n_docs = max(n for _, n, _ in looked.values())
+        df_max: dict[str, int] = {}
+        for by_term, _, _ in looked.values():
+            for t, r in by_term.items():
+                df_max[t] = max(df_max.get(t, 0), int(r["df"]))
+        for f, (by_term, _, avgdl) in looked.items():
+            blended = {t: {"df": df_max[t], "max_tf": r["max_tf"],
+                           "min_dl": r["min_dl"]} for t, r in by_term.items()}
+            stats = _stats_from_rows(list(dict.fromkeys(field_terms[f])),
+                                     blended, n_docs, avgdl, params)
+            if stats:
+                units[f] = ([s.term for s in stats], avgdl, [
+                    (s.term, _make_scorer([s], avgdl, params, None, "or", 1,
+                                          False)) for s in stats])
+    elif not phrase:
+        pruned = mtype == "best_fields" and tie == 0.0
+        for f, (by_term, n_docs, avgdl) in looked.items():
+            q = _query_scorer(field_terms[f], by_term, n_docs, avgdl, params,
+                              k if pruned else None, operator,
+                              minimum_should_match, prune=True)
+            if q is not None:
+                units[f] = (q[1], avgdl, [(0, q[0])])
+    if not units:
+        return _no_hits(index.spark)
+
+    def score_fields(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        by_field = pdf.groupby("field", sort=False).indices
+        groups: dict = {}
+        for f, (_, avgdl, kernels) in units.items():
+            if f in by_field:
+                sub = pdf.iloc[by_field[f]]
+                src = sub if phrase else _term_view(sub, avgdl, params)
+                for g, kernel in kernels:
+                    groups.setdefault(g, []).append(kernel(src, ids))
+        folded = [_fold(*(np.concatenate([h[c].to_numpy() for h in hits])
+                          for c in ("doc_id", "score", "matched")), tie)
+                  for hits in groups.values()]
+        if len(folded) > 1:
+            folded = [_fold(*map(np.concatenate, zip(*folded)), 1.0)]
+        if not folded:
+            return _empty_topk()
+        return _local_topk(*folded[0], k)
+
+    terms = sorted({t for scan_terms, _, _ in units.values()
+                    for t in scan_terms})
+    cond = F.col("field").isin(sorted(units)) & F.col("term").isin(terms)
+    cols = _PHRASE_COLS if phrase else _BM25_COLS
+    return _scored_scan(index, cond, (cols[0], "field") + cols[1:],
+                        score_fields, k, allowed)
 
 
 def intervals_match(
@@ -1350,10 +1497,13 @@ def completion_suggest(
 def fetch(topk: DataFrame, docs: DataFrame, on: str = "doc_id") -> DataFrame:
     """Fetch phase: join winning doc ids back to the source table
     (reference: search/fetch/FetchPhase.java:61,71). The top-k side is
-    tiny -> broadcast it."""
-    return docs.join(F.broadcast(topk), on=on, how="inner").orderBy(
-        F.desc("score"), F.asc(on)
-    )
+    tiny -> broadcast it. The hits are few, so they are ordered in one
+    partition: a global ``orderBy`` would add a range exchange and its
+    sampling job, and a ``limit(k)`` would drop rows if ``docs`` held
+    duplicate ids."""
+    return (docs.join(F.broadcast(topk), on=on, how="inner")
+            .repartition(1)
+            .sortWithinPartitions(F.desc("score"), F.asc(on)))
 
 
 def source_filter(

@@ -44,7 +44,9 @@ def test_no_collect_in_hot_paths():
     # the scorer path must not collect posting/doc frames
     for fn_src in re.split(r"\ndef ", src):
         if fn_src.startswith(("match_topk", "phrase_topk", "multi_term_topk",
-                              "_bm25_local", "_phrase_scan", "_scored_scan")):
+                              "_bm25_local", "_phrase_scan", "_scored_scan",
+                              "_phrase_kernel", "multi_match_topk",
+                              "_fold")):
             assert ".collect()" not in fn_src, "collect() in a scorer path"
 
 
@@ -250,6 +252,17 @@ def _pin_cases():
         "multi_term_topk": lambda idx: ex.multi_term_topk(
             idx, "text", "prefix", "qu"),
         "span_match": lambda idx: span_match(idx, "text", near),
+        "multi_match_best_fields": lambda idx: ex.multi_match_topk(
+            idx, {"text": ["table", "scan"], "text_en": ["tabl", "scan"]}),
+        "multi_match_most_fields": lambda idx: ex.multi_match_topk(
+            idx, {"text": ["table", "scan"], "source": ["table", "scan"]},
+            "most_fields"),
+        "multi_match_phrase": lambda idx: ex.multi_match_topk(
+            idx, {"text": ["key", "order"], "all_text": ["key", "order"]},
+            "phrase", slop=1),
+        "multi_match_cross_fields": lambda idx: ex.multi_match_topk(
+            idx, {"text": ["src5", "table"], "source": ["src5", "table"]},
+            "cross_fields", tie_breaker=0.3),
     }
 
 
@@ -400,14 +413,17 @@ def test_disjunction_decomposition_parity(spark, index):
     assert _max_disjunction_leaves(
         {"dis_max": {"tie_breaker": 0.3, "queries":
                      [{"match": {"text": "a"}}]}}) is None
-    assert _max_disjunction_leaves(
-        {"multi_match": {"query": "a", "fields": ["text"],
-                         "type": "most_fields"}}) is None
+    # multi_match of any type is one leaf: its kernel combines the
+    # fields per shard
+    most = {"multi_match": {"query": "a", "fields": ["text"],
+                            "type": "most_fields"}}
+    assert _max_disjunction_leaves(most) == [most]
 
 
 def test_filtered_disjunction_keeps_pruning_plan(spark, index):
-    """A filtered multi_match must push the filter id set into every
-    leaf scorer (cogroup), never semi-join after scoring everything."""
+    """A filtered multi_match pushes the filter id set into its one
+    kernel (one cogroup for all fields), never semi-joins after scoring
+    everything."""
     from elasticsearch_spark.search.api import search
     from elasticsearch_spark.search.bm25 import BM25Params
 
@@ -419,7 +435,47 @@ def test_filtered_disjunction_keeps_pruning_plan(spark, index):
                  params=BM25Params(quantize_norms=False))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan, plan[:3000]
-    assert plan.count("FlatMapCoGroupsInPandas") >= 2, plan[:3000]
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan[:3000]
+
+
+_MULTI_MATCH_CASES = {
+    "best_fields": {"type": "best_fields"},
+    "best_fields_tie": {"type": "best_fields", "tie_breaker": 0.3},
+    "most_fields": {"type": "most_fields"},
+    "phrase": {"type": "phrase", "slop": 1},
+    "phrase_prefix": {"type": "phrase_prefix"},
+    "cross_fields": {"type": "cross_fields"},
+}
+
+
+@pytest.mark.parametrize("filtered", [False, True])
+@pytest.mark.parametrize("mtype", sorted(_MULTI_MATCH_CASES))
+def test_multi_match_is_one_scored_leaf(spark, index, mtype, filtered):
+    """Every multi_match type runs as one scored leaf: one postings
+    scan behind one part_id exchange and one pandas kernel that
+    combines the fields per shard — no per-field union, no hash
+    exchange, no decode pass, no semi-join — and the fetch orders its
+    few hits without a range exchange."""
+    from elasticsearch_spark.search.api import search
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    q = {"multi_match": {"query": "key order", "fields": ["text", "all_text"],
+                         **_MULTI_MATCH_CASES[mtype]}}
+    if filtered:
+        q = {"bool": {"must": [q], "filter": [{"term": {"lang": "en"}}]}}
+    out = search(index, docs, q, k=10)
+    assert out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final[:3000]
+    kernel = "FlatMapCoGroupsInPandas" if filtered else "FlatMapGroupsInPandas"
+    assert final.count(kernel) == 1, final
+    assert final.count("InPandas") == 1, final
+    # the allowlist side of a cogroup takes the same placement exchange
+    assert final.count(PART_EXCHANGE) == 1 + filtered, final
+    for absent in ("hashpartitioning", "rangepartitioning", "MapInPandas",
+                   "LeftSemi"):
+        assert absent not in final, (absent, final)
 
 
 def _tasks(rows, key) -> dict[int, set]:

@@ -20,7 +20,7 @@ def main() -> int:
     corpus = generate_corpus(spark, 300, seed=7).cache()
     idx = build_index(
         corpus, tempfile.mkdtemp(prefix="esidx_"),
-        fields={"content": "code"}, num_partitions=4,
+        fields={"content": "code", "path": "code"}, num_partitions=4,
         id_cols=["repo", "path", "commit"], input_snapshot="v1",
     )
     terms = [t for t, _ in analyze("parseIndex import", "code")]
@@ -46,6 +46,21 @@ def main() -> int:
         n = df._jdf.queryExecution().executedPlan().toString() \
             .split("== Initial Plan ==")[0].count("shufflepartitionidpassthrough")
         assert n == 1, f"{name}: {n} shard exchanges"
+    # a filtered multi_match is one scored leaf: its allowlist enters
+    # one kernel for all fields, never a semi-join
+    from elasticsearch_spark.search.api import search
+
+    for mtype in ("best_fields", "cross_fields"):
+        q = {"bool": {"must": [{"multi_match": {
+                 "query": "parseIndex import src", "type": mtype,
+                 "fields": ["content", "path"]}}],
+             "filter": [{"term": {"lang": "python"}}]}}
+        hits = search(idx, docs, q, k=5)
+        assert hits.collect(), mtype
+        plan = hits._jdf.queryExecution().executedPlan().toString() \
+            .split("== Initial Plan ==")[0]
+        n = plan.count("FlatMapCoGroupsInPandas")
+        assert n == 1 and "LeftSemi" not in plan, f"{mtype}: {n} cogroups"
     import __spark_entry__ as e
 
     qs, os_ = e.queries(), e.oracle_sql()
