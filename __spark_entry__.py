@@ -88,7 +88,7 @@ def _doc_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     tag = key.strip("/").replace("/", "_")
-    path = os.path.join(_SCRATCH, f"docindex_{tag}_v13")
+    path = os.path.join(_SCRATCH, f"docindex_{tag}_v14")
     if not os.path.exists(os.path.join(path, "index_meta.json")):
         docs = _t(spark, sf_dir, "documents")
         build_index(
@@ -3659,7 +3659,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _doc_index(s, d)
         tag = os.path.abspath(d).strip("/").replace("/", "_")
-        path = os.path.join(_SCRATCH, f"docindex_{tag}_v12_split")
+        path = os.path.join(_SCRATCH, f"docindex_{tag}_v13_split")
         if not os.path.exists(os.path.join(path, "index_meta.json")):
             split_index(s, idx.path, path, _INDEX_PARTS * 2)
         sidx = load_index(s, path)
@@ -4336,7 +4336,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from elasticsearch_spark.index.builder import assign_sorted_doc_ids
 
         tag = os.path.abspath(d).strip("/").replace("/", "_")
-        path = os.path.join(_SCRATCH, f"sorted_docindex_{tag}_v1")
+        path = os.path.join(_SCRATCH, f"sorted_docindex_{tag}_v2")
         map_path = os.path.join(path, "docmap")
         if not os.path.exists(os.path.join(path, "index_meta.json")):
             docs = _t(s, d, "documents").withColumnRenamed(
@@ -4725,7 +4725,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tag = os.path.abspath(d).strip("/").replace("/", "_")
         paths = []
         for par in (0, 1):
-            path = os.path.join(_SCRATCH, f"multiidx_{tag}_p{par}_v1")
+            path = os.path.join(_SCRATCH, f"multiidx_{tag}_p{par}_v2")
             if not os.path.exists(os.path.join(path, "index_meta.json")):
                 docs = _t(s, d, "documents").where(
                     F.pmod(F.col("doc_id"), F.lit(2)) == par)

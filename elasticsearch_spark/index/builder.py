@@ -26,7 +26,10 @@ cluster/routing/OperationRouting.java:240-246):
     pruning, plus one per-(part, field) doc-roster marker row. The
     encoder takes tokenized doc rows (build, ingest) or postings
     decoded from existing blocks (compaction, split) and shares one
-    vectorized back half between them.
+    vectorized back half between them. The blocks are stored as a
+    ``part_id``-partitioned table bucketed by ``bkey`` (``bucket_spec``),
+    so a query's scan is already grouped by shard bucket and its
+    scorer needs no exchange.
   - ``index_meta.json`` is the commit point of every writer and is
     only ever replaced atomically (``write_index_meta``).
   - term_dict / coll_stats are aggregated from block METADATA (not raw
@@ -50,11 +53,15 @@ skew strategy; term-keyed layouts need salting, doc-keyed ones don't).
 (same sizing rule as ES shards). Files are term-sorted within each
 partition so Parquet row-group min/max stats skip non-matching terms at
 query time; ``part_id`` is a physical partition column, so doc-routed
-point lookups prune directories.
+point lookups prune directories. The bucket count is min(shards, cores
+at build time): at cluster size cores exceed shards and each shard is
+its own bucket; a query session with fewer cores than buckets gets the
+same answer in more waves.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -64,7 +71,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from elasticsearch_spark.analysis import ANALYZERS
 from elasticsearch_spark.index import codec
@@ -144,6 +151,107 @@ BLOCKS_SCHEMA = (
     "max_tf int, min_dl int, sum_tf long, first_doc long, last_doc long"
 )
 
+# ---------------------------------------------------------------------
+# the shard-bucketed block layout
+# ---------------------------------------------------------------------
+#
+# Every block directory (the base generation and each streaming segment)
+# is an external Parquet table PARTITIONED BY (part_id) and CLUSTERED BY
+# (bkey) INTO B BUCKETS, B = min(shards, cores at build time). ``bkey``
+# is an int chosen per shard so that Spark's bucket hash
+# ``pmod(hash(bkey), B)`` sends shard p to bucket p mod B: a scan of the
+# table reports ``HashPartitioning(bkey, B)``, which already satisfies a
+# ``groupBy("bkey")``, so a scorer's kernel runs in the scan's own stage
+# with no exchange. The spec is recorded in ``index_meta.json``
+# (``bucketing``) and every later writer of the index reuses it.
+
+# the table's columns: BLOCKS_SCHEMA's data columns plus ``bkey``, with
+# the partition column last (the order ``insertInto`` matches by)
+_TABLE_COLS = [c.split()[0] for c in BLOCKS_SCHEMA.split(", ")][1:] + [
+    "bkey", "part_id"]
+_TABLE_DDL = BLOCKS_SCHEMA.split(", ", 1)[1] + ", bkey int, part_id int"
+
+
+def _murmur3_int(k: int, seed: int = 42) -> int:
+    """Spark's ``hash(k)`` of an int ``k`` (Murmur3_x86_32.hashInt with
+    the SQL seed 42) as a signed 32-bit int — the hash a bucketed write
+    and a bucketed scan place ``bkey`` with."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k1 = rotl((k & m) * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h = (rotl(seed ^ k1, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+def bucket_spec(shards: int, cores: int) -> dict:
+    """The bucketing of a ``shards``-shard index built on ``cores``:
+    ``{"buckets": B, "bkeys": [bkey of shard p]}`` with B = min(shards,
+    cores) — one wave of scorer tasks, each holding at most
+    ceil(shards / B) shards — and, for shard p, the smallest int k with
+    ``pmod(hash(k), B) == p mod B``."""
+    b = max(1, min(shards, cores))
+    first: dict[int, int] = {}
+    k = 0
+    while len(first) < b:
+        first.setdefault(_murmur3_int(k) % b, k)
+        k += 1
+    return {"buckets": b, "bkeys": [first[p % b] for p in range(shards)]}
+
+
+def shard_bkey(spec: dict | None, part_id: Column) -> Column:
+    """The ``bkey`` of shard ``part_id`` under ``spec``; an index with no
+    spec keys its groups by the shard itself."""
+    if spec is None:
+        return part_id
+    return F.element_at(F.array(*[F.lit(k) for k in spec["bkeys"]]),
+                        part_id + 1)
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _blocks_table(spark: SparkSession, path: str, spec: dict) -> str:
+    """Register the block directory ``path`` as an external table
+    bucketed with ``spec`` and return its name. The table is made once
+    per session, path and bucket count (all its DDL depends on) and
+    never dropped, so a query planned on an older handle of ``path``
+    always finds it with its partitions. A later registration refreshes
+    its file listing instead, so a handle opened after a rewrite of
+    ``path`` (a resumed build, a replayed ingest) never reads a stale
+    one, and adds the ``part_id`` directories that exist by now."""
+    path = os.path.abspath(path)
+    b = int(spec["buckets"])
+    name = (f"esidx_blocks_{hashlib.sha1(path.encode()).hexdigest()[:20]}"
+            f"_b{b}")
+    if spark.catalog.tableExists(name):
+        spark.sql(f"REFRESH TABLE {name}")
+    else:
+        # the table's own partitionOverwriteMode: an INSERT OVERWRITE
+        # replaces only the part_id directories it writes (a writer
+        # option does not reach an insert into a catalog table)
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({_TABLE_DDL}) USING parquet "
+            f"OPTIONS (partitionOverwriteMode 'dynamic') "
+            f"PARTITIONED BY (part_id) CLUSTERED BY (bkey) "
+            f"SORTED BY (field, term, block_id) INTO {b} "
+            f"BUCKETS LOCATION {_sql_str(path)}")
+    parts = sorted(
+        int(d.split("=", 1)[1]) for d in
+        (os.listdir(path) if os.path.isdir(path) else [])
+        if d.startswith("part_id=") and d.split("=", 1)[1].isdigit())
+    if parts:
+        spark.sql(f"ALTER TABLE {name} ADD IF NOT EXISTS " + " ".join(
+            f"PARTITION (part_id={p})" for p in parts))
+    return name
+
 
 @dataclass
 class InvertedIndex:
@@ -153,56 +261,80 @@ class InvertedIndex:
     spark: SparkSession
 
     _postings_df: DataFrame | None = None
+    _spec: dict | None = None
+
+    def _meta(self) -> dict:
+        try:
+            return index_meta(self.path)
+        except (OSError, ValueError):
+            return {}  # partially-built index: fall back to the layout
+
+    def block_dirs(self, meta: dict | None = None) -> list[str]:
+        """The live block directories: the base generation, then every
+        streaming segment (``segments/batch=<id>``) not yet folded.
+
+        index_meta.json is the COMMIT POINT for compaction: it names the
+        live base-postings generation dir and lists the segment batch
+        ids already folded into it. Both fields flip in one atomic
+        os.replace (streaming/refresh.py compact_index), so a crash
+        mid-compaction can never make a folded segment visible twice
+        (df/tf would inflate) nor hide one that was not yet folded.
+        Streaming appends land in their OWN batch directory, overwritten
+        per part_id, so a foreachBatch replay after a crash rewrites the
+        same directory instead of duplicating postings (exactly-once by
+        construction; see streaming/refresh.py)."""
+        meta = self._meta() if meta is None else meta
+        folded = {str(b) for b in meta.get("folded_batches", [])}
+        paths = []
+        base = os.path.join(self.path, meta.get("postings_dir", "postings"))
+        if os.path.exists(base):
+            paths.append(base)
+        seg_root = os.path.join(self.path, "segments")
+        if os.path.isdir(seg_root):
+            paths += [
+                os.path.join(seg_root, d)
+                for d in sorted(os.listdir(seg_root))
+                if d.startswith("batch=") and d.split("=", 1)[1] not in folded
+            ]
+        return paths
+
+    @property
+    def bucketing(self) -> dict | None:
+        """The ``bucket_spec`` this index's blocks were written with;
+        None for an index without one."""
+        self.postings  # noqa: B018 - the spec is read with the layout
+        return self._spec
 
     @property
     def postings(self) -> DataFrame:
-        # one DataFrame per handle: Catalyst caches the file listing in
-        # the plan, so repeated queries skip re-listing the partition
-        # directories (refresh by creating a new handle / load_index).
-        # Explicit schema: skips footer sampling AND makes an EMPTY
-        # index (0 docs, e.g. a resume filter matching nothing) read as
-        # an empty frame instead of failing schema inference.
-        #
-        # Layout = base build (postings/) + zero or more streaming
-        # segments (segments/batch=<id>/), each part_id-partitioned.
-        # Streaming appends land in their OWN batch directory written
-        # with mode=overwrite, so a foreachBatch replay after a crash
-        # rewrites the same directory instead of duplicating postings
-        # (exactly-once by construction; see streaming/refresh.py).
+        """Every live block directory's blocks (``block_dirs``), with
+        ``bkey``. One DataFrame per handle; the tables' file listings
+        are cached in the session, so repeated queries skip re-listing
+        the partition directories, and a new handle (``load_index``)
+        refreshes every table it reads, so they are listed afresh.
+
+        Each directory is a table bucketed by ``bkey`` with the index's
+        one spec, so their union is still partitioned by bkey and a
+        scorer's ``groupBy("bkey")`` needs no exchange. An index whose
+        meta records no spec (or has no meta yet, mid-build) is read as
+        plain Parquet with bkey = part_id: the same rows, grouped behind
+        an exchange."""
         if self._postings_df is None:
-            reader = self.spark.read.schema(BLOCKS_SCHEMA)
-            # index_meta.json is the COMMIT POINT for compaction: it
-            # names the live base-postings generation dir and lists the
-            # segment batch ids already folded into it.  Both fields
-            # flip in one atomic os.replace (streaming/refresh.py
-            # compact_index), so a crash mid-compaction can never make
-            # a folded segment visible twice (df/tf would inflate) nor
-            # hide one that was not yet folded.
-            meta: dict = {}
-            try:
-                meta = index_meta(self.path)
-            except (OSError, ValueError):
-                pass  # partially-built index: fall back to the layout
-            folded = {str(b) for b in meta.get("folded_batches", [])}
-            paths = []
-            base = os.path.join(self.path, meta.get("postings_dir", "postings"))
-            if os.path.exists(base):
-                paths.append(base)
-            seg_root = os.path.join(self.path, "segments")
-            if os.path.isdir(seg_root):
-                paths += [
-                    os.path.join(seg_root, d)
-                    for d in sorted(os.listdir(seg_root))
-                    if d.startswith("batch=")
-                    and d.split("=", 1)[1] not in folded
-                ]
-            if not paths:
-                self._postings_df = self.spark.createDataFrame([], BLOCKS_SCHEMA)
-            else:
-                df = reader.parquet(paths[0])
-                for p in paths[1:]:
-                    df = df.unionByName(self.spark.read.schema(BLOCKS_SCHEMA).parquet(p))
-                self._postings_df = df
+            meta = self._meta()
+            self._spec = meta.get("bucketing")
+            df = None
+            for p in self.block_dirs(meta):
+                if self._spec is None:
+                    # explicit schema: no footer sampling, and an EMPTY
+                    # directory reads as an empty frame
+                    part = self.spark.read.schema(BLOCKS_SCHEMA).parquet(p) \
+                        .withColumn("bkey", F.col("part_id"))
+                else:
+                    part = self.spark.table(
+                        _blocks_table(self.spark, p, self._spec))
+                df = part if df is None else df.unionByName(part)
+            self._postings_df = df if df is not None else \
+                self.spark.createDataFrame([], f"{BLOCKS_SCHEMA}, bkey int")
         return self._postings_df
 
     def cache(self) -> "InvertedIndex":
@@ -303,16 +435,15 @@ class InvertedIndex:
             self._nparts = int(index_meta(self.path)["num_partitions"])
         return self._nparts
 
+    def analyzer(self, field: str) -> str:
+        """The analyzer ``field`` was indexed with."""
+        return index_meta(self.path)["fields"].get(field, "standard")
+
     def route_ids(self, ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-        """Attach the index's routing part_id to a frame of doc ids
-        (same expression the builder used, so ids land on the partition
+        """Attach the index's routing part_id and its bkey to a frame of
+        doc ids (the builder's expressions, so ids land in the group
         holding their postings)."""
-        return ids_df.select(
-            F.pmod(F.xxhash64(F.col(id_col).cast("long")),
-                   F.lit(self.num_partitions()))
-            .cast("int").alias("part_id"),
-            F.col(id_col).cast("long").alias("doc_id"),
-        )
+        return _routed(ids_df, id_col, self.num_partitions(), self.bucketing)
 
     def manifests(self) -> list[dict]:
         ckpt_dir = os.path.join(self.path, "checkpoints")
@@ -827,6 +958,12 @@ def build_index(
             if m.get("status") == "done" and m.get("input_snapshot") == input_snapshot:
                 done_parts.add(int(m["partition_id"]))
 
+    spec, recorded = writer_spec(spark, out_dir, num_partitions)
+    if not recorded:
+        # parts finished under no spec or another one (a crash before
+        # the meta below, an index older than the layout) do not share
+        # the new spec's buckets: build them again
+        done_parts = set()
     todo_parts = [p for p in range(num_partitions) if p not in done_parts]
     if _only_parts is not None:
         todo_parts = [p for p in todo_parts if p in _only_parts]
@@ -842,7 +979,7 @@ def build_index(
             tokenized = tokenized.persist(StorageLevel.MEMORY_AND_DISK)
         tp = time.time()
         write_segment(tokenized, os.path.join(out_dir, "postings"),
-                      len(todo_parts), list(fields))
+                      len(todo_parts), list(fields), spec)
         tp = _mark("tokenize_encode_write", tp)
         if store_doc_lengths:
             # (unlike blocks, tokenized is scan-partitioned — without the
@@ -879,13 +1016,16 @@ def build_index(
             "fields": fields,
             "copy_to": copy_to or {},
             "input_snapshot": input_snapshot,
+            "bucketing": spec,
             # build-phase wall-clock breakdown (lineage/metrics):
             # the main tokenize->encode->write job, the global-stats
             # rebuild job, and the manifest metadata aggregation
             "phase_ms": phase_ms,
         },
     )
-    return idx
+    # a new handle: the one above read the blocks before the meta named
+    # their bucket spec
+    return InvertedIndex(out_dir, spark)
 
 
 def _part_id(num_partitions: int):
@@ -926,12 +1066,16 @@ def write_segment(
     path: str,
     n_parts: int,
     fields: list[str],
+    spec: dict,
     roster: DataFrame | None = None,
 ) -> None:
     """THE posting-block write step of every writer (build, streaming
     ingest, compaction, split): encode ``rows`` — tokenized doc rows or
     decoded posting rows, with ``part_id`` already routed — into
-    term-sorted blocks plus per-(part, field) marker rows under ``path``.
+    term-sorted blocks plus per-(part, field) marker rows, stored under
+    ``path`` as a ``part_id``-partitioned table bucketed by ``bkey`` with
+    ``spec`` (``bucket_spec``; a writer of an existing index passes
+    ``writer_spec``'s, so every directory of the index shares one).
 
     ``roster``: marker rows to write INSTEAD of the encoder's. Compaction
     carries the existing ones, because docs with zero indexed tokens
@@ -955,7 +1099,8 @@ def write_segment(
         .applyInPandas(_encode_blocks, schema=BLOCKS_SCHEMA)
     )
     if roster is not None:
-        blocks = blocks.filter(F.col("term").isNotNull()).unionByName(roster)
+        blocks = blocks.filter(F.col("term").isNotNull()).unionByName(
+            roster.drop("bkey"))
     # dynamic partition overwrite: ONLY the part_id directories this
     # run produces are replaced. That closes the build's resume crash
     # window (a previous attempt that appended files but died before its
@@ -964,21 +1109,47 @@ def write_segment(
     # the other writers target a fresh directory or re-write their own
     # batch directory with the same rows on a replay.
     #
-    # NO second shuffle before the write: the encode stage's output is
-    # already exchanged on (part_id, field), and partitionBy routes rows
-    # to their part_id directory regardless of task placement —
-    # re-partitioning by part_id would move the entire encoded index
-    # through one more exchange just to reduce the files-per-directory
-    # count. Rows stay (field, term, block)-sorted per task, and the
-    # writer preserves that relative order inside each part_id file, so
-    # Parquet row-group min/max skipping on `term` is unaffected.
+    # NO second shuffle before the write: a bucketed write needs no
+    # distribution, only each task's rows sorted by (part_id, bucket,
+    # field, term, block_id) — the table's partition, bucket and sort
+    # columns, which the planned write sorts by in the encode stage. A
+    # task writes one file per part_id it holds (bkey is a function of
+    # part_id), in (field, term, block)-order, so Parquet row-group
+    # min/max skipping on `term` is unaffected.
+    write_blocks(blocks, path, spec)
+
+
+def write_blocks(blocks: DataFrame, path: str, spec: dict) -> None:
+    """Store encoded ``blocks`` (BLOCKS_SCHEMA, any extra ``bkey``
+    replaced) under ``path`` as the ``spec``-bucketed table, replacing
+    only the ``part_id`` directories the rows reach."""
+    os.makedirs(path, exist_ok=True)
+    table = _blocks_table(blocks.sparkSession, path, spec)
     (
-        blocks.sortWithinPartitions("part_id", "field", "term", "block_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(path)
+        blocks.withColumn("bkey", shard_bkey(spec, F.col("part_id")))
+        .select(*_TABLE_COLS)
+        .write.insertInto(table, overwrite=True)
     )
+
+
+def writer_spec(spark: SparkSession, index_dir: str,
+                shards: int) -> tuple[dict, bool]:
+    """``(spec, recorded)``: the bucketing every writer of ``index_dir``
+    writes its blocks with. When ``index_meta.json`` records one for
+    ``shards`` shards it is that one (``recorded``), so every generation
+    and segment of an index shares one layout whatever the writing
+    session's cores. Otherwise it is a new ``bucket_spec`` for this
+    session, and no block already in the index was written with it: a
+    writer that keeps such blocks rewrites them (a resumed build) or
+    refuses (an ingest), and the writer records the new spec no later
+    than the blocks it writes become visible."""
+    try:
+        spec = index_meta(index_dir).get("bucketing")
+    except (OSError, ValueError):
+        spec = None
+    if spec and len(spec["bkeys"]) == shards:
+        return spec, True
+    return bucket_spec(shards, spark.sparkContext.defaultParallelism), False
 
 
 def _write_manifests(index_dir: str, markers: list, parts, input_snapshot,
@@ -1026,6 +1197,16 @@ def write_index_meta(index_dir: str, meta: dict) -> None:
     _write_json_atomic(os.path.join(index_dir, "index_meta.json"), meta)
 
 
+def _routed(ids_df: DataFrame, id_col: str, shards: int,
+            spec: dict | None) -> DataFrame:
+    """(part_id, bkey, doc_id) of every id of ``ids_df``."""
+    part_id = F.pmod(F.xxhash64(F.col(id_col).cast("long")),
+                     F.lit(shards)).cast("int")
+    return ids_df.select(part_id.alias("part_id"), F.col(id_col).cast("long")
+                         .alias("doc_id")).withColumn(
+        "bkey", shard_bkey(spec, F.col("part_id")))
+
+
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
     return InvertedIndex(path, spark)
 
@@ -1045,17 +1226,19 @@ class MultiIndex:
     Duck-typed to the InvertedIndex surface the scorer uses:
 
       - ``postings``: unionByName of every member's blocks. part_id
-        values COLLIDE across members by design — the scorer's
-        groupBy(part_id) only needs each doc's blocks co-grouped, and
-        doc ids (xxhash64 of the natural key) stay distinct, so
-        accumulation is per-doc correct; colliding groups just share a
-        task.
+        values COLLIDE across members by design — the scorer's kernel
+        only needs each doc's blocks in one group, and doc ids
+        (xxhash64 of the natural key) stay distinct, so accumulation is
+        per-doc correct; colliding shards just share a kernel call.
+        Members with one bucket spec keep their bkey, so the union is
+        still bucketed; otherwise every member's bkey is its part_id
+        (``bucketing`` is None) and the scorer's groupBy takes an
+        exchange.
       - ``term_stats`` / ``collection_stats``: df/cf/n_docs/sum_ttf
         SUM across members, max_tf maxes, min_dl mins — exactly the
         cross-index DFS statistics, so one BM25 score space spans all
         members (a doc ranks identically to a single merged index).
-      - ``num_partitions``: max member P (the scorer's repartition
-        width only controls task granularity).
+      - ``num_partitions``: max member P.
 
     Routing-dependent ops (route_ids, allowed-id pushdown, single-doc
     lookups) need ONE routing modulus; they raise unless every member
@@ -1071,10 +1254,18 @@ class MultiIndex:
         self._coll_cache: dict | None = None
 
     @property
+    def bucketing(self) -> dict | None:
+        specs = [i.bucketing for i in self.indices]
+        return specs[0] if all(s == specs[0] for s in specs) else None
+
+    @property
     def postings(self) -> DataFrame:
-        df = self.indices[0].postings
-        for i in self.indices[1:]:
-            df = df.unionByName(i.postings)
+        shared = self.bucketing is not None
+        df = None
+        for i in self.indices:
+            part = i.postings if shared else i.postings.withColumn(
+                "bkey", F.col("part_id"))
+            df = part if df is None else df.unionByName(part)
         return df
 
     @property
@@ -1141,13 +1332,16 @@ class MultiIndex:
                 f"with the same num_partitions; got {sorted(ps)}")
         return ps.pop()
 
+    def analyzer(self, field: str) -> str:
+        names = {i.analyzer(field) for i in self.indices}
+        if len(names) != 1:
+            raise ValueError(
+                f"field {field!r} is indexed with {sorted(names)} across "
+                "the MultiIndex; a query needs one analysis")
+        return names.pop()
+
     def route_ids(self, ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-        p = self._uniform_parts()
-        return ids_df.select(
-            F.pmod(F.xxhash64(F.col(id_col).cast("long")), F.lit(p))
-            .cast("int").alias("part_id"),
-            F.col(id_col).cast("long").alias("doc_id"),
-        )
+        return _routed(ids_df, id_col, self._uniform_parts(), self.bucketing)
 
 
 def load_indices(spark: SparkSession, paths: list[str]) -> MultiIndex:

@@ -13,10 +13,11 @@ rule gives the same zero-rehash shrink.
 Spark shape: ONE pass over the posting blocks rewriting
 ``part_id % target`` (a projection — block payloads, doc ids, and all
 global statistics are untouched), written back partitioned by the new
-part_id. Unfolded streaming segments fold into the shrunk postings in
-the same pass. term_dict / coll_stats copy verbatim. The new
-``index_meta.json`` is written LAST (the commit point, as everywhere
-else in this engine).
+part_id and bucketed with a new spec for the target shard count
+(index/builder.py ``write_blocks``). Unfolded streaming segments fold
+into the shrunk postings in the same pass. term_dict / coll_stats copy
+verbatim. The new ``index_meta.json`` is written LAST (the commit
+point, as everywhere else in this engine).
 
 _split (increasing shards) mirrors the reference's ShardSplittingQuery
 (server/.../index/shard/ShardSplittingQuery.java): the target count
@@ -48,8 +49,10 @@ from elasticsearch_spark.index.builder import (
     decoded_rows,
     index_meta,
     load_index,
+    write_blocks,
     write_index_meta,
     write_segment,
+    writer_spec,
 )
 
 
@@ -76,12 +79,11 @@ def shrink_index(
     os.makedirs(dst_dir, exist_ok=True)
 
     idx = load_index(spark, src_dir)
-    (
+    spec, _ = writer_spec(spark, dst_dir, t)
+    write_blocks(
         idx.postings.withColumn(
-            "part_id", F.pmod(F.col("part_id"), F.lit(t)).cast("int"))
-        .write.partitionBy("part_id")
-        .parquet(os.path.join(dst_dir, "postings"))
-    )
+            "part_id", F.pmod(F.col("part_id"), F.lit(t)).cast("int")),
+        os.path.join(dst_dir, "postings"), spec)
     dl = os.path.join(src_dir, "doc_lengths")
     if os.path.isdir(dl):
         (
@@ -96,6 +98,7 @@ def shrink_index(
             shutil.copytree(sd, os.path.join(dst_dir, d))
 
     meta["num_partitions"] = t
+    meta["bucketing"] = spec
     meta["postings_dir"] = "postings"
     meta["folded_batches"] = []  # segments folded into the rewrite
     meta["shrunk_from"] = {"path": src_dir, "num_partitions": p}
@@ -134,8 +137,10 @@ def split_index(
     # are absent from postings and so from the new rosters — they carry
     # no postings either, so query results are unaffected).
     rows = decoded_rows(load_index(spark, src_dir), meta["fields"])
+    spec, _ = writer_spec(spark, dst_dir, t)
     write_segment(rows.withColumn("part_id", _part_id(t)),
-                  os.path.join(dst_dir, "postings"), t, list(meta["fields"]))
+                  os.path.join(dst_dir, "postings"), t, list(meta["fields"]),
+                  spec)
     dl = os.path.join(src_dir, "doc_lengths")
     if os.path.isdir(dl):
         (
@@ -155,6 +160,7 @@ def split_index(
                      range(t), meta.get("input_snapshot"), 0)
 
     meta["num_partitions"] = t
+    meta["bucketing"] = spec
     meta["postings_dir"] = "postings"
     meta["postings_gen"] = 0
     meta["folded_batches"] = []  # segments folded into the rewrite

@@ -26,7 +26,7 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from elasticsearch_spark.analysis import analyze
-from elasticsearch_spark.index.builder import InvertedIndex, index_meta
+from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search import dsl
 from elasticsearch_spark.search.bm25 import BM25Params
 from elasticsearch_spark.search.executor import (
@@ -162,7 +162,7 @@ def _match_terms(index: InvertedIndex, field: str, spec: Any) -> tuple[list[str]
         msm = int(spec.get("minimum_should_match", 1))
         analyzer = spec.get("analyzer")
     if analyzer is None:
-        analyzer = index_meta(index.path)["fields"].get(field, "standard")
+        analyzer = index.analyzer(field)
     terms = [t for t, _ in analyze(text, analyzer)]
     return terms, operator, msm
 
@@ -183,15 +183,12 @@ def _leaf(
     field, spec = ((None, body) if kind == "multi_match"
                    else next(iter(body.items())))
     if kind == "multi_match":
-        # each field analyzes with its own analyzer; cross_fields blends
-        # one analysis (the first field's) over every field
-        fields, mtype = body["fields"], body.get("type", "best_fields")
-        analyzed_as = {f: fields[0] if mtype == "cross_fields" else f
-                       for f in fields}
+        # each field analyzes with its own analyzer
         df = multi_match_topk(
-            index, {f: _match_terms(index, a, body["query"])[0]
-                    for f, a in analyzed_as.items()},
-            mtype, k=k, tie_breaker=float(body.get("tie_breaker", 0.0)),
+            index, {f: _match_terms(index, f, body["query"])[0]
+                    for f in body["fields"]},
+            body.get("type", "best_fields"), k=k,
+            tie_breaker=float(body.get("tie_breaker", 0.0)),
             operator=body.get("operator", "or"),
             minimum_should_match=int(body.get("minimum_should_match", 1)),
             slop=int(body.get("slop", 0)), params=params, allowed=allowed)

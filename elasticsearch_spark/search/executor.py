@@ -15,16 +15,21 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      are one BM25 scan (``_bm25_local``): a single request is a batch
      of one query.
   3. one skeleton shared by every posting scorer (``_posting_groups``,
-     ``_scored_scan``): the pushed scan, ONE ``part_id`` exchange
-     (``place_groups``: shard p on task p mod min(shards, cores), so
-     every task is busy and a request pays one wave of Python tasks),
-     then ``groupBy(part_id).applyInPandas(kernel)`` — each index
-     partition (ES shard) scores its docs independently
-     (doc-routing guarantees a doc's postings for ALL terms share one
-     part_id) and emits a LOCAL top-k (``_local_topk``). A filter's
-     doc-id allowlist enters here too, once for every scorer: it is
-     routed to its shard and cogrouped with the blocks, and the
-     kernel scores only allowed docs. Only the numpy kernels differ
+     ``_scored_scan``): the pushed scan of the shard-bucketed blocks
+     (index/builder.py ``bucket_spec``: shard p in bucket p mod
+     min(shards, cores at build), so every task is busy and a request
+     pays one wave of Python tasks), then
+     ``groupBy(bkey).applyInPandas(kernel)`` with NO exchange — the
+     scan's bucketing already satisfies the grouping, so the kernel
+     runs in the scan's stage and a match request is one job of one
+     stage. Inside a bucket the kernel runs once per index partition
+     (ES shard), which scores its docs independently (doc-routing
+     guarantees a doc's postings for ALL terms share one part_id) and
+     emits a LOCAL top-k (``_local_topk``). A filter's doc-id
+     allowlist enters here too, once for every scorer: it is routed to
+     its shard's bkey and cogrouped with the blocks — only the
+     allowlist is exchanged — and the kernel scores only allowed
+     docs. Only the numpy kernels differ
      per scorer; the positional ones (phrase and phrase prefix — one
      kernel, ``_phrase_kernel`` —, intervals, spans) read
      ``_position_lists``, and every BM25 weight comes from
@@ -58,6 +63,7 @@ exhaustive scorer.
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass
 
 import numpy as np
@@ -68,7 +74,6 @@ from elasticsearch_spark.index import codec
 from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search import bm25
 from elasticsearch_spark.search.bm25 import BM25Params
-from elasticsearch_spark.spread import place_groups
 
 TOPK_SCHEMA = "doc_id long, score double, matched int"
 BATCH_TOPK_SCHEMA = "query_id int, doc_id long, score double, matched int"
@@ -151,37 +156,40 @@ def _no_hits(spark, schema: str = TOPK_SCHEMA) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# the posting-scan skeleton every scorer shares: scan -> one part_id
-# exchange -> per-partition kernel -> local top-k -> global merge
+# the posting-scan skeleton every scorer shares: bucketed scan ->
+# per-shard kernel in the scan's stage -> local top-k -> global merge
 # ---------------------------------------------------------------------
+
+_unbucketed_reported = False
+
 
 def _posting_groups(
     index: InvertedIndex, cond: Column, cols: tuple[str, ...]
 ) -> GroupedData:
     """The posting blocks matching ``cond`` (field/term predicates are
-    pushed to the Parquet scan), projected to ``cols`` and grouped by
-    index partition behind exactly ONE exchange.
+    pushed to the Parquet scan), projected to ``cols`` (which name
+    ``part_id``) and grouped by ``bkey`` with NO exchange.
 
-    The exchange (``place_groups``) puts shard ``p`` on task
-    ``p mod T``, ``T = min(shards, defaultParallelism)``: one wave of
-    Python tasks, each assigned at most ``ceil(shards / T)`` shards.
-    The scoring applyInPandas is CPU-bound, not byte-bound: AQE's
-    byte-targeted partition coalescing (64 MB advisory) would fuse
-    these small-but-expensive groups into a few fat tasks and leave
-    most cores idle (measured: 4.8/8 busy cores coalesced vs 7.4/8
-    pinned, a 1.4x round-time win at local[8] / 500k docs —
-    BENCH/BASELINE.md). A ``REPARTITION_BY_NUM`` exchange is exempt
-    from that coalescing and satisfies the groupBy's required
-    distribution, so the plan still carries exactly ONE exchange."""
-    blocks = index.postings.filter(cond).select(*cols)
-    return _by_shard(index, blocks)
-
-
-def _by_shard(index: InvertedIndex, df: DataFrame) -> GroupedData:
-    """``df`` grouped by ``part_id`` behind the scorer's shard placement;
-    both sides of a cogroup go through here so neither is re-shuffled."""
-    return place_groups(df, "part_id", index.num_partitions()).groupBy(
-        "part_id")
+    The blocks are a table bucketed by ``bkey`` (index/builder.py
+    ``bucket_spec``): shard p sits in bucket p mod B, B = min(shards,
+    cores at build time), so the scan is already partitioned the way
+    ``groupBy("bkey")`` needs — one wave of B Python tasks, each holding
+    at most ``ceil(shards / B)`` shards, in the scan's own stage. With
+    no exchange, AQE's byte-targeted coalescing cannot fuse these
+    small-but-CPU-bound groups into a few fat tasks either (measured
+    before the layout: 4.8/8 busy cores coalesced vs 7.4/8 pinned at
+    local[8] / 500k docs — BENCH/BASELINE.md). The kernel still runs
+    once per shard (``_scored_scan``). A scan that is
+    not bucketed (an index without a spec, a MultiIndex whose members
+    differ) carries ``bkey = part_id``, and Spark's own exchange groups
+    it: the same rows, one stage more — reported once per process."""
+    global _unbucketed_reported
+    if index.bucketing is None and not _unbucketed_reported:
+        _unbucketed_reported = True
+        print(f"executor: the postings of {index.path} are not "
+              "shard-bucketed; scorers group them behind an exchange "
+              "(reported once)", file=sys.stderr)
+    return index.postings.filter(cond).select("bkey", *cols).groupBy("bkey")
 
 
 def _topk_merge(local: DataFrame, k: int | None) -> DataFrame:
@@ -201,21 +209,23 @@ def _scored_scan(
     allowed: DataFrame | None = None,
     schema: str = TOPK_SCHEMA,
 ) -> DataFrame:
-    """Run ``kernel(pdf, ids)`` (one partition's blocks -> its local
-    top-k in ``schema``) over the shared posting scan, then merge
-    globally (``k=None``: no merge). ``ids`` is None unless
-    ``allowed`` is given.
+    """Run ``kernel(pdf, ids)`` (one shard's blocks -> its local top-k
+    in ``schema``) over the shared posting scan, then merge globally
+    (``k=None``: no merge). ``ids`` is None unless ``allowed`` is
+    given.
 
     ``allowed`` (a DataFrame with a ``doc_id`` column) restricts
     scoring to docs passing a filter clause WITHOUT giving up top-k
     pruning — the Spark shape of the reference's "filter bitset
     intersected inside the collector while WAND prunes"
     (search/query/TopDocsCollectorContext.java:202-206). The ids are
-    routed to their index partition with the builder's hash (one
-    in-plan shuffle of bare longs) and cogrouped with the posting
-    blocks; the kernel receives its partition's allowlist as sorted
-    int64 ``ids``. ONE job, no driver round-trip, executor memory
-    bounded at any filter size.
+    routed to their shard and its ``bkey`` with the builder's
+    expressions and cogrouped with the posting blocks on ``bkey``
+    alone: only the allowlist side is exchanged (to the scan's
+    ``hashpartitioning(bkey, B)``); grouping on (bkey, part_id) would
+    shuffle the blocks too. The kernel receives its shard's allowlist
+    as sorted int64 ``ids``. ONE job, no driver round-trip, executor
+    memory bounded at any filter size.
 
     Measured at 1M docs / local[16] (BENCH/BASELINE.md): the cogroup,
     a broadcast id array and the score-all + semi-join plan are all
@@ -226,18 +236,30 @@ def _scored_scan(
     1000-executor scale, where the k=None plan's per-shard full
     emission and disabled pruning dominate."""
     groups = _posting_groups(index, cond, cols)
+
+    def per_shard(pdf: pd.DataFrame, ids: dict | None) -> pd.DataFrame:
+        """The kernel once per shard of a bucket's blocks, so each
+        shard's local top-k is scored over its own blocks only; with an
+        allowlist, only shards holding allowed ids are scored."""
+        outs = [kernel(g, None if ids is None else ids[p])
+                for p, g in pdf.groupby("part_id", sort=False)
+                if ids is None or p in ids]
+        outs = [o for o in outs if not o.empty]
+        if not outs:
+            return _empty_topk(schema)
+        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
+
     if allowed is None:
-        local = groups.applyInPandas(
-            lambda pdf: kernel(pdf, None), schema=schema)
+        local = groups.applyInPandas(lambda pdf: per_shard(pdf, None),
+                                     schema=schema)
         return _topk_merge(local, k)
 
     def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
-        if ids.size == 0 or left.empty:
-            return _empty_topk(schema)
-        return kernel(left, ids)
+        return per_shard(left, {
+            p: np.sort(v.to_numpy(dtype=np.int64))
+            for p, v in right.groupby("part_id", sort=False)["doc_id"]})
 
-    local = groups.cogroup(_by_shard(index, index.route_ids(allowed))) \
+    local = groups.cogroup(index.route_ids(allowed).groupBy("bkey")) \
         .applyInPandas(score_cogroup, schema=schema)
     return _topk_merge(local, k)
 
@@ -840,7 +862,7 @@ def _phrase_kernel(
     completion.
 
     Plan: the shared posting-scan skeleton over the blocks of every
-    phrase term (one scan, one part_id exchange), then per candidate
+    phrase term (one bucketed scan, no exchange), then per candidate
     doc a position-list intersection: end = pos(h0); end = (end+1) ∩
     pos(h1); ...; freq = |(end+1) ∩ pos(last)|. Candidates are docs
     holding every head term (the conjunction prunes before any
@@ -979,7 +1001,7 @@ def synonym_match_topk(
     group; groups sum like bool-OR clauses.
 
     Same physical plan as match_topk (the shared posting-scan skeleton):
-    one pushed-down block scan of all member terms, one part_id
+    one pushed-down bucketed block scan of all member terms, no
     exchange, local top-k + global merge. BM25 similarity only."""
     params = params or BM25Params()
     _bm25_only(params, "synonym_match_topk")
@@ -1134,7 +1156,7 @@ def phrase_prefix_topk(
 
     SINGLE-PASS plan (``_phrase_scan`` with the expansions as the last
     position): the posting blocks of the prefix terms AND every
-    expansion are loaded once — one scan, one part_id exchange (round 1
+    expansion are loaded once — one bucketed scan, no exchange (round 1
     unioned up to max_expansions separate phrase plans: 50x scan + 50x
     shuffle of the same prefix blocks). BM25 similarity only."""
     params = params or BM25Params()
@@ -1162,7 +1184,7 @@ def multi_match_topk(
 ) -> DataFrame:
     """multi_match (MultiMatchQueryBuilder.Type) over ``{field: analyzed
     terms}`` as ONE scored leaf: one scan pushing sorted ``field`` and
-    ``term`` IN lists, one part_id exchange and one kernel that runs
+    ``term`` IN lists read with no exchange, and one kernel that runs
     each field's BM25 (``_make_scorer``) or phrase (``_phrase_kernel``)
     kernel on its shard and combines the fields per doc — exact
     locally, as a doc's postings for every field share its shard.
@@ -1172,7 +1194,11 @@ def multi_match_topk(
     most_fields the sum. cross_fields scores each (field, term) with
     the term's df blended to its max over the fields
     (BlendedTermQuery), takes max + tie·(sum − max) per term and sums
-    the terms. best_fields at tie 0 keeps pruning: each field
+    the terms — within each group of fields indexed with one analyzer
+    (``index.analyzer``); the groups' scores combine as a dis_max,
+    max + tie·(sum − max), as in the reference's
+    MultiMatchQueryParser.buildCrossFieldQuery, so a one-field group is
+    that field's plain match. best_fields at tie 0 keeps pruning: each field
     keeps its shard top-k, which holds every doc of the max's shard
     top-k (the argument of ``api._max_disjunction_leaves``); the other
     types score exhaustively and cut after combining. ``allowed``
@@ -1185,8 +1211,9 @@ def multi_match_topk(
     if phrase:
         _bm25_only(params, f"multi_match type={mtype}")
     tie = 1.0 if mtype == "most_fields" else float(tie_breaker)
-    # {field: (scan terms, avgdl, [(group, kernel)])}; the kernels of one
-    # group (a term for cross_fields, else every field) combine first
+    # {field: (scan terms, avgdl, [((group, term), kernel)])}: the kernels
+    # of one (group, term) fold first, then each group sums its terms,
+    # then the groups fold. Only cross_fields has more than one key.
     units: dict = {}
     if phrase:
         for f, terms in field_terms.items():
@@ -1197,25 +1224,32 @@ def multi_match_topk(
             kern = _phrase_kernel(index, f, list(terms[:-1]), lasts, None,
                                   params, slop if mtype == "phrase" else 0)
             if kern is not None:
-                units[f] = (kern[0], None, [(0, kern[1])])
+                units[f] = (kern[0], None, [((0, 0), kern[1])])
     looked = {} if phrase else {
         f: r for f, terms in field_terms.items()
         if (r := _term_rows(index, f, sorted(set(terms)))) is not None}
-    if mtype == "cross_fields" and looked:
-        n_docs = max(n for _, n, _ in looked.values())
-        df_max: dict[str, int] = {}
-        for by_term, _, _ in looked.values():
-            for t, r in by_term.items():
-                df_max[t] = max(df_max.get(t, 0), int(r["df"]))
-        for f, (by_term, _, avgdl) in looked.items():
-            blended = {t: {"df": df_max[t], "max_tf": r["max_tf"],
-                           "min_dl": r["min_dl"]} for t, r in by_term.items()}
-            stats = _stats_from_rows(list(dict.fromkeys(field_terms[f])),
-                                     blended, n_docs, avgdl, params)
-            if stats:
-                units[f] = ([s.term for s in stats], avgdl, [
-                    (s.term, _make_scorer([s], avgdl, params, None, "or", 1,
-                                          False)) for s in stats])
+    if mtype == "cross_fields":
+        groups: dict[str, list[str]] = {}
+        for f in looked:
+            groups.setdefault(index.analyzer(f), []).append(f)
+        for g, group in enumerate(groups.values()):
+            members = {f: looked[f] for f in group}
+            n_docs = max(n for _, n, _ in members.values())
+            df_max: dict[str, int] = {}
+            for by_term, _, _ in members.values():
+                for t, r in by_term.items():
+                    df_max[t] = max(df_max.get(t, 0), int(r["df"]))
+            for f, (by_term, _, avgdl) in members.items():
+                blended = {t: {"df": df_max[t], "max_tf": r["max_tf"],
+                               "min_dl": r["min_dl"]}
+                           for t, r in by_term.items()}
+                stats = _stats_from_rows(list(dict.fromkeys(field_terms[f])),
+                                         blended, n_docs, avgdl, params)
+                if stats:
+                    units[f] = ([s.term for s in stats], avgdl, [
+                        ((g, s.term), _make_scorer([s], avgdl, params, None,
+                                                   "or", 1, False))
+                        for s in stats])
     elif not phrase:
         pruned = mtype == "best_fields" and tie == 0.0
         for f, (by_term, n_docs, avgdl) in looked.items():
@@ -1223,24 +1257,29 @@ def multi_match_topk(
                               k if pruned else None, operator,
                               minimum_should_match, prune=True)
             if q is not None:
-                units[f] = (q[1], avgdl, [(0, q[0])])
+                units[f] = (q[1], avgdl, [((0, 0), q[0])])
     if not units:
         return _no_hits(index.spark)
 
     def score_fields(pdf: pd.DataFrame, ids) -> pd.DataFrame:
         by_field = pdf.groupby("field", sort=False).indices
-        groups: dict = {}
+        by_key: dict = {}
         for f, (_, avgdl, kernels) in units.items():
             if f in by_field:
                 sub = pdf.iloc[by_field[f]]
                 src = sub if phrase else _term_view(sub, avgdl, params)
-                for g, kernel in kernels:
-                    groups.setdefault(g, []).append(kernel(src, ids))
-        folded = [_fold(*(np.concatenate([h[c].to_numpy() for h in hits])
-                          for c in ("doc_id", "score", "matched")), tie)
-                  for hits in groups.values()]
+                for key, kernel in kernels:
+                    by_key.setdefault(key, []).append(kernel(src, ids))
+        per_group: dict = {}
+        for (g, _), hits in by_key.items():
+            per_group.setdefault(g, []).append(_fold(*(
+                np.concatenate([h[c].to_numpy() for h in hits])
+                for c in ("doc_id", "score", "matched")), tie))
+        folded = [f[0] if len(f) == 1 else
+                  _fold(*map(np.concatenate, zip(*f)), 1.0)
+                  for f in per_group.values()]
         if len(folded) > 1:
-            folded = [_fold(*map(np.concatenate, zip(*folded)), 1.0)]
+            folded = [_fold(*map(np.concatenate, zip(*folded)), tie)]
         if not folded:
             return _empty_topk()
         return _local_topk(*folded[0], k)

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from elasticsearch_spark.analysis import ANALYZERS
-from elasticsearch_spark.index.builder import InvertedIndex, index_meta
+from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search.bm25 import BM25Params
 from elasticsearch_spark.search.executor import _no_hits, match_topk
 
@@ -65,7 +65,7 @@ def more_like_this(
         raise ValueError("more_like_this needs exactly one of "
                          "like_id / like_text")
     text_col = text_col or field
-    analyzer = index_meta(index.path)["fields"].get(field, "standard")
+    analyzer = index.analyzer(field)
     if like_text is not None:
         source_text = like_text
     else:

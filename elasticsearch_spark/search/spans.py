@@ -23,8 +23,8 @@ Docs match when >=1 span survives; like the engine's intervals query
 this executes in FILTER context (constant score = boost, so the
 (score desc, doc_id asc) merge orders by doc_id asc). Physical plan:
 the posting-scan skeleton every scorer shares (executor._scored_scan)
-— blocks of the tree's terms, one part_id exchange pinned to the shard
-count, an applyInPandas position evaluation over the shared
+— the shard-bucketed blocks of the tree's terms read with no exchange,
+an applyInPandas position evaluation over the shared
 ``_position_lists`` decode, local top-k and global merge.
 """
 
@@ -255,7 +255,7 @@ def span_match(
     boost: float = 1.0,
 ) -> DataFrame:
     """Docs with >=1 surviving span (constant score = boost, doc_id asc).
-    One pushed-down block scan of the tree's terms, one part_id exchange
+    One pushed-down bucketed block scan of the tree's terms, no exchange
     (the shared posting-scan skeleton)."""
     if _has_span_multi(tree):
         tree = rewrite_span_multi(index, field, tree)

@@ -45,6 +45,7 @@ from elasticsearch_spark.index.builder import (
     tokenize_docs,
     write_index_meta,
     write_segment,
+    writer_spec,
 )
 
 
@@ -66,13 +67,27 @@ def ingest_batch(
     from elasticsearch_spark.ops.ccr import assert_writable
 
     assert_writable(index_dir)
+    spark = batch_df.sparkSession
+    spec, recorded = writer_spec(spark, index_dir, num_partitions)
+    if not recorded:
+        # a segment shares the scan's buckets only with blocks of its
+        # own spec, so an index whose blocks carry none must be
+        # compacted or rebuilt first; an index with no blocks yet names
+        # the spec before the segment is written (a crash after that
+        # leaves a meta naming the spec of the segment it was writing)
+        idx = InvertedIndex(index_dir, spark)
+        if idx.block_dirs():
+            raise ValueError(
+                f"{index_dir}: its blocks carry no {num_partitions}-shard "
+                "bucket spec; compact_index or rebuild it before ingesting")
+        write_index_meta(index_dir, {**idx._meta(), "bucketing": spec})
     write_segment(
         tokenize_docs(batch_df.withColumn("part_id", _part_id(num_partitions)),
                       fields),
         os.path.join(index_dir, "segments", f"batch={batch_id}"),
-        num_partitions, list(fields),
+        num_partitions, list(fields), spec,
     )
-    refresh_stats(batch_df.sparkSession, index_dir)
+    refresh_stats(spark, index_dir)
     _write_json_atomic(
         os.path.join(index_dir, "checkpoints", f"batch-{batch_id}.json"),
         {"batch_id": batch_id, "status": "done",
@@ -152,10 +167,13 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     gen = int(meta.get("postings_gen", 0)) + 1
     old_base = meta.get("postings_dir", "postings")
     new_base = f"postings_gen_{gen}"
-    # carry the per-(part, field) doc-roster stats rows through the merge
+    # carry the per-(part, field) doc-roster stats rows through the merge;
+    # the merge rewrites every live block, so an index without a bucket
+    # spec takes one here
+    spec, _ = writer_spec(spark, index_dir, int(meta["num_partitions"]))
     write_segment(
         decoded_rows(idx, meta["fields"]), os.path.join(index_dir, new_base),
-        int(meta["num_partitions"]), list(meta["fields"]),
+        int(meta["num_partitions"]), list(meta["fields"]), spec,
         roster=idx.stats_rows,
     )
     import shutil
@@ -169,6 +187,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     new_meta = dict(meta)
     new_meta["postings_gen"] = gen
     new_meta["postings_dir"] = new_base
+    new_meta["bucketing"] = spec
     new_meta["folded_batches"] = sorted(
         {str(b) for b in meta.get("folded_batches", [])} | set(folding)
     )

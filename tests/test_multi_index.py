@@ -8,6 +8,7 @@ from elasticsearch_spark.analysis import analyze
 from elasticsearch_spark.index.builder import (
     MultiIndex, build_index, load_index, load_indices,
 )
+from elasticsearch_spark.search.api import search
 from elasticsearch_spark.search.executor import match_topk
 
 SF = "/root/testdata/sf0.001"
@@ -59,6 +60,26 @@ def test_multi_index_routing_guard(spark, three, tmp_path):
     assert uni.route_ids(ids).count() == 2
     with pytest.raises(ValueError):
         MultiIndex([])
+
+
+def test_multi_index_search_analyzes_like_its_members(spark, three,
+                                                      tmp_path):
+    """search() analyzes a match leaf over a MultiIndex with the
+    analyzer its members index the field with, and ranks as the merged
+    build; members that index the field differently refuse."""
+    a, b, m = three
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "text")
+    q = {"match": {"text": "table scan merge data"}}
+    got = search(load_indices(spark, [a, b]), docs, q, k=12).collect()
+    want = search(load_index(spark, m), docs, q, k=12).collect()
+    assert got and [(r["doc_id"], round(r["score"], 9)) for r in got] == \
+        [(r["doc_id"], round(r["score"], 9)) for r in want]
+    other = str(tmp_path / "code")
+    build_index(docs.limit(50), other, fields={"text": "code"},
+                num_partitions=4, input_snapshot="code")
+    with pytest.raises(ValueError, match="analysis"):
+        search(load_indices(spark, [a, other]), docs, q, k=12)
 
 
 def test_aliases(spark, three, tmp_path):

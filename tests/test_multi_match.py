@@ -136,3 +136,32 @@ def test_fetch_orders_without_range_exchange(spark, index, docs):
         got = fetch(topk, frame).collect()
         assert got == want
     assert len(fetch(topk, dup).collect()) == 11
+
+
+@pytest.mark.parametrize("tie", [0.0, 0.3])
+def test_cross_fields_groups_fields_by_analyzer(index, docs, tie):
+    """cross_fields over fields with different analyzers analyzes the
+    query per analyzer and combines the groups as a dis_max (reference
+    MultiMatchQueryParser.buildCrossFieldQuery): over ``text``
+    (ascii_word) and ``text_en`` (english_light, which indexes
+    ``window``), each group is one field, so the query scores exactly as
+    the dis_max of the two fields' plain matches with the same tie."""
+    from elasticsearch_spark.search.api import _scored_df, search
+
+    params = BM25Params(quantize_norms=False)
+    text = "windows filtering"
+    got = [
+        (r["doc_id"], round(r["score"], 6))
+        for r in search(index, docs, {"multi_match": {
+            "query": text, "fields": ["text", "text_en"],
+            "type": "cross_fields", "tie_breaker": tie}}, k=10,
+            params=params).collect()
+    ]
+    want = [
+        (r["doc_id"], round(r["score"], 6))
+        for r in _scored_df(index, {"dis_max": {"tie_breaker": tie, "queries": [
+            {"match": {"text": text}}, {"match": {"text_en": text}}]}},
+            params).orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+        .collect()
+    ]
+    assert got and got == want

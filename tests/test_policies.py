@@ -3,8 +3,9 @@
   - No per-row Python UDFs anywhere in the engine (input_hint: pandas/
     Arrow-batched only) — enforced by scanning the source.
   - Plan shape: query-term predicates must reach the Parquet scan
-    (PushedFilters), and the scorer shuffle must be a single exchange
-    on part_id — regression guards for the physical plan.
+    (PushedFilters), and no exchange may sit between the bucketed
+    postings scan and a scorer's pandas kernel — regression guards for
+    the physical plan.
 """
 
 from __future__ import annotations
@@ -16,9 +17,54 @@ import pytest
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "elasticsearch_spark")
-# the shard placement exchange (spread.place_groups on part_id)
-PART_EXCHANGE = ("Exchange shufflepartitionidpassthrough("
-                 "direct_shuffle_partition_id(part_id")
+KERNELS = ("FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The lines of the plan tree below node ``lines[i]``."""
+    out = []
+    for ln in lines[i + 1:]:
+        if _depth(ln) <= _depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def _children(lines: list[str], i: int) -> list[list[str]]:
+    """Each child subtree of node ``lines[i]``, in plan order."""
+    below = _subtree(lines, i)
+    if not below:
+        return []
+    d = _depth(below[0])
+    out: list[list[str]] = []
+    for ln in below:
+        if _depth(ln) == d:
+            out.append([])
+        out[-1].append(ln)
+    return out
+
+
+def _is_exchange(line: str) -> bool:
+    return "Exchange" in line or "AQEShuffleRead" in line
+
+
+def _exchanges_below_kernels(plan: str) -> list[str]:
+    """Every exchange below a scorer kernel's postings input: the whole
+    input of a FlatMapGroupsInPandas, the first (blocks) side of a
+    FlatMapCoGroupsInPandas. Asserts the plan has a kernel."""
+    lines = plan.splitlines()
+    kernels = [i for i, ln in enumerate(lines) if any(k in ln for k in KERNELS)]
+    assert kernels, plan[:3000]
+    bad = []
+    for i in kernels:
+        side = (_children(lines, i)[0] if "CoGroups" in lines[i]
+                else _subtree(lines, i))
+        bad += [ln.strip() for ln in side if _is_exchange(ln)]
+    return bad
 
 
 def test_no_row_at_a_time_udfs():
@@ -77,16 +123,18 @@ def test_term_filter_pushdown(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert re.search(r"In\(term, \[.*scan.*table.*\]\)|In\(term, \[.*table.*scan.*\]\)", plan), plan[:2000]
-    # exactly one exchange feeds the scorer (the part_id shuffle)
-    assert plan.count(PART_EXCHANGE) == 1, plan[:2000]
+    # the bucketed scan feeds the scorer with no exchange
+    assert "Bucketed: true" in plan, plan[:2000]
+    assert not _exchanges_below_kernels(plan), plan[:2000]
     # column pruning: positions are not read by the match scorer
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "positions" not in m.group(1), m.group(1)
 
 
 def test_phrase_prefix_single_pass(spark, tmp_path):
-    """phrase_prefix must be ONE scan + ONE part_id exchange — round 1
-    unioned up to 50 per-expansion phrase plans (50x scan + shuffle)."""
+    """phrase_prefix must be ONE scan feeding its kernel with no
+    exchange — round 1 unioned up to 50 per-expansion phrase plans (50x
+    scan + shuffle)."""
     from elasticsearch_spark.index.builder import build_index
     from elasticsearch_spark.search.bm25 import BM25Params
     from elasticsearch_spark.search.executor import phrase_prefix_topk
@@ -100,7 +148,7 @@ def test_phrase_prefix_single_pass(spark, tmp_path):
     df = phrase_prefix_topk(fresh, "text", ["key", "ord"], k=10,
                             params=BM25Params(quantize_norms=False))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count(PART_EXCHANGE) == 1, plan[:2000]
+    assert not _exchanges_below_kernels(plan), plan[:2000]
     assert plan.count("Scan parquet") == 1
 
 
@@ -143,6 +191,21 @@ def test_filtered_search_keeps_pruning_plan(spark, index):
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the scored side must NOT be semi-joined against the filter
     assert "LeftSemi" not in plan, plan[:3000]
+    # the cogroup is on bkey alone: the blocks side keeps the bucketed
+    # scan's partitioning (no exchange) and only the allowlist takes one
+    # exchange, onto the scan's buckets (grouping on (bkey, part_id)
+    # would shuffle both sides)
+    assert not _exchanges_below_kernels(plan), plan
+    lines = plan.splitlines()
+    cog = next(i for i, ln in enumerate(lines)
+               if "FlatMapCoGroupsInPandas" in ln)
+    blocks, ids = _children(lines, cog)
+    assert any("InMemoryTableScan" in ln or "Bucketed: true" in ln
+               for ln in blocks), plan
+    exchanges = [ln for ln in ids if "Exchange" in ln]
+    b = index.bucketing["buckets"]
+    assert len(exchanges) == 1 and re.search(
+        rf"Exchange hashpartitioning\(bkey#\d+, {b}\)", exchanges[0]), plan
     # match_topk itself routes the allowlist into a cogroup
     allowed = docs.filter(docs.lang == "en").select("doc_id")
     big = match_topk(index, "text", ["query", "data"], k=10,
@@ -268,12 +331,15 @@ def _pin_cases():
 
 @pytest.mark.parametrize("scorer", sorted(_pin_cases()))
 def test_scorer_exchange_pinned_to_shard_count(spark, index, scorer):
-    """Every posting scorer feeds its pandas kernel through exactly one
-    ``part_id`` placement exchange over ``min(shards, cores)`` tasks,
-    which AQE may not coalesce: the scorer stage is CPU-bound, so a
-    byte-coalesced read would fuse the shard groups into a few fat
-    tasks. Checked on the AQE final plan after execution, with
-    coalescing switched on."""
+    """Every posting scorer's parallelism is pinned by the index's
+    bucketing, not by an exchange: its pandas kernel reads the
+    shard-bucketed scan directly — no ``Exchange`` or ``AQEShuffleRead``
+    anywhere below it — over all B = min(shards, cores at build)
+    buckets, which AQE cannot coalesce. Checked on the AQE final plan
+    after execution, with coalescing switched on. (Under a filter, see
+    ``test_filtered_search_keeps_pruning_plan``.)"""
+    from elasticsearch_spark.index.builder import bucket_spec
+
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "true")
@@ -285,22 +351,13 @@ def test_scorer_exchange_pinned_to_shard_count(spark, index, scorer):
         spark.conf.set(key, before)
     final = plan.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final, final[:3000]
-    assert final.count(PART_EXCHANGE) == 1, final
-    pins = re.findall(
-        r"Exchange shufflepartitionidpassthrough\("
-        r"direct_shuffle_partition_id\(part_id#\d+\), (\d+)\), "
-        r"REPARTITION_BY_NUM",
-        final)
-    want = min(index.num_partitions(), spark.sparkContext.defaultParallelism)
-    assert pins == [str(want)], final
-    lines = final.splitlines()
-    kernel = next(i for i, ln in enumerate(lines)
-                  if "FlatMapGroupsInPandas" in ln)
-    exchange = next(i for i, ln in enumerate(lines) if PART_EXCHANGE in ln)
-    assert kernel < exchange, final
-    # only the group sort and projections sit between the two
-    assert not any("AQEShuffleRead" in ln or "Exchange" in ln
-                   for ln in lines[kernel + 1:exchange]), final
+    assert not _exchanges_below_kernels(final), final
+    spec = index.bucketing
+    p = index.num_partitions()
+    assert spec == bucket_spec(p, spec["buckets"]) and spec["buckets"] <= p
+    b = spec["buckets"]
+    assert re.findall(r"SelectedBucketsCount: (\d+ out of \d+)", final) == [
+        f"{b} out of {b}"], final
 
 
 def test_phrase_pushes_sorted_terms(spark, index):
@@ -471,10 +528,11 @@ def test_multi_match_is_one_scored_leaf(spark, index, mtype, filtered):
     kernel = "FlatMapCoGroupsInPandas" if filtered else "FlatMapGroupsInPandas"
     assert final.count(kernel) == 1, final
     assert final.count("InPandas") == 1, final
-    # the allowlist side of a cogroup takes the same placement exchange
-    assert final.count(PART_EXCHANGE) == 1 + filtered, final
-    for absent in ("hashpartitioning", "rangepartitioning", "MapInPandas",
-                   "LeftSemi"):
+    # the blocks reach the kernel with no exchange; only the allowlist
+    # side of a cogroup is hash-exchanged, onto the scan's buckets
+    assert not _exchanges_below_kernels(final), final
+    assert final.count("hashpartitioning") == filtered, final
+    for absent in ("rangepartitioning", "MapInPandas", "LeftSemi"):
         assert absent not in final, (absent, final)
 
 
@@ -488,9 +546,10 @@ def _tasks(rows, key) -> dict[int, set]:
 
 @pytest.mark.parametrize("parts", [4, 8, 16])
 def test_scorer_shards_fill_one_wave(spark, tmp_path, parts):
-    """The scorer exchange places shard p on task p mod T, T = min(P,
-    cores): T non-empty tasks, none with more than ceil(P / T) shards.
-    (A hash repartition on part_id puts 8 shards on 5 tasks, 3 on one.)"""
+    """The bucketed scan puts shard p in bucket p mod B, B = min(P,
+    cores): B non-empty scorer tasks, none with more than ceil(P / B)
+    shards. (A hash repartition on part_id puts 8 shards on 5 tasks, 3
+    on one.)"""
     from pyspark.sql import functions as F
 
     from elasticsearch_spark.index.builder import build_index
@@ -504,15 +563,17 @@ def test_scorer_shards_fill_one_wave(spark, tmp_path, parts):
     )
     rows = (
         _posting_groups(idx, F.col("field") == "text", ("part_id",))
-        .applyInPandas(lambda pdf: pdf.head(1), schema="part_id int")
+        .applyInPandas(lambda pdf: pdf[["part_id"]].drop_duplicates(),
+                       schema="part_id int")
         .select(F.spark_partition_id().alias("task"), "part_id")
         .collect()
     )
     tasks = _tasks(rows, lambda r: r["part_id"])
-    t = min(parts, spark.sparkContext.defaultParallelism)
+    b = min(parts, spark.sparkContext.defaultParallelism)
+    assert idx.bucketing["buckets"] == b
     assert sorted(p for g in tasks.values() for p in g) == list(range(parts))
-    assert len(tasks) == t, tasks
-    assert max(len(g) for g in tasks.values()) <= -(-parts // t), tasks
+    assert len(tasks) == b, tasks
+    assert max(len(g) for g in tasks.values()) <= -(-parts // b), tasks
 
 
 def test_encode_groups_fill_one_wave(spark, tmp_path):

@@ -36,16 +36,29 @@ def main() -> int:
     plan = buf.getvalue()
     assert "In(term" in plan, "term filter not pushed down"
     assert "TakeOrderedAndProject" in plan, "top-k not a TakeOrdered"
-    # every posting scorer runs on the one scan -> part_id exchange ->
-    # kernel skeleton
+    # every posting scorer runs on the one skeleton: the shard-bucketed
+    # scan feeds the kernel with zero exchanges below it
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
     for name, df in (
+        ("match_topk", topk),
         ("phrase_topk", phrase_topk(idx, "content", ["public", "static"], k=5)),
         ("multi_term_topk", multi_term_topk(idx, "content", "prefix", "pars")),
     ):
         df.collect()
-        n = df._jdf.queryExecution().executedPlan().toString() \
-            .split("== Initial Plan ==")[0].count("shufflepartitionidpassthrough")
-        assert n == 1, f"{name}: {n} shard exchanges"
+        lines = df._jdf.queryExecution().executedPlan().toString() \
+            .split("== Initial Plan ==")[0].splitlines()
+        at = next(i for i, ln in enumerate(lines)
+                  if "FlatMapGroupsInPandas" in ln)
+        below = []
+        for ln in lines[at + 1:]:
+            if depth(ln) <= depth(lines[at]):
+                break
+            below.append(ln)
+        n = sum("Exchange" in ln or "AQEShuffleRead" in ln for ln in below)
+        assert n == 0 and any("Bucketed: true" in ln for ln in below), \
+            f"{name}: {n} exchanges below the kernel"
     # a filtered multi_match is one scored leaf: its allowlist enters
     # one kernel for all fields, never a semi-join
     from elasticsearch_spark.search.api import search
