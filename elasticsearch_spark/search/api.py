@@ -1,21 +1,24 @@
 """Top-level search API: ES-style query dict -> top-k hits DataFrame.
 
 Composes the two executors:
-  - scoring context -> inverted-index scorers, one (doc_id, score)
-    DataFrame per scored leaf (``LEAF_KINDS``: match, term, match_phrase
-    and multi_match, each ONE posting scorer — a multi_match combines
-    its fields per shard inside its kernel, executor.multi_match_topk),
-    combined per the reference's semantics (BoolQueryBuilder: score =
-    sum of matching scored clauses; DisMaxQueryBuilder: max +
-    tie_breaker * rest; FunctionScoreQueryBuilder arithmetic;
-    ConstantScoreQueryBuilder boost).
+  - scoring context -> one query tree per request (``_tree``): match,
+    term, match_phrase and multi_match leaves (a multi_match rewritten
+    into per-field leaves, executor.multi_match_tree) under bool,
+    dis_max, constant_score and function_score weight nodes with the
+    reference's semantics (BoolQueryBuilder: score = sum of matching
+    scored clauses; DisMaxQueryBuilder: max + tie_breaker * rest;
+    ConstantScoreQueryBuilder boost; a boost or weight scales). The
+    whole tree is ONE posting scan and ONE kernel that scores it per
+    shard, as the reference runs the rewritten Query inside each shard's
+    query phase (executor.tree_topk).
   - filter context -> dsl.compile_filter native predicates applied to
-    the docs table; the surviving doc ids are pushed into every leaf
-    scorer as an allowlist BEFORE the top-k cut (ES filter clauses run
+    the docs table; the surviving doc ids are pushed into the tree's
+    kernel as an allowlist BEFORE the top-k cut (ES filter clauses run
     before collection).
 
-The global cut is orderBy(score desc, doc_id asc).limit(k) — Catalyst
-TakeOrderedAndProject == the coordinator's TopDocs.merge
+function_score functions and boosting join the scored docs with the
+docs table. The global cut is orderBy(score desc, doc_id asc).limit(k)
+— Catalyst TakeOrderedAndProject == the coordinator's TopDocs.merge
 (action/search/SearchPhaseController.java:144-208).
 """
 
@@ -27,18 +30,15 @@ from pyspark.sql import DataFrame, functions as F
 
 from elasticsearch_spark.analysis import analyze
 from elasticsearch_spark.index.builder import InvertedIndex
-from elasticsearch_spark.search import dsl
+from elasticsearch_spark.search import dsl, executor as ex
 from elasticsearch_spark.search.bm25 import BM25Params
-from elasticsearch_spark.search.executor import (
-    fetch, match_topk, multi_match_topk, phrase_topk)
+from elasticsearch_spark.search.executor import fetch, match_topk
 
 SCORED_KINDS = {
     "match", "match_phrase", "multi_match", "bool", "dis_max",
     "constant_score", "function_score", "match_all", "term_scored",
     "boosting",
 }
-# the scored leaves _leaf evaluates: one posting scorer each
-LEAF_KINDS = ("match", "term_scored", "match_phrase", "multi_match")
 
 def _is_pure_filter(query: dict[str, Any]) -> bool:
     """True when the query carries NO index-scored clause anywhere, i.e.
@@ -167,88 +167,44 @@ def _match_terms(index: InvertedIndex, field: str, spec: Any) -> tuple[list[str]
     return terms, operator, msm
 
 
-def _leaf(
-    index: InvertedIndex,
-    q: dict[str, Any],
-    k: int | None,
-    params: BM25Params,
-    allowed: DataFrame | None,
-) -> DataFrame:
-    """ONE scored leaf (``LEAF_KINDS``) -> DataFrame(doc_id, score): its
-    top-k, or every match when ``k`` is None, with the leaf's boost
-    applied and the filter's ``allowed`` id set pushed into its scorer,
-    where pruning stays active. The boost scales after the cut — a
-    positive constant keeps the leaf's order."""
-    kind, body = next(iter(q.items()))
-    field, spec = ((None, body) if kind == "multi_match"
-                   else next(iter(body.items())))
-    if kind == "multi_match":
-        # each field analyzes with its own analyzer
-        df = multi_match_topk(
-            index, {f: _match_terms(index, f, body["query"])[0]
-                    for f in body["fields"]},
-            body.get("type", "best_fields"), k=k,
-            tie_breaker=float(body.get("tie_breaker", 0.0)),
-            operator=body.get("operator", "or"),
-            minimum_should_match=int(body.get("minimum_should_match", 1)),
-            slop=int(body.get("slop", 0)), params=params, allowed=allowed)
-    elif kind == "term_scored":
-        # term query on an indexed text field: single un-analyzed term
-        value = spec["value"] if isinstance(spec, dict) else spec
-        df = match_topk(index, field, [value], k=k, params=params,
-                        allowed=allowed)
-    else:
-        terms, operator, msm = _match_terms(index, field, spec)
-        if kind == "match":
-            df = match_topk(
-                index, field, terms, k=k, operator=operator,
-                minimum_should_match=msm, params=params, allowed=allowed,
-            )
-        else:
-            slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
-            df = phrase_topk(index, field, terms, k=k, params=params,
-                             slop=slop, allowed=allowed)
-    df = df.select("doc_id", "score")
-    b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
-    if b != 1.0:
-        df = df.withColumn("score", F.col("score") * F.lit(b))
-    return df
-
-
-def _scored_df(
-    index: InvertedIndex,
-    query: dict[str, Any],
-    params: BM25Params,
-    allowed: DataFrame | None = None,
-) -> DataFrame:
-    """Evaluate a scoring-context clause -> DataFrame(doc_id, score),
-    ALL matching docs (k=None), scores already boosted. ``allowed``
-    (a DataFrame with a ``doc_id`` column — the enclosing filter's id
-    set) is pushed down to every LEAF scorer, so compound queries under
-    a filter restrict each posting scan/shuffle to filtered docs
-    instead of scoring the whole corpus and semi-joining at the top —
-    restriction commutes with max/sum/count combination, so scores are
-    unchanged."""
+def _tree(
+    index: InvertedIndex, query: dict[str, Any], params: BM25Params
+) -> ex.Node | None:
+    """Compile a scoring-context clause onto the executor's query tree
+    (None: no doc can match). A leaf analyzes its text with its field's
+    analyzer (each multi_match field with its own) and scales by its
+    ``boost``; a function_score scales by its ``weight``."""
     kind, body = next(iter(query.items()))
 
-    if kind in LEAF_KINDS:
-        return _leaf(index, query, None, params, allowed)
+    if kind == "multi_match":
+        return ex.scale_node(float(body.get("boost", 1.0)), ex.multi_match_tree(
+            index, {f: _match_terms(index, f, body["query"])[0]
+                    for f in body["fields"]},
+            body.get("type", "best_fields"),
+            float(body.get("tie_breaker", 0.0)), body.get("operator", "or"),
+            int(body.get("minimum_should_match", 1)),
+            int(body.get("slop", 0)), params))
+
+    if kind in ("match", "term_scored", "match_phrase"):
+        field, spec = next(iter(body.items()))
+        if kind == "term_scored":
+            # term query on an indexed text field: single un-analyzed term
+            value = spec["value"] if isinstance(spec, dict) else spec
+            node = ex.match_node(index, field, [value], params=params)
+        else:
+            terms, operator, msm = _match_terms(index, field, spec)
+            if kind == "match":
+                node = ex.match_node(index, field, terms, operator, msm, params)
+            else:
+                slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
+                node = ex.phrase_node(index, field, terms[:-1], terms[-1:],
+                                      params, slop)
+        b = float(spec.get("boost", 1.0)) if isinstance(spec, dict) else 1.0
+        return ex.scale_node(b, node)
 
     if kind == "dis_max":
-        tie = float(body.get("tie_breaker", 0.0))
-        subs = [
-            _scored_df(index, q, params, allowed=allowed)
-            .withColumnRenamed("score", "s")
-            for q in body["queries"]
-        ]
-        u = subs[0]
-        for d in subs[1:]:
-            u = u.unionByName(d)
-        agg = u.groupBy("doc_id").agg(
-            F.max("s").alias("best"), F.sum("s").alias("total")
-        )
-        score = F.col("best") + F.lit(tie) * (F.col("total") - F.col("best"))
-        return agg.select("doc_id", score.alias("score"))
+        return ex.max_node(float(body.get("tie_breaker", 0.0)), [
+            _tree(index, q, params) for q in body["queries"]])
 
     if kind == "bool":
         if body.get("must_not") or body.get("filter") or any(
@@ -260,95 +216,43 @@ def _scored_df(
             )
         must = [q for q in (body.get("must") or []) if next(iter(q)) in SCORED_KINDS]
         should = [q for q in (body.get("should") or []) if next(iter(q)) in SCORED_KINDS]
-        msm = int(body.get("minimum_should_match", 0 if must else 1)) if should else 0
-        parts: list[DataFrame] = []
-        for i, q in enumerate(must):
-            parts.append(
-                _scored_df(index, q, params, allowed=allowed)
-                .withColumn("is_must", F.lit(1))
-                .withColumn("clause", F.lit(i))
-            )
-        for j, q in enumerate(should):
-            parts.append(
-                _scored_df(index, q, params, allowed=allowed)
-                .withColumn("is_must", F.lit(0))
-                .withColumn("clause", F.lit(1000 + j))
-            )
-        if not parts:
+        if not must + should:
             raise ValueError("scored bool needs at least one scored clause")
-        u = parts[0]
-        for d in parts[1:]:
-            u = u.unionByName(d)
-        agg = u.groupBy("doc_id").agg(
-            F.sum("score").alias("score"),
-            F.sum("is_must").alias("n_must"),
-            F.sum(1 - F.col("is_must")).alias("n_should"),
-        )
-        cond = F.col("n_must") == F.lit(len(must))
-        if should and msm > 0:
-            cond = cond & (F.col("n_should") >= F.lit(msm))
-        return agg.filter(cond).select("doc_id", "score")
+        msm = int(body.get("minimum_should_match", 0 if must else 1)) if should else 0
+        return ex.bool_node([_tree(index, q, params) for q in must],
+                            [_tree(index, q, params) for q in should], msm)
 
     if kind == "constant_score":
-        b = float(body.get("boost", 1.0))
         inner = body["filter"]
-        ik = next(iter(inner))
-        if ik in SCORED_KINDS:
-            df = _scored_df(index, inner, params, allowed=allowed)
-            return df.select("doc_id", F.lit(b).alias("score"))
-        raise ValueError(
-            "constant_score over a pure filter needs the docs table; use search()"
-        )
+        if next(iter(inner)) not in SCORED_KINDS:
+            raise ValueError(
+                "constant_score over a pure filter needs the docs table; use search()"
+            )
+        return ex.const_node(float(body.get("boost", 1.0)),
+                             _tree(index, inner, params))
 
     if kind == "function_score":
-        base = _scored_df(index, body["query"], params, allowed=allowed)
-        weight = float(body.get("weight", 1.0))
-        return base.select(
-            "doc_id", (F.col("score") * F.lit(weight)).alias("score")
-        )
+        return ex.scale_node(float(body.get("weight", 1.0)),
+                             _tree(index, body["query"], params))
 
     raise ValueError(f"unsupported scoring query: {kind}")
 
 
-def _unwrap_single_must(q: dict[str, Any]) -> dict[str, Any]:
-    if next(iter(q)) == "bool":
-        b = q["bool"]
-        must = list(b.get("must") or [])
-        if len(must) == 1 and not (b.get("should") or []):
-            return must[0]
-    return q
-
-
-def _max_disjunction_leaves(
-    scored_query: dict[str, Any]
-) -> list[dict[str, Any]] | None:
-    """If the scoring query is one scored leaf (``LEAF_KINDS``), or a
-    pure MAX-combine disjunction — dis_max with tie_breaker=0 — over
-    such leaves, return the leaf list; else None.
-
-    Why per-leaf top-k is exact for max-combine: if doc d is in the
-    global top-k by best-leaf score, then within d's best leaf fewer
-    than k docs precede it on (score desc, doc_id asc) — every doc
-    preceding d there has best >= that leaf score, so it precedes d
-    globally too. Hence the union of per-leaf top-k (same tie-break)
-    contains the exact global top-k, and a doc's max over its present
-    leaf scores equals its true best. This is the reference's
-    DisjunctionMaxQuery-under-WAND shape
-    (lucene/.../DisjunctionMaxQuery.java block-max score bounds): each
-    leaf keeps block-max pruning instead of scoring every matching doc.
-    multi_match best_fields at tie_breaker=0 makes the same argument
-    per shard, inside its one kernel (``multi_match_topk``)."""
-    q = _unwrap_single_must(scored_query)
-    kind = next(iter(q))
-    if kind in LEAF_KINDS:
-        return [q]
-    if kind != "dis_max" or \
-            float(q["dis_max"].get("tie_breaker", 0.0)) != 0.0:
-        return None
-    leaves = list(q["dis_max"]["queries"])
-    if leaves and all(next(iter(le)) in LEAF_KINDS for le in leaves):
-        return leaves
-    return None
+def _scored_df(
+    index: InvertedIndex,
+    query: dict[str, Any],
+    params: BM25Params,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """Evaluate a scoring-context clause -> DataFrame(doc_id, score),
+    ALL matching docs, scores already boosted: the clause's query tree
+    at k=None. ``allowed`` (a DataFrame with a ``doc_id`` column — the
+    enclosing filter's id set) is pushed into the tree's kernel, so a
+    compound query under a filter scores only filtered docs instead of
+    scoring the whole corpus and semi-joining at the top — restriction
+    commutes with max/sum/count combination, so scores are unchanged."""
+    return ex.tree_topk(index, _tree(index, query, params), None,
+                        allowed).select("doc_id", "score")
 
 
 def search(
@@ -502,19 +406,9 @@ def search(
     allowed = None
     if filter_pred is not None:
         allowed = docs.filter(filter_pred).select(F.col(id_col).alias("doc_id"))
-    leaves = _max_disjunction_leaves(scored_query)
-    if leaves is not None:
-        # one leaf, or a max-combine disjunction (dis_max at
-        # tie_breaker=0): per-leaf PRUNED top-k with the filter pushed
-        # into each scorer, then max per doc — exact, see
-        # _max_disjunction_leaves
-        scores = _leaf(index, leaves[0], k, params, allowed)
-        if len(leaves) > 1:
-            for q in leaves[1:]:
-                scores = scores.unionByName(_leaf(index, q, k, params, allowed))
-            scores = scores.groupBy("doc_id").agg(F.max("score").alias("score"))
-    else:
-        scores = _scored_df(index, scored_query, params, allowed=allowed)
+    # the request's k reaches the tree's shards (executor._push_k)
+    scores = ex.tree_topk(index, _tree(index, scored_query, params), k,
+                          allowed).select("doc_id", "score")
     if const_boost:
         scores = scores.withColumn("score", F.col("score") + F.lit(const_boost))
     if min_score is not None:

@@ -33,10 +33,13 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      per scorer; the positional ones (phrase and phrase prefix — one
      kernel, ``_phrase_kernel`` —, intervals, spans) read
      ``_position_lists``, and every BM25 weight comes from
-     ``bm25.idf_sim`` and ``bm25.tf_norm_sim``. A multi-field query
-     (``multi_match_topk``, every type) is one such scan too: its
-     kernel runs the BM25 or phrase kernel per field of the shard and
-     combines the fields per doc before the local top-k. The BM25 kernel
+     ``bm25.idf_sim`` and ``bm25.tf_norm_sim``. A compound scored
+     query (bool, dis_max, constant_score, boosts over match, phrase
+     and term-set leaves in any fields; every multi_match type) is one
+     query tree (``tree_topk``): one such scan of the (field, term)
+     pairs its leaves read, and one kernel that runs its leaves'
+     kernels and combines them per shard; a prefix, wildcard, regexp
+     or fuzzy query (``multi_term_topk``) is a one-leaf tree. The BM25 kernel
      prunes with a term-at-a-time MaxScore/block-max strategy
      (reference: WAND activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
@@ -63,8 +66,9 @@ exhaustive scorer.
 
 from __future__ import annotations
 
+import functools
 import sys
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -439,14 +443,13 @@ def _make_scorer(
     term_stats: list[TermStats],
     avgdl: float,
     params: BM25Params,
-    k: int | None,
     operator: str,
     minimum_should_match: int,
     prune: bool,
 ):
     """The BM25 kernel of one query over one partition's
     ``_term_view`` (built with this scorer's avgdl and params):
-    ``score(view, allowed, allowed_range=None)`` -> local top-k."""
+    ``score(view, allowed, k, allowed_range=None)`` -> local top-k."""
     # highest impact first; for AND, rarest (highest idf) first anyway
     stats = sorted(term_stats, key=lambda s: -s.ub)
     ubs = np.array([s.ub for s in stats], dtype=np.float64)
@@ -461,11 +464,12 @@ def _make_scorer(
     # the final k-th score.
     # k=None -> emit every matching doc (no local top-k, no pruning);
     # used when a post-filter runs before the global top-k cut.
-    use_theta = prune and k is not None and operator == "or" and msm == 1
+    prunable = prune and operator == "or" and msm == 1
 
     def score(
         view: dict[str, _TermBlocks],
         allowed: np.ndarray | None,
+        k: int | None,
         allowed_range: tuple[int, int] | None = None,
     ) -> pd.DataFrame:
         """Score one partition's blocks; ``allowed`` (sorted int64 doc
@@ -474,6 +478,7 @@ def _make_scorer(
         candidate, so theta remains a lower bound of the final k-th
         score (the reference intersects the filter bitset inside the
         collector the same way: TopDocsCollectorContext.java:202-206)."""
+        use_theta = prunable and k is not None
         nstat = {"blocks": 0, "decoded": 0, "skip_theta_range": 0,
                  "skip_member": 0, "skip_filter": 0, "skip_sort": 0,
                  "skip_restrict_empty": 0}
@@ -604,15 +609,15 @@ def _make_scorer(
 
 
 def _query_scorer(terms: list[str], by_term: dict, n_docs: float,
-                  avgdl: float, params: BM25Params, k: int | None,
-                  operator: str, minimum_should_match: int, prune: bool):
+                  avgdl: float, params: BM25Params, operator: str,
+                  minimum_should_match: int, prune: bool):
     """One query's BM25 kernel over one field's ``by_term`` rows and the
     terms it reads; None when no doc can match (no indexed term, or an
     AND query missing one)."""
     stats = _stats_from_rows(terms, by_term, n_docs, avgdl, params)
     if not stats or (operator == "and" and len(stats) < len(set(terms))):
         return None
-    return (_make_scorer(stats, avgdl, params, k, operator,
+    return (_make_scorer(stats, avgdl, params, operator,
                          minimum_should_match, prune),
             [s.term for s in stats])
 
@@ -660,7 +665,7 @@ def _bm25_local(
     scorers: list[tuple[int, object]] = []
     live_terms: set[str] = set()
     for qid, qterms in enumerate(queries):
-        q = _query_scorer(qterms, by_term, n_docs, avgdl, params, k,
+        q = _query_scorer(qterms, by_term, n_docs, avgdl, params,
                           operator, minimum_should_match, prune)
         if q is not None:
             scorers.append((qid, q[0]))
@@ -672,7 +677,7 @@ def _bm25_local(
         view = _term_view(pdf, avgdl, params)
         outs = []
         for qid, score in scorers:
-            res = score(view, ids, rng)
+            res = score(view, ids, k, rng)
             if not res.empty:
                 res.insert(0, "query_id", np.int32(qid))
                 outs.append(res)
@@ -842,7 +847,6 @@ def _phrase_kernel(
     field: str,
     head: list[str],
     lasts: list[str],
-    k: int | None,
     params: BM25Params,
     slop: int,
 ):
@@ -868,7 +872,7 @@ def _phrase_kernel(
     holding every head term (the conjunction prunes before any
     position decode).
 
-    Returns ``(sorted scan terms, kernel(pdf, ids))`` for blocks
+    Returns ``(sorted scan terms, kernel(pdf, ids, k))`` for blocks
     projected to ``_PHRASE_COLS``, or None when no doc can match."""
     if slop and len(set(head) | set(lasts)) < len(head) + len(lasts):
         raise ValueError(
@@ -887,7 +891,7 @@ def _phrase_kernel(
     idf_head = float(sum(idf[t] for t in head))
     m = len(head) + 1
 
-    def score_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+    def score_group(pdf: pd.DataFrame, ids, k: int | None) -> pd.DataFrame:
         per_term, dl_map = _position_lists(pdf, allowed=ids)
         present = [t for t in lasts if t in per_term]
         if not present or any(t not in per_term for t in head):
@@ -952,12 +956,13 @@ def _phrase_scan(
     allowed: DataFrame | None,
 ) -> DataFrame:
     """``_phrase_kernel`` over the shared posting-scan skeleton."""
-    kern = _phrase_kernel(index, field, head, lasts, k, params, slop)
+    kern = _phrase_kernel(index, field, head, lasts, params, slop)
     if kern is None:
         return _no_hits(index.spark)
     qterms, score_group = kern
     cond = (F.col("field") == field) & F.col("term").isin(qterms)
-    return _scored_scan(index, cond, _PHRASE_COLS, score_group, k, allowed)
+    return _scored_scan(index, cond, _PHRASE_COLS,
+                        lambda pdf, ids: score_group(pdf, ids, k), k, allowed)
 
 
 def phrase_topk(
@@ -1170,6 +1175,280 @@ def phrase_prefix_topk(
                         params, 0, allowed)
 
 
+# ---------------------------------------------------------------------
+# the query tree: a compound scored query is one posting scan and one
+# kernel that scores the whole tree per shard
+# ---------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Node:
+    """One node of a query tree, scored per shard by ``tree_topk``. A
+    ``leaf`` scores ``field``'s blocks of ``terms`` with ``kernel(src,
+    ids, k)``; ``src`` is the field's ``_term_view`` built with ``view =
+    (avgdl, params)`` or, when ``view`` is None, its rows of ``terms``.
+    ``max`` scores max + arg·(sum − max) of its kids (DisMaxQueryBuilder;
+    the sum at arg 1), ``bool`` sums them over the docs in all
+    ``n_must`` first kids and in at least ``arg`` others
+    (BoolQueryBuilder), ``scale`` multiplies by arg and ``const`` scores
+    arg (ConstantScoreQueryBuilder); ``matched`` sums over the kids."""
+
+    op: str
+    kids: tuple = ()
+    arg: float = 0.0
+    n_must: int = 0
+    field: str = ""
+    terms: tuple = ()
+    cols: tuple = ()
+    view: tuple | None = None
+    kernel: object = None
+    k: int | None = None
+
+
+# the block columns a constant-score term set (``_docs_kernel``) reads
+_DOCS_COLS = ("part_id", "term", "doc_ids")
+# every leaf column but part_id, in scan projection order
+_LEAF_COLS = ("n", "doc_ids", "tfs", "dls", "positions", "max_tf", "min_dl",
+              "first_doc", "last_doc")
+
+
+def _leaf_node(field: str, terms, cols: tuple, kernel, view=None) -> Node:
+    return Node("leaf", field=field, terms=tuple(sorted(terms)), cols=cols,
+                kernel=kernel, view=view)
+
+
+def match_node(index: InvertedIndex, field: str, terms: list[str],
+               operator: str = "or", minimum_should_match: int = 1,
+               params: BM25Params | None = None) -> Node | None:
+    """A BM25 match leaf; None when no doc can match."""
+    params = params or BM25Params()
+    looked = _term_rows(index, field, sorted(set(terms)))
+    if looked is None:
+        return None
+    by_term, n_docs, avgdl = looked
+    q = _query_scorer(terms, by_term, n_docs, avgdl, params, operator,
+                      minimum_should_match, prune=True)
+    return None if q is None else _leaf_node(
+        field, q[1], _BM25_COLS, q[0], (avgdl, params))
+
+
+def phrase_node(index: InvertedIndex, field: str, head: list[str],
+                lasts: list[str], params: BM25Params, slop: int = 0,
+                ) -> Node | None:
+    """A phrase or phrase-prefix leaf (``_phrase_kernel``)."""
+    _bm25_only(params, "match_phrase")
+    kern = _phrase_kernel(index, field, head, lasts, params, slop) \
+        if lasts else None
+    return None if kern is None else _leaf_node(
+        field, kern[0], _PHRASE_COLS, kern[1])
+
+
+def terms_node(field: str, terms: list[str]) -> Node | None:
+    """A constant-score term set: every doc holding one of ``terms``
+    scores 1 (``_docs_kernel``); ``scale_node`` boosts it."""
+    return _leaf_node(field, terms, _DOCS_COLS, _docs_kernel) \
+        if terms else None
+
+
+def max_node(tie: float, kids: list) -> Node | None:
+    """dis_max of ``kids``, dropping those that match nothing."""
+    kids = [c for c in kids if c is not None]
+    if len(kids) < 2:
+        return kids[0] if kids else None
+    return Node("max", tuple(kids), float(tie))
+
+
+def bool_node(must: list, should: list, msm: int) -> Node | None:
+    """bool of scored ``must`` and ``should`` clauses."""
+    should = [c for c in should if c is not None]
+    if any(c is None for c in must) or msm > len(should) \
+            or not must + should:
+        return None
+    if len(must) + len(should) == 1:
+        return (must + should)[0]
+    return Node("bool", tuple(must + should), float(msm), len(must))
+
+
+def scale_node(factor: float, kid: Node | None) -> Node | None:
+    return kid if kid is None or factor == 1.0 else \
+        Node("scale", (kid,), float(factor))
+
+
+def const_node(score: float, kid: Node | None) -> Node | None:
+    return None if kid is None else Node("const", (kid,), float(score))
+
+
+def _push_k(node: Node, k: int | None) -> Node:
+    """Where the request's ``k`` reaches: a leaf with ``k`` prunes to its
+    shard top-k. That is exact below a max at tie 0 (a doc of the global
+    top-k is in the top-k of the kid it scores by: every doc ahead of it
+    there is ahead of it globally) and a positive scale; every other
+    node needs all of its kids' docs."""
+    passes = (node.op == "max" and node.arg == 0.0) or \
+        (node.op == "scale" and node.arg > 0.0)
+    return replace(node, k=k, kids=tuple(
+        _push_k(c, k if passes else None) for c in node.kids))
+
+
+def _leaves(node: Node):
+    if node.op == "leaf":
+        yield node
+    for c in node.kids:
+        yield from _leaves(c)
+
+
+def _tree_kernel(tree: Node):
+    """The per-shard kernel of ``tree``, evaluated bottom-up; the BM25
+    leaves of a field share one ``_term_view``."""
+    def score(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        by_field = pdf.groupby("field", sort=False).indices
+        views: dict = {}
+
+        def ev(node: Node):
+            if node.op == "leaf":
+                if node.field not in by_field:
+                    return None
+                src = pdf.iloc[by_field[node.field]]
+                if node.view is not None:
+                    if node.field not in views:
+                        views[node.field] = _term_view(src, *node.view)
+                    src = views[node.field]
+                else:
+                    src = src[src["term"].isin(node.terms)]
+                    if src.empty:
+                        return None
+                h = node.kernel(src, ids, node.k)
+                return None if h.empty else tuple(
+                    h[c].to_numpy() for c in ("doc_id", "score", "matched"))
+            outs = [ev(c) for c in node.kids]
+            live = [o for o in outs if o is not None]
+            if not live or any(o is None for o in outs[:node.n_must]):
+                return None
+            if node.op == "scale":
+                d, s, m = live[0]
+                res = (d, s * node.arg, m)
+            elif node.op == "const":
+                d, _, m = live[0]
+                res = (d, np.full(d.size, node.arg), m)
+            elif node.op == "max" and len(live) == 1:
+                res = live[0]
+            else:
+                res = _fold(*map(np.concatenate, zip(*live)),
+                            node.arg if node.op == "max" else 1.0)
+            if node.op == "bool":
+                # clauses matched per doc: the must ones come first
+                hits = [np.bincount(np.searchsorted(res[0], o[0]),
+                                    minlength=res[0].size) for o in live]
+                keep = (sum(hits[:node.n_must]) == node.n_must) & \
+                    (sum(hits[node.n_must:]) >= node.arg)
+                res = tuple(a[keep] for a in res)
+            return res
+
+        res = ev(tree)
+        return _empty_topk() if res is None else _local_topk(*res, tree.k)
+
+    return score
+
+
+def tree_topk(index: InvertedIndex, tree: Node | None, k: int | None,
+              allowed: DataFrame | None = None) -> DataFrame:
+    """Score a query ``tree`` as ONE posting scan (of the (field, term)
+    pairs its leaves read, no exchange) and ONE kernel that evaluates
+    the whole tree per shard — exact there, as doc routing puts all of
+    a doc's postings in one shard — then merge the shards' top-k
+    (``k=None``: every match). ``allowed`` restricts scoring as in
+    ``match_topk``."""
+    if tree is None:
+        return _no_hits(index.spark)
+    tree = _push_k(tree, k)
+    leaves = list(_leaves(tree))
+    need = {c for lf in leaves for c in lf.cols}
+    cols = ("part_id", "field", "term") + tuple(
+        c for c in _LEAF_COLS if c in need)
+    return _scored_scan(index, _pairs_cond(leaves), cols,
+                        _tree_kernel(tree), k, allowed)
+
+
+def _pairs_cond(leaves: list) -> Column:
+    """The (field, term) pairs ``leaves`` read: an OR over their fields,
+    in order, of ``field = f AND term IN (f's sorted terms)``."""
+    by_field: dict[str, set] = {}
+    for lf in leaves:
+        by_field.setdefault(lf.field, set()).update(lf.terms)
+    conds = [(F.col("field") == f) & F.col("term").isin(sorted(ts))
+             for f, ts in sorted(by_field.items())]
+    return functools.reduce(Column.__or__, conds)
+
+
+def multi_match_tree(
+    index: InvertedIndex,
+    field_terms: dict[str, list[str]],
+    mtype: str = "best_fields",
+    tie_breaker: float = 0.0,
+    operator: str = "or",
+    minimum_should_match: int = 1,
+    slop: int = 0,
+    params: BM25Params | None = None,
+) -> Node | None:
+    """multi_match (MultiMatchQueryBuilder.Type) over ``{field: analyzed
+    terms}`` rewritten into a query tree, as the reference's
+    MultiMatchQueryParser rewrites it into DisjunctionMax/Boolean
+    queries. best_fields and the phrase types (``slop`` for phrase) are
+    a max at ``tie_breaker`` over each field's match (``operator``,
+    ``minimum_should_match``) or phrase, most_fields their sum.
+    cross_fields scores each (field, term) with the term's df blended to
+    its max over the fields (BlendedTermQuery), takes max + tie·(sum −
+    max) per term and sums the terms — within each group of fields
+    indexed with one analyzer (``index.analyzer``); the groups combine
+    as a max at ``tie_breaker``, as in the reference's
+    MultiMatchQueryParser.buildCrossFieldQuery, so a one-field group is
+    that field's plain match."""
+    params = params or BM25Params()
+    if mtype not in ("best_fields", "most_fields", "cross_fields",
+                     "phrase", "phrase_prefix"):
+        raise ValueError(f"multi_match: unsupported type {mtype!r}")
+    tie = 1.0 if mtype == "most_fields" else float(tie_breaker)
+    if mtype.startswith("phrase"):
+        _bm25_only(params, f"multi_match type={mtype}")
+        return max_node(tie, [phrase_node(
+            index, f, list(terms[:-1]), terms[-1:] if mtype == "phrase"
+            else expand_terms(index, f, "prefix", terms[-1]), params,
+            slop if mtype == "phrase" else 0)
+            for f, terms in field_terms.items() if terms])
+    if mtype != "cross_fields":
+        return max_node(tie, [
+            match_node(index, f, terms, operator, minimum_should_match,
+                       params) for f, terms in field_terms.items()])
+    looked = {
+        f: r for f, terms in field_terms.items()
+        if (r := _term_rows(index, f, sorted(set(terms)))) is not None}
+    groups: dict[str, list[str]] = {}
+    for f in looked:
+        groups.setdefault(index.analyzer(f), []).append(f)
+    group_nodes = []
+    for group in groups.values():
+        n_docs = max(looked[f][1] for f in group)
+        df_max: dict[str, int] = {}
+        for f in group:
+            for t, r in looked[f][0].items():
+                df_max[t] = max(df_max.get(t, 0), int(r["df"]))
+        per_term: dict[str, list] = {}
+        for f in group:
+            by_term, _, avgdl = looked[f]
+            blended = {t: {"df": df_max[t], "max_tf": r["max_tf"],
+                           "min_dl": r["min_dl"]}
+                       for t, r in by_term.items()}
+            for s in _stats_from_rows(list(dict.fromkeys(field_terms[f])),
+                                      blended, n_docs, avgdl, params):
+                per_term.setdefault(s.term, []).append(_leaf_node(
+                    f, [s.term], _BM25_COLS,
+                    _make_scorer([s], avgdl, params, "or", 1, False),
+                    (avgdl, params)))
+        group_nodes.append(max_node(1.0, [
+            max_node(tie, kids) for kids in per_term.values()]))
+    return max_node(tie, group_nodes)
+
+
 def multi_match_topk(
     index: InvertedIndex,
     field_terms: dict[str, list[str]],
@@ -1182,114 +1461,15 @@ def multi_match_topk(
     params: BM25Params | None = None,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """multi_match (MultiMatchQueryBuilder.Type) over ``{field: analyzed
-    terms}`` as ONE scored leaf: one scan pushing sorted ``field`` and
-    ``term`` IN lists read with no exchange, and one kernel that runs
-    each field's BM25 (``_make_scorer``) or phrase (``_phrase_kernel``)
-    kernel on its shard and combines the fields per doc — exact
-    locally, as a doc's postings for every field share its shard.
-    best_fields and most_fields score each field's BM25 match
-    (``operator``, ``minimum_should_match``); best_fields and the
-    phrase types (``slop`` for phrase) take max + tie·(sum − max),
-    most_fields the sum. cross_fields scores each (field, term) with
-    the term's df blended to its max over the fields
-    (BlendedTermQuery), takes max + tie·(sum − max) per term and sums
-    the terms — within each group of fields indexed with one analyzer
-    (``index.analyzer``); the groups' scores combine as a dis_max,
-    max + tie·(sum − max), as in the reference's
-    MultiMatchQueryParser.buildCrossFieldQuery, so a one-field group is
-    that field's plain match. best_fields at tie 0 keeps pruning: each field
-    keeps its shard top-k, which holds every doc of the max's shard
-    top-k (the argument of ``api._max_disjunction_leaves``); the other
-    types score exhaustively and cut after combining. ``allowed``
-    restricts scoring as in ``match_topk``."""
-    params = params or BM25Params()
-    if mtype not in ("best_fields", "most_fields", "cross_fields",
-                     "phrase", "phrase_prefix"):
-        raise ValueError(f"multi_match: unsupported type {mtype!r}")
-    phrase = mtype.startswith("phrase")
-    if phrase:
-        _bm25_only(params, f"multi_match type={mtype}")
-    tie = 1.0 if mtype == "most_fields" else float(tie_breaker)
-    # {field: (scan terms, avgdl, [((group, term), kernel)])}: the kernels
-    # of one (group, term) fold first, then each group sums its terms,
-    # then the groups fold. Only cross_fields has more than one key.
-    units: dict = {}
-    if phrase:
-        for f, terms in field_terms.items():
-            if not terms:
-                continue
-            lasts = terms[-1:] if mtype == "phrase" else expand_terms(
-                index, f, "prefix", terms[-1])
-            kern = _phrase_kernel(index, f, list(terms[:-1]), lasts, None,
-                                  params, slop if mtype == "phrase" else 0)
-            if kern is not None:
-                units[f] = (kern[0], None, [((0, 0), kern[1])])
-    looked = {} if phrase else {
-        f: r for f, terms in field_terms.items()
-        if (r := _term_rows(index, f, sorted(set(terms)))) is not None}
-    if mtype == "cross_fields":
-        groups: dict[str, list[str]] = {}
-        for f in looked:
-            groups.setdefault(index.analyzer(f), []).append(f)
-        for g, group in enumerate(groups.values()):
-            members = {f: looked[f] for f in group}
-            n_docs = max(n for _, n, _ in members.values())
-            df_max: dict[str, int] = {}
-            for by_term, _, _ in members.values():
-                for t, r in by_term.items():
-                    df_max[t] = max(df_max.get(t, 0), int(r["df"]))
-            for f, (by_term, _, avgdl) in members.items():
-                blended = {t: {"df": df_max[t], "max_tf": r["max_tf"],
-                               "min_dl": r["min_dl"]}
-                           for t, r in by_term.items()}
-                stats = _stats_from_rows(list(dict.fromkeys(field_terms[f])),
-                                         blended, n_docs, avgdl, params)
-                if stats:
-                    units[f] = ([s.term for s in stats], avgdl, [
-                        ((g, s.term), _make_scorer([s], avgdl, params, None,
-                                                   "or", 1, False))
-                        for s in stats])
-    elif not phrase:
-        pruned = mtype == "best_fields" and tie == 0.0
-        for f, (by_term, n_docs, avgdl) in looked.items():
-            q = _query_scorer(field_terms[f], by_term, n_docs, avgdl, params,
-                              k if pruned else None, operator,
-                              minimum_should_match, prune=True)
-            if q is not None:
-                units[f] = (q[1], avgdl, [((0, 0), q[0])])
-    if not units:
-        return _no_hits(index.spark)
-
-    def score_fields(pdf: pd.DataFrame, ids) -> pd.DataFrame:
-        by_field = pdf.groupby("field", sort=False).indices
-        by_key: dict = {}
-        for f, (_, avgdl, kernels) in units.items():
-            if f in by_field:
-                sub = pdf.iloc[by_field[f]]
-                src = sub if phrase else _term_view(sub, avgdl, params)
-                for key, kernel in kernels:
-                    by_key.setdefault(key, []).append(kernel(src, ids))
-        per_group: dict = {}
-        for (g, _), hits in by_key.items():
-            per_group.setdefault(g, []).append(_fold(*(
-                np.concatenate([h[c].to_numpy() for h in hits])
-                for c in ("doc_id", "score", "matched")), tie))
-        folded = [f[0] if len(f) == 1 else
-                  _fold(*map(np.concatenate, zip(*f)), 1.0)
-                  for f in per_group.values()]
-        if len(folded) > 1:
-            folded = [_fold(*map(np.concatenate, zip(*folded)), tie)]
-        if not folded:
-            return _empty_topk()
-        return _local_topk(*folded[0], k)
-
-    terms = sorted({t for scan_terms, _, _ in units.values()
-                    for t in scan_terms})
-    cond = F.col("field").isin(sorted(units)) & F.col("term").isin(terms)
-    cols = _PHRASE_COLS if phrase else _BM25_COLS
-    return _scored_scan(index, cond, (cols[0], "field") + cols[1:],
-                        score_fields, k, allowed)
+    """multi_match top-k: ``multi_match_tree`` scored by ``tree_topk``
+    — one scan pushing sorted ``field`` and ``term`` IN lists, read with
+    no exchange, and one kernel combining the fields per shard. At tie
+    0, best_fields and the phrase types keep each field's shard top-k
+    (``_push_k``); the other types score exhaustively and cut after
+    combining. ``allowed`` restricts scoring as in ``match_topk``."""
+    return tree_topk(index, multi_match_tree(
+        index, field_terms, mtype, tie_breaker, operator,
+        minimum_should_match, slop, params), k, allowed)
 
 
 def intervals_match(
@@ -1307,60 +1487,15 @@ def intervals_match(
     the span. Constant-score (boost), so the shared (score desc, doc_id
     asc) merge orders by doc_id asc.
 
-    Greedy per-doc check over decoded position lists (numpy), same
-    posting-scan skeleton as phrase_topk."""
+    ``spans.span_match`` on the span_near of the terms (slop
+    ``max_gaps``): a repeated term needs as many occurrences."""
+    from elasticsearch_spark.search.spans import span_match
+
     if not terms:
         return _no_hits(index.spark)
-    m = len(terms)
-
-    def check_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
-        per_term, _ = _position_lists(pdf, allowed=ids)
-        if any(t not in per_term for t in terms):
-            return _empty_topk()
-        cand = set(per_term[terms[0]])
-        for t in terms[1:]:
-            cand &= set(per_term[t])
-        hits = []
-        for doc in cand:
-            pls = [per_term[t][doc] for t in terms]
-            if ordered:
-                # greedy: earliest admissible position per step
-                ok = False
-                for start in pls[0]:
-                    prev = start
-                    good = True
-                    for pl in pls[1:]:
-                        nxt = pl[pl > prev]
-                        if nxt.size == 0:
-                            good = False
-                            break
-                        prev = int(nxt[0])
-                    if good and (prev - start) - (m - 1) <= max_gaps:
-                        ok = True
-                        break
-                if ok:
-                    hits.append(doc)
-            else:
-                # any-order window: min span containing one of each.
-                # O(prod tf) — fine for few query terms; swap for the
-                # k-way sliding-window algorithm if m grows.
-                lo_span = None
-                import itertools
-
-                for combo in itertools.product(*[pl.tolist() for pl in pls]):
-                    span = max(combo) - min(combo)
-                    lo_span = span if lo_span is None else min(lo_span, span)
-                if lo_span is not None and lo_span - (m - 1) <= max_gaps:
-                    hits.append(doc)
-        if not hits:
-            return _empty_topk()
-        ids = np.array(hits, dtype=np.int64)
-        return _local_topk(ids, np.full(ids.size, float(boost)),
-                           np.full(ids.size, m), k)
-
-    cond = (F.col("field") == field) & F.col("term").isin(sorted(set(terms)))
-    cols = ("part_id", "term", "n", "doc_ids", "positions")
-    return _scored_scan(index, cond, cols, check_group, k)
+    return span_match(index, field, {"span_near": {
+        "clauses": [{"span_term": {field: t}} for t in terms],
+        "slop": max_gaps, "in_order": ordered}}, k=k, boost=boost)
 
 
 def expand_terms(
@@ -1427,23 +1562,22 @@ def multi_term_topk(
     """prefix/wildcard/regexp/fuzzy query over the INDEXED field with
     the reference's default CONSTANT_SCORE rewrite: every doc containing
     any expanded term scores ``boost`` (MultiTermQuery rewrite method;
-    tie-break doc_id asc). A constant-score kernel on the shared
-    posting-scan skeleton: each partition emits its unique doc ids —
-    a doc lives in exactly one shard, so they are globally distinct."""
+    tie-break doc_id asc). A one-leaf query tree (``tree_topk``) of the
+    expanded terms' constant-score set, scaled by ``boost``."""
     terms = expand_terms(index, field, kind, pattern, fuzziness,
                          max_expansions=max_expansions)
-    if not terms:
-        return _no_hits(index.spark)
+    return tree_topk(index, scale_node(boost, terms_node(field, terms)), k)
 
-    def docs_group(pdf: pd.DataFrame, _ids) -> pd.DataFrame:
-        ids = np.unique(np.concatenate([
-            codec.delta_decode(codec.vbyte_decode(b)) for b in pdf["doc_ids"]
-        ]))
-        return _local_topk(ids, np.full(ids.size, float(boost)),
-                           np.ones(ids.size, dtype=np.int32), k)
 
-    cond = (F.col("field") == field) & F.col("term").isin(sorted(terms))
-    return _scored_scan(index, cond, ("part_id", "doc_ids"), docs_group, k)
+def _docs_kernel(pdf: pd.DataFrame, ids, k: int | None) -> pd.DataFrame:
+    """The constant-score kernel: a shard's (allowed) docs in its
+    blocks, each scoring 1."""
+    d = np.unique(np.concatenate([
+        codec.delta_decode(codec.vbyte_decode(b)) for b in pdf["doc_ids"]
+    ]))
+    if ids is not None:
+        d = d[_member_mask(ids, d)]
+    return _local_topk(d, np.ones(d.size), np.ones(d.size, dtype=np.int32), k)
 
 
 def match_bool_prefix_topk(
@@ -1458,29 +1592,16 @@ def match_bool_prefix_topk(
     MatchBoolPrefixQueryBuilder / mapper-extras SearchAsYouTypeFieldMapper):
     every term but the last is a SHOULD TermQuery (BM25), the last is a
     PrefixQuery with the constant-score rewrite (contributes 1.0) —
-    clauses sum, minimum_should_match=1."""
-    params = params or BM25Params()
+    clauses sum, minimum_should_match=1. One query tree
+    (``tree_topk``): a bool should over the head match and the prefix's
+    constant term set."""
     if not terms:
         return _no_hits(index.spark)
-    head, last = terms[:-1], terms[-1]
-    pref = multi_term_topk(
-        index, field, "prefix", last, k=None, max_expansions=max_expansions
-    ).select("doc_id", "score", "matched")
-    if not head:
-        out = pref
-    else:
-        base = match_topk(index, field, head, k=None, params=params).select(
-            "doc_id", "score", "matched"
-        )
-        out = (
-            base.unionByName(pref)
-            .groupBy("doc_id")
-            .agg(
-                F.sum("score").alias("score"),
-                F.sum("matched").cast("int").alias("matched"),
-            )
-        )
-    return _topk_merge(out, k)
+    head = match_node(index, field, terms[:-1], params=params) \
+        if len(terms) > 1 else None
+    prefix = terms_node(field, expand_terms(
+        index, field, "prefix", terms[-1], max_expansions=max_expansions))
+    return tree_topk(index, bool_node([], [head, prefix], 1), k)
 
 
 def fuzzy_match_topk(

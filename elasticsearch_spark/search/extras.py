@@ -572,21 +572,19 @@ def explain_scores(
     score-parity debugging. ``idf`` and ``tf_norm`` are the kernel's
     own factors under ``params.similarity`` (``bm25.idf_sim``,
     ``bm25.tf_norm_sim``), so a doc's contributions sum to its
-    ``match_topk`` score."""
+    ``match_topk`` score. df, N and avgdl come from the scorers' DFS
+    lookup (``executor._term_rows``)."""
     import numpy as np
 
     from elasticsearch_spark.search import bm25
-    from elasticsearch_spark.search.executor import decoded_postings
+    from elasticsearch_spark.search.executor import _term_rows, decoded_postings
 
     params = params or BM25Params()
-    stats = index.collection_stats()[field]
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in index.term_dict.filter(
-            (F.col("field") == field) & F.col("term").isin(terms)
-        ).collect()
-    }
+    looked = _term_rows(index, field, sorted(set(terms)))
+    if looked is None:
+        raise ValueError(f"explain_scores: no indexed docs in {field!r}")
+    by_term, n_docs, avgdl = looked
+    dfs = {t: int(r["df"]) for t, r in by_term.items()}
     idfs = {t: bm25.idf_sim(df, n_docs, params) for t, df in dfs.items()}
     rows = decoded_postings(index, field, terms).filter(
         F.col("doc_id").isin(doc_ids)

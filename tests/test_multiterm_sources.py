@@ -125,6 +125,29 @@ def test_intervals_matches_phrase_at_zero_gaps(index):
     assert ph == iv
 
 
+def test_intervals_repeated_term_needs_two_occurrences(index):
+    """An interval of a repeated term takes one occurrence per position,
+    as spans do: an unordered ["table", "table"] interval matches only
+    docs with "table" twice, the same docs as the ordered one and as the
+    span_near it compiles to (a doc with one "table" does not match)."""
+    from elasticsearch_spark.search.executor import (
+        decoded_postings, intervals_match)
+    from elasticsearch_spark.search.spans import span_match
+
+    tf = {r["doc_id"]: r["tf"]
+          for r in decoded_postings(index, "text", ["table"]).collect()}
+    twice = {d for d, n in tf.items() if n >= 2}
+    assert twice and len(twice) < len(tf)
+    for ordered in (False, True):
+        got = {r["doc_id"] for r in intervals_match(
+            index, "text", ["table", "table"], max_gaps=50,
+            ordered=ordered, k=None).collect()}
+        near = {r["doc_id"] for r in span_match(index, "text", {"span_near": {
+            "clauses": [{"span_term": {"text": "table"}}] * 2,
+            "slop": 50, "in_order": ordered}}, k=None).collect()}
+        assert got == near and got <= twice and got, ordered
+
+
 def test_index_stats(index):
     from elasticsearch_spark.search.extras import index_stats
 

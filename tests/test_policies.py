@@ -92,7 +92,7 @@ def test_no_collect_in_hot_paths():
         if fn_src.startswith(("match_topk", "phrase_topk", "multi_term_topk",
                               "_bm25_local", "_phrase_scan", "_scored_scan",
                               "_phrase_kernel", "multi_match_topk",
-                              "_fold")):
+                              "_fold", "tree_topk", "_tree_kernel")):
             assert ".collect()" not in fn_src, "collect() in a scorer path"
 
 
@@ -294,7 +294,11 @@ def test_filtered_phrase_pushes_allowlist(spark, index):
 
 def _pin_cases():
     from elasticsearch_spark.search import executor as ex
+    from elasticsearch_spark.search.api import _scored_df
+    from elasticsearch_spark.search.bm25 import BM25Params
     from elasticsearch_spark.search.spans import span_match
+
+    params = BM25Params()
 
     near = {"span_near": {"clauses": [{"span_term": {"text": "key"}},
                                       {"span_term": {"text": "order"}}],
@@ -326,6 +330,21 @@ def _pin_cases():
         "multi_match_cross_fields": lambda idx: ex.multi_match_topk(
             idx, {"text": ["src5", "table"], "source": ["src5", "table"]},
             "cross_fields", tie_breaker=0.3),
+        "dis_max_tie": lambda idx: _scored_df(idx, {"dis_max": {
+            "tie_breaker": 0.3, "queries": [
+                {"match": {"text": "table scan"}},
+                {"match_phrase": {"text": "key order"}}]}}, params),
+        "bool_must_should_msm": lambda idx: _scored_df(idx, {"bool": {
+            "must": [{"match": {"text": "table"}}],
+            "should": [{"match": {"text": "scan"}},
+                       {"match": {"source": "src5"}}],
+            "minimum_should_match": 2}}, params),
+        "constant_score": lambda idx: _scored_df(idx, {"constant_score": {
+            "filter": {"bool": {"should": [{"match": {"text": "table"}},
+                                           {"match": {"source": "src5"}}]}},
+            "boost": 2.0}}, params),
+        "match_bool_prefix_topk": lambda idx: ex.match_bool_prefix_topk(
+            idx, "text", ["window", "ord"]),
     }
 
 
@@ -414,17 +433,16 @@ def test_term_stats_cache_matches_scan(spark, tmp_path):
 
 
 def test_disjunction_decomposition_parity(spark, index):
-    """dis_max / multi_match best_fields at tie_breaker=0 decompose
-    into per-leaf PRUNED top-k + max-combine; rows and scores must be
+    """dis_max / multi_match best_fields at tie_breaker=0 keep each
+    leaf's PRUNED shard top-k before the max; rows and scores must be
     identical to the k=None score-everything fallback, with and
     without a filter."""
     from pyspark.sql import functions as F
 
     from elasticsearch_spark.search import dsl
-    from elasticsearch_spark.search.api import (
-        _max_disjunction_leaves, _scored_df, search,
-    )
+    from elasticsearch_spark.search.api import _scored_df, _tree, search
     from elasticsearch_spark.search.bm25 import BM25Params
+    from elasticsearch_spark.search.executor import _leaves, _push_k
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     params = BM25Params(quantize_norms=False)
@@ -466,15 +484,145 @@ def test_disjunction_decomposition_parity(spark, index):
             .collect()
         ]
         assert got == want, q
-    # a nonzero tie_breaker must NOT decompose (scores need every leaf)
-    assert _max_disjunction_leaves(
-        {"dis_max": {"tie_breaker": 0.3, "queries":
-                     [{"match": {"text": "a"}}]}}) is None
-    # multi_match of any type is one leaf: its kernel combines the
-    # fields per shard
-    most = {"multi_match": {"query": "a", "fields": ["text"],
-                            "type": "most_fields"}}
-    assert _max_disjunction_leaves(most) == [most]
+    # where k reaches the tree (executor._push_k): a nonzero tie_breaker
+    # must NOT prune (scores need every leaf)
+    def pushed(q):
+        return _push_k(_tree(index, q, params), 10)
+
+    two = [{"match": {"text": "table"}},
+           {"match_phrase": {"text": "scan merge"}}]
+    assert [lf.k for lf in _leaves(pushed(
+        {"dis_max": {"tie_breaker": 0.3, "queries": two}}))] == [None, None]
+    assert [lf.k for lf in _leaves(pushed({"dis_max": {"queries": two}}))] \
+        == [10, 10]
+    # a multi_match of any type prunes like one leaf: under a dis_max at
+    # tie 0 it takes k, and its fields prune as they do alone
+    for mtype in sorted(_MULTI_MATCH_CASES):
+        mm = {"multi_match": {"query": "table scan merge",
+                              "fields": ["text", "all_text"],
+                              **_MULTI_MATCH_CASES[mtype]}}
+        alone = pushed(mm)
+        inside = pushed({"dis_max": {"queries": [mm, two[0]]}}).kids
+        assert inside[0].k == alone.k == 10 and inside[1].k == 10, mtype
+        assert [lf.k for lf in _leaves(inside[0])] == \
+            [lf.k for lf in _leaves(alone)], mtype
+        if mtype in ("best_fields", "most_fields"):
+            assert {lf.k for lf in _leaves(alone)} == {
+                10 if mtype == "best_fields" else None}, mtype
+
+
+def _combined(index, q, params) -> dict:
+    """{doc: score} of a compound query, combined in Python from its
+    leaves' own ``match_topk``/``phrase_topk(k=None)`` rows."""
+    from elasticsearch_spark.search.api import _match_terms
+    from elasticsearch_spark.search.executor import match_topk, phrase_topk
+
+    kind, body = next(iter(q.items()))
+    if kind in ("match", "match_phrase"):
+        field, spec = next(iter(body.items()))
+        terms, operator, msm = _match_terms(index, field, spec)
+        df = (match_topk(index, field, terms, k=None, operator=operator,
+                         minimum_should_match=msm, params=params)
+              if kind == "match" else
+              phrase_topk(index, field, terms, k=None, params=params))
+        b = spec.get("boost", 1.0) if isinstance(spec, dict) else 1.0
+        return {r["doc_id"]: r["score"] * b for r in df.collect()}
+    if kind == "dis_max":
+        tie = body.get("tie_breaker", 0.0)
+        subs = [_combined(index, c, params) for c in body["queries"]]
+        out = {}
+        for d in set().union(*subs):
+            ss = [s[d] for s in subs if d in s]
+            out[d] = max(ss) + tie * (sum(ss) - max(ss))
+        return out
+    if kind == "bool":
+        must = [_combined(index, c, params) for c in body.get("must", [])]
+        should = [_combined(index, c, params) for c in body.get("should", [])]
+        msm = body.get("minimum_should_match", 0 if must else 1)
+        return {d: sum(s[d] for s in must + should if d in s)
+                for d in set().union(*must, *should)
+                if all(d in s for s in must)
+                and sum(d in s for s in should) >= msm}
+    if kind == "constant_score":
+        return {d: body.get("boost", 1.0)
+                for d in _combined(index, body["filter"], params)}
+    assert kind == "function_score", kind
+    return {d: s * body["weight"]
+            for d, s in _combined(index, body["query"], params).items()}
+
+
+def test_compound_tree_matches_its_leaves(spark, index):
+    """Every compound node of the query tree scores what its leaves'
+    own scorers combine to: all rows of ``_scored_df`` and the top-k of
+    ``search()``, with and without a filter, to 1e-9."""
+    from elasticsearch_spark.search.api import _scored_df, search
+    from elasticsearch_spark.search.bm25 import BM25Params
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    params = BM25Params(quantize_norms=False)
+    en = {r["doc_id"] for r in docs.filter(docs.lang == "en")
+          .select("doc_id").collect()}
+    window = [{"match": {"text": "window filter"}},
+              {"match": {"text_en": {"query": "windows filtering",
+                                     "boost": 1.5}}}]
+    clauses = {"must": [{"match": {"text": "table"}}],
+               "should": [{"match": {"text": "scan merge"}},
+                          {"match_phrase": {"text": "key order"}},
+                          {"match": {"source": "src5"}}]}
+    cases = [
+        {"bool": {**clauses, "minimum_should_match": 1}},
+        {"bool": {**clauses, "minimum_should_match": 2}},
+        {"dis_max": {"queries": window}},
+        {"dis_max": {"tie_breaker": 0.3, "queries": window}},
+        {"dis_max": {"tie_breaker": 0.3, "queries": [
+            {"bool": {"should": [{"match": {"text": "table"}},
+                                 {"match": {"text": "scan"}}]}},
+            {"match_phrase": {"text": "key order"}}]}},
+        {"constant_score": {"filter": {"match": {"text": "table scan"}},
+                            "boost": 2.5}},
+        {"function_score": {"query": {"dis_max": {"queries": window}},
+                            "weight": 2.0}},
+    ]
+    for q in cases:
+        want = _combined(index, q, params)
+        got = {r["doc_id"]: r["score"]
+               for r in _scored_df(index, q, params).collect()}
+        assert got.keys() == want.keys() and got, q
+        for d, s in want.items():
+            assert got[d] == pytest.approx(s, rel=1e-9, abs=1e-12), (q, d)
+        for flt in (False, True):
+            req = ({"bool": {"must": [q], "filter": [{"term": {"lang": "en"}}]}}
+                   if flt else q)
+            top = sorted(((d, s) for d, s in want.items()
+                          if not flt or d in en),
+                         key=lambda ds: (-ds[1], ds[0]))[:10]
+            hits = [(r["doc_id"], r["score"])
+                    for r in search(index, docs, req, k=10, params=params)
+                    .select("doc_id", "score").collect()]
+            assert [d for d, _ in hits] == [d for d, _ in top] and hits, \
+                (q, flt)
+            assert [s for _, s in hits] == pytest.approx(
+                [s for _, s in top], rel=1e-9, abs=1e-12), (q, flt)
+
+
+def test_tree_scan_reads_only_its_leaves_pairs(index):
+    """A query tree's one scan reads the (field, term) pairs its leaves
+    ask for, not the cross product of their fields and terms."""
+    from elasticsearch_spark.search import executor as ex
+    from elasticsearch_spark.search.bm25 import BM25Params
+
+    params = BM25Params()
+    tree = ex.bool_node([], [
+        ex.match_node(index, "text", ["table"], params=params),
+        ex.match_node(index, "source", ["src5"], params=params),
+        ex.phrase_node(index, "text", ["key"], ["order"], params)], 1)
+    leaves = list(ex._leaves(tree))
+    assert len(leaves) == 3
+    rows = (index.postings.filter(ex._pairs_cond(leaves))
+            .select("field", "term").distinct().collect())
+    assert {(r["field"], r["term"]) for r in rows} == {
+        ("text", "table"), ("source", "src5"),
+        ("text", "key"), ("text", "order")}
 
 
 def test_filtered_disjunction_keeps_pruning_plan(spark, index):

@@ -1,6 +1,7 @@
 """The /verify skill's build-and-drive recipe as a script: corpus ->
 index -> query through the public API, plan-shape assertions, plus a
 smoke of the newest operator surface. Exits nonzero on failure."""
+import shutil
 import sys
 import tempfile
 
@@ -14,12 +15,20 @@ from elasticsearch_spark.search.executor import (
 
 
 def main() -> int:
+    work = tempfile.mkdtemp(prefix="esidx_")
+    try:
+        return drive(work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def drive(work: str) -> int:
     spark = get_spark("drive", cores=8)
     daemon = spark.sparkContext.getConf().get("spark.python.daemon.module")
     assert daemon == "elasticsearch_spark.worker_daemon", daemon
     corpus = generate_corpus(spark, 300, seed=7).cache()
     idx = build_index(
-        corpus, tempfile.mkdtemp(prefix="esidx_"),
+        corpus, work,
         fields={"content": "code", "path": "code"}, num_partitions=4,
         id_cols=["repo", "path", "commit"], input_snapshot="v1",
     )
@@ -41,6 +50,14 @@ def main() -> int:
     def depth(line: str) -> int:
         return len(line) - len(line.lstrip(" :+-"))
 
+    def below(lines: list[str], at: int) -> list[str]:
+        out = []
+        for ln in lines[at + 1:]:
+            if depth(ln) <= depth(lines[at]):
+                break
+            out.append(ln)
+        return out
+
     for name, df in (
         ("match_topk", topk),
         ("phrase_topk", phrase_topk(idx, "content", ["public", "static"], k=5)),
@@ -51,17 +68,34 @@ def main() -> int:
             .split("== Initial Plan ==")[0].splitlines()
         at = next(i for i, ln in enumerate(lines)
                   if "FlatMapGroupsInPandas" in ln)
-        below = []
-        for ln in lines[at + 1:]:
-            if depth(ln) <= depth(lines[at]):
-                break
-            below.append(ln)
-        n = sum("Exchange" in ln or "AQEShuffleRead" in ln for ln in below)
-        assert n == 0 and any("Bucketed: true" in ln for ln in below), \
+        blocks = below(lines, at)
+        n = sum("Exchange" in ln or "AQEShuffleRead" in ln for ln in blocks)
+        assert n == 0 and any("Bucketed: true" in ln for ln in blocks), \
             f"{name}: {n} exchanges below the kernel"
+    from elasticsearch_spark.search.api import search
+
+    # a filtered compound query is one query tree: one posting scan,
+    # whose blocks reach the tree's cogroup kernel with no exchange
+    q = {"bool": {"must": [{"dis_max": {"tie_breaker": 0.3, "queries": [
+             {"match": {"content": "parseIndex import"}},
+             {"match_phrase": {"content": "public static"}}]}}],
+         "filter": [{"term": {"lang": "python"}}]}}
+    hits = search(idx, docs, q, k=5)
+    assert hits.collect(), "filtered dis_max: no hits"
+    lines = hits._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0].splitlines()
+    at = [i for i, ln in enumerate(lines) if "FlatMapCoGroupsInPandas" in ln]
+    assert len(at) == 1, f"filtered dis_max: {len(at)} kernels"
+    blocks = below(lines, at[0])
+    blocks = [ln for ln in blocks[:next(
+        (j for j, ln in enumerate(blocks[1:], 1)
+         if depth(ln) == depth(blocks[0])), len(blocks))]]
+    n = sum("Exchange" in ln or "AQEShuffleRead" in ln for ln in blocks)
+    scans = sum("Bucketed: true" in ln for ln in lines)
+    assert n == 0 and scans == 1, \
+        f"filtered dis_max: {scans} posting scans, {n} exchanges below the kernel"
     # a filtered multi_match is one scored leaf: its allowlist enters
     # one kernel for all fields, never a semi-join
-    from elasticsearch_spark.search.api import search
 
     for mtype in ("best_fields", "cross_fields"):
         q = {"bool": {"must": [{"multi_match": {
