@@ -361,6 +361,7 @@ def search(
     scored_query = query
     const_boost = 0.0  # pure-filter constant_score must-clauses still
     #                    contribute their boost to every surviving doc
+    optional_should = False
     if kind == "bool":
         body = query["bool"]
         if _is_pure_filter(query):
@@ -386,6 +387,11 @@ def search(
             }
             if "minimum_should_match" in body:
                 scored_body["minimum_should_match"] = body["minimum_should_match"]
+            # a must or filter clause makes should optional
+            # (minimum_should_match defaults to 0): with only
+            # filter-context ones, every allowed doc is a hit
+            optional_should = bool(fclauses) and not scored_body["must"] \
+                and int(body.get("minimum_should_match", 0)) == 0
             has_scored = scored_body["must"] or scored_body["should"]
             scored_query = {"bool": scored_body} if has_scored else None
     elif _is_pure_filter(query):
@@ -409,6 +415,10 @@ def search(
     # the request's k reaches the tree's shards (executor._push_k)
     scores = ex.tree_topk(index, _tree(index, scored_query, params), k,
                           allowed).select("doc_id", "score")
+    if optional_should:
+        # every allowed doc is a hit; those matching no should clause
+        # score 0, after the scored ones
+        scores = allowed.join(scores, "doc_id", "left").fillna(0.0, ["score"])
     if const_boost:
         scores = scores.withColumn("score", F.col("score") + F.lit(const_boost))
     if min_score is not None:

@@ -8,12 +8,15 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      ``term_dict`` and CollectionStatistics in ``coll_stats``
      (``_term_rows``, one lookup per request) — the DFS phase,
      always-on.
-  2. ``postings.filter(field == f & term isin sorted(qterms))`` —
-     Parquet predicate pushdown + term-sorted row-group skipping; only
-     blocks of the query terms are read (per-term scan, like a
-     term-dictionary seek). ``match_topk`` and ``match_topk_batch``
-     are one BM25 scan (``_bm25_local``): a single request is a batch
-     of one query.
+  2. ``postings.filter(field == f & term isin sorted(qterms))``, an OR
+     of those per field (``_pairs_cond``) — Parquet predicate pushdown
+     + term-sorted row-group skipping; only blocks of the query terms
+     are read (per-term scan, like a term-dictionary seek). A single
+     request is ONE query tree (``tree_topk``): ``match_topk``,
+     ``phrase_topk``, ``phrase_prefix_topk``, ``synonym_match_topk``
+     and ``multi_term_topk`` are one-leaf trees, so a match has one
+     plan whichever entry runs it. ``match_topk_batch`` is the one
+     batch scan: many BM25 queries over one shared view per shard.
   3. one skeleton shared by every posting scorer (``_posting_groups``,
      ``_scored_scan``): the pushed scan of the shard-bucketed blocks
      (index/builder.py ``bucket_spec``: shard p in bucket p mod
@@ -35,11 +38,10 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      ``_position_lists``, and every BM25 weight comes from
      ``bm25.idf_sim`` and ``bm25.tf_norm_sim``. A compound scored
      query (bool, dis_max, constant_score, boosts over match, phrase
-     and term-set leaves in any fields; every multi_match type) is one
-     query tree (``tree_topk``): one such scan of the (field, term)
-     pairs its leaves read, and one kernel that runs its leaves'
-     kernels and combines them per shard; a prefix, wildcard, regexp
-     or fuzzy query (``multi_term_topk``) is a one-leaf tree. The BM25 kernel
+     and term-set leaves in any fields; every multi_match type) is the
+     same query tree with more leaves: one such scan of the (field,
+     term) pairs its leaves read, and one kernel that runs its leaves'
+     kernels and combines them per shard. The BM25 kernel
      prunes with a term-at-a-time MaxScore/block-max strategy
      (reference: WAND activated by the 10k total-hits cap,
      search/query/TopDocsCollectorContext.java:202-206,
@@ -446,10 +448,12 @@ def _make_scorer(
     operator: str,
     minimum_should_match: int,
     prune: bool,
+    allowed_range: tuple[int, int] | None = None,
 ):
     """The BM25 kernel of one query over one partition's
     ``_term_view`` (built with this scorer's avgdl and params):
-    ``score(view, allowed, k, allowed_range=None)`` -> local top-k."""
+    ``score(view, allowed, k)`` -> local top-k, scoring only the doc ids
+    in ``allowed_range`` when it is given."""
     # highest impact first; for AND, rarest (highest idf) first anyway
     stats = sorted(term_stats, key=lambda s: -s.ub)
     ubs = np.array([s.ub for s in stats], dtype=np.float64)
@@ -470,7 +474,6 @@ def _make_scorer(
         view: dict[str, _TermBlocks],
         allowed: np.ndarray | None,
         k: int | None,
-        allowed_range: tuple[int, int] | None = None,
     ) -> pd.DataFrame:
         """Score one partition's blocks; ``allowed`` (sorted int64 doc
         ids) restricts scoring to docs that passed a filter clause —
@@ -610,7 +613,8 @@ def _make_scorer(
 
 def _query_scorer(terms: list[str], by_term: dict, n_docs: float,
                   avgdl: float, params: BM25Params, operator: str,
-                  minimum_should_match: int, prune: bool):
+                  minimum_should_match: int, prune: bool,
+                  allowed_range: tuple[int, int] | None = None):
     """One query's BM25 kernel over one field's ``by_term`` rows and the
     terms it reads; None when no doc can match (no indexed term, or an
     AND query missing one)."""
@@ -618,81 +622,13 @@ def _query_scorer(terms: list[str], by_term: dict, n_docs: float,
     if not stats or (operator == "and" and len(stats) < len(set(terms))):
         return None
     return (_make_scorer(stats, avgdl, params, operator,
-                         minimum_should_match, prune),
+                         minimum_should_match, prune, allowed_range),
             [s.term for s in stats])
 
 
 # the block columns the BM25 kernel (``_term_view``) reads
 _BM25_COLS = ("part_id", "term", "doc_ids", "tfs", "dls",
               "max_tf", "min_dl", "first_doc", "last_doc")
-
-
-def _bm25_local(
-    index: InvertedIndex,
-    field: str,
-    queries: list[list[str]],
-    k: int | None,
-    operator: str,
-    minimum_should_match: int,
-    params: BM25Params,
-    prune: bool,
-    allowed: DataFrame | None = None,
-    rng: tuple[int, int] | None = None,
-) -> DataFrame | None:
-    """The one BM25 scan behind ``match_topk`` (a batch of one) and
-    ``match_topk_batch``: ONE term-dict lookup for the sorted union of
-    the queries' terms, ONE postings scan with a pushed
-    ``In(term, ...)`` filter, and ONE applyInPandas pass in which each
-    partition builds one ``_term_view`` of its blocks and scores every
-    query against it. A block is decoded at most once per partition and
-    shared by every query that visits it; each query's pruning
-    decisions are its own, and a query that restricts a block masks a
-    copy of the shared decode.
-
-    Returns every partition's local top-k of each query in
-    BATCH_TOPK_SCHEMA (``query_id`` = the query's position in
-    ``queries``; queries with no indexed terms emit no rows), or None
-    when no query can match. ``allowed`` and ``rng`` restrict scoring
-    as in ``match_topk``."""
-    if rng is not None:
-        rng = (int(rng[0]), int(rng[1]))
-        if rng[0] > rng[1]:
-            return None
-    looked = _term_rows(index, field, sorted({t for q in queries for t in q}))
-    if looked is None:
-        return None
-    by_term, n_docs, avgdl = looked
-    scorers: list[tuple[int, object]] = []
-    live_terms: set[str] = set()
-    for qid, qterms in enumerate(queries):
-        q = _query_scorer(qterms, by_term, n_docs, avgdl, params,
-                          operator, minimum_should_match, prune)
-        if q is not None:
-            scorers.append((qid, q[0]))
-            live_terms.update(q[1])
-    if not scorers:
-        return None
-
-    def score_queries(pdf: pd.DataFrame, ids) -> pd.DataFrame:
-        view = _term_view(pdf, avgdl, params)
-        outs = []
-        for qid, score in scorers:
-            res = score(view, ids, k, rng)
-            if not res.empty:
-                res.insert(0, "query_id", np.int32(qid))
-                outs.append(res)
-        if not outs:
-            return _empty_topk(BATCH_TOPK_SCHEMA)
-        return pd.concat(outs, ignore_index=True)
-
-    cond = (F.col("field") == field) & F.col("term").isin(sorted(live_terms))
-    if rng is not None:
-        # scan-level block pruning: parquet row-group min/max stats on
-        # the pushed first_doc/last_doc predicates
-        cond = cond & (
-            (F.col("last_doc") >= rng[0]) & (F.col("first_doc") <= rng[1]))
-    return _scored_scan(index, cond, _BM25_COLS, score_queries, None,
-                        allowed, BATCH_TOPK_SCHEMA)
 
 
 def match_topk(
@@ -707,15 +643,15 @@ def match_topk(
     allowed: DataFrame | None = None,
     allowed_range: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Top-k BM25 for analyzed query ``terms``.
+    """Top-k BM25 for analyzed query ``terms``: a one-leaf query tree
+    (``tree_topk`` over ``match_node``).
 
     ``allowed_range=(lo, hi)`` restricts scoring to a doc-id RANGE —
     the index-sorting fast path (assign_sorted_doc_ids: doc ids are
     sort ranks, so a range filter on the sort field IS a doc-id
-    range). The range predicate is pushed to the posting scan
-    (first_doc/last_doc parquet min/max stats prune row groups) and
-    blocks outside it never decode; theta pruning stays valid because
-    every accumulated doc is a true candidate.
+    range). The kernel skips every block whose [first_doc, last_doc]
+    lies outside the range without decoding it; theta pruning stays
+    valid because every accumulated doc is a true candidate.
 
     Returns DataFrame(doc_id long, score double, matched int), globally
     ordered by (score desc, doc_id asc), limited to k.
@@ -724,12 +660,9 @@ def match_topk(
     scoring to docs passing a filter clause, pushed into the scorer by
     the shared skeleton (``_scored_scan``).
     """
-    local = _bm25_local(
-        index, field, [terms], k, operator, minimum_should_match,
-        params or BM25Params(), prune, allowed, allowed_range)
-    if local is None:
-        return _no_hits(index.spark)
-    return _topk_merge(local.drop("query_id"), k)
+    return tree_topk(index, match_node(
+        index, field, terms, operator, minimum_should_match, params, prune,
+        allowed_range), k, allowed)
 
 
 def doc_id_range_for(
@@ -769,12 +702,18 @@ def match_topk_batch(
 ) -> DataFrame:
     """Top-k BM25 for MANY analyzed queries in ONE Spark job.
 
-    Per-query results are identical to ``match_topk``: both run the
-    same scan (``_bm25_local``), which amortizes everything that is
-    per-JOB in the one-at-a-time path — one stats lookup, one postings
-    scan, one applyInPandas pass sharing each partition's decoded
-    blocks across every query — followed here by ONE per-query window
-    top-k over the (n_shards x Q x k)-row local results.
+    Per-query results are identical to ``match_topk``: every query runs
+    the same BM25 kernel (``_query_scorer``), and the batch amortizes
+    everything that is per-JOB in the one-at-a-time path — ONE
+    term-dict lookup for the sorted union of the queries' terms, ONE
+    postings scan with a pushed ``In(term, ...)`` filter, ONE
+    applyInPandas pass in which each shard builds one ``_term_view`` of
+    its blocks and scores every query against it (a block is decoded at
+    most once per shard and shared by every query that visits it; each
+    query's pruning decisions are its own, and a query that restricts a
+    block masks a copy of the shared decode) — followed by ONE
+    per-query window top-k over the (n_shards x Q x k)-row local
+    results.
 
     This is the throughput shape for a query STREAM at cluster scale —
     the reference's `_msearch` endpoint batches searches into one
@@ -792,11 +731,37 @@ def match_topk_batch(
     """
     from pyspark.sql import Window
 
-    local = _bm25_local(
-        index, field, queries, k, operator, minimum_should_match,
-        params or BM25Params(), prune)
-    if local is None:
+    params = params or BM25Params()
+    looked = _term_rows(index, field, sorted({t for q in queries for t in q}))
+    if looked is None:
         return _no_hits(index.spark, BATCH_TOPK_SCHEMA)
+    by_term, n_docs, avgdl = looked
+    scorers: list[tuple[int, object]] = []
+    live_terms: set[str] = set()
+    for qid, qterms in enumerate(queries):
+        q = _query_scorer(qterms, by_term, n_docs, avgdl, params,
+                          operator, minimum_should_match, prune)
+        if q is not None:
+            scorers.append((qid, q[0]))
+            live_terms.update(q[1])
+    if not scorers:
+        return _no_hits(index.spark, BATCH_TOPK_SCHEMA)
+
+    def score_queries(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+        view = _term_view(pdf, avgdl, params)
+        outs = []
+        for qid, score in scorers:
+            res = score(view, ids, k)
+            if not res.empty:
+                res.insert(0, "query_id", np.int32(qid))
+                outs.append(res)
+        if not outs:
+            return _empty_topk(BATCH_TOPK_SCHEMA)
+        return pd.concat(outs, ignore_index=True)
+
+    local = _scored_scan(
+        index, _pairs_cond((field, t) for t in live_terms), _BM25_COLS,
+        score_queries, None, schema=BATCH_TOPK_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id"))
     return (
@@ -945,26 +910,6 @@ def _phrase_kernel(
 _PHRASE_COLS = ("part_id", "term", "n", "doc_ids", "tfs", "dls", "positions")
 
 
-def _phrase_scan(
-    index: InvertedIndex,
-    field: str,
-    head: list[str],
-    lasts: list[str],
-    k: int | None,
-    params: BM25Params,
-    slop: int,
-    allowed: DataFrame | None,
-) -> DataFrame:
-    """``_phrase_kernel`` over the shared posting-scan skeleton."""
-    kern = _phrase_kernel(index, field, head, lasts, params, slop)
-    if kern is None:
-        return _no_hits(index.spark)
-    qterms, score_group = kern
-    cond = (F.col("field") == field) & F.col("term").isin(qterms)
-    return _scored_scan(index, cond, _PHRASE_COLS,
-                        lambda pdf, ids: score_group(pdf, ids, k), k, allowed)
-
-
 def phrase_topk(
     index: InvertedIndex,
     field: str,
@@ -979,14 +924,12 @@ def phrase_topk(
     (pushed into the kernel like ``match_topk``'s).
 
     Reference: MatchQueryParser.java:243 createPhraseQuery -> Lucene
-    PhraseQuery, scored by ``_phrase_scan`` with a one-term last
-    position. BM25 similarity only: another one raises ValueError."""
-    params = params or BM25Params()
-    _bm25_only(params, "phrase_topk")
-    if not terms:
-        return _no_hits(index.spark)
-    return _phrase_scan(index, field, list(terms[:-1]), [terms[-1]], k,
-                        params, slop, allowed)
+    PhraseQuery: a one-leaf query tree (``tree_topk`` over
+    ``phrase_node`` with a one-term last position). BM25 similarity
+    only: another one raises ValueError."""
+    return tree_topk(index, phrase_node(
+        index, field, list(terms[:-1]), list(terms[-1:]),
+        params or BM25Params(), slop), k, allowed)
 
 
 def synonym_match_topk(
@@ -1005,66 +948,12 @@ def synonym_match_topk(
     tf = SUM of the members' tfs in the doc, one BM25 contribution per
     group; groups sum like bool-OR clauses.
 
-    Same physical plan as match_topk (the shared posting-scan skeleton):
-    one pushed-down bucketed block scan of all member terms, no
-    exchange, local top-k + global merge. BM25 similarity only."""
-    params = params or BM25Params()
-    _bm25_only(params, "synonym_match_topk")
-    looked = _term_rows(index, field, sorted({t for g in groups for t in g}))
-    if looked is None:
-        return _no_hits(index.spark)
-    by_term, n_docs, avgdl = looked
-    group_idf: list[float] = []
-    live_groups: list[list[str]] = []
-    for g in groups:
-        dfs = [int(by_term[t]["df"]) for t in g if t in by_term]
-        if not dfs:
-            continue
-        live_groups.append([t for t in g if t in by_term])
-        group_idf.append(bm25.idf_sim(max(dfs), n_docs, params))
-    if not live_groups:
-        return _no_hits(index.spark)
-    msm = max(minimum_should_match, 1)
-
-    def score_group(pdf: pd.DataFrame, _ids) -> pd.DataFrame:
-        hits = []
-        by = dict(tuple(pdf.groupby("term", sort=False)))
-        for gi, g in enumerate(live_groups):
-            ids_p, tf_p, dl_p = [], [], []
-            for t in g:
-                sub = by.get(t)
-                if sub is None:
-                    continue
-                for row in sub.itertuples(index=False):
-                    ids_p.append(codec.delta_decode(codec.vbyte_decode(row.doc_ids)))
-                    tf_p.append(codec.vbyte_decode(row.tfs))
-                    dl_p.append(codec.vbyte_decode(row.dls))
-            if not ids_p:
-                continue
-            ids = np.concatenate(ids_p)
-            tfs = np.concatenate(tf_p).astype(np.float64)
-            dls = np.concatenate(dl_p)
-            # SynonymQuery: per-doc tf = sum over member terms
-            uniq, inv = np.unique(ids, return_inverse=True)
-            tf_sum = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(tf_sum, inv, tfs)
-            dl_first = np.zeros(uniq.size, dtype=np.int64)
-            dl_first[inv[::-1]] = dls[::-1]  # any member's dl (same doc-field)
-            hits.append((uniq, group_idf[gi] * bm25.tf_norm_sim(
-                tf_sum, dl_first, avgdl, params)))
-        if not hits:
-            return _empty_topk()
-        # groups sum like bool-OR clauses, one matched clause each
-        ids, scores, counts = _fold(
-            *(np.concatenate(a) for a in zip(*hits)),
-            np.ones(sum(u.size for u, _ in hits), dtype=np.int64), 1.0)
-        keep = counts >= msm
-        return _local_topk(ids[keep], scores[keep], counts[keep], k)
-
-    cond = (F.col("field") == field) & F.col("term").isin(
-        sorted({t for g in live_groups for t in g}))
-    cols = ("part_id", "term", "doc_ids", "tfs", "dls")
-    return _scored_scan(index, cond, cols, score_group, k)
+    A one-leaf query tree (``tree_topk``), like match_topk: one
+    pushed-down bucketed block scan of all member terms, no exchange,
+    local top-k + global merge. BM25 similarity only."""
+    return tree_topk(index, synonym_node(
+        index, field, groups, minimum_should_match,
+        params or BM25Params()), k)
 
 
 def decoded_postings(
@@ -1159,11 +1048,12 @@ def phrase_prefix_topk(
     completed phrase. ``allowed`` restricts it to those doc ids, as in
     ``match_topk``.
 
-    SINGLE-PASS plan (``_phrase_scan`` with the expansions as the last
-    position): the posting blocks of the prefix terms AND every
-    expansion are loaded once — one bucketed scan, no exchange (round 1
-    unioned up to max_expansions separate phrase plans: 50x scan + 50x
-    shuffle of the same prefix blocks). BM25 similarity only."""
+    SINGLE-PASS plan (a one-leaf query tree, ``phrase_node`` with the
+    expansions as the last position): the posting blocks of the prefix
+    terms AND every expansion are loaded once — one bucketed scan, no
+    exchange (round 1 unioned up to max_expansions separate phrase
+    plans: 50x scan + 50x shuffle of the same prefix blocks). BM25
+    similarity only."""
     params = params or BM25Params()
     _bm25_only(params, "phrase_prefix_topk")
     if not terms:
@@ -1171,8 +1061,8 @@ def phrase_prefix_topk(
     expansions = expand_terms(
         index, field, "prefix", terms[-1], max_expansions=max_expansions
     )
-    return _phrase_scan(index, field, list(terms[:-1]), expansions, k,
-                        params, 0, allowed)
+    return tree_topk(index, phrase_node(
+        index, field, list(terms[:-1]), expansions, params), k, allowed)
 
 
 # ---------------------------------------------------------------------
@@ -1219,15 +1109,22 @@ def _leaf_node(field: str, terms, cols: tuple, kernel, view=None) -> Node:
 
 def match_node(index: InvertedIndex, field: str, terms: list[str],
                operator: str = "or", minimum_should_match: int = 1,
-               params: BM25Params | None = None) -> Node | None:
-    """A BM25 match leaf; None when no doc can match."""
+               params: BM25Params | None = None, prune: bool = True,
+               allowed_range: tuple[int, int] | None = None) -> Node | None:
+    """A BM25 match leaf (``_query_scorer``, which prunes when ``prune``
+    and scores only the doc ids in ``allowed_range`` when it is given);
+    None when no doc can match, an empty range included."""
     params = params or BM25Params()
+    if allowed_range is not None:
+        allowed_range = (int(allowed_range[0]), int(allowed_range[1]))
+        if allowed_range[0] > allowed_range[1]:
+            return None
     looked = _term_rows(index, field, sorted(set(terms)))
     if looked is None:
         return None
     by_term, n_docs, avgdl = looked
     q = _query_scorer(terms, by_term, n_docs, avgdl, params, operator,
-                      minimum_should_match, prune=True)
+                      minimum_should_match, prune, allowed_range)
     return None if q is None else _leaf_node(
         field, q[1], _BM25_COLS, q[0], (avgdl, params))
 
@@ -1241,6 +1138,70 @@ def phrase_node(index: InvertedIndex, field: str, head: list[str],
         if lasts else None
     return None if kern is None else _leaf_node(
         field, kern[0], _PHRASE_COLS, kern[1])
+
+
+# the block columns the synonym kernel reads
+_SYNONYM_COLS = ("part_id", "term", "doc_ids", "tfs", "dls")
+
+
+def synonym_node(index: InvertedIndex, field: str, groups: list[list[str]],
+                 minimum_should_match: int, params: BM25Params,
+                 ) -> Node | None:
+    """A synonym leaf (``synonym_match_topk``): each group of terms scores
+    as one SynonymQuery; None when no doc can match."""
+    _bm25_only(params, "synonym_match_topk")
+    looked = _term_rows(index, field, sorted({t for g in groups for t in g}))
+    if looked is None:
+        return None
+    by_term, n_docs, avgdl = looked
+    group_idf: list[float] = []
+    live_groups: list[list[str]] = []
+    for g in groups:
+        dfs = [int(by_term[t]["df"]) for t in g if t in by_term]
+        if not dfs:
+            continue
+        live_groups.append([t for t in g if t in by_term])
+        group_idf.append(bm25.idf_sim(max(dfs), n_docs, params))
+    if not live_groups:
+        return None
+    msm = max(minimum_should_match, 1)
+
+    def score_group(pdf: pd.DataFrame, ids, k: int | None) -> pd.DataFrame:
+        hits = []
+        by = dict(tuple(pdf.groupby("term", sort=False)))
+        for idf, g in zip(group_idf, live_groups):
+            rows = [r for t in g if t in by
+                    for r in by[t].itertuples(index=False)]
+            if not rows:
+                continue
+            d = np.concatenate([codec.delta_decode(codec.vbyte_decode(
+                r.doc_ids)) for r in rows])
+            tfs = np.concatenate([codec.vbyte_decode(r.tfs) for r in rows])
+            dls = np.concatenate([codec.vbyte_decode(r.dls) for r in rows])
+            if ids is not None:
+                keep = _member_mask(ids, d)
+                d, tfs, dls = d[keep], tfs[keep], dls[keep]
+            if not d.size:
+                continue
+            # SynonymQuery: per-doc tf = sum over member terms
+            uniq, inv = np.unique(d, return_inverse=True)
+            tf_sum = np.zeros(uniq.size, dtype=np.float64)
+            np.add.at(tf_sum, inv, tfs.astype(np.float64))
+            dl_first = np.zeros(uniq.size, dtype=np.int64)
+            dl_first[inv[::-1]] = dls[::-1]  # any member's dl (same doc-field)
+            hits.append((uniq, idf * bm25.tf_norm_sim(
+                tf_sum, dl_first, avgdl, params)))
+        if not hits:
+            return _empty_topk()
+        # groups sum like bool-OR clauses, one matched clause each
+        d, scores, counts = _fold(
+            *(np.concatenate(a) for a in zip(*hits)),
+            np.ones(sum(u.size for u, _ in hits), dtype=np.int64), 1.0)
+        keep = counts >= msm
+        return _local_topk(d[keep], scores[keep], counts[keep], k)
+
+    return _leaf_node(field, {t for g in live_groups for t in g},
+                      _SYNONYM_COLS, score_group)
 
 
 def terms_node(field: str, terms: list[str]) -> Node | None:
@@ -1365,16 +1326,18 @@ def tree_topk(index: InvertedIndex, tree: Node | None, k: int | None,
     need = {c for lf in leaves for c in lf.cols}
     cols = ("part_id", "field", "term") + tuple(
         c for c in _LEAF_COLS if c in need)
-    return _scored_scan(index, _pairs_cond(leaves), cols,
-                        _tree_kernel(tree), k, allowed)
+    return _scored_scan(
+        index, _pairs_cond((lf.field, t) for lf in leaves for t in lf.terms),
+        cols, _tree_kernel(tree), k, allowed)
 
 
-def _pairs_cond(leaves: list) -> Column:
-    """The (field, term) pairs ``leaves`` read: an OR over their fields,
-    in order, of ``field = f AND term IN (f's sorted terms)``."""
+def _pairs_cond(pairs) -> Column:
+    """The scan condition of the (field, term) ``pairs`` a scorer reads:
+    an OR over their fields, in order, of ``field = f AND term IN (f's
+    sorted terms)``."""
     by_field: dict[str, set] = {}
-    for lf in leaves:
-        by_field.setdefault(lf.field, set()).update(lf.terms)
+    for f, t in pairs:
+        by_field.setdefault(f, set()).add(t)
     conds = [(F.col("field") == f) & F.col("term").isin(sorted(ts))
              for f, ts in sorted(by_field.items())]
     return functools.reduce(Column.__or__, conds)

@@ -23,20 +23,22 @@ Docs match when >=1 span survives; like the engine's intervals query
 this executes in FILTER context (constant score = boost, so the
 (score desc, doc_id asc) merge orders by doc_id asc). Physical plan:
 the posting-scan skeleton every scorer shares (executor._scored_scan)
-— the shard-bucketed blocks of the tree's terms read with no exchange,
-an applyInPandas position evaluation over the shared
-``_position_lists`` decode, local top-k and global merge.
+— the shard-bucketed blocks of the span tree's (field, term) pairs,
+selected by the query tree's own scan condition (executor._pairs_cond)
+and read with no exchange, an applyInPandas position evaluation over
+the shared ``_position_lists`` decode, local top-k and global merge.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from elasticsearch_spark.index.builder import InvertedIndex
 from elasticsearch_spark.search.executor import (
-    _empty_topk, _local_topk, _no_hits, _position_lists, _scored_scan,
+    _empty_topk, _local_topk, _no_hits, _pairs_cond, _position_lists,
+    _scored_scan,
 )
 
 
@@ -263,13 +265,6 @@ def span_match(
     pairs = list(dict.fromkeys(span_pairs(tree)))
     if not pairs:
         return _no_hits(index.spark)
-    by_field: dict[str, list[str]] = {}
-    for f, t in pairs:
-        by_field.setdefault(f, []).append(t)
-    cond = None
-    for f, ts in by_field.items():
-        c = (F.col("field") == f) & F.col("term").isin(sorted(ts))
-        cond = c if cond is None else (cond | c)
 
     def check_group(pdf: pd.DataFrame, ids) -> pd.DataFrame:
         per_term, _ = _position_lists(pdf, ["field", "term"], ids)
@@ -290,7 +285,7 @@ def span_match(
         return _local_topk(ids, np.full(ids.size, float(boost)), nm, k)
 
     cols = ("part_id", "field", "term", "n", "doc_ids", "positions")
-    return _scored_scan(index, cond, cols, check_group, k)
+    return _scored_scan(index, _pairs_cond(pairs), cols, check_group, k)
 
 
 # ---------------------------------------------------------------------

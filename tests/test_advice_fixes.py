@@ -130,6 +130,33 @@ def test_search_constant_score_must_adds_boost(small_index, small_corpus):
         assert math.isclose(b["score"], a["score"] + 3.0, rel_tol=1e-9)
 
 
+def test_search_should_is_optional_beside_filter_clauses(small_index,
+                                                         small_corpus):
+    # BoolQueryBuilder: a must or filter clause makes should optional
+    # (minimum_should_match defaults to 0), so every filtered doc is a
+    # hit and the docs matching no should clause score 0, after the rest
+    lang = small_corpus.groupBy("lang").count() \
+        .orderBy(F.desc("count"), "lang").first()["lang"]
+    ids = _ids(small_corpus.filter(F.col("lang") == lang))
+    should = [{"match": {"content": "import"}}]
+    flt = {"term": {"lang": lang}}
+
+    def hits(body):
+        return [(r["doc_id"], round(r["score"], 9)) for r in search(
+            small_index, small_corpus, {"bool": body}, k=len(ids),
+            params=EXACT).collect()]
+
+    scored = hits({"must": should, "filter": [flt]})
+    assert 0 < len(scored) < len(ids)
+    rest = sorted(set(ids) - {d for d, _ in scored})
+    want = scored + [(d, 0.0) for d in rest]
+    assert hits({"must": [flt], "should": should}) == want
+    assert hits({"filter": [flt], "should": should}) == want
+    # an explicit minimum_should_match still needs a should match
+    assert hits({"filter": [flt], "should": should,
+                 "minimum_should_match": 1}) == scored
+
+
 def test_duplicate_query_term_scores_per_occurrence(small_index):
     # Lucene BooleanQuery sums duplicate TermQuery clauses
     single = match_topk(small_index, "content", ["import"], k=5,

@@ -8,7 +8,9 @@ multi-node analogue).
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 import numpy as np
 import pytest
@@ -394,6 +396,37 @@ def test_sorted_index_range_pruning(spark, corpus, tmp_path_factory):
     # empty range short-circuits
     assert match_topk(idx, "content", terms, k=10,
                       allowed_range=(5, 4)).count() == 0
+
+    # the kernel's pruning counters: with theta pruning off, exactly the
+    # blocks overlapping [lo, hi] decode and every other block is
+    # skipped by its [first_doc, last_doc] range, undecoded. Rare terms
+    # have blocks of a few docs, so some lie outside the range.
+    rare = [r["term"] for r in idx.term_dict.filter(
+        (F.col("field") == "content") & F.col("df").between(2, 6))
+        .orderBy("term").limit(40).collect()]
+    blocks = idx.postings.filter(
+        (F.col("field") == "content") & F.col("term").isin(rare))
+    n_in = blocks.filter(
+        (F.col("last_doc") >= lo) & (F.col("first_doc") <= hi)).count()
+    assert 0 < n_in < blocks.count()
+    stats_dir = str(tmp_path_factory.mktemp("prune_stats"))
+    env = spark.sparkContext.environment
+    env["ES_SPARK_PRUNE_STATS_DIR"] = stats_dir  # read by the workers
+    try:
+        exhaustive = match_topk(idx, "content", rare, k=None, prune=False,
+                                allowed_range=(lo, hi)).collect()
+    finally:
+        del env["ES_SPARK_PRUNE_STATS_DIR"]
+    stats = []
+    for name in os.listdir(stats_dir):
+        with open(os.path.join(stats_dir, name)) as f:
+            stats.append(json.load(f))
+    assert stats
+    total = {c: sum(st[c] for st in stats)
+             for c in ("blocks", "decoded", "skip_sort")}
+    assert total["decoded"] == n_in, total
+    assert total["skip_sort"] == total["blocks"] - n_in, total
+    assert exhaustive and all(lo <= r["doc_id"] <= hi for r in exhaustive)
 
 
 def test_msearch_template_renders_and_batches(index):

@@ -82,18 +82,28 @@ def test_no_row_at_a_time_udfs():
     assert not bad, f"row-at-a-time Python UDFs found in: {bad}"
 
 
+_HOT_PATHS = {
+    "match_topk", "match_topk_batch", "phrase_topk", "phrase_prefix_topk",
+    "synonym_match_topk", "multi_term_topk", "multi_match_topk",
+    "match_node", "phrase_node", "synonym_node", "_scored_scan",
+    "_phrase_kernel", "_fold", "tree_topk", "_tree_kernel",
+}
+
+
 def test_no_collect_in_hot_paths():
     """collect() is allowed only for driver-side statistics (term_dict /
     coll_stats / manifests / agg shells) — never over postings rows."""
     with open(os.path.join(PKG, "search", "executor.py")) as f:
         src = f.read()
     # the scorer path must not collect posting/doc frames
+    checked = set()
     for fn_src in re.split(r"\ndef ", src):
-        if fn_src.startswith(("match_topk", "phrase_topk", "multi_term_topk",
-                              "_bm25_local", "_phrase_scan", "_scored_scan",
-                              "_phrase_kernel", "multi_match_topk",
-                              "_fold", "tree_topk", "_tree_kernel")):
-            assert ".collect()" not in fn_src, "collect() in a scorer path"
+        name = fn_src.split("(", 1)[0]
+        if name in _HOT_PATHS:
+            checked.add(name)
+            assert ".collect()" not in fn_src, f"collect() in {name}"
+    # a renamed or deleted scorer must not leave the check empty
+    assert checked == _HOT_PATHS, sorted(_HOT_PATHS - checked)
 
 
 @pytest.fixture(scope="module")
@@ -618,11 +628,68 @@ def test_tree_scan_reads_only_its_leaves_pairs(index):
         ex.phrase_node(index, "text", ["key"], ["order"], params)], 1)
     leaves = list(ex._leaves(tree))
     assert len(leaves) == 3
-    rows = (index.postings.filter(ex._pairs_cond(leaves))
+    rows = (index.postings.filter(ex._pairs_cond(
+                (lf.field, t) for lf in leaves for t in lf.terms))
             .select("field", "term").distinct().collect())
     assert {(r["field"], r["term"]) for r in rows} == {
         ("text", "table"), ("source", "src5"),
         ("text", "key"), ("text", "order")}
+
+
+def _one_leaf_cases():
+    from elasticsearch_spark.search import executor as ex
+    from elasticsearch_spark.search.bm25 import BM25Params
+
+    p = BM25Params()
+    terms = ["table", "scan"]
+    return {
+        "match_or": (
+            lambda idx, a: ex.match_topk(idx, "text", terms),
+            lambda idx, a: ex.tree_topk(
+                idx, ex.match_node(idx, "text", terms), 10)),
+        "match_and": (
+            lambda idx, a: ex.match_topk(idx, "text", terms, operator="and"),
+            lambda idx, a: ex.tree_topk(
+                idx, ex.match_node(idx, "text", terms, "and"), 10)),
+        "match_allowed": (
+            lambda idx, a: ex.match_topk(idx, "text", terms, allowed=a),
+            lambda idx, a: ex.tree_topk(
+                idx, ex.match_node(idx, "text", terms), 10, a)),
+        "phrase": (
+            lambda idx, a: ex.phrase_topk(idx, "text", ["key", "order"],
+                                          slop=1),
+            lambda idx, a: ex.tree_topk(idx, ex.phrase_node(
+                idx, "text", ["key"], ["order"], p, 1), 10)),
+        "phrase_prefix": (
+            lambda idx, a: ex.phrase_prefix_topk(idx, "text", ["key", "or"]),
+            lambda idx, a: ex.tree_topk(idx, ex.phrase_node(
+                idx, "text", ["key"],
+                ex.expand_terms(idx, "text", "prefix", "or"), p), 10)),
+        "synonym": (
+            lambda idx, a: ex.synonym_match_topk(
+                idx, "text", [["query", "data"], ["table"]]),
+            lambda idx, a: ex.tree_topk(idx, ex.synonym_node(
+                idx, "text", [["query", "data"], ["table"]], 1, p), 10)),
+    }
+
+
+def _masked_plan(df) -> str:
+    """The executed physical plan without its expression and plan ids."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"#\d+|plan_id=\d+", "#", plan)
+
+
+@pytest.mark.parametrize("shape", sorted(_one_leaf_cases()))
+def test_single_request_is_a_one_leaf_tree(spark, index, shape):
+    """Every single-request scorer is ``tree_topk`` over one leaf: its
+    physical plan is the tree's, so a match (or a phrase) has one plan
+    whichever entry runs it."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    allowed = docs.filter("lang = 'en'").select("doc_id")
+    direct, tree = _one_leaf_cases()[shape]
+    want = _masked_plan(tree(index, allowed))
+    assert _masked_plan(direct(index, allowed)) == want
+    assert "field#" in want, want[:3000]
 
 
 def test_filtered_disjunction_keeps_pruning_plan(spark, index):

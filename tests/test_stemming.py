@@ -116,7 +116,8 @@ def test_synonym_query_scores(spark, tmp_path):
 
     from elasticsearch_spark.index.builder import build_index
     from elasticsearch_spark.search.bm25 import BM25Params
-    from elasticsearch_spark.search.executor import synonym_match_topk
+    from elasticsearch_spark.search.executor import (
+        synonym_match_topk, synonym_node, tree_topk)
 
     docs = spark.createDataFrame(
         [
@@ -147,6 +148,12 @@ def test_synonym_query_scores(spark, tmp_path):
     assert math.isclose(got[1], bm25(1, 2), rel_tol=1e-9)
     assert math.isclose(got[3], bm25(2, 3), rel_tol=1e-9)
     assert got[3] > got[1] > 0
+    # as a query-tree leaf it scores only the allowed docs, unchanged
+    allowed = spark.createDataFrame([(2,), (3,), (4,)], "doc_id long")
+    node = synonym_node(idx, "body", [["fast", "quick"]], 1,
+                        BM25Params(quantize_norms=False))
+    assert {r["doc_id"]: r["score"] for r in tree_topk(
+        idx, node, 4, allowed).collect()} == {2: got[2], 3: got[3]}
 
 
 def test_light_language_analyzers():

@@ -11,7 +11,8 @@ from elasticsearch_spark.index import build_index
 from elasticsearch_spark.index.builder import assign_doc_ids
 from elasticsearch_spark.analysis import analyze
 from elasticsearch_spark.search.executor import (
-    fetch, match_topk, multi_term_topk, phrase_topk)
+    fetch, match_topk, multi_term_topk, phrase_prefix_topk, phrase_topk,
+    synonym_match_topk)
 
 
 def main() -> int:
@@ -61,6 +62,10 @@ def drive(work: str) -> int:
     for name, df in (
         ("match_topk", topk),
         ("phrase_topk", phrase_topk(idx, "content", ["public", "static"], k=5)),
+        ("phrase_prefix_topk", phrase_prefix_topk(
+            idx, "content", ["public", "st"], k=5)),
+        ("synonym_match_topk", synonym_match_topk(
+            idx, "content", [["import", "return"], ["public"]], k=5)),
         ("multi_term_topk", multi_term_topk(idx, "content", "prefix", "pars")),
     ):
         df.collect()
