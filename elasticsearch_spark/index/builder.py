@@ -103,7 +103,7 @@ def _vb_small(vals: list[int]) -> bytes:
 
     Used by the per-doc reference tokenizer (``vectorized=False``) only;
     VByte is value-independent, so per-posting encodings concatenate
-    into exactly the stream ``_position_stream`` writes."""
+    into exactly the stream ``codec.encode_positions`` writes."""
     for v in vals:
         if v >= 0x80:
             break
@@ -117,27 +117,6 @@ def _vb_small(vals: list[int]) -> bytes:
             v >>= 7
         out.append(v)
     return bytes(out)
-
-
-def _position_stream(pos: np.ndarray, lens: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Per-posting ``[tf, first, deltas...]`` position streams, VByte-
-    encoded in ONE pass. ``pos`` holds every posting's (ascending)
-    positions back to back, ``lens[i]`` of them for posting i. Returns
-    (buffer, bounds): posting i's bytes are buffer[bounds[i]:bounds[i+1]]
-    — the per-posting slices concatenate into exactly the block stream
-    codec.decode_positions reads."""
-    n = pos.size
-    n_groups = lens.size
-    g_starts = np.cumsum(lens) - lens
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[1:] = pos[1:] - pos[:-1]
-    deltas[g_starts] = pos[g_starts]
-    stream = np.empty(n + n_groups, dtype=np.int64)
-    tf_slots = g_starts + np.arange(n_groups)
-    stream[tf_slots] = lens
-    stream[np.arange(n) + np.repeat(np.arange(n_groups), lens) + 1] = deltas
-    enc, offs = codec.vbyte_encode_with_offsets(stream)
-    return enc, offs[np.append(tf_slots, n + n_groups)]
 
 
 def _slices(buf: bytes, bounds: np.ndarray) -> list[bytes]:
@@ -506,7 +485,7 @@ def _tokenize_field_flat(pdf: pd.DataFrame, field: str, analyzer_name: str) -> p
     tf = np.diff(np.append(g_starts, n))
 
     # per-posting position blobs are byte slices of ONE VByte pass
-    blobs = _slices(*_position_stream(pos_s, tf))
+    blobs = _slices(*codec.encode_positions(pos_s, tf))
 
     enc_tf, offs_tf = codec.vbyte_encode_with_offsets(tf)
     g_terms = uniques[code_s[g_starts]]
@@ -605,7 +584,7 @@ def _doc_row_postings(pdf: pd.DataFrame):
     total = int(lens.sum())
     doc_rep = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens)
     dl_rep = np.repeat(pdf["dl"].to_numpy(dtype=np.int64), lens)
-    tf_flat = codec.vbyte_decode(b"".join(pdf["tfs"].tolist()))
+    tf_flat = codec.decode_stream(pdf["tfs"].tolist())
     terms_flat = np.empty(total, dtype=object)
     pos_flat = np.empty(total, dtype=object)
     i = 0
@@ -621,7 +600,7 @@ def _decoded_row_postings(pdf: pd.DataFrame):
     """Encoder front for postings decoded from existing blocks
     (compaction, split; columns term, doc_id, tf, dl, positions): the
     roster is the distinct docs that have postings, and every position
-    list is re-encoded in ONE ``_position_stream`` pass."""
+    list is re-encoded in ONE ``codec.encode_positions`` pass."""
     doc = pdf["doc_id"].to_numpy(dtype=np.int64)
     dl = pdf["dl"].to_numpy(dtype=np.int64)
     tf = pdf["tf"].to_numpy(dtype=np.int64)
@@ -630,7 +609,7 @@ def _decoded_row_postings(pdf: pd.DataFrame):
     plists = pdf["positions"].tolist()
     lens = np.fromiter(map(len, plists), dtype=np.int64, count=len(plists))
     pos_flat = np.empty(len(plists), dtype=object)
-    pos_flat[:] = _slices(*_position_stream(
+    pos_flat[:] = _slices(*codec.encode_positions(
         np.concatenate(plists).astype(np.int64), lens))
     return roster, doc, dl, tf, pdf["term"].to_numpy(dtype=object), pos_flat
 

@@ -290,8 +290,9 @@ def compile_filter(
             msm = body.get("minimum_should_match")
             if msm is None:
                 # ES default: if there are must/filter clauses, should is
-                # optional (msm=0); otherwise msm=1
-                msm = 0 if clauses else 1
+                # optional (msm=0); otherwise msm=1 — must_not alone
+                # leaves should required
+                msm = 0 if body.get("must") or body.get("filter") else 1
             if msm > 0:
                 n_matched = sum(_not_null(c).cast("int") for c in should)
                 clauses.append(n_matched >= F.lit(int(msm)))

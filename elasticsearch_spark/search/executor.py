@@ -49,9 +49,11 @@ search/query/QueryPhase.java:86, merge SearchPhaseController.java:144-208):
      scanned in row order against the theta taken at the term
      boundary, and merged into the accumulator once, at the term's
      end. Each group first builds a per-term view of its blocks (skip
-     metadata as arrays, block upper bounds) in which a delta+VByte
-     block is decoded and quantized at most once, on first use; every
-     query of the partition shares that view.
+     metadata as arrays, block upper bounds) in which a term's
+     delta+VByte blocks decode in one pass on first touch
+     (``codec.decode_blocks``); every query of the partition shares
+     that view. Every other reader decodes through the same codec
+     entries, a whole column per pass.
   4. global merge (``_topk_merge``): ``orderBy(score desc, doc_id
      asc).limit(k)`` —
      Catalyst's TakeOrderedAndProject == Lucene TopDocs.merge
@@ -61,9 +63,10 @@ Pruning safety: before scoring term i (terms ordered by max-impact
 desc), any doc NOT yet in the accumulator can reach at most
 ``sum(ub_j, j >= i)``; once a full local top-k exists with k-th score
 theta, if that bound < theta strictly, new docs are provably outside
-the top-k and term i only updates accumulator members (block decode is
-skipped when a block holds no members). Property-tested against the
-exhaustive scorer.
+the top-k and term i only updates accumulator members (a block whose
+doc range holds no member is skipped unread; a term whose every block
+is skipped never decodes). Property-tested against the exhaustive
+scorer.
 """
 
 from __future__ import annotations
@@ -281,31 +284,27 @@ def _position_lists(
     pdf: pd.DataFrame, key: str | list[str] = "term",
     allowed: np.ndarray | None = None,
 ) -> tuple[dict, dict[int, int]]:
-    """Decode one partition's blocks (projected with ``n``, ``doc_ids``
-    and ``positions``) into ``{key: {doc: positions}}``, grouped by the
-    ``key`` column(s), keeping only the docs in ``allowed`` (sorted
-    int64) when it is given. When the projection also carries ``dls``
-    the second result maps every kept doc to its field length; it is
-    empty otherwise."""
+    """Decode one partition's blocks (projected with ``n``, ``doc_ids``,
+    ``tfs`` and ``positions``) into ``{key: {doc: positions}}``, grouped
+    by the ``key`` column(s), keeping only the docs in ``allowed``
+    (sorted int64) when it is given. Each group's blocks decode in one
+    codec pass. When the projection also carries ``dls`` the second
+    result maps every kept doc to its field length; it is empty
+    otherwise."""
     with_dl = "dls" in pdf.columns
     per_term: dict = {}
     dl_map: dict[int, int] = {}
     for term, g in pdf.groupby(key, sort=False):
-        docs: dict[int, np.ndarray] = {}
-        for row in g.itertuples(index=False):
-            d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-            rows = (range(d.size) if allowed is None
-                    else np.flatnonzero(_member_mask(allowed, d)))
-            if len(rows) == 0:
-                continue
-            plists = codec.decode_positions(bytes(row.positions), int(row.n))
-            for j in rows:
-                docs[int(d[j])] = plists[j]
-            if with_dl:
-                dls = codec.vbyte_decode(row.dls)
-                for j in rows:
-                    dl_map[int(d[j])] = int(dls[j])
-        per_term[term] = docs
+        _, d = codec.decode_blocks(g["n"], g["doc_ids"])
+        tf = codec.decode_stream(g["tfs"])
+        pos, off = codec.decode_positions(g["positions"], tf)
+        plists = np.split(pos, off[1:-1])
+        rows = (np.arange(d.size) if allowed is None
+                else np.flatnonzero(_member_mask(allowed, d)))
+        docs = d[rows].tolist()
+        per_term[term] = dict(zip(docs, (plists[j] for j in rows.tolist())))
+        if with_dl:
+            dl_map.update(zip(docs, codec.decode_stream(g["dls"])[rows].tolist()))
     return per_term, dl_map
 
 
@@ -377,16 +376,15 @@ class _TermBlocks:
     """One term's posting blocks within one partition, shared by every
     scorer that runs over that partition (all Q queries of a batch).
 
-    Holds the block skip metadata as arrays, the block upper-bound
-    tf-norm (max_tf at min_dl) for the view's ``(avgdl, params)``, and
-    a lazily filled per-block cache of the decoded doc ids and their
-    tf-norm (tf as float64 against the effective dl, quantized once).
-    The cache always holds a block's FULL decode; restricted scans mask
-    a copy of it."""
+    Holds the block skip metadata as arrays and the block upper-bound
+    tf-norm (max_tf at min_dl) for the view's ``(avgdl, params)``. On
+    first touch ALL of the term's blocks decode in one codec pass into
+    flat doc ids and their tf-norm (tf as float64 against the effective
+    dl, quantized once) plus block offsets; a term no query touches is
+    never decoded. Restricted scans mask a copy of a block's slice."""
 
     __slots__ = ("n", "first_doc", "last_doc", "max_tf", "min_dl",
-                 "_doc_ids", "_tfs", "_dls", "_avgdl", "_params", "_ub",
-                 "_decoded")
+                 "_src", "_avgdl", "_params", "_ub", "_flat")
 
     def __init__(self, cols: dict, rows: np.ndarray, avgdl: float,
                  params: BM25Params):
@@ -395,12 +393,9 @@ class _TermBlocks:
         self.last_doc = cols["last_doc"][rows]
         self.max_tf = cols["max_tf"][rows]
         self.min_dl = cols["min_dl"][rows]
-        self._doc_ids = cols["doc_ids"][rows]
-        self._tfs = cols["tfs"][rows]
-        self._dls = cols["dls"][rows]
+        self._src = (cols, rows)
         self._avgdl, self._params = avgdl, params
-        self._ub = None
-        self._decoded: list = [None] * self.n
+        self._ub = self._flat = None
 
     def ub_tfn(self) -> np.ndarray:
         """Per-block upper bound of the tf-norm."""
@@ -412,29 +407,26 @@ class _TermBlocks:
         return self._ub
 
     def block(self, j: int) -> tuple[np.ndarray, np.ndarray]:
-        """(doc ids, tf-norm) of block ``j``, decoded on first use and
-        read-only: every later query of the partition reads the same
-        arrays."""
-        hit = self._decoded[j]
-        if hit is None:
-            ids = codec.delta_decode(codec.vbyte_decode(self._doc_ids[j]))
-            tf = codec.vbyte_decode(self._tfs[j]).astype(np.float64)
-            dl = codec.vbyte_decode(self._dls[j])
-            dl_eff = (
-                bm25.quantize_dl(dl) if self._params.quantize_norms else dl
-            ).astype(np.float64)
-            tfn = bm25.tfn_eff(tf, dl_eff, self._avgdl, self._params)
+        """(doc ids, tf-norm) of block ``j``, read-only: every later
+        query of the partition reads the same arrays."""
+        if self._flat is None:
+            cols, rows = self._src
+            off, ids = codec.decode_blocks(cols["n"][rows],
+                                           cols["doc_ids"][rows])
+            tfn = bm25.tf_norm_sim(codec.decode_stream(cols["tfs"][rows]),
+                                   codec.decode_stream(cols["dls"][rows]),
+                                   self._avgdl, self._params)
             ids.flags.writeable = tfn.flags.writeable = False
-            hit = self._decoded[j] = (ids, tfn)
-        return hit
+            self._flat, self._src = (off.tolist(), ids, tfn), None
+        off, ids, tfn = self._flat
+        return ids[off[j]:off[j + 1]], tfn[off[j]:off[j + 1]]
 
 
 def _term_view(pdf: pd.DataFrame, avgdl: float,
                params: BM25Params) -> dict[str, _TermBlocks]:
     """Split one partition's posting blocks by term, once. Block order
     within a term is the partition's row order."""
-    cols = {c: pdf[c].to_numpy() for c in (
-        "first_doc", "last_doc", "max_tf", "min_dl", "doc_ids", "tfs", "dls")}
+    cols = {c: pdf[c].to_numpy() for c in _BM25_COLS[2:]}
     return {
         t: _TermBlocks(cols, rows, avgdl, params)
         for t, rows in pdf.groupby("term", sort=False).indices.items()
@@ -549,11 +541,11 @@ def _make_scorer(
                     hi = np.searchsorted(acc_ids, last_doc[j], "right")
                     if lo == hi:
                         nstat["skip_theta_range"] += 1
-                        continue  # range-skip: nothing to update, no decode
+                        continue  # range-skip: nothing to update, not read
                 elif allowed is not None:
                     # filter-aware skip: a block whose [first_doc,
-                    # last_doc] range holds no allowed doc decodes
-                    # nothing (the allowlist is sorted)
+                    # last_doc] range holds no allowed doc is not read
+                    # (the allowlist is sorted)
                     lo = np.searchsorted(allowed, first_doc[j], "left")
                     hi = np.searchsorted(allowed, last_doc[j], "right")
                     if lo == hi:
@@ -561,14 +553,14 @@ def _make_scorer(
                         continue
                 elif allowed_range is not None:
                     # index-sort range skip: doc ids ARE sort ranks, so
-                    # a block outside [lo, hi] never decodes (Lucene
+                    # a block outside [lo, hi] is never read (Lucene
                     # sorted-index early termination)
                     if (last_doc[j] < allowed_range[0]
                             or first_doc[j] > allowed_range[1]):
                         nstat["skip_sort"] += 1
                         continue
-                # counts blocks this query needed decoded, whether or
-                # not an earlier query already filled the cache
+                # counts blocks this query reads, whether or not the
+                # term's one-pass decode already ran
                 d, tfn = tb.block(j)
                 nstat["decoded"] += 1
                 if restricted:
@@ -627,7 +619,7 @@ def _query_scorer(terms: list[str], by_term: dict, n_docs: float,
 
 
 # the block columns the BM25 kernel (``_term_view``) reads
-_BM25_COLS = ("part_id", "term", "doc_ids", "tfs", "dls",
+_BM25_COLS = ("part_id", "term", "n", "doc_ids", "tfs", "dls",
               "max_tf", "min_dl", "first_doc", "last_doc")
 
 
@@ -650,7 +642,7 @@ def match_topk(
     the index-sorting fast path (assign_sorted_doc_ids: doc ids are
     sort ranks, so a range filter on the sort field IS a doc-id
     range). The kernel skips every block whose [first_doc, last_doc]
-    lies outside the range without decoding it; theta pruning stays
+    lies outside the range without reading it; theta pruning stays
     valid because every accumulated doc is a true candidate.
 
     Returns DataFrame(doc_id long, score double, matched int), globally
@@ -708,10 +700,11 @@ def match_topk_batch(
     term-dict lookup for the sorted union of the queries' terms, ONE
     postings scan with a pushed ``In(term, ...)`` filter, ONE
     applyInPandas pass in which each shard builds one ``_term_view`` of
-    its blocks and scores every query against it (a block is decoded at
-    most once per shard and shared by every query that visits it; each
-    query's pruning decisions are its own, and a query that restricts a
-    block masks a copy of the shared decode) — followed by ONE
+    its blocks and scores every query against it (a term's blocks
+    decode at most once per shard, in one pass on first touch, and are
+    shared by every query that visits them; each query's pruning
+    decisions are its own, and a query that restricts a block masks a
+    copy of the shared decode) — followed by ONE
     per-query window top-k over the (n_shards x Q x k)-row local
     results.
 
@@ -835,7 +828,7 @@ def _phrase_kernel(
     doc a position-list intersection: end = pos(h0); end = (end+1) ∩
     pos(h1); ...; freq = |(end+1) ∩ pos(last)|. Candidates are docs
     holding every head term (the conjunction prunes before any
-    position decode).
+    position intersection).
 
     Returns ``(sorted scan terms, kernel(pdf, ids, k))`` for blocks
     projected to ``_PHRASE_COLS``, or None when no doc can match."""
@@ -975,7 +968,8 @@ def decoded_postings(
     blocks whose [first_doc, last_doc] range excludes the id are never
     read — a single-doc lookup touches a handful of blocks, not the
     index. Rows of other docs sharing those blocks still decode;
-    callers filter the exact id.
+    callers filter the exact id. Each Arrow batch of blocks decodes in
+    one codec pass per column.
     """
     blocks = index.postings.filter(
         (F.col("field") == field) & F.col("term").isNotNull()
@@ -1008,23 +1002,21 @@ def decoded_postings(
 
     def decode(batches):
         for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                d = codec.delta_decode(codec.vbyte_decode(row.doc_ids))
-                data = {
-                    "part_id": np.full(d.size, row.part_id, dtype=np.int32),
-                    "term": row.term,
-                    "doc_id": d,
-                    "tf": codec.vbyte_decode(row.tfs).astype(np.int32),
-                    "dl": codec.vbyte_decode(row.dls).astype(np.int32),
-                }
-                if with_positions:
-                    data["positions"] = codec.decode_positions(
-                        bytes(row.positions), int(row.n)
-                    )
-                outs.append(pd.DataFrame(data))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if pdf.empty:
+                continue
+            n = pdf["n"].to_numpy()
+            tf = codec.decode_stream(pdf["tfs"])
+            data = {
+                "part_id": np.repeat(pdf["part_id"].to_numpy(), n),
+                "term": np.repeat(pdf["term"].to_numpy(), n),
+                "doc_id": codec.decode_blocks(n, pdf["doc_ids"])[1],
+                "tf": tf.astype(np.int32),
+                "dl": codec.decode_stream(pdf["dls"]).astype(np.int32),
+            }
+            if with_positions:
+                pos, off = codec.decode_positions(pdf["positions"], tf)
+                data["positions"] = np.split(pos, off[1:-1])
+            yield pd.DataFrame(data)
 
     schema = "part_id int, term string, doc_id long, tf int, dl int"
     if with_positions:
@@ -1096,7 +1088,7 @@ class Node:
 
 
 # the block columns a constant-score term set (``_docs_kernel``) reads
-_DOCS_COLS = ("part_id", "term", "doc_ids")
+_DOCS_COLS = ("part_id", "term", "n", "doc_ids")
 # every leaf column but part_id, in scan projection order
 _LEAF_COLS = ("n", "doc_ids", "tfs", "dls", "positions", "max_tf", "min_dl",
               "first_doc", "last_doc")
@@ -1141,7 +1133,7 @@ def phrase_node(index: InvertedIndex, field: str, head: list[str],
 
 
 # the block columns the synonym kernel reads
-_SYNONYM_COLS = ("part_id", "term", "doc_ids", "tfs", "dls")
+_SYNONYM_COLS = ("part_id", "term", "n", "doc_ids", "tfs", "dls")
 
 
 def synonym_node(index: InvertedIndex, field: str, groups: list[list[str]],
@@ -1167,20 +1159,15 @@ def synonym_node(index: InvertedIndex, field: str, groups: list[list[str]],
     msm = max(minimum_should_match, 1)
 
     def score_group(pdf: pd.DataFrame, ids, k: int | None) -> pd.DataFrame:
+        n = pdf["n"].to_numpy()
+        _, d_all = codec.decode_blocks(n, pdf["doc_ids"])
+        tf_all = codec.decode_stream(pdf["tfs"])
+        dl_all = codec.decode_stream(pdf["dls"])
+        kept = True if ids is None else _member_mask(ids, d_all)
         hits = []
-        by = dict(tuple(pdf.groupby("term", sort=False)))
         for idf, g in zip(group_idf, live_groups):
-            rows = [r for t in g if t in by
-                    for r in by[t].itertuples(index=False)]
-            if not rows:
-                continue
-            d = np.concatenate([codec.delta_decode(codec.vbyte_decode(
-                r.doc_ids)) for r in rows])
-            tfs = np.concatenate([codec.vbyte_decode(r.tfs) for r in rows])
-            dls = np.concatenate([codec.vbyte_decode(r.dls) for r in rows])
-            if ids is not None:
-                keep = _member_mask(ids, d)
-                d, tfs, dls = d[keep], tfs[keep], dls[keep]
+            sel = np.repeat(pdf["term"].isin(g).to_numpy(), n) & kept
+            d, tfs, dls = d_all[sel], tf_all[sel], dl_all[sel]
             if not d.size:
                 continue
             # SynonymQuery: per-doc tf = sum over member terms
@@ -1535,9 +1522,7 @@ def multi_term_topk(
 def _docs_kernel(pdf: pd.DataFrame, ids, k: int | None) -> pd.DataFrame:
     """The constant-score kernel: a shard's (allowed) docs in its
     blocks, each scoring 1."""
-    d = np.unique(np.concatenate([
-        codec.delta_decode(codec.vbyte_decode(b)) for b in pdf["doc_ids"]
-    ]))
+    d = np.unique(codec.decode_blocks(pdf["n"], pdf["doc_ids"])[1])
     if ids is not None:
         d = d[_member_mask(ids, d)]
     return _local_topk(d, np.ones(d.size), np.ones(d.size, dtype=np.int32), k)

@@ -284,7 +284,7 @@ def span_match(
         nm = np.array([h[1] for h in hits], dtype=np.int32)
         return _local_topk(ids, np.full(ids.size, float(boost)), nm, k)
 
-    cols = ("part_id", "field", "term", "n", "doc_ids", "positions")
+    cols = ("part_id", "field", "term", "n", "doc_ids", "tfs", "positions")
     return _scored_scan(index, _pairs_cond(pairs), cols, check_group, k)
 
 

@@ -427,3 +427,20 @@ def test_range_date_math_bounds(spark):
         assert gt == want_gt
     finally:
         datemath.set_fixed_now(None)
+
+
+def test_filter_bool_must_not_keeps_should_required(spark):
+    from elasticsearch_spark.search.dsl import compile_filter
+
+    df = spark.createDataFrame(
+        [(1, "en"), (2, "de"), (3, "fr"), (4, "en")], "doc_id long, lang string")
+
+    def ids(q):
+        return sorted(r["doc_id"] for r in df.filter(compile_filter(q)).collect())
+
+    # must_not alone does not make should optional: msm defaults to 1
+    assert ids({"bool": {"must_not": [{"term": {"lang": "de"}}],
+                         "should": [{"term": {"lang": "en"}}]}}) == [1, 4]
+    # a filter clause does
+    assert ids({"bool": {"filter": [{"term": {"lang": "fr"}}],
+                         "should": [{"term": {"lang": "en"}}]}}) == [3]

@@ -1,9 +1,12 @@
 """The /verify skill's build-and-drive recipe as a script: corpus ->
 index -> query through the public API, plan-shape assertions, plus a
 smoke of the newest operator surface. Exits nonzero on failure."""
+import os
 import shutil
 import sys
 import tempfile
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from elasticsearch_spark import get_spark
 from elasticsearch_spark.corpus import generate_corpus
